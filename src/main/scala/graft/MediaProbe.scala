@@ -26,16 +26,16 @@ object MediaProbe {
 
   def pipelines(spark: SparkSession): Seq[(String, String => DataFrame)] = Seq(
     "ingest_full" -> ((dir: String) =>
-      queries.Media.ingestRows(Multimodal.fromBinaryFiles(spark, dir + "/*"))),
+      queries.Media.ingestRows(Multimodal.fromBinaryFiles(spark, dir))),
     "ingest_head" -> ((dir: String) =>
-      queries.Media.ingestRows(Multimodal.fromBinaryFilesHead(spark, dir + "/*"))),
+      queries.Media.ingestRows(Multimodal.fromBinaryFilesHead(spark, dir))),
     "features_full" -> ((dir: String) =>
       Multimodal.extractFeatures(
-        Multimodal.fromBinaryFiles(spark, dir + "/*"), dim = 8)),
+        Multimodal.fromBinaryFiles(spark, dir), dim = 8)),
     "curate_full" -> ((dir: String) =>
-      queries.Media.curateRows(Multimodal.fromBinaryFiles(spark, dir + "/*"))),
+      queries.Media.curateRows(Multimodal.fromBinaryFiles(spark, dir))),
     "curate_head" -> ((dir: String) =>
-      queries.Media.curateRowsHead(spark, dir + "/*")))
+      queries.Media.curateRowsHead(spark, dir)))
 
   def main(args: Array[String]): Unit = {
     val baseN = args.headOption.map(_.toInt).getOrElse(100)
@@ -56,7 +56,7 @@ object MediaProbe {
     }
     // warm: one tiny listing per dir (JVM/codegen warmers)
     dirs.foreach { case (_, _, d) =>
-      spark.read.format("binary-head").option("head", 64).load(d + "/*")
+      spark.read.format("binary-head").option("head", 64).load(d)
         .select("path").limit(1).count()
     }
     def time(f: String => DataFrame, d: String): Double = {
@@ -93,9 +93,9 @@ object MediaProbe {
       case (tag, payload) =>
         val d = sources.MediaScaleCorpus.ensureTailAnchored(100, payload)
         val secs = ScaleProbe.medianOf((1 to reps).map(_ =>
-          time(dir => queries.Media.curateRowsHead(spark, dir + "/*"), d)))
+          time(dir => queries.Media.curateRowsHead(spark, dir), d)))
         sources.MediaIo.reset()
-        time(dir => queries.Media.curateRowsHead(spark, dir + "/*"), d)
+        time(dir => queries.Media.curateRowsHead(spark, dir), d)
         val (fullB, tailB) =
           (sources.MediaIo.fullBytes.get, sources.MediaIo.tailBytes.get)
         println(f"[media-probe] tailvar_$tag%-7s payload=${payload / (1 << 20)}MiB " +

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftExpressionBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the vector hot path (SURVEY.md §4 "v2"
@@ -139,9 +140,13 @@ case class DotProduct(left: Expression, right: Expression)
   * pays interpreted lambda dispatch plus Long boxing per element.
   * Faithful semantics: null array → NULL; length mismatch or null
   * element → NULL (zip_with null-pads, the fold then sticks at null);
-  * arithmetic is Long with silent wraparound, exactly like the fold.
+  * arithmetic is Long, exactly like the fold's: with ANSI mode on (read
+  * from SQLConf when the expression is built, as Spark's own arithmetic
+  * does) a subtract, multiply or add overflow throws
+  * ArithmeticException; with ANSI off it wraps silently.
   */
-case class IntSquaredL2(left: Expression, right: Expression)
+case class IntSquaredL2(left: Expression, right: Expression,
+    failOnOverflow: Boolean = SQLConf.get.ansiEnabled)
     extends BinaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   override def prettyName: String = "int_squared_l2"
@@ -162,17 +167,28 @@ case class IntSquaredL2(left: Expression, right: Expression)
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements()) return null
+    val na = a.numElements()
+    val nb = b.numElements()
+    // zip_with pairs indices up to the shorter length and null-pads the
+    // rest; the fold is NULL from the first null on, but under ANSI every
+    // paired element is still computed, so an overflow anywhere throws
+    var sawNull = false
     var acc = 0L
     var i = 0
+    val n = math.min(na, nb)
     while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val d = a.getLong(i) - b.getLong(i)
-      acc += d * d
+      if (a.isNullAt(i) || b.isNullAt(i)) sawNull = true
+      else if (failOnOverflow) {
+        val d = Math.subtractExact(a.getLong(i), b.getLong(i))
+        val sq = Math.multiplyExact(d, d)
+        if (!sawNull) acc = Math.addExact(acc, sq)
+      } else {
+        val d = a.getLong(i) - b.getLong(i)
+        acc += d * d
+      }
       i += 1
     }
-    acc
+    if (sawNull || na != nb) null else acc
   }
 
   // CodegenFallback, deliberately (MinhashSignature/BpeCount precedent):

@@ -50,17 +50,6 @@ object VectorOps {
   def cosineToQuery(emb: Column, q: Seq[Double]): Column =
     cosine(emb, typedLit(q))
 
-  // ---- interpreted HOF reference implementations (tests cross-check) ----
-
-  private def foldSum(a: Column): Column =
-    aggregate(a, lit(0.0), (acc, v) => acc + v)
-
-  def squaredL2Hof(a: Column, b: Column): Column =
-    foldSum(zip_with(toDoubleArr(a), toDoubleArr(b), (x, y) => (x - y) * (x - y)))
-
-  def dotHof(a: Column, b: Column): Column =
-    foldSum(zip_with(toDoubleArr(a), toDoubleArr(b), (x, y) => x * y))
-
   /** Reference score normalization: squared-L2 distance → 0–10
     * (`rag_model_mass.py:13-15`). Rounding left to the caller (rule 3).
     */

@@ -242,18 +242,6 @@ object Dedup {
     graft.functions.MinhashSignature(hashes, nHashes, minhashA, minhashB)
   }
 
-  /** Interpreted HOF reference form of the signature (tests cross-check
-    * it against the native expression).
-    */
-  def minhashSignatureHof(hashes: Column, nHashes: Int): Column = {
-    require(nHashes <= minhashA.size, s"at most ${minhashA.size} hashes supported")
-    transform(sequence(lit(0), lit(nHashes - 1)), i =>
-      array_min(transform(hashes, h =>
-        element_at(typedLit(minhashA), i + 1) * h.bitwiseAND(lit(0x3FFFFFFFL))
-          + element_at(typedLit(minhashB), i + 1) * shiftright(h, 30)
-          + i)))
-  }
-
   /** LSH band key for band b: md5 of "b:" + the band's signature slice.
     * Docs sharing any band key become candidate pairs.
     */

@@ -134,15 +134,20 @@ object ProductQuantizer {
       book.map { case (cid, c) => cid -> KMeansOp.intDistLocal(c, qSub) }.toMap
     }
 
+  /** Asymmetric distance of a code row: the per-subspace LUT entries
+    * of its `code_s` columns, summed.
+    */
+  private[graft] def adcDist(luts: Seq[Map[Long, Long]]): Column =
+    luts.zipWithIndex.map { case (lut, s) =>
+      element_at(typedLit(lut), col(s"code_$s"))
+    }.reduce(_ + _)
+
   /** Approximate top-k by asymmetric distance: scan the code table,
     * sum the per-subspace LUT entries, take the k lowest (ties to the
     * lower vec_id). Output (vec_id, adc_scaled).
     */
   def adcTopK(codes: DataFrame, luts: Seq[Map[Long, Long]], k: Int): DataFrame =
-    codes.select(col("vec_id"),
-        luts.zipWithIndex.map { case (lut, s) =>
-          element_at(typedLit(lut), col(s"code_$s"))
-        }.reduce(_ + _).as("adc_scaled"))
+    codes.select(col("vec_id"), adcDist(luts).as("adc_scaled"))
       .orderBy(col("adc_scaled").asc, col("vec_id").asc)
       .limit(k)
 
@@ -194,7 +199,7 @@ object ProductQuantizer {
   /** A probe frame that [[pinProbes]] has deduplicated on qid and
     * checkpointed — the type-level witness the batch dataflows accept
     * so a caller that already pinned never pays a second checkpoint
-    * job (the r19 double-pin: `searchCommittedBatch` pinned, then
+    * job (the r19 double-pin: the committed-state batch search pinned, then
     * `adcBatchServe` unconditionally re-pinned the same frame — a
     * redundant Q-row job per batch query). The constructor is private
     * to this object, so the ONLY way to mint the witness is the one

@@ -26,7 +26,7 @@ object Media {
     * blob, embarrassingly parallel across files.
     */
   def mediaIngest(s: SparkSession, d: String): DataFrame =
-    ingestRows(Multimodal.fromBinaryFiles(s, MediaCorpus.ensure() + "/*"))
+    ingestRows(Multimodal.fromBinaryFiles(s, MediaCorpus.ensure()))
 
   /** q_media_ingest_head: the SAME typed-metadata contract as
     * q_media_ingest, but scanned through the `binary-head` DSv2 source
@@ -38,7 +38,7 @@ object Media {
     * path at 100 TB; q_media_ingest keeps the full-read source honest.
     */
   def mediaIngestHead(s: SparkSession, d: String): DataFrame =
-    ingestRows(Multimodal.fromBinaryFilesHead(s, MediaCorpus.ensure() + "/*"))
+    ingestRows(Multimodal.fromBinaryFilesHead(s, MediaCorpus.ensure()))
 
   /** Shared metadata-projection pipeline over any canonical media scan. */
   private[graft] def ingestRows(base: DataFrame): DataFrame = {
@@ -70,7 +70,7 @@ object Media {
     * compare is scalar-cell exact.
     */
   def mediaFeatures(s: SparkSession, d: String): DataFrame = {
-    val base = Multimodal.fromBinaryFiles(s, MediaCorpus.ensure() + "/*")
+    val base = Multimodal.fromBinaryFiles(s, MediaCorpus.ensure())
       .withColumn("file_name",
         regexp_extract(element_at(col("meta"), "path"), "[^/]+$", 0))
     // file_name rides through the decode — joining it back would
@@ -91,7 +91,7 @@ object Media {
     * from the independently pinned per-(file, frame) digests.
     */
   def mediaFrames(s: SparkSession, d: String): DataFrame = {
-    val base = Multimodal.fromBinaryFiles(s, MediaCorpus.ensure() + "/*")
+    val base = Multimodal.fromBinaryFiles(s, MediaCorpus.ensure())
       .withColumn("meta",
         when(col("modality") === "video",
           map_concat(col("meta"), map(lit("n_frames"), lit("9"))))
@@ -133,7 +133,7 @@ object Media {
     * batching) diverges the rows.
     */
   def mediaCurate(s: SparkSession, d: String): DataFrame =
-    curateRows(Multimodal.fromBinaryFiles(s, MediaCorpus.ensure() + "/*"))
+    curateRows(Multimodal.fromBinaryFiles(s, MediaCorpus.ensure()))
 
   /** q_media_curate_head: the SAME curate contract, composed as the
     * production TWO-PHASE shape its single-scan sibling documents —
@@ -160,7 +160,7 @@ object Media {
     * exactly the files whose bytes must be read to decide them.
     */
   def mediaCurateHead(s: SparkSession, d: String): DataFrame =
-    curateRowsHead(s, MediaCorpus.ensure() + "/*")
+    curateRowsHead(s, MediaCorpus.ensure())
 
   /** The two-phase curate dataflow over any directory glob. Gate
     * decisions are EXACT for any corpus, not just under-cap files:

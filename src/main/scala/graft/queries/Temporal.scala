@@ -6,9 +6,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Interval analytics: a no-equi-key point-in-interval join (via the
-  * binned RangeJoin operator) and an active-interval daily count done as
-  * a sweep instead of a join. Both oracled against the naive BETWEEN
+/** Interval analytics: a no-equi-key point-in-interval join (via a
+  * per-day interval rollup; the binned pair-enumerating RangeJoin form
+  * it replaced is the test-side reference) and an active-interval daily
+  * count done as a sweep instead of a join. Both oracled against the naive BETWEEN
   * formulation in DuckDB — same result, very different plan.
   */
 object Temporal {

@@ -94,7 +94,7 @@ object Text {
     * correctness gate, not just a unit spec.
     */
   def binaryIngest(s: SparkSession, d: String): DataFrame =
-    Sources.loadDocuments(s, SampleCorpus.ensure() + "/*")
+    Sources.loadDocuments(s, SampleCorpus.ensure())
       .select(col("file_name"), length(col("text")).cast("long").as("n_chars"),
         md5(col("text").cast("binary")).as("text_md5"))
       .orderBy(col("file_name").asc)

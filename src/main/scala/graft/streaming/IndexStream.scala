@@ -12,47 +12,53 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * Production vector indexes are built once and MAINTAINED: the
   * quantizers (coarse IVF centroids + PQ codebooks) are trained on a
-  * corpus snapshot, FROZEN as a persisted artifact, and newly arriving
-  * vectors are assigned against them and appended to the code table;
-  * training reruns only on an explicit rebuild (that staleness is what
-  * [[cellHistogram]] monitors — exactly how a FAISS/IVFADC deployment
-  * ingests, reference tie: the reference rebuilds its flat FAISS index
-  * per request, /root/reference/vectorDB.py:27-39, which cannot survive
-  * a corpus that outlives one request).
+  * corpus snapshot, FROZEN as a persisted artifact, and a change-data
+  * stream of inserts and deletes is applied against them; training
+  * reruns only on an explicit [[rebuildCdc]] (that staleness is what
+  * [[cellHistogramCdc]] monitors — exactly how a FAISS/IVFADC
+  * deployment ingests, reference tie: the reference rebuilds its flat
+  * FAISS index per request, in its vectorDB.py:27-39, which cannot
+  * survive a corpus that outlives one request).
   *
-  * Per micro-batch of (vec_id, embedding):
-  *  1. one shuffle-free projection computes each vector's coarse cell
-  *     and codes against the frozen quantizers (literal argmins,
-  *     broadcast by value) — [[ProductQuantizer.indexProjection]] for
-  *     plain PQ, [[ProductQuantizer.residualIndexProjection]] when the
-  *     artifact's codebooks quantize v − centroid[cell] (FAISS's
+  * One maintenance discipline, CDC (change-data-capture). Per
+  * micro-batch of (vec_id, embedding, `__op`) rows ([[processBatchCdc]];
+  * a stream without the op column is all inserts):
+  *  1. one shuffle-free projection computes each inserted vector's
+  *     coarse cell and codes against the frozen quantizers (literal
+  *     argmins, broadcast by value) — [[ProductQuantizer.indexProjection]]
+  *     for plain PQ, [[ProductQuantizer.residualIndexProjection]] when
+  *     the artifact's codebooks quantize v − centroid[cell] (FAISS's
   *     default residual encoding; `Quantizers.residual`), or the
-  *     per-dimension scalar codes under the frozen global scale when
-  *     the artifact is IVF_SQ8 (`Quantizers.sq8Amax`);
-  *  2. vectors whose vec_id an EARLIER committed batch already indexed
-  *     are dropped by one anti-join against the committed code table
-  *     (new↔existing only; the index is never re-scanned pairwise);
-  *  3. survivors append to the code table at `codes/batch_id=N`.
+  *     per-dimension scalar codes under the frozen scales when the
+  *     artifact is IVF_SQ8 (`Quantizers.sq8Amax` / `sq8Dims`);
+  *  2. an insert whose vec_id is LIVE before this batch (and not
+  *     deleted by it) is dropped by one anti-join against the live code
+  *     table (new↔existing only; the index is never re-scanned
+  *     pairwise) — first write wins;
+  *  3. survivors land at `codes/batch_id=N` carrying `src_batch = N`,
+  *     deletes land as tombstones at `tombs/batch_id=N`, and a row is
+  *     live iff no strictly later tombstone names it ([[liveCodes]]).
   *
   * Replay-idempotent on the DedupStream discipline: batch-id-keyed
   * overwrite writes, the commit marker written LAST via [[StreamState]]
   * (torn writes are never read as truth), and a replayed committed
   * batch reproduces its rows bit-for-bit (assignment against frozen
-  * quantizers is deterministic; its own state rows are superseded by
-  * the overwrite, and the vec_id anti-join excludes this batch's ids).
+  * quantizers is deterministic, and the liveness check reads only
+  * strictly-earlier state).
   *
   * Scale shape: per-batch cost tracks the batch — the projection is
-  * map-side, the anti-join is one equi-join probing committed state,
-  * and state is (vec_id, cell, m codes) BIGINTs per vector regardless
-  * of dimension: the 64-float embedding never enters the state. Every
-  * code write — per-batch, rebuild generation, compacted base — lays
-  * the rows out `partitionBy(cell)`, so the MAINTAINED index IS the
-  * pruned serving artifact (the same layout the batch tier persists,
-  * SemanticQ.partitionedCodesPath): search over the committed index
-  * ([[searchCommitted]]/[[searchCommittedCdc]]) answers its probed-cell
-  * predicate by DIRECTORY pruning at the listing, never by scanning
-  * non-probed cells' files, and compaction's tombstone GC preserves the
-  * partitioning (IndexStreamSpec pins the pruned plan).
+  * map-side, the liveness check is one equi-join probing committed
+  * state, and state is (vec_id, cell, m codes, src_batch) BIGINTs per
+  * vector regardless of dimension: the 64-float embedding never enters
+  * the state. Every code write — per-batch, rebuild generation,
+  * compacted base — lays the rows out `partitionBy(cell)`, so the
+  * MAINTAINED index IS the pruned serving artifact (the same layout the
+  * batch tier persists, SemanticQ.partitionedCodesPath): search over
+  * the live index ([[searchCommittedCdc]] and its SQ8/batch siblings)
+  * answers its probed-cell predicate by DIRECTORY pruning at the
+  * listing, never by scanning non-probed cells' files, and
+  * compaction's tombstone GC preserves the partitioning (CdcIndexSpec
+  * pins the pruned plan).
   */
 object IndexStream {
 
@@ -122,13 +128,6 @@ object IndexStream {
   private def permuteLocal(v: Seq[Long], p: Seq[Int]): Seq[Long] =
     p.map(v(_))
 
-  /** The per-batch/per-rebuild corpus projection for this encoding —
-    * takes the RAW (vec_id, embedding) rows: the PQ encodings code the
-    * ×10^6 scaled-integer vector, while SQ8 codes the raw double
-    * coordinates under the frozen global scale (the exact expression
-    * the batch tier's q_ann_ivf_sq8 index write uses, so a maintained
-    * SQ8 index is bit-identical to the persisted batch one).
-    */
   // ---- The SQ8 encode expression, in ONE spelling ------------------
   //
   // Corpus codes, single-probe query codes, and batch-probe query
@@ -172,6 +171,13 @@ object IndexStream {
     floor((lit(mn) + c.cast("double") * lit((mx - mn) / 255.0))
       * lit(1000000.0)).cast("long")
 
+  /** The per-batch/per-rebuild corpus projection for this encoding —
+    * takes the RAW (vec_id, embedding) rows: the PQ encodings code the
+    * ×10^6 scaled-integer vector, while SQ8 codes the raw double
+    * coordinates under the frozen global scale (the exact expression
+    * the batch tier's q_ann_ivf_sq8 index write uses, so a maintained
+    * SQ8 index is bit-identical to the persisted batch one).
+    */
   private def project(batch: DataFrame, q: Quantizers): DataFrame = {
     val vecs = batch.select(col("vec_id"),
       KMeansOp.intVec(col("embedding")).as("v"))
@@ -204,51 +210,23 @@ object IndexStream {
     }
   }
 
-  private def codesSchema(m: Int): StructType =
+  /** The persisted code-table schema: (vec_id, cell, code_0 … code_{m−1},
+    * src_batch), src_batch being the batch that wrote the row.
+    */
+  private[graft] def codesSchema(m: Int): StructType =
     StructType(
       StructField("vec_id", LongType) +: StructField("cell", LongType) +:
-        (0 until m).map(s => StructField(s"code_$s", LongType)))
+        (0 until m).map(s => StructField(s"code_$s", LongType)) :+
+        StructField("src_batch", LongType))
 
-  /** One micro-batch of (vec_id, embedding) rows. Exposed for direct
-    * testing like DedupStream.processBatch.
-    */
-  def processBatch(batch: Dataset[Row], batchId: Long, q: Quantizers,
-      stateDir: String, autoCompactEvery: Int = 0): Unit = {
-    val s = batch.sparkSession
-    val indexed0 = project(
-      batch.select(col("vec_id"), col("embedding")), q)
-    // collapse duplicate vec_ids WITHIN the micro-batch to one
-    // deterministic row (min over the (cell, codes) struct): the
-    // anti-join below only dedups against EARLIER committed batches,
-    // so without this a batch re-shipping an id twice would write two
-    // rows and break the one-row-per-vec_id invariant (duplicate
-    // search results, double-counted histogram)
-    val codeCols = indexed0.columns.filter(_ != "vec_id").toSeq
-    val indexed = indexed0.groupBy(col("vec_id"))
-      .agg(min(struct(codeCols.map(col): _*)).as("k"))
-      .select(col("vec_id") +: codeCols.map(c => col("k." + c)): _*)
-    // drop ids a STRICTLY EARLIER committed batch indexed (upTo =
-    // batchId, the DriftStream discipline): a replayed committed batch
-    // never reads its own superseded partition, so it reproduces its
-    // rows; a NEW batch re-shipping an already-indexed vec_id sees it
-    // in earlier state and drops it. (Key-based supersede would
-    // conflate those two cases here, because the dedup key IS vec_id.)
-    val existing = StreamState.readCommitted(s, stateDir, "codes",
-      codesSchema(q.m), upTo = batchId, partitioned = true)
-    indexed.join(existing.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$stateDir/codes/batch_id=$batchId")
-    StreamState.commitMarker(s, stateDir, batchId)
-    StreamState.maybeCompact(s, stateDir, autoCompactEvery)(
-      compactState(s, stateDir, q.m))
-  }
+  private[graft] val tombSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("del_batch", LongType)))
 
   /** The code-column count (m) of the PERSISTED state, from the newest
-    * committed partition's own parquet schema — so read-only consumers
-    * (histogram, no-quantizer compaction) can never apply a wrong
-    * default m and silently drop code columns. None when nothing is
-    * committed yet. One quantizer per state dir (mixed m is not a
-    * supported state).
+    * committed partition's own parquet schema — so a read-only consumer
+    * (the histogram) can never apply a wrong default m and silently
+    * drop code columns. None when nothing is committed yet. One
+    * quantizer per state dir (mixed m is not a supported state).
     */
   private def persistedM(s: SparkSession, stateDir: String): Option[Int] = {
     val batch = StreamState.committedIds(s, stateDir).lastOption
@@ -262,67 +240,224 @@ object IndexStream {
     }.headOption
   }
 
-  /** Fold the committed code table under one marker (identity merge:
-    * each vec_id lives in exactly one committed partition). `m` must
-    * match the persisted quantizer's subspace count — compacting with a
-    * smaller m would silently drop code columns from the base, which is
-    * permanent index corruption; [[processBatch]] passes its quantizer's
-    * code-column count (`Quantizers.m`), and the no-`m` overload derives
-    * it from the persisted schema.
-    */
-  def compactState(s: SparkSession, stateDir: String, m: Int): Option[Long] =
-    StreamState.compact(s, stateDir, Seq(
-      ("codes", codesSchema(m), (df: DataFrame) => df)),
-      partitionCols = Map("codes" -> Seq("cell")))
+  // ---- CDC maintenance: inserts, deletes and re-inserts -------------
+  //
+  // A production index takes DELETES — FAISS's remove_ids,
+  // Milvus/Lucene tombstones — and re-inserts after them. Physical
+  // deletion from immutable committed partitions is compaction's
+  // business; the live path appends TOMBSTONES:
+  //
+  //  - a delete writes (vec_id, del_batch=N) to `tombs/batch_id=N`;
+  //  - a code row is LIVE iff no tombstone with del_batch > src_batch
+  //    exists for its id (src_batch rides IN the row, so compaction
+  //    folds both tables without losing the ordering);
+  //  - an insert is blocked only by a LIVE earlier row (first-write-
+  //    wins) that this batch does not itself delete — so delete+insert
+  //    of a live id in one batch REPLACES it (the CDC re-key
+  //    convention), and an insert after a delete RESURRECTS the id with
+  //    its new codes.
+  //
+  // Both writes are batch-id-keyed overwrites behind the shared commit
+  // marker, and the liveness check reads strictly-earlier state
+  // (upTo = batchId), so a replayed committed batch recomputes its rows
+  // bit-for-bit. A fresh batch re-shipping an already-live vec_id sees
+  // it in earlier state and drops it; a replayed batch never reads its
+  // own superseded partition.
 
-  /** [[compactState]] with m derived from the persisted state itself —
-    * for operational callers that hold no quantizer handle. No-op on an
-    * empty state (nothing committed, nothing to fold).
+  /** The CDC op column: rows with `__op = "delete"` are tombstones
+    * (embedding ignored); anything else — including a missing column —
+    * is an insert. The Merge operator's `__op` convention, reused.
     */
-  def compactState(s: SparkSession, stateDir: String): Option[Long] =
-    persistedM(s, stateDir).flatMap(m => compactState(s, stateDir, m))
+  val OpColumn = "__op"
 
-  /** Start continuous maintenance over a streaming (vec_id, embedding)
-    * frame against the frozen quantizers.
+  /** True when this state dir's batch 0 is a [[rebuildCdc]] generation
+    * base (the `_rebuilt` flag written beside the quantizers).
     */
-  def maintain(emb: DataFrame, q: Quantizers, stateDir: String,
+  private def hasRebuildBase(s: SparkSession, stateDir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(s"$stateDir/_rebuilt")
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** The LIVE code table as of (strictly before) `upTo`: committed
+    * codes minus the rows a STRICTLY LATER tombstone kills — a
+    * same-batch tombstone does not kill the same batch's insert
+    * (delete-then-insert order within a batch). One anti-join on
+    * (vec_id, del_batch > src_batch); tombstone state never grows past
+    * the delete stream itself, and compaction resolves and drops both
+    * sides (see [[compactStateCdcResolve]]).
+    */
+  def liveCodes(s: SparkSession, stateDir: String, m: Int,
+      upTo: Long = Long.MaxValue): DataFrame = {
+    val codes = StreamState.readCommitted(
+      s, stateDir, "codes", codesSchema(m), upTo, partitioned = true)
+    val tombs = StreamState.readCommitted(
+      s, stateDir, "tombs", tombSchema, upTo)
+    codes.join(tombs,
+      codes("vec_id") === tombs("vec_id") &&
+        tombs("del_batch") > codes("src_batch"),
+      "left_anti")
+  }
+
+  /** One CDC micro-batch of (vec_id, embedding, __op) rows. Inserts are
+    * assigned against the frozen quantizers; deletes append tombstones.
+    * Within a batch, duplicate insert ids collapse to one deterministic
+    * row (min over the (cell, codes) struct — without it a batch
+    * re-shipping an id twice would write two rows and break the
+    * one-live-row-per-vec_id invariant: duplicate search results, a
+    * double-counted histogram) and a delete+insert pair resolves to the
+    * insert (applied over the delete). Exposed for direct testing like
+    * DedupStream.processBatch.
+    *
+    * INTRA-BATCH ORDER CONTRACT (ADVICE r17): ops within one
+    * micro-batch are a SET, not a sequence — there is no ordering
+    * column, so a delete and an insert for the same id in one batch
+    * ALWAYS resolve delete-then-insert (the re-key convention above),
+    * regardless of the order the producer emitted them. A producer
+    * whose last op for an id in a batch is a DELETE (ordered-CDC /
+    * Debezium semantics: insert-then-delete ⇒ dead) must not ship both
+    * in one batch — split them across batches, or pre-resolve to the
+    * final op before handing the batch over. This engine-side
+    * convention is deliberate: resolving by arrival order would make
+    * replay results depend on intra-batch row order, which Spark does
+    * not preserve.
+    */
+  def processBatchCdc(batch: Dataset[Row], batchId: Long, q: Quantizers,
+      stateDir: String, autoCompactEvery: Int = 0): Unit = {
+    val s = batch.sparkSession
+    // a rebuilt generation's batch 0 IS the rebuilt corpus
+    // ([[rebuildCdc]]); only a maintainCdc stream started with a FRESH
+    // checkpoint would ever present batchId=0 against it, and its
+    // overwrite would silently drop the entire rebuilt code table.
+    // Refuse loudly (ADVICE r17) — a CONTINUING stream keeps its
+    // checkpoint and only ever presents ids above its own history.
+    if (batchId == 0L && hasRebuildBase(s, stateDir))
+      throw new IllegalStateException(
+        s"$stateDir holds a rebuilt generation at batch_id=0; a CDC " +
+          "stream with a fresh checkpoint (batchId=0) would overwrite " +
+          "it — continue the existing checkpoint instead")
+    val ops =
+      if (batch.columns.contains(OpColumn)) batch
+      else batch.withColumn(OpColumn, lit("insert"))
+    val dels = ops.where(col(OpColumn) === "delete")
+      .select(col("vec_id")).distinct()
+    val ins = ops.where(coalesce(col(OpColumn), lit("insert")) =!= "delete")
+      .select(col("vec_id"), col("embedding"))
+    val indexed0 = project(ins, q)
+    val codeCols = indexed0.columns.filter(_ != "vec_id").toSeq
+    val indexed = indexed0.groupBy(col("vec_id"))
+      .agg(min(struct(codeCols.map(col): _*)).as("k"))
+      .select(col("vec_id") +: codeCols.map(c => col("k." + c)): _*)
+    // an insert is blocked by an id that is live BEFORE this batch and
+    // NOT deleted by it — so re-insert-after-delete lands, and
+    // delete+insert replaces
+    val blocked = liveCodes(s, stateDir, q.m, upTo = batchId)
+      .select(col("vec_id"))
+      .join(dels, Seq("vec_id"), "left_anti")
+    indexed.join(blocked, Seq("vec_id"), "left_anti")
+      .withColumn("src_batch", lit(batchId))
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$stateDir/codes/batch_id=$batchId")
+    dels.withColumn("del_batch", lit(batchId))
+      .write.mode("overwrite").parquet(s"$stateDir/tombs/batch_id=$batchId")
+    StreamState.commitMarker(s, stateDir, batchId)
+    // the auto valve RESOLVES: continuous maintenance should never let
+    // state size track the delete history instead of the live set
+    StreamState.maybeCompact(s, stateDir, autoCompactEvery)(
+      compactStateCdcResolve(s, stateDir, q.m))
+  }
+
+  /** Continuous CDC maintenance over a streaming (vec_id, embedding,
+    * __op) frame against the frozen quantizers.
+    */
+  def maintainCdc(emb: DataFrame, q: Quantizers, stateDir: String,
       checkpointDir: String, autoCompactEvery: Int = 16): StreamingQuery =
     emb.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch, batchId, q, stateDir, autoCompactEvery)
+        processBatchCdc(batch, batchId, q, stateDir, autoCompactEvery)
       }
       .start()
 
-  /** IVFADC search over the committed index: probe the `nProbe` coarse
-    * cells nearest the scaled-integer query driver-side, then ADC
-    * top-k over the committed CODE table filtered to those cells —
-    * identical mechanics to the batch q_ann_ivfpq, but serving from
-    * the incrementally-maintained state (raw vectors are never read).
+  /** RESOLVE-at-compaction — the tombstone GC a log-structured index
+    * runs at merge time (Lucene segment merges, LSM compaction): the
+    * folded codes keep only rows no folded tombstone kills, and the
+    * folded tombstones drop entirely. Every folded tombstone is SPENT
+    * once the fold resolves: surviving folded rows outrank it by
+    * construction, and every unfolded or future row carries src_batch
+    * above the fold point. Replay stays exact because the newest
+    * committed batch is never folded and its strictly-earlier liveness
+    * view over (resolved base + unfolded partitions) equals the
+    * pre-fold computation — the same rows survive either way. State
+    * size now tracks the LIVE set + batches-since-compaction, not the
+    * delete history. Crash contract inherited from [[StreamState
+    * .compact]] (base written first, marker last, torn fold invisible).
+    * The tombstone horizon is the FOLD ID the compaction itself hands
+    * to the merge ([[StreamState.compactWith]]) — codes and tombs can
+    * never resolve against different horizons, even if another batch
+    * commits mid-compaction. `m` must match the persisted quantizer's
+    * code-column count (`Quantizers.m`): a smaller m would silently
+    * drop code columns from the base, which is permanent index
+    * corruption.
     */
-  def searchCommitted(s: SparkSession, stateDir: String, q: Quantizers,
+  def compactStateCdcResolve(s: SparkSession, stateDir: String,
+      m: Int): Option[Long] =
+    StreamState.compactWith(s, stateDir, Seq(
+      ("codes", codesSchema(m), (codes: DataFrame, fold: Long) => {
+        val tombs = StreamState.readCommitted(
+          s, stateDir, "tombs", tombSchema, upTo = fold + 1)
+        codes.join(tombs,
+          codes("vec_id") === tombs("vec_id") &&
+            tombs("del_batch") > codes("src_batch"),
+          "left_anti")
+      }),
+      ("tombs", tombSchema, (t: DataFrame, _: Long) => t.limit(0))),
+      partitionCols = Map("codes" -> Seq("cell")))
+
+  // ---- Serving ------------------------------------------------------
+
+  /** The single-probe serving tail every encoding shares: probe the
+    * `nProbe` coarse cells nearest `coarseQuery` driver-side, score the
+    * probed cells' LIVE rows by `dist`, and keep the k lowest (ties to
+    * the lower vec_id). Returns (vec_id, `distName`).
+    */
+  private def probedTopK(s: SparkSession, stateDir: String, q: Quantizers,
+      coarseQuery: Seq[Long], nProbe: Int, dist: Column, distName: String,
+      k: Int): DataFrame = {
+    val probeCells = KMeansOp.nearestCells(q.coarse, coarseQuery, nProbe)
+    liveCodes(s, stateDir, q.m)
+      .where(col("cell").isin(probeCells: _*))
+      .select(col("vec_id"), dist.as(distName))
+      .orderBy(col(distName).asc, col("vec_id").asc)
+      .limit(k)
+  }
+
+  /** IVFADC search over the LIVE rows of the maintained index: probe
+    * the `nProbe` coarse cells nearest the scaled-integer query, then
+    * ADC top-k over the probed cells' codes — identical mechanics to the
+    * batch q_ann_ivfpq, but serving from the incrementally-maintained
+    * state (raw vectors are never read): deleted ids never surface,
+    * re-inserted ids serve their newest codes. Returns
+    * (vec_id, adc_scaled).
+    */
+  def searchCommittedCdc(s: SparkSession, stateDir: String, q: Quantizers,
       query: Seq[Long], nProbe: Int, k: Int): DataFrame = {
     require(q.sq8Amax.isEmpty && q.sq8Dims.isEmpty,
-      "SQ8 state serves through searchCommittedSq8/searchCommittedSq8Dim " +
-        "(this entry's query is the scaled-integer vector of a PQ probe)")
+      "SQ8 CDC state serves through searchCommittedCdcSq8/" +
+        "searchCommittedCdcSq8Dim")
     if (q.residual) {
       // residual ADC tables are per probed cell — serve the single
       // probe through the shared residual batch dataflow and strip the
       // probe bookkeeping back off
       import s.implicits._
-      return searchCommittedBatch(s, stateDir, q,
+      return searchCommittedBatchCdc(s, stateDir, q,
           Seq((0L, query)).toDF("qid", "v"), nProbe, k)
         .select(col("vec_id"), col("adc_scaled"))
     }
     // OPQ probes enter the permuted domain once, here
     val qw = q.opqPerm.map(permuteLocal(query, _)).getOrElse(query)
-    val probeCells = KMeansOp.nearestCells(q.coarse, qw, nProbe)
-    val luts = ProductQuantizer.adcTables(qw, q.books, q.subDim)
-    ProductQuantizer.adcTopK(
-      StreamState.readCommitted(s, stateDir, "codes", codesSchema(q.m),
-          partitioned = true)
-        .where(col("cell").isin(probeCells: _*)),
-      luts, k)
+    probedTopK(s, stateDir, q, qw, nProbe,
+      ProductQuantizer.adcDist(ProductQuantizer.adcTables(qw, q.books, q.subDim)),
+      "adc_scaled", k)
   }
 
   /** The SQ8 query projection, driver-side: the scaled-integer vector
@@ -333,9 +468,8 @@ object IndexStream {
   private def sq8Query(q: Quantizers, emb: Seq[Double]): (Seq[Long], Seq[Long]) = {
     require(q.sq8Amax.isDefined,
       "this entry serves global-amax SQ8 state only — PQ/residual " +
-        "handles serve through searchCommitted/searchCommittedCdc, " +
-        "per-dim handles through searchCommittedSq8Dim/" +
-        "searchCommittedCdcSq8Dim")
+        "handles serve through searchCommittedCdc, per-dim handles " +
+        "through searchCommittedCdcSq8Dim")
     val amax = q.sq8Amax.get
     val v = emb.map(e => math.floor(e * 1000000d).toLong)
     (v, emb.map(sq8CodeLocal(_, amax)))
@@ -345,65 +479,46 @@ object IndexStream {
     * against a literal query code — one codegen'd expression, no
     * arrays rebuilt at scan time.
     */
-  private def sq8Dist(qCode: Seq[Long]): org.apache.spark.sql.Column =
+  private def sq8Dist(qCode: Seq[Long]): Column =
     qCode.zipWithIndex.map { case (qc, i) =>
       (col(s"code_$i") - lit(qc)) * (col(s"code_$i") - lit(qc))
     }.reduce(_ + _)
 
-  /** IVF_SQ8 search over the committed (append-only) state: probe the
-    * nProbe nearest coarse cells, then integer code-space top-k over
-    * the probed cells' scalar codes — [[searchCommitted]] at the
+  /** IVF_SQ8 search over the LIVE rows of the maintained index: probe
+    * the nProbe nearest coarse cells, then integer code-space top-k over
+    * the probed cells' scalar codes — [[searchCommittedCdc]] at the
     * 1-byte-per-dim encoding. `emb` is the probe's RAW embedding (the
     * query is encoded against the frozen amax exactly as the corpus
     * was). Returns (vec_id, qdist), the q_ann_ivf_sq8 contract shape.
     */
-  def searchCommittedSq8(s: SparkSession, stateDir: String, q: Quantizers,
-      emb: Seq[Double], nProbe: Int, k: Int): DataFrame = {
-    val (v, qCode) = sq8Query(q, emb)
-    val probeCells = KMeansOp.nearestCells(q.coarse, v, nProbe)
-    StreamState.readCommitted(s, stateDir, "codes", codesSchema(q.m),
-        partitioned = true)
-      .where(col("cell").isin(probeCells: _*))
-      .select(col("vec_id"), sq8Dist(qCode).as("qdist"))
-      .orderBy(col("qdist").asc, col("vec_id").asc)
-      .limit(k)
-  }
-
-  /** [[searchCommittedSq8]] over the LIVE rows of a CDC state dir —
-    * IVF_SQ8 serving from the maintained delete-aware index: deleted
-    * ids never surface, re-inserted ids serve their newest codes.
-    */
   def searchCommittedCdcSq8(s: SparkSession, stateDir: String, q: Quantizers,
       emb: Seq[Double], nProbe: Int, k: Int): DataFrame = {
     val (v, qCode) = sq8Query(q, emb)
-    val probeCells = KMeansOp.nearestCells(q.coarse, v, nProbe)
-    liveCodes(s, stateDir, q.m)
-      .where(col("cell").isin(probeCells: _*))
-      .select(col("vec_id"), sq8Dist(qCode).as("qdist"))
-      .orderBy(col("qdist").asc, col("vec_id").asc)
-      .limit(k)
+    probedTopK(s, stateDir, q, v, nProbe, sq8Dist(qCode), "qdist", k)
   }
 
-  /** BATCH IVF_SQ8 serving over a maintained code table — the
-    * probe-fleet form at the 1-byte encoding ([[searchCommittedBatch]]'s
-    * role for the PQ encodings): `probes` is any (qid, embedding) frame
-    * of RAW embeddings; per-qid nProbe-nearest coarse cells come from
-    * the literal-argmin array (shuffle-free), each probe's scalar codes
-    * are built in-flight against the frozen amax literal, the
-    * (qid, cell, qcode) relation broadcasts into the code scan so only
-    * probed-cell rows are scored, and one qid-partitioned rank serves
-    * the per-probe top-k — ONE state-scan lineage for any probe count,
-    * the only per-batch driver work the ≤ Q·nProbe collected distinct
-    * probed cells, pushed as a static partition predicate so the state
-    * table's file LISTING also stops at the probed `cell=` directories
+  /** BATCH IVF_SQ8 serving over the LIVE rows of the maintained index —
+    * the probe-fleet form at the 1-byte encoding
+    * ([[searchCommittedBatchCdc]]'s role for the PQ encodings): `probes`
+    * is any (qid, embedding) frame of RAW embeddings; per-qid
+    * nProbe-nearest coarse cells come from the literal-argmin array
+    * (shuffle-free), each probe's scalar codes are built in-flight
+    * against the frozen amax literal, the (qid, cell, qcode) relation
+    * broadcasts into the code scan so only probed-cell rows are scored,
+    * and one qid-partitioned rank serves the per-probe top-k — ONE
+    * state-scan lineage for any probe count, the only per-batch driver
+    * work the ≤ Q·nProbe collected distinct probed cells, pushed as a
+    * static partition predicate so the state table's file LISTING also
+    * stops at the probed `cell=` directories
     * ([[ProductQuantizer.collectProbeCells]] over the same argmin the
     * join evaluates). Returns (qid, rnk, vec_id, qdist).
     */
-  private def sq8BatchOver(codes: DataFrame, q: Quantizers,
-      probes: DataFrame, nProbe: Int, k: Int): DataFrame = {
+  def searchCommittedBatchCdcSq8(s: SparkSession, stateDir: String,
+      q: Quantizers, probes: DataFrame, nProbe: Int, k: Int): DataFrame = {
     require(q.sq8Amax.isDefined,
       "this entry serves SQ8 state only — a PQ/residual handle serves " +
-        "through searchCommittedBatch/searchCommittedBatchCdc")
+        "through searchCommittedBatchCdc")
+    val codes = liveCodes(s, stateDir, q.m)
     val amax = q.sq8Amax.get
     val qCodeExpr = sq8CodeArr(col("embedding"), amax)
     // pin + collect the listing-prune cells in ONE action
@@ -435,19 +550,6 @@ object IndexStream {
       .orderBy(col("qid").asc, col("rnk").asc)
   }
 
-  /** [[sq8BatchOver]] the committed (append-only) SQ8 state. */
-  def searchCommittedBatchSq8(s: SparkSession, stateDir: String,
-      q: Quantizers, probes: DataFrame, nProbe: Int, k: Int): DataFrame =
-    sq8BatchOver(
-      StreamState.readCommitted(s, stateDir, "codes", codesSchema(q.m),
-        partitioned = true),
-      q, probes, nProbe, k)
-
-  /** [[sq8BatchOver]] the LIVE rows of an SQ8 CDC state dir. */
-  def searchCommittedBatchCdcSq8(s: SparkSession, stateDir: String,
-      q: Quantizers, probes: DataFrame, nProbe: Int, k: Int): DataFrame =
-    sq8BatchOver(liveCodes(s, stateDir, q.m), q, probes, nProbe, k)
-
   /** Asymmetric per-dim code-space squared L2 of the persisted code
     * COLUMNS against a literal scaled-integer query: each code decodes
     * under its dimension's frozen [vmn, vmx] interval
@@ -464,56 +566,92 @@ object IndexStream {
     }.reduce(_ + _)
   }
 
-  /** Per-dimension SQ8 search over the committed (append-only) state —
-    * [[searchCommittedSq8]] at the per-dim-trained encoding: probe the
-    * nProbe nearest coarse cells, then asymmetric decoded top-k over
-    * the probed cells' codes. `query` is the probe's SCALED-INTEGER
-    * vector (never quantized — the asymmetric side needs no encode).
-    * Returns (vec_id, qdist), the q_sq8_dim_part contract shape.
-    */
-  def searchCommittedSq8Dim(s: SparkSession, stateDir: String,
-      q: Quantizers, query: Seq[Long], nProbe: Int, k: Int): DataFrame = {
-    require(q.sq8Dims.isDefined,
-      "this entry serves per-dimension SQ8 state only — global-amax " +
-        "handles serve through searchCommittedSq8")
-    val probeCells = KMeansOp.nearestCells(q.coarse, query, nProbe)
-    StreamState.readCommitted(s, stateDir, "codes", codesSchema(q.m),
-        partitioned = true)
-      .where(col("cell").isin(probeCells: _*))
-      .select(col("vec_id"), sq8DimDist(q, query).as("qdist"))
-      .orderBy(col("qdist").asc, col("vec_id").asc)
-      .limit(k)
-  }
-
-  /** [[searchCommittedSq8Dim]] over the LIVE rows of a CDC state dir —
-    * per-dim SQ8 serving from the maintained delete-aware index:
-    * deleted ids never surface, re-inserted ids serve their newest
-    * codes.
+  /** Per-dimension SQ8 search over the LIVE rows of the maintained
+    * index — [[searchCommittedCdcSq8]] at the per-dim-trained encoding:
+    * probe the nProbe nearest coarse cells, then asymmetric decoded
+    * top-k over the probed cells' codes. `query` is the probe's
+    * SCALED-INTEGER vector (never quantized — the asymmetric side needs
+    * no encode). Returns (vec_id, qdist), the q_sq8_dim_part contract
+    * shape.
     */
   def searchCommittedCdcSq8Dim(s: SparkSession, stateDir: String,
       q: Quantizers, query: Seq[Long], nProbe: Int, k: Int): DataFrame = {
     require(q.sq8Dims.isDefined,
       "this entry serves per-dimension SQ8 state only — global-amax " +
         "handles serve through searchCommittedCdcSq8")
-    val probeCells = KMeansOp.nearestCells(q.coarse, query, nProbe)
-    liveCodes(s, stateDir, q.m)
-      .where(col("cell").isin(probeCells: _*))
-      .select(col("vec_id"), sq8DimDist(q, query).as("qdist"))
-      .orderBy(col("qdist").asc, col("vec_id").asc)
-      .limit(k)
+    probedTopK(s, stateDir, q, query, nProbe, sq8DimDist(q, query), "qdist", k)
+  }
+
+  /** Batch IVFADC serving over the LIVE rows of the maintained index —
+    * the q_ann_ivfpq_batch shape (per-qid coarse cell lists + per-qid
+    * LUTs as broadcast relations, probed-cells-only scan, one
+    * aggregation + one rank window) pointed at the
+    * incrementally-maintained state instead of a freshly-encoded
+    * corpus: how a serving tier answers a probe batch against the live
+    * index. `probes` is any (qid, scaled-vector) FRAME — per-qid coarse
+    * cells and ADC LUTs are built by executors (the shared
+    * [[ProductQuantizer.adcBatchServe]] dataflow), so thousands of
+    * concurrent probes never touch the driver beyond the ≤ Q·nProbe
+    * collected DISTINCT probed cells, which ride back as a static
+    * partition predicate so the code table's file LISTING stops at the
+    * probed `cell=` directories (the broadcast join alone scopes
+    * scoring, not listing — [[ProductQuantizer.collectProbeCells]]). A
+    * row's liveness is decided per row against the (unpruned)
+    * tombstone relation, never by rows in other cells, so filtering the
+    * live view on `cell` pushes to the codes scan and changes nothing
+    * the join would have scored. Returns (qid, rnk, vec_id, adc_scaled),
+    * top-k per qid.
+    */
+  def searchCommittedBatchCdc(s: SparkSession, stateDir: String,
+      q: Quantizers, probes: DataFrame, nProbe: Int, k: Int): DataFrame = {
+    require(q.sq8Amax.isEmpty && q.sq8Dims.isEmpty,
+      "SQ8 CDC state serves through searchCommittedBatchCdcSq8 or the " +
+        "per-dim single-probe entries")
+    // OPQ probe frames enter the permuted domain once, here
+    val w = q.opqPerm.map(p => probes.select(col("qid"),
+      permuteVec(col("v"), p).as("v"))).getOrElse(probes)
+    // pin + cells in one action (r21); prune cells and serving read the
+    // same Q rows
+    val (pinned, cells) = ProductQuantizer.pinProbesWithCells(w, q.coarse, nProbe)
+    val live = liveCodes(s, stateDir, q.m).drop("src_batch")
+      .where(col("cell").isin(cells: _*))
+    if (q.residual)
+      ProductQuantizer.adcBatchServeResidual(
+        live, pinned, q.coarse, q.books, q.subDim, nProbe, k)
+    else
+      ProductQuantizer.adcBatchServe(
+        live, pinned, q.coarse, q.books, q.subDim, nProbe, k)
+  }
+
+  /** Quantizer-staleness monitor: live cell occupancy. A healthy index
+    * keeps cells balanced near the training distribution; a drifting
+    * ingest concentrates mass in few cells (probe recall degrades,
+    * per-cell scans grow) — the operational signal to retrain and
+    * [[rebuildCdc]]. One bounded aggregate over the live code table;
+    * tombstoned mass is not counted, and m comes from the persisted
+    * schema (0 = empty state → empty histogram), so a read-only monitor
+    * needs no quantizer handle.
+    */
+  def cellHistogramCdc(s: SparkSession, stateDir: String): DataFrame = {
+    val m = persistedM(s, stateDir).getOrElse(0)
+    liveCodes(s, stateDir, m)
+      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
+      .orderBy(col("cell").asc)
   }
 
   // ---- Rebuild flow: generations + atomic swap ----------------------
   //
-  // cellHistogram is the staleness SIGNAL; rebuild is its CONSUMER.
-  // Layout: an index ROOT holds independent StreamState generations
-  // `gen=N/` (each with its own codes table, commit markers, and the
-  // persisted quantizers that froze it), and `_current/N` marker files
-  // name the active generation — written LAST, so a crash anywhere in a
-  // rebuild leaves the old generation serving and the half-built one
-  // invisible (the exact marker-written-last discipline StreamState
-  // uses per batch, lifted to whole index versions). Readers resolve
-  // max(_current) and never look inside an unswapped generation.
+  // cellHistogramCdc is the staleness SIGNAL; rebuildCdc is its
+  // CONSUMER. Layout: an index ROOT holds independent StreamState
+  // generations `gen=N/` (each with its own codes and tombstone tables,
+  // commit markers, and the persisted quantizers that froze it), and
+  // `_current/N` marker files name the active generation — written
+  // LAST, so a crash anywhere in a rebuild leaves the old generation
+  // serving and the half-built one invisible (the exact
+  // marker-written-last discipline StreamState uses per batch, lifted
+  // to whole index versions). Readers resolve max(_current) via
+  // [[currentRoot]], load its [[loadQuantizers]], and never look inside
+  // an unswapped generation.
 
   private def genDir(root: String, n: Long) = s"$root/gen=$n"
 
@@ -591,75 +729,25 @@ object IndexStream {
       })
   }
 
-  /** REBUILD: retrain both quantizers on a corpus snapshot (the raw
+  /** REBUILD: retrain the quantizers on a corpus snapshot (the raw
     * vectors live in the corpus table — code-only state is by design
     * too small to retrain from), re-encode the snapshot into a FRESH
-    * generation, persist the quantizers beside it, and atomically swap
-    * `_current` to the new generation. The old generation keeps serving
-    * until the swap marker lands; a crash at any earlier point changes
-    * nothing a reader can see. Returns the new quantizers.
+    * generation (codes carry `src_batch = 0`, an empty tombstone
+    * partition rides under the same commit marker), persist the
+    * quantizers beside it, and atomically swap `_current` to the new
+    * generation. The old generation keeps serving until the swap
+    * marker lands; a crash at any earlier point changes nothing a
+    * reader can see. Returns the new quantizers.
     *
     * Training is the deterministic integer Lloyd of [[KMeansOp]] /
     * [[ProductQuantizer]], so rebuilding on an unchanged corpus is a
     * no-op in search results — the equivalence the spec pins.
-    */
-  def rebuild(s: SparkSession, indexRoot: String, corpus: DataFrame,
-      k: Int, iters: Int, m: Int, subDim: Int,
-      residual: Boolean = false): Quantizers = {
-    val next = StreamState.markerIdsIn(s, s"$indexRoot/_current")
-      .lastOption.getOrElse(-1L) + 1L
-    val dir = genDir(indexRoot, next)
-    val coarse = KMeansOp.lloydCentroidsLocal(
-      corpus, "vec_id", col("embedding"), k, iters)
-    val vecs = corpus.select(col("vec_id"),
-      KMeansOp.intVec(col("embedding")).as("v"))
-    // residual codebooks train on v − centroid[cell] — already-integer
-    // vectors, so the fits enter Lloyd through the pre-scaled door
-    // (the same derivation as the batch tier's resCodebooks)
-    val books =
-      if (residual) {
-        lazy val res = ProductQuantizer.residuals(vecs, coarse)
-        (0 until m).map(sub => KMeansOp.lloydCentroidsLocalInt(
-          res.select(col("vec_id"),
-            slice(col("r"), sub * subDim + 1, subDim).as("v")),
-          k, iters))
-      } else ProductQuantizer.train(
-        corpus, "vec_id", col("embedding"), m, subDim, k, iters)
-    val q = Quantizers(coarse, books, subDim, residual)
-    project(corpus.select(col("vec_id"), col("embedding")), q)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/codes/batch_id=0")
-    saveQuantizers(s, dir, q)
-    StreamState.commitMarker(s, dir, 0L)
-    // the atomic reader switch: _current marker LAST
-    val fsPath = new org.apache.hadoop.fs.Path(s"$indexRoot/_current")
-    val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(fsPath)
-    fs.create(new org.apache.hadoop.fs.Path(fsPath, next.toString), true).close()
-    q
-  }
-
-  /** [[searchCommitted]] against the ACTIVE generation of an index
-    * root: resolve `_current`, load its frozen quantizers, serve. The
-    * restarted-server entry point — no driver state survives, only the
-    * persisted artifact.
-    */
-  def searchCurrent(s: SparkSession, indexRoot: String, query: Seq[Long],
-      nProbe: Int, k: Int): DataFrame = {
-    val dir = currentRoot(s, indexRoot).getOrElse(
-      throw new IllegalStateException(s"no committed generation under $indexRoot"))
-    searchCommitted(s, dir, loadQuantizers(s, dir), query, nProbe, k)
-  }
-
-  /** [[rebuild]] for a CDC-disciplined index root: identical retrain +
-    * re-encode + atomic swap, but the fresh generation is written in
-    * the CDC layout (codes carry `src_batch = 0`, an empty tombstone
-    * partition rides under the same commit marker) so a CDC maintainer
-    * CONTINUES over the new generation — delete/re-insert cycles pick
-    * up where the rebuild left off. The continuing stream must keep its
-    * checkpoint (batch ids strictly above 0, as in the append flow);
-    * this is ENFORCED, not just documented: a `_rebuilt` flag rides
-    * with the generation and [[processBatchCdc]] refuses a
+    *
+    * A CDC maintainer CONTINUES over the new generation —
+    * delete/re-insert cycles pick up where the rebuild left off. The
+    * continuing stream must keep its checkpoint (batch ids strictly
+    * above 0); this is ENFORCED, not just documented: a `_rebuilt` flag
+    * rides with the generation and [[processBatchCdc]] refuses a
     * fresh-checkpoint batchId=0 against it instead of letting the
     * replay overwrite the rebuilt code table. The rebuild consumes the
     * corpus snapshot, which a deployment derives from the previous
@@ -695,6 +783,10 @@ object IndexStream {
       }
     val books =
       if (residual) {
+        // residual codebooks train on v − centroid[cell] — already-
+        // integer vectors, so the fits enter Lloyd through the
+        // pre-scaled door (the same derivation as the batch tier's
+        // resCodebooks)
         lazy val res = ProductQuantizer.residuals(vecs, coarse)
         (0 until m).map(sub => KMeansOp.lloydCentroidsLocalInt(
           res.select(col("vec_id"),
@@ -739,41 +831,13 @@ object IndexStream {
     saveQuantizers(s, dir, q)
     // flag that batch 0 carries a REBUILT corpus, not a stream batch —
     // processBatchCdc refuses a fresh-checkpoint batchId=0 against it
-    val (mfs, mpath) = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/_rebuilt")
-      (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-    }
-    mfs.create(mpath, true).close()
+    val flag = new org.apache.hadoop.fs.Path(s"$dir/_rebuilt")
+    flag.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .create(flag, true).close()
     StreamState.commitMarker(s, dir, 0L)
-    val fsPath = new org.apache.hadoop.fs.Path(s"$indexRoot/_current")
-    val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(fsPath)
-    fs.create(new org.apache.hadoop.fs.Path(fsPath, next.toString), true).close()
+    // the atomic reader switch: _current marker LAST
+    StreamState.writeMarkerIn(s, s"$indexRoot/_current", next)
     q
-  }
-
-  /** [[searchCommittedCdc]] against the ACTIVE generation of a
-    * CDC-disciplined index root — the restarted-server entry point for
-    * the delete-aware layout.
-    */
-  def searchCurrentCdc(s: SparkSession, indexRoot: String, query: Seq[Long],
-      nProbe: Int, k: Int): DataFrame = {
-    val dir = currentRoot(s, indexRoot).getOrElse(
-      throw new IllegalStateException(s"no committed generation under $indexRoot"))
-    searchCommittedCdc(s, dir, loadQuantizers(s, dir), query, nProbe, k)
-  }
-
-  /** [[searchCommittedCdcSq8]] against the ACTIVE generation of an SQ8
-    * CDC index root — the restarted-server entry point at the 1-byte
-    * encoding: no driver state survives, the generation's persisted
-    * quantizers (coarse centroids + the frozen amax) are the whole
-    * serving artifact.
-    */
-  def searchCurrentCdcSq8(s: SparkSession, indexRoot: String,
-      emb: Seq[Double], nProbe: Int, k: Int): DataFrame = {
-    val dir = currentRoot(s, indexRoot).getOrElse(
-      throw new IllegalStateException(s"no committed generation under $indexRoot"))
-    searchCommittedCdcSq8(s, dir, loadQuantizers(s, dir), emb, nProbe, k)
   }
 
   /** The per-dim SQ8 interval TRAINING aggregate over a rebuild
@@ -792,334 +856,5 @@ object IndexStream {
       .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
       .sortBy(_._1)
     (rows.map(_._2).toSeq, rows.map(_._3).toSeq)
-  }
-
-  /** [[searchCommittedCdcSq8Dim]] against the ACTIVE generation of a
-    * per-dim SQ8 CDC index root — the restarted-server entry point at
-    * the per-dim-trained encoding: no driver state survives, the
-    * generation's persisted quantizers (coarse centroids + the frozen
-    * [vmn, vmx] interval tables) are the whole serving artifact.
-    */
-  def searchCurrentCdcSq8Dim(s: SparkSession, indexRoot: String,
-      query: Seq[Long], nProbe: Int, k: Int): DataFrame = {
-    val dir = currentRoot(s, indexRoot).getOrElse(
-      throw new IllegalStateException(s"no committed generation under $indexRoot"))
-    searchCommittedCdcSq8Dim(s, dir, loadQuantizers(s, dir), query, nProbe, k)
-  }
-
-  /** Batch IVFADC serving from the COMMITTED code table — the
-    * q_ann_ivfpq_batch shape (per-qid coarse cell lists + per-qid LUTs
-    * as broadcast relations, probed-cells-only scan, one aggregation +
-    * one rank window) pointed at the incrementally-maintained state
-    * instead of a freshly-encoded corpus: how a serving tier answers a
-    * probe batch against the live index. `queries` = (qid, scaled
-    * query vector); returns (qid, rnk, vec_id, adc_scaled), top-k per
-    * qid.
-    */
-  def searchCommittedBatch(s: SparkSession, stateDir: String, q: Quantizers,
-      queries: Seq[(Long, Seq[Long])], nProbe: Int, k: Int): DataFrame = {
-    import s.implicits._
-    searchCommittedBatch(s, stateDir, q, queries.toDF("qid", "v"), nProbe, k)
-  }
-
-  /** The probe-fleet form: `probes` is any (qid, scaled-vector) FRAME —
-    * per-qid coarse cells and ADC LUTs are built by executors (the
-    * shared [[ProductQuantizer.adcBatchServe]] dataflow), so thousands
-    * of concurrent probes never touch the driver beyond the ≤ Q·nProbe
-    * collected DISTINCT probed cells, which ride back as a static
-    * partition predicate so the committed table's file LISTING stops at
-    * the probed `cell=` directories (the broadcast join alone scopes
-    * scoring, not listing — [[ProductQuantizer.collectProbeCells]]).
-    */
-  def searchCommittedBatch(s: SparkSession, stateDir: String, q: Quantizers,
-      probes: DataFrame, nProbe: Int, k: Int): DataFrame = {
-    require(q.sq8Amax.isEmpty && q.sq8Dims.isEmpty,
-      "SQ8 state serves through searchCommittedBatchSq8 or the " +
-        "per-dim single-probe entries")
-    // OPQ probe frames enter the permuted domain once, here (the
-    // artifact's coarse/books are already permuted)
-    val w = q.opqPerm.map(p => probes.select(col("qid"),
-      permuteVec(col("v"), p).as("v"))).getOrElse(probes)
-    // pin + collect the listing-prune cells in ONE action (r21); the
-    // cells and the serving dataflow read the same Q rows — the
-    // PinnedProbes witness routes to the pre-pinned adcBatchServe
-    // overload, so no further pin job runs on this path
-    val (pinned, cells) = ProductQuantizer.pinProbesWithCells(w, q.coarse, nProbe)
-    val committed = StreamState.readCommitted(
-      s, stateDir, "codes", codesSchema(q.m), partitioned = true)
-      .where(col("cell").isin(cells: _*))
-    if (q.residual)
-      ProductQuantizer.adcBatchServeResidual(
-        committed, pinned, q.coarse, q.books, q.subDim, nProbe, k)
-    else
-      ProductQuantizer.adcBatchServe(
-        committed, pinned, q.coarse, q.books, q.subDim, nProbe, k)
-  }
-
-  // ---- CDC maintenance: deletes and re-inserts ----------------------
-  //
-  // The append path above is insert-once (a re-shipped vec_id is
-  // dropped); a production index also takes DELETES — FAISS's
-  // remove_ids, Milvus/Lucene tombstones — and re-inserts after them.
-  // Physical deletion from immutable committed partitions is
-  // compaction's business; the live path appends TOMBSTONES:
-  //
-  //  - a delete writes (vec_id, del_batch=N) to `tombs/batch_id=N`;
-  //  - a code row is LIVE iff no tombstone with del_batch > src_batch
-  //    exists for its id (src_batch rides IN the row, so identity
-  //    compaction folds both tables without losing the ordering);
-  //  - an insert is blocked only by a LIVE earlier row (first-write-
-  //    wins, as in the append path) that this batch does not itself
-  //    delete — so delete+insert of a live id in one batch REPLACES it
-  //    (the CDC re-key convention), and an insert after a delete
-  //    RESURRECTS the id with its new codes.
-  //
-  // Replay-idempotence is inherited: both writes are batch-id-keyed
-  // overwrites behind the shared commit marker, and the liveness check
-  // reads strictly-earlier state (upTo = batchId), so a replayed
-  // committed batch recomputes its rows bit-for-bit. A state dir is
-  // EITHER append-only (processBatch) or CDC (processBatchCdc) — the
-  // CDC codes schema carries src_batch, and StreamState.compact's
-  // all-tables guard refuses a mixed-discipline fold loudly.
-
-  /** The CDC op column: rows with `__op = "delete"` are tombstones
-    * (embedding ignored); anything else — including a missing column —
-    * is an insert. The Merge operator's `__op` convention, reused.
-    */
-  val OpColumn = "__op"
-
-  /** True when this state dir's batch 0 is a [[rebuildCdc]] generation
-    * base (the `_rebuilt` flag written beside the quantizers).
-    */
-  private def hasRebuildBase(s: SparkSession, stateDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/_rebuilt")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def cdcCodesSchema(m: Int): StructType =
-    StructType(codesSchema(m).fields :+ StructField("src_batch", LongType))
-
-  private val tombSchema = StructType(Seq(
-    StructField("vec_id", LongType), StructField("del_batch", LongType)))
-
-  /** The LIVE code table as of (strictly before) `upTo`: committed
-    * codes minus the rows a STRICTLY LATER tombstone kills — a
-    * same-batch tombstone does not kill the same batch's insert
-    * (delete-then-insert order within a batch). One anti-join on
-    * (vec_id, del_batch > src_batch); tombstone state never grows past
-    * the delete stream itself, and compaction may resolve-and-drop both
-    * sides (see [[compactStateCdc]]).
-    */
-  def liveCodes(s: SparkSession, stateDir: String, m: Int,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val codes = StreamState.readCommitted(
-      s, stateDir, "codes", cdcCodesSchema(m), upTo, partitioned = true)
-    val tombs = StreamState.readCommitted(
-      s, stateDir, "tombs", tombSchema, upTo)
-    codes.join(tombs,
-      codes("vec_id") === tombs("vec_id") &&
-        tombs("del_batch") > codes("src_batch"),
-      "left_anti")
-  }
-
-  /** One CDC micro-batch of (vec_id, embedding, __op) rows. Inserts are
-    * assigned against the frozen quantizers exactly as [[processBatch]];
-    * deletes append tombstones. Within a batch, duplicate insert ids
-    * collapse to one deterministic row and a delete+insert pair
-    * resolves to the insert (applied over the delete).
-    *
-    * INTRA-BATCH ORDER CONTRACT (ADVICE r17): ops within one
-    * micro-batch are a SET, not a sequence — there is no ordering
-    * column, so a delete and an insert for the same id in one batch
-    * ALWAYS resolve delete-then-insert (the re-key convention above),
-    * regardless of the order the producer emitted them. A producer
-    * whose last op for an id in a batch is a DELETE (ordered-CDC /
-    * Debezium semantics: insert-then-delete ⇒ dead) must not ship both
-    * in one batch — split them across batches, or pre-resolve to the
-    * final op before handing the batch over. This engine-side
-    * convention is deliberate: resolving by arrival order would make
-    * replay results depend on intra-batch row order, which Spark does
-    * not preserve.
-    */
-  def processBatchCdc(batch: Dataset[Row], batchId: Long, q: Quantizers,
-      stateDir: String, autoCompactEvery: Int = 0): Unit = {
-    val s = batch.sparkSession
-    // a rebuilt generation's batch 0 IS the rebuilt corpus
-    // ([[rebuildCdc]]); only a maintainCdc stream started with a FRESH
-    // checkpoint would ever present batchId=0 against it, and its
-    // overwrite would silently drop the entire rebuilt code table.
-    // Refuse loudly (ADVICE r17) — a CONTINUING stream keeps its
-    // checkpoint and only ever presents ids above its own history.
-    if (batchId == 0L && hasRebuildBase(s, stateDir))
-      throw new IllegalStateException(
-        s"$stateDir holds a rebuilt generation at batch_id=0; a CDC " +
-          "stream with a fresh checkpoint (batchId=0) would overwrite " +
-          "it — continue the existing checkpoint instead")
-    val ops =
-      if (batch.columns.contains(OpColumn)) batch
-      else batch.withColumn(OpColumn, lit("insert"))
-    val dels = ops.where(col(OpColumn) === "delete")
-      .select(col("vec_id")).distinct()
-    val ins = ops.where(coalesce(col(OpColumn), lit("insert")) =!= "delete")
-      .select(col("vec_id"), col("embedding"))
-    val indexed0 = project(ins, q)
-    val codeCols = indexed0.columns.filter(_ != "vec_id").toSeq
-    val indexed = indexed0.groupBy(col("vec_id"))
-      .agg(min(struct(codeCols.map(col): _*)).as("k"))
-      .select(col("vec_id") +: codeCols.map(c => col("k." + c)): _*)
-    // an insert is blocked by an id that is live BEFORE this batch and
-    // NOT deleted by it — so re-insert-after-delete lands, and
-    // delete+insert replaces
-    val blocked = liveCodes(s, stateDir, q.m, upTo = batchId)
-      .select(col("vec_id"))
-      .join(dels, Seq("vec_id"), "left_anti")
-    indexed.join(blocked, Seq("vec_id"), "left_anti")
-      .withColumn("src_batch", lit(batchId))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$stateDir/codes/batch_id=$batchId")
-    dels.withColumn("del_batch", lit(batchId))
-      .write.mode("overwrite").parquet(s"$stateDir/tombs/batch_id=$batchId")
-    StreamState.commitMarker(s, stateDir, batchId)
-    // the auto valve RESOLVES: continuous maintenance should never let
-    // state size track the delete history instead of the live set
-    StreamState.maybeCompact(s, stateDir, autoCompactEvery)(
-      compactStateCdcResolve(s, stateDir, q.m))
-  }
-
-  /** Continuous CDC maintenance over a streaming (vec_id, embedding,
-    * __op) frame.
-    */
-  def maintainCdc(emb: DataFrame, q: Quantizers, stateDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 16): StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatchCdc(batch, batchId, q, stateDir, autoCompactEvery)
-      }
-      .start()
-
-  /** Fold a CDC state dir — BOTH tables under the one marker (the
-    * all-tables contract). Identity merges: src_batch/del_batch ride in
-    * the rows, so the folded base preserves the liveness ordering
-    * bit-for-bit. The RESOLVING variant below is the production valve;
-    * this one exists to pin that resolution is an optimization, not a
-    * semantic (CdcIndexSpec serves identical results through both).
-    */
-  def compactStateCdc(s: SparkSession, stateDir: String, m: Int): Option[Long] =
-    StreamState.compact(s, stateDir, Seq(
-      ("codes", cdcCodesSchema(m), (df: DataFrame) => df),
-      ("tombs", tombSchema, (df: DataFrame) => df)),
-      partitionCols = Map("codes" -> Seq("cell")))
-
-  /** RESOLVE-at-compaction — the tombstone GC a log-structured index
-    * runs at merge time (Lucene segment merges, LSM compaction): the
-    * folded codes keep only rows no folded tombstone kills, and the
-    * folded tombstones drop entirely. Every folded tombstone is SPENT
-    * once the fold resolves: surviving folded rows outrank it by
-    * construction, and every unfolded or future row carries src_batch
-    * above the fold point. Replay stays exact because the newest
-    * committed batch is never folded and its strictly-earlier liveness
-    * view over (resolved base + unfolded partitions) equals the
-    * pre-fold computation — the same rows survive either way. State
-    * size now tracks the LIVE set + batches-since-compaction, not the
-    * delete history. Crash contract inherited from [[StreamState
-    * .compact]] (base written first, marker last, torn fold invisible).
-    * The tombstone horizon is the FOLD ID the compaction itself hands
-    * to the merge ([[StreamState.compactWith]]) — codes and tombs can
-    * never resolve against different horizons, even if another batch
-    * commits mid-compaction.
-    */
-  def compactStateCdcResolve(s: SparkSession, stateDir: String,
-      m: Int): Option[Long] =
-    StreamState.compactWith(s, stateDir, Seq(
-      ("codes", cdcCodesSchema(m), (codes: DataFrame, fold: Long) => {
-        val tombs = StreamState.readCommitted(
-          s, stateDir, "tombs", tombSchema, upTo = fold + 1)
-        codes.join(tombs,
-          codes("vec_id") === tombs("vec_id") &&
-            tombs("del_batch") > codes("src_batch"),
-          "left_anti")
-      }),
-      ("tombs", tombSchema, (t: DataFrame, _: Long) => t.limit(0))),
-      partitionCols = Map("codes" -> Seq("cell")))
-
-  /** [[searchCommitted]] over the LIVE rows of a CDC state dir —
-    * deleted ids never surface, re-inserted ids serve their newest
-    * codes. Same probed-cells-only scan either way.
-    */
-  def searchCommittedCdc(s: SparkSession, stateDir: String, q: Quantizers,
-      query: Seq[Long], nProbe: Int, k: Int): DataFrame = {
-    require(q.sq8Amax.isEmpty && q.sq8Dims.isEmpty,
-      "SQ8 CDC state serves through searchCommittedCdcSq8/" +
-        "searchCommittedCdcSq8Dim")
-    if (q.residual) {
-      import s.implicits._
-      return searchCommittedBatchCdc(s, stateDir, q,
-          Seq((0L, query)).toDF("qid", "v"), nProbe, k)
-        .select(col("vec_id"), col("adc_scaled"))
-    }
-    // OPQ probes enter the permuted domain once, here
-    val qw = q.opqPerm.map(permuteLocal(query, _)).getOrElse(query)
-    val probeCells = KMeansOp.nearestCells(q.coarse, qw, nProbe)
-    val luts = ProductQuantizer.adcTables(qw, q.books, q.subDim)
-    ProductQuantizer.adcTopK(
-      liveCodes(s, stateDir, q.m)
-        .where(col("cell").isin(probeCells: _*)),
-      luts, k)
-  }
-
-  /** [[searchCommittedBatch]] over the LIVE rows of a CDC state dir.
-    * The collected probed-cell union prunes the code scan's listing
-    * here too: a row's liveness is decided per row against the
-    * (unpruned) tombstone relation, never by rows in other cells, so
-    * filtering the live view on `cell` pushes to the codes scan and
-    * changes nothing the join would have scored.
-    */
-  def searchCommittedBatchCdc(s: SparkSession, stateDir: String,
-      q: Quantizers, probes: DataFrame, nProbe: Int, k: Int): DataFrame = {
-    require(q.sq8Amax.isEmpty && q.sq8Dims.isEmpty,
-      "SQ8 CDC state serves through searchCommittedBatchCdcSq8 or the " +
-        "per-dim single-probe entries")
-    // OPQ probe frames enter the permuted domain once, here
-    val w = q.opqPerm.map(p => probes.select(col("qid"),
-      permuteVec(col("v"), p).as("v"))).getOrElse(probes)
-    // pin + cells in one action (r21); prune cells and serving read the
-    // same Q rows
-    val (pinned, cells) = ProductQuantizer.pinProbesWithCells(w, q.coarse, nProbe)
-    val live = liveCodes(s, stateDir, q.m).drop("src_batch")
-      .where(col("cell").isin(cells: _*))
-    if (q.residual)
-      ProductQuantizer.adcBatchServeResidual(
-        live, pinned, q.coarse, q.books, q.subDim, nProbe, k)
-    else
-      ProductQuantizer.adcBatchServe(
-        live, pinned, q.coarse, q.books, q.subDim, nProbe, k)
-  }
-
-  /** [[cellHistogram]] over the LIVE rows of a CDC state dir — the
-    * staleness monitor must not count tombstoned mass.
-    */
-  def cellHistogramCdc(s: SparkSession, stateDir: String): DataFrame = {
-    val m = persistedM(s, stateDir).getOrElse(0)
-    liveCodes(s, stateDir, m)
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      .orderBy(col("cell").asc)
-  }
-
-  /** Quantizer-staleness monitor: committed cell occupancy. A healthy
-    * index keeps cells balanced near the training distribution; a
-    * drifting ingest concentrates mass in few cells (probe recall
-    * degrades, per-cell scans grow) — the operational signal to
-    * retrain and rebuild. One bounded aggregate over the code table.
-    */
-  def cellHistogram(s: SparkSession, stateDir: String): DataFrame = {
-    // m from the persisted schema (0 = empty state → empty histogram):
-    // a read-only monitor must not require the quantizer handle, and a
-    // hardcoded default would mis-read a state with a different m
-    val m = persistedM(s, stateDir).getOrElse(0)
-    StreamState.readCommitted(s, stateDir, "codes", codesSchema(m),
-        partitioned = true)
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      .orderBy(col("cell").asc)
   }
 }

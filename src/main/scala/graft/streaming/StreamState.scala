@@ -61,11 +61,17 @@ private[graft] object StreamState {
   def compactedIds(s: SparkSession, stateDir: String): Seq[Long] =
     markerIds(s, s"$stateDir/_compacted")
 
-  def commitMarker(s: SparkSession, stateDir: String, batchId: Long): Unit = {
-    val (fs, dir) = hadoopFs(s, s"$stateDir/_committed")
-    fs.mkdirs(dir)
-    fs.create(new org.apache.hadoop.fs.Path(dir, batchId.toString), true).close()
+  /** Write marker `id` under a marker directory — the one marker writer
+    * behind `_committed`, `_compacted` and IndexStream's `_current`.
+    */
+  private[graft] def writeMarkerIn(s: SparkSession, dir: String, id: Long): Unit = {
+    val (fs, path) = hadoopFs(s, dir)
+    fs.mkdirs(path)
+    fs.create(new org.apache.hadoop.fs.Path(path, id.toString), true).close()
   }
+
+  def commitMarker(s: SparkSession, stateDir: String, batchId: Long): Unit =
+    writeMarkerIn(s, s"$stateDir/_committed", batchId)
 
   /** Read a state table restricted to COMMITTED state — the only truth a
     * restart may trust: the newest committed base below `upTo` (if any)
@@ -212,21 +218,19 @@ private[graft] object StreamState {
       }
     }
     // marker LAST: the single atomic point where readers switch bases
-    val (fs, cdir) = hadoopFs(s, s"$stateDir/_compacted")
-    fs.mkdirs(cdir)
-    fs.create(new org.apache.hadoop.fs.Path(cdir, m.toString), true).close()
+    writeMarkerIn(s, s"$stateDir/_compacted", m)
     // best-effort cleanup — everything below is already unreadable
     committed.filter(_ <= m).foreach { id =>
       tables.foreach { case (t, _, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/$t/batch_id=$id"), true)
+        rootFs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/$t/batch_id=$id"), true)
       }
-      fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/_committed/$id"), false)
+      rootFs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/_committed/$id"), false)
     }
     prevBase.foreach { b =>
       tables.foreach { case (t, _, _) =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/$t/base_id=$b"), true)
+        rootFs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/$t/base_id=$b"), true)
       }
-      fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/_compacted/$b"), false)
+      rootFs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/_compacted/$b"), false)
     }
     Some(m)
   }

@@ -9,10 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** CDC maintenance of the vector index: deletes tombstone, re-inserts
   * resurrect with their new codes, delete+insert replaces in one batch,
-  * a pure-insert CDC stream is bit-identical to the append-only path,
-  * replay of a committed batch is idempotent, torn writes are invisible,
-  * and compaction folds both tables without changing a single search
-  * result.
+  * a pure-insert CDC stream equals the batch tier, replay of a committed
+  * batch is idempotent, torn writes are invisible, and compaction folds
+  * both tables without changing a single search result.
   */
 class CdcIndexSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -51,6 +50,33 @@ class CdcIndexSpec extends AnyFunSuite {
         Seq(r.getAs[Long]("code_0"), r.getAs[Long]("code_1"),
           r.getAs[Long]("code_2"), r.getAs[Long]("code_3"))))
       .toSeq.sortBy(_._1)
+
+  /** Identity fold of both CDC tables: each row keeps its src_batch /
+    * del_batch, so the folded base preserves the liveness ordering
+    * bit-for-bit. The reference twin of
+    * [[IndexStream.compactStateCdcResolve]]: serving identical results
+    * through both pins that resolve-at-compaction is an optimisation,
+    * not a semantic.
+    */
+  private def compactStateCdc(stateDir: String, m: Int): Option[Long] =
+    StreamState.compact(spark, stateDir, Seq(
+      ("codes", IndexStream.codesSchema(m), (df: DataFrame) => df),
+      ("tombs", IndexStream.tombSchema, (df: DataFrame) => df)),
+      partitionCols = Map("codes" -> Seq("cell")))
+
+  /** The active generation of an index root and its persisted
+    * quantizers — what a restarted server loads before it searches.
+    */
+  private def current(root: String): (String, IndexStream.Quantizers) = {
+    val gen = IndexStream.currentRoot(spark, root).get
+    (gen, IndexStream.loadQuantizers(spark, gen))
+  }
+
+  /** Single-probe PQ/OPQ serving from an index root's active generation. */
+  private def searchActive(root: String, qv: Seq[Long]): DataFrame = {
+    val (gen, q) = current(root)
+    IndexStream.searchCommittedCdc(spark, gen, q, qv, 2, 10)
+  }
 
   /** The one-shot projection of (id, embedding) pairs through `q`. */
   private def projected(q: IndexStream.Quantizers,
@@ -145,7 +171,7 @@ class CdcIndexSpec extends AnyFunSuite {
     assert(liveRows(stateDir) == live2, "replay diverged")
 
     // compaction folds codes AND tombs under one marker, liveness intact
-    val base = IndexStream.compactStateCdc(spark, stateDir, 4)
+    val base = compactStateCdc(stateDir, 4)
     assert(base.nonEmpty)
     assert(liveRows(stateDir) == live2, "compaction changed liveness")
     val servedAfter = IndexStream.searchCommittedCdc(spark, stateDir, q,
@@ -153,44 +179,32 @@ class CdcIndexSpec extends AnyFunSuite {
     assert(servedAfter == servedBefore, "compaction changed search results")
   }
 
-  test("a pure-insert CDC stream is bit-identical to the append-only " +
-    "path, including batch serving") {
+  test("a pure-insert CDC stream equals the batch tier: the same codes " +
+    "as the one-shot indexProjection and the same ranked rows as " +
+    "q_ann_ivfpq_batch") {
     val q = quantizers
     val rows = fullRows
-    val appendDir = java.nio.file.Files
-      .createTempDirectory("graft_cdc_append").toString
-    val cdcDirS = java.nio.file.Files
+    val stateDir = java.nio.file.Files
       .createTempDirectory("graft_cdc_pure").toString
     val waves = Seq(rows.filter(_._1 < 300L), rows.filter(_._1 >= 300L))
     waves.zipWithIndex.foreach { case (w, i) =>
-      IndexStream.processBatch(
-        w.toDF("vec_id", "embedding"), i.toLong, q, appendDir)
       IndexStream.processBatchCdc(
-        cdcDf(w.map(r => (r._1, r._2, "insert"))), i.toLong, q, cdcDirS)
+        cdcDf(w.map(r => (r._1, r._2, "insert"))), i.toLong, q, stateDir)
     }
-    val appendCodes = StreamState.readCommitted(spark, appendDir, "codes",
-        org.apache.spark.sql.types.StructType(
-          Seq("vec_id", "cell", "code_0", "code_1", "code_2", "code_3")
-            .map(n => org.apache.spark.sql.types.StructField(n,
-              org.apache.spark.sql.types.LongType))),
-        partitioned = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5))).toSeq.sortBy(_._1)
-    val cdcCodes = IndexStream.liveCodes(spark, cdcDirS, 4)
-      .drop("src_batch")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5))).toSeq.sortBy(_._1)
-    assert(cdcCodes == appendCodes)
-    // batch serving parity over a probe frame
-    val probes = Seq((0L, intVecOf(rows(0)._2)), (1L, intVecOf(rows(1)._2)))
-      .toDF("qid", "v")
-    val a = IndexStream.searchCommittedBatch(spark, appendDir, q,
+    assert(liveRows(stateDir) == projected(q, rows),
+      "pure-insert CDC codes diverged from the one-shot projection")
+    // batch serving parity over a probe frame: the declared batch tier
+    // serves vec 0/1/2 as its probes at nProbe 2, top 3
+    val probes = rows.filter(_._1 < 3L)
+      .map { case (id, e) => (id, intVecOf(e)) }.toDF("qid", "v")
+    val served = IndexStream.searchCommittedBatchCdc(spark, stateDir, q,
         probes, 2, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val c = IndexStream.searchCommittedBatchCdc(spark, cdcDirS, q,
-        probes, 2, 3).collect()
+    val declared = queries.SemanticQ.queries("q_ann_ivfpq_batch")(spark, d)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(c == a)
+    assert(served.nonEmpty && served == declared,
+      "pure-insert CDC batch serving diverged from q_ann_ivfpq_batch")
   }
 
   test("RESIDUAL CDC: delete excluded from the residual batch serving " +
@@ -282,14 +296,14 @@ class CdcIndexSpec extends AnyFunSuite {
     // the rebuilt generation serves every row live
     assert(IndexStream.liveCodes(spark, gen, 4).count() == rows.length.toLong)
     val qv = intVecOf(rows.head._2)
-    val before = IndexStream.searchCurrentCdc(spark, root, qv, 2, 10)
+    val before = searchActive(root, qv)
       .collect().map(_.getLong(0)).toSeq
     assert(before.nonEmpty && before.contains(0L))
     // CDC continues on the generation (same-checkpoint discipline:
     // batch ids strictly above the rebuild's 0)
     IndexStream.processBatchCdc(
       cdcDf(Seq((0L, Seq.empty[Float], "delete"))), 1L, q, gen)
-    val after = IndexStream.searchCurrentCdc(spark, root, qv, 2, 10)
+    val after = searchActive(root, qv)
       .collect().map(_.getLong(0)).toSeq
     assert(!after.contains(0L), "deleted id served from rebuilt generation")
     // a fresh server loads the persisted quantizers and agrees
@@ -302,7 +316,7 @@ class CdcIndexSpec extends AnyFunSuite {
     IndexStream.rebuildCdc(spark, root,
       rows.filter(_._1 != 0L).toDF("vec_id", "embedding"),
       k = 8, iters = 2, m = 4, subDim = 16)
-    val after2 = IndexStream.searchCurrentCdc(spark, root, qv, 2, 10)
+    val after2 = searchActive(root, qv)
       .collect().map(_.getLong(0)).toSeq
     assert(!after2.contains(0L))
     assert(IndexStream.currentRoot(spark, root).get != gen)
@@ -563,8 +577,12 @@ class CdcIndexSpec extends AnyFunSuite {
       java.lang.Double.doubleToRawLongBits(q.sq8Amax.get))
     // rebuilt-corpus serving == the persisted batch IVF_SQ8 index
     val qEmb = fullRows.head._2.map(_.toDouble)
-    val served = IndexStream.searchCurrentCdcSq8(spark, root, qEmb, 2, 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def servedSq8() = {
+      val (g, lq) = current(root)
+      IndexStream.searchCommittedCdcSq8(spark, g, lq, qEmb, 2, 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+    val served = servedSq8()
     val batchTier = queries.SemanticQ.queries("q_ann_ivf_sq8_part")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(served == batchTier,
@@ -573,8 +591,7 @@ class CdcIndexSpec extends AnyFunSuite {
     // (batch ids strictly above the rebuild's 0, enforced by _rebuilt)
     IndexStream.processBatchCdc(
       cdcDf(Seq((served.head._1, Seq.empty[Float], "delete"))), 1L, q, gen)
-    val after = IndexStream.searchCurrentCdcSq8(spark, root, qEmb, 2, 10)
-      .collect().map(_.getLong(0)).toSeq
+    val after = servedSq8().map(_._1)
     assert(!after.contains(served.head._1),
       "delete against the rebuilt SQ8 generation did not land")
   }
@@ -730,8 +747,12 @@ class CdcIndexSpec extends AnyFunSuite {
     // tier trained on (min/max is order-insensitive), so a restarted
     // server serves the persisted q_sq8_dim_part results bit-for-bit
     val qv = intVecOf(fullRows.head._2)
-    val served = IndexStream.searchCurrentCdcSq8Dim(spark, root, qv, 2, 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def servedSq8Dim() = {
+      val (g, lq) = current(root)
+      IndexStream.searchCommittedCdcSq8Dim(spark, g, lq, qv, 2, 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+    val served = servedSq8Dim()
     val batchTier = queries.SemanticQ.queries("q_sq8_dim_part")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(served == batchTier,
@@ -739,8 +760,7 @@ class CdcIndexSpec extends AnyFunSuite {
     // the lifecycle CONTINUES: a delete lands against the rebuilt base
     IndexStream.processBatchCdc(
       cdcDf(Seq((served.head._1, Seq.empty[Float], "delete"))), 1L, q, gen)
-    val after = IndexStream.searchCurrentCdcSq8Dim(spark, root, qv, 2, 10)
-      .collect().map(_.getLong(0)).toSeq
+    val after = servedSq8Dim().map(_._1)
     assert(!after.contains(served.head._1),
       "delete against the rebuilt per-dim SQ8 generation did not land")
   }
@@ -849,7 +869,7 @@ class CdcIndexSpec extends AnyFunSuite {
       "the allocation must round-trip through the persisted artifact")
     assert(loaded.coarse.sortBy(_._1) == q.coarse.sortBy(_._1))
     val qv = intVecOf(fullRows.head._2)
-    val served = IndexStream.searchCurrentCdc(spark, root, qv, 2, 10)
+    val served = searchActive(root, qv)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val partTier = queries.SemanticQ.queries("q_ann_opq_part")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -858,7 +878,7 @@ class CdcIndexSpec extends AnyFunSuite {
     // the lifecycle CONTINUES: a delete lands against the rebuilt base
     IndexStream.processBatchCdc(
       cdcDf(Seq((served.head._1, Seq.empty[Float], "delete"))), 1L, q, gen)
-    val after = IndexStream.searchCurrentCdc(spark, root, qv, 2, 10)
+    val after = searchActive(root, qv)
       .collect().map(_.getLong(0)).toSeq
     assert(!after.contains(served.head._1),
       "delete against the rebuilt OPQ generation did not land")

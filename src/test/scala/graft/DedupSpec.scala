@@ -1,12 +1,26 @@
 package graft
 
 import graft.operators.{Dedup, TextAnalysis}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class DedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** Interpreted HOF reference form of the minhash signature, the
+    * cross-check for the native expression.
+    */
+  private def minhashSignatureHof(hashes: Column, nHashes: Int): Column = {
+    require(nHashes <= Dedup.minhashA.size,
+      s"at most ${Dedup.minhashA.size} hashes supported")
+    transform(sequence(lit(0), lit(nHashes - 1)), i =>
+      array_min(transform(hashes, h =>
+        element_at(typedLit(Dedup.minhashA), i + 1) * h.bitwiseAND(lit(0x3FFFFFFFL))
+          + element_at(typedLit(Dedup.minhashB), i + 1) * shiftright(h, 30)
+          + i)))
+  }
 
   val base: String = (1 to 30).map("w" + _).mkString(" ")
   lazy val docs = Seq(
@@ -92,7 +106,7 @@ class DedupSpec extends AnyFunSuite {
           t => TextAnalysis.md5Hash60(t)).as("hashes"))
     val bad = df.select(
         Dedup.minhashSignatureFromHashes(col("hashes"), 12).as("nat"),
-        Dedup.minhashSignatureHof(col("hashes"), 12).as("hof"))
+        minhashSignatureHof(col("hashes"), 12).as("hof"))
       .where(col("nat") =!= col("hof")).count()
     assert(bad == 0)
   }

@@ -6,11 +6,13 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Continuous index maintenance: cumulative committed codes across
-  * micro-batches (with a cross-batch duplicate id and a restart) equal
-  * the one-shot index build; search over the committed state equals the
-  * batch q_ann_ivfpq; replay overwrites instead of appending; torn
-  * state writes are never read; compaction preserves the index.
+/** Continuous index maintenance through the CDC entries, fed streams
+  * with no deletes: cumulative live codes across micro-batches (with a
+  * cross-batch duplicate id and a restart) equal the one-shot index
+  * build; search over the maintained state equals the batch
+  * q_ann_ivfpq; replay overwrites instead of appending; torn state
+  * writes are never read; compaction preserves the index; rebuilt
+  * generations swap atomically.
   */
 class IndexStreamSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -28,19 +30,35 @@ class IndexStreamSpec extends AnyFunSuite {
     Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
       .as[(Long, Seq[Float])].collect().toSeq.sortBy(_._1)
 
-  private val codesSchema = org.apache.spark.sql.types.StructType(
-    Seq("vec_id", "cell", "code_0", "code_1", "code_2", "code_3")
-      .map(n => org.apache.spark.sql.types.StructField(n,
-        org.apache.spark.sql.types.LongType)))
+  private def intVecOf(e: Seq[Float]): Seq[Long] =
+    e.map(x => math.floor(x.toDouble * 1e6).toLong)
 
+  /** (vec_id, cell, codes) of the live rows of an m = 4 state, sorted. */
   private def committedCodes(stateDir: String): Seq[(Long, Long, Seq[Long])] =
-    StreamState.readCommitted(spark, stateDir, "codes", codesSchema,
-        partitioned = true)
+    IndexStream.liveCodes(spark, stateDir, 4)
       .collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"),
         Seq(r.getAs[Long]("code_0"), r.getAs[Long]("code_1"),
           r.getAs[Long]("code_2"), r.getAs[Long]("code_3"))))
       .toSeq.sortBy(_._1)
+
+  /** A torn write: a codes partition with no commit marker. */
+  private def tornWrite(stateDir: String, vecId: Long, batchId: Long): Unit =
+    Seq((vecId, 0L, 0L, 0L, 0L, 0L, batchId))
+      .toDF("vec_id", "cell", "code_0", "code_1", "code_2", "code_3",
+        "src_batch")
+      .write.mode("overwrite").parquet(s"$stateDir/codes/batch_id=$batchId")
+
+  /** Single-probe PQ serving from an index root's ACTIVE generation,
+    * as a restarted server does it: resolve `_current`, load the
+    * persisted quantizers, search.
+    */
+  private def searchActive(root: String, qv: Seq[Long]): Seq[(Long, Long)] = {
+    val gen = IndexStream.currentRoot(spark, root).get
+    IndexStream.searchCommittedCdc(spark, gen,
+        IndexStream.loadQuantizers(spark, gen), qv, nProbe = 2, k = 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+  }
 
   test("maintenance across batches + restart equals the one-shot build; " +
     "search over committed state equals batch IVFADC") {
@@ -49,16 +67,17 @@ class IndexStreamSpec extends AnyFunSuite {
     val stateDir = java.nio.file.Files.createTempDirectory("graft_ix_state").toString
     val ckDir = java.nio.file.Files.createTempDirectory("graft_ix_ck").toString
     val rows = fullRows
-    // three waves; wave 3 re-ships vec 0 and 1 (already indexed in wave
-    // 1 — the anti-join must drop them, not re-append)
+    // three waves; wave 3 re-ships vec 0 and 1 (already live from wave
+    // 1 — first write wins, so the liveness anti-join must drop them)
     val waves = Seq(
       rows.filter(_._1 < 150L),
       rows.filter(r => r._1 >= 150L && r._1 < 320L),
       rows.filter(_._1 >= 320L) ++ rows.take(2))
     val mem = MemoryStream[(Long, Seq[Float])]
     def runWave(w: Seq[(Long, Seq[Float])]): Unit = {
-      // fresh query per wave = kill/restart between waves
-      val sq = IndexStream.maintain(
+      // fresh query per wave = kill/restart between waves; the stream
+      // carries no op column, so every row is an insert
+      val sq = IndexStream.maintainCdc(
         mem.toDF().toDF("vec_id", "embedding"), q, stateDir, ckDir)
       try { mem.addData(w: _*); sq.processAllAvailable() } finally sq.stop()
     }
@@ -78,8 +97,8 @@ class IndexStreamSpec extends AnyFunSuite {
     assert(got == expect)
 
     // serving parity: committed-state search == the batch q_ann_ivfpq
-    val qv = rows.head._2.map(x => math.floor(x.toDouble * 1e6).toLong)
-    val served = IndexStream.searchCommitted(spark, stateDir, q, qv,
+    val qv = intVecOf(rows.head._2)
+    val served = IndexStream.searchCommittedCdc(spark, stateDir, q, qv,
         nProbe = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val batch = queries.SemanticQ.queries("q_ann_ivfpq")(spark, d)
@@ -87,14 +106,14 @@ class IndexStreamSpec extends AnyFunSuite {
     assert(served == batch)
 
     // occupancy monitor covers every indexed vector exactly once
-    val hist = IndexStream.cellHistogram(spark, stateDir).collect()
+    val hist = IndexStream.cellHistogramCdc(spark, stateDir).collect()
     assert(hist.map(_.getAs[Long]("n")).sum == rows.length)
 
     // BATCH serving from the same committed state equals the declared
     // coarse-filtered batch query (q_ann_ivfpq_batch) probe for probe
-    val probes = rows.filter(_._1 < 3L).map { case (id, e) =>
-      (id, e.map(x => math.floor(x.toDouble * 1e6).toLong)) }
-    val servedBatch = IndexStream.searchCommittedBatch(
+    val probes = rows.filter(_._1 < 3L)
+      .map { case (id, e) => (id, intVecOf(e)) }.toDF("qid", "v")
+    val servedBatch = IndexStream.searchCommittedBatchCdc(
         spark, stateDir, q, probes, nProbe = 2, k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     val declaredBatch = queries.SemanticQ.queries("q_ann_ivfpq_batch")(spark, d)
@@ -106,7 +125,7 @@ class IndexStreamSpec extends AnyFunSuite {
     // index: score-project the committed-state ADC top-5 — must equal
     // the declared q_shortlist_ann row for row (the headline route off
     // the continuously-maintained compressed index, not a fresh build)
-    val servedShortlist = IndexStream.searchCommitted(spark, stateDir, q, qv,
+    val servedShortlist = IndexStream.searchCommittedCdc(spark, stateDir, q, qv,
         nProbe = 2, k = 5)
       .select(
         concat(lit("vec_"), lpad(col("vec_id").cast("string"), 6, "0"))
@@ -121,38 +140,35 @@ class IndexStreamSpec extends AnyFunSuite {
       "shortlist over the maintained index diverged from q_shortlist_ann")
 
     // replay of a committed batch: deterministic overwrite, not append
-    IndexStream.processBatch(
+    IndexStream.processBatchCdc(
       waves(1).toDF("vec_id", "embedding"), 1L, q, stateDir)
     assert(committedCodes(stateDir) == expect, "replay changed the index")
 
     // torn write: an uncommitted partial partition is invisible
-    Seq((99999L, 7L, 0L, 0L, 0L, 0L))
-      .toDF("vec_id", "cell", "code_0", "code_1", "code_2", "code_3")
-      .write.mode("overwrite").parquet(s"$stateDir/codes/batch_id=77")
+    tornWrite(stateDir, 99999L, 77L)
     assert(committedCodes(stateDir) == expect, "torn write was read as truth")
 
     // compaction folds committed batches and preserves the index
-    val folded = IndexStream.compactState(spark, stateDir)
+    val folded = IndexStream.compactStateCdcResolve(spark, stateDir, q.m)
     assert(folded.nonEmpty)
     assert(committedCodes(stateDir) == expect, "compaction changed the index")
-    val served2 = IndexStream.searchCommitted(spark, stateDir, q, qv, 2, 10)
+    val served2 = IndexStream.searchCommittedCdc(spark, stateDir, q, qv, 2, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(served2 == batch, "post-compaction search diverged")
   }
 
   test("committed-state batch serving over a probe FRAME keeps the " +
     "exchange bound: probe side adds no shuffles at 200 probes") {
-    import spark.implicits._
     val q = quantizers
     val stateDir = java.nio.file.Files.createTempDirectory("graft_ix_plan").toString
-    IndexStream.processBatch(
+    IndexStream.processBatchCdc(
       fullRows.toDF("vec_id", "embedding"), 0L, q, stateDir)
     val probes = (0 until 200).map { i =>
       val base = fullRows((i * 7) % fullRows.length)._2
       (20000L + i,
         base.map(x => math.floor(x.toDouble * 1e6).toLong + ((i % 13) - 6)))
     }.toDF("qid", "v")
-    val df = IndexStream.searchCommittedBatch(spark, stateDir, q, probes,
+    val df = IndexStream.searchCommittedBatchCdc(spark, stateDir, q, probes,
       nProbe = 2, k = 3)
     val plan = df.queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(plan).size >= 2,
@@ -169,24 +185,22 @@ class IndexStreamSpec extends AnyFunSuite {
   }
 
   test("an empty micro-batch commits cleanly and changes nothing") {
-    import spark.implicits._
     val q = quantizers
     val stateDir = java.nio.file.Files.createTempDirectory("graft_ix_empty").toString
-    IndexStream.processBatch(
+    IndexStream.processBatchCdc(
       fullRows.take(5).toDF("vec_id", "embedding"), 0L, q, stateDir)
     val before = committedCodes(stateDir)
-    IndexStream.processBatch(
+    IndexStream.processBatchCdc(
       Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding"), 1L, q, stateDir)
     assert(StreamState.committedIds(spark, stateDir) == Seq(0L, 1L),
       "empty batch must still commit its marker")
     assert(committedCodes(stateDir) == before)
-    val served = IndexStream.searchCommitted(spark, stateDir, q,
-      fullRows.head._2.map(x => math.floor(x.toDouble * 1e6).toLong), 2, 10)
+    val served = IndexStream.searchCommittedCdc(spark, stateDir, q,
+      intVecOf(fullRows.head._2), 2, 10)
     assert(served.count() <= 10) // scan over state incl. the empty partition works
   }
 
   test("duplicate vec_ids WITHIN one micro-batch collapse to one row") {
-    import spark.implicits._
     val q = quantizers
     val stateDir = java.nio.file.Files.createTempDirectory("graft_ix_dup").toString
     val five = fullRows.take(5)
@@ -194,7 +208,7 @@ class IndexStreamSpec extends AnyFunSuite {
     // vec 3 twice with DIFFERENT embeddings — both must yield exactly
     // one committed row, the different-embedding case deterministically
     val mutated = five(3).copy(_2 = five(3)._2.map(_ + 1.0f))
-    IndexStream.processBatch(
+    IndexStream.processBatchCdc(
       (five :+ five(2) :+ mutated).toDF("vec_id", "embedding"), 0L, q, stateDir)
     val got = committedCodes(stateDir)
     assert(got.map(_._1) == five.map(_._1), "one row per vec_id")
@@ -212,9 +226,8 @@ class IndexStreamSpec extends AnyFunSuite {
     assert((row3._2 +: row3._3) == cands)
   }
 
-  test("compaction and histogram derive m from the persisted state " +
-    "(m != 4 state keeps all its code columns)") {
-    import spark.implicits._
+  test("m != 4 state: compaction keeps all its code columns and the " +
+    "histogram derives m from the persisted state") {
     // a 2-subspace quantizer over dim-4 embeddings: subDim 2, m = 2
     val coarse = Seq(0L -> Seq(0L, 0L, 0L, 0L), 1L -> Seq(1000000L, 1000000L, 1000000L, 1000000L))
     val books = Seq(
@@ -224,31 +237,30 @@ class IndexStreamSpec extends AnyFunSuite {
     val stateDir = java.nio.file.Files.createTempDirectory("graft_ix_m2").toString
     val rows = (0L until 8L).map(i =>
       (i, Seq.fill(4)(if (i % 2 == 0) 0.0f else 1.0f)))
-    IndexStream.processBatch(rows.take(4).toDF("vec_id", "embedding"), 0L, q, stateDir)
-    IndexStream.processBatch(rows.drop(4).toDF("vec_id", "embedding"), 1L, q, stateDir)
-    val schema2 = org.apache.spark.sql.types.StructType(
-      Seq("vec_id", "cell", "code_0", "code_1")
-        .map(n => org.apache.spark.sql.types.StructField(n,
-          org.apache.spark.sql.types.LongType)))
-    def state() = StreamState.readCommitted(spark, stateDir, "codes", schema2,
-        partitioned = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    IndexStream.processBatchCdc(rows.take(4).toDF("vec_id", "embedding"), 0L, q, stateDir)
+    IndexStream.processBatchCdc(rows.drop(4).toDF("vec_id", "embedding"), 1L, q, stateDir)
+    def state() = IndexStream.liveCodes(spark, stateDir, q.m)
+      .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"),
+        r.getAs[Long]("code_0"), r.getAs[Long]("code_1")))
       .sortBy(_._1).toSeq
+    def hist() = IndexStream.cellHistogramCdc(spark, stateDir).collect()
+      .map(r => (r.getAs[Long]("cell"), r.getAs[Long]("n"))).toSeq
     val before = state()
-    // the no-m overload must fold with the PERSISTED m=2 schema — the
-    // old hardcoded m=4 default would rewrite the base with phantom
-    // null code_2/code_3 columns
-    assert(IndexStream.compactState(spark, stateDir).nonEmpty)
+    val histBefore = hist()
+    assert(histBefore.map(_._2).sum == rows.length)
+    // the fold must keep the quantizer's m=2 schema — a wrong m would
+    // rewrite the base with phantom null code_2/code_3 columns
+    assert(IndexStream.compactStateCdcResolve(spark, stateDir, q.m).nonEmpty)
     assert(state() == before, "compaction changed the m=2 index")
     val baseDir = s"$stateDir/codes/base_id=" +
       StreamState.compactedIds(spark, stateDir).last
     // cell rides as the partition directory, so inference appends it
     // last — the m-derivation contract is the FIELD SET
     assert(spark.read.parquet(baseDir).schema.fieldNames.toSet ==
-      Set("vec_id", "cell", "code_0", "code_1"),
+      Set("vec_id", "cell", "code_0", "code_1", "src_batch"),
       "compacted base schema must match the persisted m")
-    val hist = IndexStream.cellHistogram(spark, stateDir).collect()
-    assert(hist.map(_.getAs[Long]("n")).sum == rows.length)
+    // the no-handle monitor still reads m = 2 over base + batch
+    assert(hist() == histBefore)
   }
 
   test("rebuild: retrain on the corpus snapshot, persist quantizers, " +
@@ -256,16 +268,14 @@ class IndexStreamSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_ix_root").toString
     val corpus = Tables.embeddings(spark, d)
       .select(col("vec_id"), col("embedding"))
-    val q1 = IndexStream.rebuild(spark, root, corpus,
+    val q1 = IndexStream.rebuildCdc(spark, root, corpus,
       k = 8, iters = 2, m = 4, subDim = 16)
-    val qv = fullRows.head._2.map(x => math.floor(x.toDouble * 1e6).toLong)
+    val qv = intVecOf(fullRows.head._2)
     val batch = queries.SemanticQ.queries("q_ann_ivfpq")(spark, d)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    def served() = IndexStream.searchCurrent(spark, root, qv, 2, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     // same training budget as the declared query → identical quantizers
     // (deterministic integer Lloyd) → identical search
-    assert(served() == batch)
+    assert(searchActive(root, qv) == batch)
     // the persisted artifact round-trips (a restarted server loads it)
     val gen0 = IndexStream.currentRoot(spark, root).get
     assert(gen0.endsWith("gen=0"))
@@ -276,43 +286,41 @@ class IndexStreamSpec extends AnyFunSuite {
       q.coarse.sortBy(_._1), q.books.map(_.sortBy(_._1)), q.subDim)
     assert(norm(IndexStream.loadQuantizers(spark, gen0)) == norm(q1))
     // rebuild on the unchanged corpus: a NEW generation, same answers
-    IndexStream.rebuild(spark, root, corpus, 8, 2, 4, 16)
+    IndexStream.rebuildCdc(spark, root, corpus, 8, 2, 4, 16)
     assert(IndexStream.currentRoot(spark, root).get.endsWith("gen=1"))
-    assert(served() == batch, "rebuild on an unchanged corpus changed results")
+    assert(searchActive(root, qv) == batch,
+      "rebuild on an unchanged corpus changed results")
     // torn rebuild: a generation directory WITHOUT the _current marker
     // is invisible, even with its own internal commit marker
-    import spark.implicits._
-    Seq((424242L, 0L, 0L, 0L, 0L, 0L))
-      .toDF("vec_id", "cell", "code_0", "code_1", "code_2", "code_3")
-      .write.mode("overwrite").parquet(s"$root/gen=99/codes/batch_id=0")
+    tornWrite(s"$root/gen=99", 424242L, 0L)
     StreamState.commitMarker(spark, s"$root/gen=99", 0L)
     assert(IndexStream.currentRoot(spark, root).get.endsWith("gen=1"),
       "an unswapped generation must not become current")
-    assert(served() == batch, "torn rebuild leaked into serving")
+    assert(searchActive(root, qv) == batch, "torn rebuild leaked into serving")
   }
 
   test("drift → histogram signal → rebuild rebalances the cells") {
-    import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_ix_drift").toString
     // corpus A: a line near the origin; gen 0 trains on A alone
     val aRows = (0L until 8L).map(i => (i, Seq(i * 0.1f, 0f, 0f, 0f)))
     val bRows = (100L until 108L).map(i => (i, Seq(100f, 100f, 100f, 100f)))
-    IndexStream.rebuild(spark, root,
+    IndexStream.rebuildCdc(spark, root,
       aRows.toDF("vec_id", "embedding"), k = 2, iters = 2, m = 2, subDim = 2)
     val gen0 = IndexStream.currentRoot(spark, root).get
-    // drifted ingest: every new vector lands in ONE stale cell
-    IndexStream.processBatch(bRows.toDF("vec_id", "embedding"), 1L,
+    // drifted ingest: every new vector lands in ONE stale cell (batch 1
+    // continues the rebuilt generation's batch 0)
+    IndexStream.processBatchCdc(bRows.toDF("vec_id", "embedding"), 1L,
       IndexStream.loadQuantizers(spark, gen0), gen0)
-    val hist1 = IndexStream.cellHistogram(spark, gen0).collect()
+    val hist1 = IndexStream.cellHistogramCdc(spark, gen0).collect()
       .map(_.getAs[Long]("n"))
     assert(hist1.sum == 16L)
     assert(hist1.max >= 9L, s"drifted ingest should concentrate: ${hist1.toSeq}")
     // the consumer: retrain on the full corpus, swap, occupancy rebalances
-    IndexStream.rebuild(spark, root,
+    IndexStream.rebuildCdc(spark, root,
       (aRows ++ bRows).toDF("vec_id", "embedding"), 2, 2, 2, 2)
     val gen1 = IndexStream.currentRoot(spark, root).get
     assert(gen1.endsWith("gen=1"))
-    val hist2 = IndexStream.cellHistogram(spark, gen1).collect()
+    val hist2 = IndexStream.cellHistogramCdc(spark, gen1).collect()
       .map(_.getAs[Long]("n")).sorted.toSeq
     assert(hist2 == Seq(8L, 8L),
       s"rebuild should separate the drifted mass into its own cell: $hist2")
@@ -342,13 +350,13 @@ class IndexStreamSpec extends AnyFunSuite {
     val ckDir = java.nio.file.Files.createTempDirectory("graft_ixr_ck").toString
     val rows = fullRows
     // two waves with a kill/restart between them; wave 2 re-ships vec 0
-    // and 1 (already indexed in wave 1 — the anti-join must drop them)
+    // and 1 (already live from wave 1 — the anti-join must drop them)
     val waves = Seq(
       rows.filter(_._1 < 200L),
       rows.filter(_._1 >= 200L) ++ rows.take(2))
     val mem = MemoryStream[(Long, Seq[Float])]
     def runWave(w: Seq[(Long, Seq[Float])]): Unit = {
-      val sq = IndexStream.maintain(
+      val sq = IndexStream.maintainCdc(
         mem.toDF().toDF("vec_id", "embedding"), q, stateDir, ckDir)
       try { mem.addData(w: _*); sq.processAllAvailable() } finally sq.stop()
     }
@@ -366,8 +374,8 @@ class IndexStreamSpec extends AnyFunSuite {
       .toSeq.sortBy(_._1)
     assert(got == expect, "streamed residual index diverges from the one-shot build")
     // single-probe serving == the declared residual search
-    val qv = rows.head._2.map(x => math.floor(x.toDouble * 1e6).toLong)
-    def servedSingle() = IndexStream.searchCommitted(spark, stateDir, q, qv,
+    val qv = intVecOf(rows.head._2)
+    def servedSingle() = IndexStream.searchCommittedCdc(spark, stateDir, q, qv,
         nProbe = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val declared = queries.SemanticQ.queries("q_ann_ivfpq_res")(spark, d)
@@ -375,9 +383,9 @@ class IndexStreamSpec extends AnyFunSuite {
     assert(servedSingle() == declared)
     // batch serving over the committed residual state == the declared
     // residual batch query, probe for probe
-    val probes = rows.filter(_._1 < 3L).map { case (id, e) =>
-      (id, e.map(x => math.floor(x.toDouble * 1e6).toLong)) }
-    def servedBatch() = IndexStream.searchCommittedBatch(
+    val probes = rows.filter(_._1 < 3L)
+      .map { case (id, e) => (id, intVecOf(e)) }.toDF("qid", "v")
+    def servedBatch() = IndexStream.searchCommittedBatchCdc(
         spark, stateDir, q, probes, nProbe = 2, k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSeq
@@ -386,14 +394,11 @@ class IndexStreamSpec extends AnyFunSuite {
         r.getLong(3))).toSeq
     assert(servedBatch() == declaredBatch)
     // a torn write (partition without its commit marker) is never read
-    import spark.implicits._
-    Seq((999999L, 0L, 0L, 0L, 0L, 0L))
-      .toDF("vec_id", "cell", "code_0", "code_1", "code_2", "code_3")
-      .write.mode("overwrite").parquet(s"$stateDir/codes/batch_id=99")
+    tornWrite(stateDir, 999999L, 99L)
     assert(committedCodes(stateDir) == got, "torn write leaked into reads")
     assert(servedBatch() == declaredBatch)
     // compaction folds the residual state without changing decisions
-    assert(IndexStream.compactState(spark, stateDir).nonEmpty)
+    assert(IndexStream.compactStateCdcResolve(spark, stateDir, q.m).nonEmpty)
     assert(committedCodes(stateDir).filter(_._1 != 999999L) == got)
     assert(servedSingle() == declared)
   }
@@ -403,7 +408,7 @@ class IndexStreamSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_ixr_root").toString
     val corpus = Tables.embeddings(spark, d)
       .select(col("vec_id"), col("embedding"))
-    val q = IndexStream.rebuild(spark, root, corpus,
+    val q = IndexStream.rebuildCdc(spark, root, corpus,
       k = 8, iters = 2, m = 4, subDim = 16, residual = true)
     assert(q.residual)
     val dir = IndexStream.currentRoot(spark, root).get
@@ -412,39 +417,41 @@ class IndexStreamSpec extends AnyFunSuite {
     // loadQuantizers returns cid-sorted entries; compare as sets
     assert(loaded.coarse.sortBy(_._1) == q.coarse.sortBy(_._1))
     assert(loaded.books.map(_.sortBy(_._1)) == q.books.map(_.sortBy(_._1)))
-    val qv = fullRows.head._2.map(x => math.floor(x.toDouble * 1e6).toLong)
-    val served = IndexStream.searchCurrent(spark, root, qv, nProbe = 2, k = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val declared = queries.SemanticQ.queries("q_ann_ivfpq_res")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(served == declared,
-      "rebuild(residual) + searchCurrent must reproduce q_ann_ivfpq_res")
+    assert(searchActive(root, intVecOf(fullRows.head._2)) == declared,
+      "a residual rebuildCdc generation must reproduce q_ann_ivfpq_res")
   }
 
-  test("SQ8 APPEND-path maintenance: batched inserts serve bit-identical " +
-    "single-probe AND batch results to the persisted IVF_SQ8 tiers") {
+  test("SQ8 maintenance across batches: overlapping inserts serve " +
+    "bit-identical single-probe AND batch results to the persisted " +
+    "IVF_SQ8 tiers") {
     val q = queries.SemanticQ.sq8Quantizers(spark, d)
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_ix_sq8").toString
     val emb = Tables.embeddings(spark, d)
       .select(col("vec_id"), col("embedding"))
-    // two batches with an overlapping id range — the anti-join dedup
+    // two batches with an overlapping id range — the liveness anti-join
     // must keep the FIRST write (frozen quantizers: codes identical
     // either way, so liveness is the only thing at stake)
-    IndexStream.processBatch(emb.where(col("vec_id") < 100L), 0L, q, stateDir)
-    IndexStream.processBatch(emb.where(col("vec_id") >= 50L), 1L, q, stateDir)
+    IndexStream.processBatchCdc(emb.where(col("vec_id") < 100L), 0L, q, stateDir)
+    IndexStream.processBatchCdc(emb.where(col("vec_id") >= 50L), 1L, q, stateDir)
+    assert(IndexStream.liveCodes(spark, stateDir, q.m)
+      .where(col("vec_id").between(50L, 99L))
+      .select(col("src_batch")).distinct().collect().map(_.getLong(0)).toSeq ==
+      Seq(0L), "an overlapping insert displaced the first write")
     val qEmb = fullRows.head._2.map(_.toDouble)
-    val single = IndexStream.searchCommittedSq8(
+    val single = IndexStream.searchCommittedCdcSq8(
         spark, stateDir, q, qEmb, nProbe = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val part = queries.SemanticQ.queries("q_ann_ivf_sq8_part")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(single == part,
-      "append-path SQ8 single-probe serving diverged from q_ann_ivf_sq8_part")
+      "SQ8 single-probe serving diverged from q_ann_ivf_sq8_part")
     val probes = Tables.embeddings(spark, d)
       .where(col("vec_id").isin(0L, 1L, 2L))
       .select(col("vec_id").as("qid"), col("embedding"))
-    val batch = IndexStream.searchCommittedBatchSq8(
+    val batch = IndexStream.searchCommittedBatchCdcSq8(
         spark, stateDir, q, probes, nProbe = 2, k = 3)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
@@ -452,6 +459,6 @@ class IndexStreamSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(batch == declared,
-      "append-path SQ8 batch serving diverged from q_ann_ivf_sq8_batch")
+      "SQ8 batch serving diverged from q_ann_ivf_sq8_batch")
   }
 }

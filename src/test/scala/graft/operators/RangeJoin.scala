@@ -20,6 +20,10 @@ import org.apache.spark.sql.functions._
   * length keeps the explode factor ~2 while keeping bins selective.
   * Skewed bins (a burst of intervals over one hot day) are ordinary
   * join-key skew, handled by AQE skew-join splitting, not a plan rewrite.
+  *
+  * No query runs it since q_interval_join moved to a per-day rollup; it
+  * stays here as the pair-enumerating reference form TemporalSpec
+  * compares that rollup against.
   */
 object RangeJoin {
 
