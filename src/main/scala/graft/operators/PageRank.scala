@@ -82,6 +82,11 @@ object PageRank {
         s"bound $maxNodes — this path is for schema-bounded graphs only")
     require(vRows.nonEmpty, "empty vertex set")
     val vs = vRows.map(_.get(0))
+    // ranks are keyed by node here, while [[run]] joins the edges once
+    // per vertex ROW: a duplicated node would count its outflow twice
+    // there and once here
+    require(vs.distinct.length == vs.length,
+      "runBoundedLocal: duplicate node ids in the vertex set")
     val es = edges.select(col("src"), col("dst"), col("w")).collect()
       .map(r => (r.get(0), r.get(1), r.getLong(2)))
     require(es.length <= maxNodes * maxNodes,

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou/Douze/Schmid, "Product Quantization for
@@ -151,41 +152,57 @@ object ProductQuantizer {
       .orderBy(col("adc_scaled").asc, col("vec_id").asc)
       .limit(k)
 
-  /** Batch IVFADC serving over an INDEXED code table — the whole
-    * serving dataflow with BOTH sides distributed, shared by the batch
-    * query tier (SemanticQ) and the committed-state serving tier
-    * (IndexStream). `indexed` must carry (vec_id, cell, code_0 …);
-    * `probes` is any (qid, v) frame — a probe fleet is a DataFrame, not
-    * a driver loop:
-    *
-    *  - per-qid nProbe-nearest coarse cells: the same literal-argmin
-    *    the corpus side's [[indexProjection]] uses, generalized to
-    *    argmin-n via `array_sort` over (dist, cid) structs (ties to
-    *    the lower cid — the shared engine/oracle convention), then a
-    *    bounded explode. Shuffle-free; centroids are k·d literals.
-    *  - per-qid ADC LUTs: the probes joined against the BOUNDED
-    *    codebook-entry relation (m·k rows, broadcast) with a
-    *    per-subspace slice — Q·m·k LUT rows built by executors.
-    *  - both probe-side relations ship as BROADCASTS; the cell join
-    *    prunes the code table BEFORE the per-subspace melt, so only
-    *    probed-cell rows reach the LUT join and the (qid, vec)
-    *    aggregation. Exchanges stay at the aggregation + the qid rank
-    *    window regardless of probe count (plan-pinned in PqSpec).
-    *
-    * Output (qid, rnk, vec_id, adc_scaled), top-k per qid, ordered.
-    *
-    * The probe frame is deduplicated on qid first (one bounded
-    * exchange over Q rows): a duplicated probe row would otherwise
-    * duplicate both its probe-cell rows and its LUT rows, making every
-    * candidate's per-subspace join fan out and fail the `nsub === m`
-    * exactness filter — zero results for that qid instead of its
-    * top-k. Distinct VECTORS under one qid remain a caller error (the
-    * dedup keeps one arbitrarily, as the replaced driver-side `.toMap`
-    * did).
+  // ---- The SQ8 codec, in ONE spelling ------------------------------
+  //
+  // Every SQ8 code and decode in the engine is one of the expressions
+  // below: the batch tiers' array forms (`transform` over these, with
+  // the trained scales as columns of a broadcast relation), the
+  // maintained index's per-column forms (frozen scales passed as `lit`,
+  // which Catalyst folds to the same doubles), and the driver-side
+  // query mirror. Corpus codes, query codes and decodes must agree
+  // bit-for-bit across all of them (the CdcIndexSpec parity pins), so
+  // none of them may be re-spelled inline. floor(x + 0.5) mirrors
+  // q_quantize_embeddings' convention (ROUND-on-double differs across
+  // engines; floor does not).
+
+  /** One coordinate's code under the GLOBAL symmetric scale amax/127
+    * (FAISS's QT_8bit_uniform): floor(e / (amax/127) + 0.5), and 0 when
+    * the trained amax is 0. The scale is shared by corpus and query, so
+    * integer L2 over the codes is exact BIGINT and rank-equivalent to
+    * the dequantized distance.
     */
+  private[graft] def sq8Code(e: Column, amax: Column): Column =
+    when(amax === 0.0, lit(0L))
+      .otherwise(floor(e.cast("double") / (amax / lit(127.0)) + lit(0.5))
+        .cast("long"))
+
+  /** Driver-side mirror of [[sq8Code]] — identical IEEE ops. */
+  private[graft] def sq8CodeLocal(e: Double, amax: Double): Long =
+    if (amax == 0.0) 0L else math.floor(e / (amax / 127.0) + 0.5).toLong
+
+  /** One coordinate's code under its dimension's trained [mn, mx]
+    * interval (FAISS's QT_8bit): floor((e − mn)/Δ + 0.5) with
+    * Δ = (mx − mn)/255 computed first, and 0 on a constant dimension.
+    */
+  private[graft] def sq8DimCode(e: Column, mn: Column, mx: Column): Column =
+    when(mx === mn, lit(0L))
+      .otherwise(floor((e.cast("double") - mn) / ((mx - mn) / lit(255.0))
+        + lit(0.5)).cast("long"))
+
+  /** Dequantize one per-dim code back into the shared ×10^6 integer
+    * domain: floor((mn + c·Δ)·10^6). Search over per-dim codes is
+    * asymmetric (FAISS's DC convention): the corpus code decodes, the
+    * query is never quantized, so quantization error enters once.
+    */
+  private[graft] def sq8DimDecode(c: Column, mn: Column, mx: Column): Column =
+    floor((mn + c.cast("double") * ((mx - mn) / lit(255.0)))
+      * lit(1000000.0)).cast("long")
+
+  // ---- Batch serving ------------------------------------------------
+
   /** The sorted (dist, cid) coarse-argmin array for a probe's vector
     * column — ONE spelling of the per-qid probe-cell derivation, shared
-    * by the batch serving dataflows and [[collectProbeCells]] (ties to
+    * by the batch serving dataflows and [[pinProbesWithCells]] (ties to
     * the lower cid, the engine/oracle convention): `slice(_, 1, nProbe)`
     * of this array IS the probe's cell list.
     */
@@ -195,6 +212,37 @@ object ProductQuantizer {
       struct(KMeansOp.intDist(v, typedLit(cv)).as("dist"),
         lit(cid).as("cid"))
     }: _*))
+
+  /** Each probe's nProbe nearest coarse cells as rows — the bounded
+    * explode of [[probeCellArr]] over the probe vector `v`, shuffle-free
+    * (the centroids are k·d literals). Output (qid, payload…, cell): the
+    * named `payload` columns of `probes` ride along.
+    */
+  private[graft] def probeCellRows(probes: DataFrame,
+      coarse: Seq[(Long, Seq[Long])], v: Column, nProbe: Int,
+      payload: String*): DataFrame = {
+    val keep = col("qid") +: payload.map(col)
+    probes
+      .select(keep :+ explode(slice(probeCellArr(coarse, v), 1, nProbe))
+        .as("pc"): _*)
+      .select(keep :+ col("pc.cid").as("cell"): _*)
+  }
+
+  /** The per-probe top-k tail every batch tier shares: rank each qid's
+    * rows of `scored` by (`dist`, vec_id) — ties to the lower vec_id —
+    * keep the k lowest, and return (qid, rnk, vec_id, `dist`) ordered by
+    * (qid, rnk), with rnk widened to BIGINT in the output.
+    */
+  private[graft] def perProbeTopK(scored: DataFrame, dist: String,
+      k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(col(dist).asc, col("vec_id").asc)
+    scored.withColumn("rnk", row_number().over(w))
+      .where(col("rnk") <= k)
+      .select(col("qid"), col("rnk").cast("long").as("rnk"),
+        col("vec_id"), col(dist))
+      .orderBy(col("qid").asc, col("rnk").asc)
+  }
 
   /** A probe frame that [[pinProbes]] has deduplicated on qid and
     * checkpointed — the type-level witness the batch dataflows accept
@@ -222,44 +270,24 @@ object ProductQuantizer {
   def pinProbes(probesIn: DataFrame): PinnedProbes =
     new PinnedProbes(probesIn.dropDuplicates("qid").localCheckpoint())
 
-  /** The DISTINCT probed cells of a (qid, vector) probe frame,
-    * collected — ≤ Q·nProbe longs, algorithm-bounded the way the k
-    * collected centroids are — so a serving tier over a PERSISTED
-    * cell-partitioned table can push a static partition predicate into
-    * its file listing: the broadcast (qid, cell) join inside the batch
-    * dataflows scopes which rows are SCORED per qid, but Spark plants
-    * no dynamic-partition-pruning subquery for that shape (verified
-    * r18), so without this predicate a batch read LISTS every cell
-    * directory it will never score. Evaluates the same
-    * [[probeCellArr]] expression the dataflows join on; pass a
-    * [[pinProbes]]-pinned frame (enforced by the [[PinnedProbes]]
-    * witness type — serve from the SAME pinned frame) and the pruned
-    * listing is a superset of every (qid, cell) the join touches by
-    * construction — an un-pinned nondeterministic lineage could
-    * re-execute differently between this collect and the serving
-    * join. `v` names the vector column (default `v`; SQ8 callers pass
-    * the int-scaled view of their raw-embedding column).
-    */
-  def collectProbeCells(probes: PinnedProbes, coarse: Seq[(Long, Seq[Long])],
-      nProbe: Int, v: Column = col("v")): Seq[Long] =
-    probes.df
-      .select(explode(slice(probeCellArr(coarse, v), 1, nProbe)).as("pc"))
-      .select(col("pc.cid")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-
-  /** [[pinProbes]] + [[collectProbeCells]] fused into ONE action (r21):
-    * the partition-pruned batch tiers paid two driver jobs per query —
-    * the pin's checkpoint over Q rows, then a second scan of the
-    * checkpointed rows to collect the listing-prune cells. Both outputs
-    * are bounded by the SAME Q·nProbe envelope the cells collect always
-    * carried, so one collect returns the dedup'd probe rows WITH their
-    * probe-cell slices, the pinned frame is rebuilt as a LocalRelation
-    * from the collected rows (pinned BY VALUE — strictly stronger than
-    * the checkpoint: every consumer reads literally the same rows), and
-    * the cells fall out of the extra column. Evaluates the same
-    * [[probeCellArr]] expression the serving joins evaluate, so the
-    * pruned listing remains a superset of every (qid, cell) the join
-    * touches by construction.
+  /** Dedup + pin a probe frame AND collect its DISTINCT probed cells in
+    * ONE action (r21). The cells — ≤ Q·nProbe longs, algorithm-bounded
+    * the way the k collected centroids are — let a serving tier over a
+    * PERSISTED cell-partitioned table push a static partition predicate
+    * into its file listing: the broadcast (qid, cell) join inside the
+    * batch dataflows scopes which rows are SCORED per qid, but Spark
+    * plants no dynamic-partition-pruning subquery for that shape
+    * (verified r18), so without this predicate a batch read LISTS every
+    * cell directory it will never score. One collect returns the
+    * dedup'd probe rows WITH their probe-cell slices, the pinned frame
+    * is rebuilt as a LocalRelation from the collected rows (pinned BY
+    * VALUE — strictly stronger than the checkpoint: every consumer reads
+    * literally the same rows), and the cells fall out of the extra
+    * column. Evaluates the same [[probeCellArr]] expression the serving
+    * joins evaluate, so the pruned listing is a superset of every
+    * (qid, cell) the join touches by construction. `v` names the vector
+    * column (default `v`; SQ8 callers pass the int-scaled view of their
+    * raw-embedding column).
     */
   def pinProbesWithCells(probesIn: DataFrame, coarse: Seq[(Long, Seq[Long])],
       nProbe: Int, v: Column = col("v")): (PinnedProbes, Seq[Long]) = {
@@ -278,6 +306,40 @@ object ProductQuantizer {
     (new PinnedProbes(spark.createDataFrame(pinnedRows, base.schema)), cells)
   }
 
+  /** The bounded codebook-entry relation (sub, code, c): m·k rows, the
+    * broadcast side of every per-probe LUT build.
+    */
+  private def bookRows(s: SparkSession,
+      books: Seq[Seq[(Long, Seq[Long])]]): DataFrame = {
+    import s.implicits._
+    (for {
+      (book, sub) <- books.zipWithIndex
+      (cid, c) <- book
+    } yield (sub, cid, c)).toDF("sub", "code", "c")
+  }
+
+  /** The ADC scoring body both batch encodings share: melt each
+    * candidate code row per subspace into (probeKeys…, vec_id, sub,
+    * code), join the broadcast LUT relation on probeKeys + (sub, code),
+    * sum per (qid, vec_id), keep only rows all m subspaces matched (the
+    * `nsub === m` exactness filter), and rank per probe. `probeKeys` is
+    * (qid) for plain PQ and (qid, cell) for the residual encoding,
+    * whose LUTs are per probed cell — there the cell key doubles as the
+    * probed-cell filter.
+    */
+  private def adcRankBatch(cand: DataFrame, luts: DataFrame,
+      probeKeys: Seq[String], m: Int, topK: Int): DataFrame = {
+    val codesLong = cand.select(probeKeys.map(col) :+ col("vec_id") :+
+      posexplode(array((0 until m).map(i => col(s"code_$i")): _*))
+        .as(Seq("sub", "code")): _*)
+    val adc = codesLong
+      .join(broadcast(luts), probeKeys ++ Seq("sub", "code"))
+      .groupBy(col("qid"), col("vec_id"))
+      .agg(sum(col("d")).as("adc_scaled"), count(lit(1)).as("nsub"))
+      .where(col("nsub") === m)
+    perProbeTopK(adc, "adc_scaled", topK)
+  }
+
   /** Public entry for an un-pinned probe frame: dedup + pin once
     * ([[pinProbes]] — the probe frame feeds two broadcast relations,
     * cells and LUTs, so an un-pinned dedup would re-execute per
@@ -293,44 +355,50 @@ object ProductQuantizer {
     adcBatchServe(indexed, pinProbes(probesIn), coarse, books, subDim,
       nProbe, topK)
 
+  /** Batch IVFADC serving over an INDEXED code table — the whole
+    * serving dataflow with BOTH sides distributed, shared by the batch
+    * query tier (SemanticQ) and the committed-state serving tier
+    * (IndexStream). `indexed` must carry (vec_id, cell, code_0 …);
+    * the probes are any (qid, v) frame — a probe fleet is a DataFrame,
+    * not a driver loop:
+    *
+    *  - per-qid nProbe-nearest coarse cells: [[probeCellRows]], the
+    *    same literal-argmin the corpus side's [[indexProjection]] uses,
+    *    generalized to argmin-n.
+    *  - per-qid ADC LUTs: the probes joined against the BOUNDED
+    *    codebook-entry relation (m·k rows, broadcast) with a
+    *    per-subspace slice — Q·m·k LUT rows built by executors.
+    *  - both probe-side relations ship as BROADCASTS; the cell join
+    *    prunes the code table BEFORE the per-subspace melt, so only
+    *    probed-cell rows reach the LUT join and the (qid, vec)
+    *    aggregation. Exchanges stay at the aggregation + the qid rank
+    *    window regardless of probe count (plan-pinned in PqSpec).
+    *
+    * Output (qid, rnk, vec_id, adc_scaled), top-k per qid, ordered.
+    *
+    * The probe frame is deduplicated on qid first (one bounded
+    * exchange over Q rows): a duplicated probe row would otherwise
+    * duplicate both its probe-cell rows and its LUT rows, making every
+    * candidate's per-subspace join fan out and fail the `nsub === m`
+    * exactness filter — zero results for that qid instead of its
+    * top-k. Distinct VECTORS under one qid remain a caller error (the
+    * dedup keeps one arbitrarily, as the replaced driver-side `.toMap`
+    * did).
+    */
   def adcBatchServe(indexed: DataFrame, pinned: PinnedProbes,
       coarse: Seq[(Long, Seq[Long])], books: Seq[Seq[(Long, Seq[Long])]],
       subDim: Int, nProbe: Int, topK: Int): DataFrame = {
-    val s = indexed.sparkSession
-    import s.implicits._
     val probes = pinned.df
-    val m = books.size
-    val cellArr = probeCellArr(coarse, col("v"))
-    val probeCells = probes
-      .select(col("qid"), explode(slice(cellArr, 1, nProbe)).as("pc"))
-      .select(col("qid"), col("pc.cid").as("cell"))
-    val bookRows = (for {
-      (book, sub) <- books.zipWithIndex
-      (cid, c) <- book
-    } yield (sub, cid, c)).toDF("sub", "code", "c")
-    val luts = probes.crossJoin(broadcast(bookRows))
+    val probeCells = probeCellRows(probes, coarse, col("v"), nProbe)
+    val luts = probes.crossJoin(broadcast(bookRows(indexed.sparkSession, books)))
       .select(col("qid"), col("sub"), col("code"),
         KMeansOp.intDist(
           slice(col("v"), col("sub") * lit(subDim) + lit(1), lit(subDim)),
           col("c")).as("d"))
     // coarse filter FIRST: the broadcast (qid, cell) join prunes the
     // code table to probed cells before any per-subspace work
-    val cand = indexed.join(broadcast(probeCells), Seq("cell"))
-    val codesLong = cand.select(col("qid"), col("vec_id"), posexplode(
-      array((0 until m).map(i => col(s"code_$i")): _*)).as(Seq("sub", "code")))
-    val adc = codesLong
-      .join(broadcast(luts), Seq("qid", "sub", "code"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("d")).as("adc_scaled"), count(lit(1)).as("nsub"))
-      .where(col("nsub") === m)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("adc_scaled").asc, col("vec_id").asc)
-    adc.withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= topK)
-      .select(col("qid"), col("rnk").cast("long").as("rnk"),
-        col("vec_id"), col("adc_scaled"))
-      .orderBy(col("qid").asc, col("rnk").asc)
+    adcRankBatch(indexed.join(broadcast(probeCells), Seq("cell")), luts,
+      Seq("qid"), books.size, topK)
   }
 
   /** The residual-index projection a residual-IVFADC build persists:
@@ -357,8 +425,8 @@ object ProductQuantizer {
     *
     *  - per-qid nProbe-nearest cells exactly as [[adcBatchServe]];
     *  - per-(qid, cell) query residuals: the probe-cell relation
-    *    re-joined to the probes, with the cell centroid looked up in a
-    *    bounded broadcast map literal — `rv = v − centroid[cell]` is
+    *    carrying the probe vector, with the cell centroid looked up in
+    *    a bounded broadcast map literal — `rv = v − centroid[cell]` is
     *    one zip_with projection;
     *  - per-(qid, cell) LUTs: the residual rows against the broadcast
     *    codebook-entry relation — Q·nProbe·m·k rows, executor-built.
@@ -382,45 +450,18 @@ object ProductQuantizer {
   def adcBatchServeResidual(indexed: DataFrame, pinned: PinnedProbes,
       coarse: Seq[(Long, Seq[Long])], books: Seq[Seq[(Long, Seq[Long])]],
       subDim: Int, nProbe: Int, topK: Int): DataFrame = {
-    val s = indexed.sparkSession
-    import s.implicits._
-    val probes = pinned.df
-    val m = books.size
-    val cellArr = probeCellArr(coarse, col("v"))
-    val probeCells = probes
-      .select(col("qid"), col("v"),
-        explode(slice(cellArr, 1, nProbe)).as("pc"))
-      .select(col("qid"), col("v"), col("pc.cid").as("cell"))
+    val probeCells = probeCellRows(pinned.df, coarse, col("v"), nProbe, "v")
     val centsMap = typedLit(coarse.toMap)
     val qres = probeCells.select(col("qid"), col("cell"),
       zip_with(col("v"), element_at(centsMap, col("cell")),
         (x, c) => x - c).as("rv"))
-    val bookRows = (for {
-      (book, sub) <- books.zipWithIndex
-      (cid, c) <- book
-    } yield (sub, cid, c)).toDF("sub", "code", "c")
-    val luts = qres.crossJoin(broadcast(bookRows))
+    val luts = qres.crossJoin(broadcast(bookRows(indexed.sparkSession, books)))
       .select(col("qid"), col("cell"), col("sub"), col("code"),
         KMeansOp.intDist(
           slice(col("rv"), col("sub") * lit(subDim) + lit(1), lit(subDim)),
           col("c")).as("d"))
     val cand = indexed.join(
       broadcast(probeCells.select(col("qid"), col("cell"))), Seq("cell"))
-    val codesLong = cand.select(col("qid"), col("cell"), col("vec_id"),
-      posexplode(array((0 until m).map(i => col(s"code_$i")): _*))
-        .as(Seq("sub", "code")))
-    val adc = codesLong
-      .join(broadcast(luts), Seq("qid", "cell", "sub", "code"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("d")).as("adc_scaled"), count(lit(1)).as("nsub"))
-      .where(col("nsub") === m)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("adc_scaled").asc, col("vec_id").asc)
-    adc.withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= topK)
-      .select(col("qid"), col("rnk").cast("long").as("rnk"),
-        col("vec_id"), col("adc_scaled"))
-      .orderBy(col("qid").asc, col("rnk").asc)
+    adcRankBatch(cand, luts, Seq("qid", "cell"), books.size, topK)
   }
 }

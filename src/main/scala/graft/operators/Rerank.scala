@@ -155,6 +155,10 @@ object Rerank {
         s"bound $n — this path is for algorithm-bounded sets only")
     cRows.foreach(r => require(!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2),
       "mmrSelectLocal: null qid/id/rel"))
+    // the greedy below folds candidates per (qid, id) through `.toMap`,
+    // while the distributed loop keeps every row
+    require(cRows.map(r => (r.get(0), r.get(1))).distinct.length == cRows.length,
+      "mmrSelectLocal: duplicate (qid, id) candidates")
     sRows.foreach(r => require(!r.isNullAt(3), "mmrSelectLocal: null sim"))
     def maxD(a: Double, b: Double): Double =
       if (java.lang.Double.compare(a, b) >= 0) a else b

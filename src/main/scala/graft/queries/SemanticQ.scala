@@ -114,6 +114,38 @@ object SemanticQ {
     Tables.embeddings(s, d)
       .select(col("vec_id"), KMeansOp.intVec(col("embedding")).as("v"))
 
+  /** The vec_id=0 probe's scaled-integer vector, collected — the one
+    * query every single-probe tier and recall monitor here serves.
+    */
+  private def probeVec(s: SparkSession, d: String): Seq[Long] = {
+    import s.implicits._
+    intVecs(s, d).where(col("vec_id") === 0L).select(col("v"))
+      .as[Seq[Long]].head()
+  }
+
+  /** The exact side of every single-probe recall monitor: the
+    * integer-exact top-k of (vec_id, v) rows by distance to `qv`, ties
+    * to the lower vec_id (TakeOrderedAndProject). Output (vec_id).
+    */
+  private def exactTopK(vecs: DataFrame, qv: Seq[Long], k: Int): DataFrame =
+    vecs.select(col("vec_id"),
+        KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
+      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
+      .limit(k)
+      .select(col("vec_id"))
+
+  /** The recall tail every monitor shares: the `exact` rows `approx`
+    * also returned (a `left_semi` join on `keys`), as `n_hits` and a
+    * deterministic BIGINT ppm over the `slots` exact slots.
+    */
+  private def recallPpm(exact: DataFrame, approx: DataFrame,
+      keys: Seq[String], slots: Int): DataFrame =
+    exact.select(keys.map(col): _*)
+      .join(approx.select(keys.map(col): _*), keys, "left_semi")
+      .agg(count(lit(1)).as("n_hits"))
+      .select(col("n_hits"), (col("n_hits") * lit(1000000L) /
+        lit(slots.toLong)).cast("long").as("recall_ppm"))
+
   /** Integer-exact Lloyd assignment after 2 rounds, seeded on the 8
     * lowest vec_ids (the engine AND oracle convention, well-defined for
     * any id space):
@@ -185,8 +217,7 @@ object SemanticQ {
     import s.implicits._
     val cents = trainedCentroids(s, d)
     val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
+    val qv = probeVec(s, d)
     val probeCells = KMeansOp.nearestCells(cents, qv, 2)
     KMeansOp.assign(vecs, cents.toDF("cid", "c"))
       .where(col("cid").isin(probeCells: _*))
@@ -205,22 +236,9 @@ object SemanticQ {
     * (TakeOrderedAndProject), the IVF side reuses the probed-cell scan;
     * the intersection is a 10×10 broadcast join.
     */
-  def recallIvfQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val exact = vecs
-      .select(col("vec_id"), KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"))
-    val ivf = annIvfTrainedQ(s, d).select(col("vec_id"))
-    exact.join(ivf, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(10L)).cast("long").as("recall_ppm"))
-  }
+  def recallIvfQ(s: SparkSession, d: String): DataFrame =
+    recallPpm(exactTopK(intVecs(s, d), probeVec(s, d), 10), annIvfTrainedQ(s, d),
+      Seq("vec_id"), 10)
 
   /** PQ codebooks memoized like every quantizer here — one cache entry
     * per subspace under policy `pq<s>`, keyed to the dataset content
@@ -253,11 +271,9 @@ object SemanticQ {
     * Integer-exact end to end, so the oracle replays it bit-for-bit.
     */
   def annPqQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val books = pqCodebooks(s, d)
     val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
+    val qv = probeVec(s, d)
     val luts = graft.operators.ProductQuantizer.adcTables(qv, books, PqSubDim)
     graft.operators.ProductQuantizer.adcTopK(
       graft.operators.ProductQuantizer.encode(vecs, books, PqSubDim),
@@ -276,12 +292,10 @@ object SemanticQ {
     * and never the raw vectors.
     */
   def annIvfPqQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val cents = trainedCentroids(s, d)
     val books = pqCodebooks(s, d)
     val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
+    val qv = probeVec(s, d)
     val probeCells = KMeansOp.nearestCells(cents, qv, 2)
     val luts = graft.operators.ProductQuantizer.adcTables(qv, books, PqSubDim)
     val indexed = graft.operators.ProductQuantizer
@@ -318,12 +332,10 @@ object SemanticQ {
     * probed cells — still one shuffle-free pass over the code table.
     */
   def annIvfPqResQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val coarse = trainedCentroids(s, d)
     val books = resCodebooks(s, d)
     val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
+    val qv = probeVec(s, d)
     val probeCells = KMeansOp.nearestCells(coarse, qv, 2)
     val codes = graft.operators.ProductQuantizer
       .residualIndexProjection(vecs, coarse, books, PqSubDim)
@@ -435,7 +447,7 @@ object SemanticQ {
     * [[partitionedCodesPath]] and pays only the probed-cell join + ADC
     * melt + rank. TWO prunings stack: the union of the batch's probed
     * cells — collected via
-    * [[graft.operators.ProductQuantizer.collectProbeCells]], ≤ Q·nProbe
+    * [[graft.operators.ProductQuantizer.pinProbesWithCells]], ≤ Q·nProbe
     * longs, the same argmin expression the serving join evaluates — is
     * pushed as a STATIC partition predicate so the file LISTING stops
     * at the probed directories (Spark plants no dynamic-partition-
@@ -526,12 +538,10 @@ object SemanticQ {
     * q_ann_ivfpq plus the score projection.
     */
   def shortlistAnnQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val coarse = trainedCentroids(s, d)
     val books = pqCodebooks(s, d)
     val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
+    val qv = probeVec(s, d)
     val probeCells = KMeansOp.nearestCells(coarse, qv, 2)
     val luts = graft.operators.ProductQuantizer.adcTables(qv, books, PqSubDim)
     val indexed = graft.operators.ProductQuantizer
@@ -559,14 +569,9 @@ object SemanticQ {
     * from the 4-byte code table still return the files the raw-float
     * scan would?" A deployment alerts when it drifts below its floor.
     */
-  def recallShortlistAnnQ(s: SparkSession, d: String): DataFrame = {
-    val exact = PipelineQ.shortlist(s, d).select(col("file_name"))
-    val ann = shortlistAnnQ(s, d).select(col("file_name"))
-    exact.join(ann, Seq("file_name"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(5L)).cast("long").as("recall_ppm"))
-  }
+  def recallShortlistAnnQ(s: SparkSession, d: String): DataFrame =
+    recallPpm(PipelineQ.shortlist(s, d), shortlistAnnQ(s, d),
+      Seq("file_name"), 5)
 
   /** Recall@10 of the COMPOSED IVFADC search vs the integer-exact
     * top-10 — the end-to-end index monitor a deployment actually
@@ -575,22 +580,9 @@ object SemanticQ {
     * into one deterministic BIGINT ppm, where q_recall_ivf and
     * q_recall_pq isolate each source.
     */
-  def recallIvfPqQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val exact = vecs
-      .select(col("vec_id"), KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"))
-    val approx = annIvfPqQ(s, d).select(col("vec_id"))
-    exact.join(approx, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(10L)).cast("long").as("recall_ppm"))
-  }
+  def recallIvfPqQ(s: SparkSession, d: String): DataFrame =
+    recallPpm(exactTopK(intVecs(s, d), probeVec(s, d), 10), annIvfPqQ(s, d),
+      Seq("vec_id"), 10)
 
   /** Recall@10 of the RESIDUAL-encoded IVFADC vs the integer-exact
     * top-10 — the monitor for FAISS's default encoding, completing the
@@ -600,22 +592,9 @@ object SemanticQ {
     * maintained streaming index actually serve). Deterministic BIGINT
     * ppm.
     */
-  def recallIvfPqResQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val exact = vecs
-      .select(col("vec_id"), KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"))
-    val approx = annIvfPqResQ(s, d).select(col("vec_id"))
-    exact.join(approx, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(10L)).cast("long").as("recall_ppm"))
-  }
+  def recallIvfPqResQ(s: SparkSession, d: String): DataFrame =
+    recallPpm(exactTopK(intVecs(s, d), probeVec(s, d), 10), annIvfPqResQ(s, d),
+      Seq("vec_id"), 10)
 
   /** Content-addressed CELL-PARTITIONED code table on scratch disk —
     * the layout a production IVFADC deployment actually persists: the
@@ -881,11 +860,9 @@ object SemanticQ {
     * filter-everything scan of the code table is terabytes.
     */
   def annIvfPqPartQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val cents = trainedCentroids(s, d)
     val books = pqCodebooks(s, d)
-    val qv = intVecs(s, d).where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
+    val qv = probeVec(s, d)
     val probeCells = KMeansOp.nearestCells(cents, qv, 2)
     val luts = graft.operators.ProductQuantizer.adcTables(qv, books, PqSubDim)
     val codes = s.read.schema(partCodesSchema)
@@ -908,11 +885,9 @@ object SemanticQ {
     * ServingTiersSpec pins `selectedPartitions == nProbe` on the scan.
     */
   def annIvfPqResPartQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val coarse = trainedCentroids(s, d)
     val books = resCodebooks(s, d)
-    val qv = intVecs(s, d).where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
+    val qv = probeVec(s, d)
     val probeCells = KMeansOp.nearestCells(coarse, qv, 2)
     val codes = s.read.schema(partCodesSchema)
       .parquet(partitionedResCodesPath(s, d))
@@ -932,10 +907,8 @@ object SemanticQ {
     * chain + the exact re-rank bit-for-bit.
     */
   def annIvfPqRerankQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
+    val qv = probeVec(s, d)
     val shortlist = annIvfPqQ(s, d).select(col("vec_id"))
     vecs.join(broadcast(shortlist), Seq("vec_id"), "left_semi")
       .select(col("vec_id"),
@@ -954,23 +927,9 @@ object SemanticQ {
     * here against a high q_recall_pq as "raise nProbe", and the
     * converse as "raise R". Deterministic BIGINT ppm over the 3 slots.
     */
-  def recallIvfPqRerankQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val exact = vecs
-      .select(col("vec_id"),
-        KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(3)
-      .select(col("vec_id"))
-    val refined = annIvfPqRerankQ(s, d).select(col("vec_id"))
-    exact.join(refined, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(3L)).cast("long").as("recall_ppm"))
-  }
+  def recallIvfPqRerankQ(s: SparkSession, d: String): DataFrame =
+    recallPpm(exactTopK(intVecs(s, d), probeVec(s, d), 3),
+      annIvfPqRerankQ(s, d), Seq("vec_id"), 3)
 
   /** The refine stage at the BATCH tier — [[annIvfPqRerankQ]]'s
     * composition over a probe FRAME: the collect-free batch IVFADC
@@ -994,28 +953,16 @@ object SemanticQ {
       .join(broadcast(probes.select(col("qid"), col("v").as("qv"))), Seq("qid"))
       .select(col("qid"), col("vec_id"),
         KMeansOp.intDist(col("v"), col("qv")).as("dist_scaled"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-    cand.withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= 3)
-      .select(col("qid"), col("rnk"), col("vec_id"), col("dist_scaled"))
-      .orderBy(col("qid").asc, col("rnk").asc)
+    graft.operators.ProductQuantizer.perProbeTopK(cand, "dist_scaled", 3)
   }
 
   /** int8 code array under the GLOBAL symmetric scale (amax/127) — the
     * scalar-quantization (SQ8) encoding: one trained scalar (the corpus
-    * max |coordinate|) instead of per-subspace codebooks. The scale is
-    * SHARED by corpus and query, so integer L2 over the codes is exact
-    * BIGINT and rank-equivalent to the dequantized distance. floor(x/s
-    * + 0.5) mirrors q_quantize_embeddings' convention (ROUND-on-double
-    * differs across engines; floor does not).
+    * max |coordinate|) instead of per-subspace codebooks; the shared
+    * [[graft.operators.ProductQuantizer.sq8Code]] per element.
     */
-  private def sq8Codes(vec: Column, amax: Column): Column =
-    transform(vec, e =>
-      when(amax === 0.0, lit(0L))
-        .otherwise(floor(e.cast("double") / (amax / lit(127.0)) + lit(0.5))
-          .cast("long")))
+  private[graft] def sq8Codes(vec: Column, amax: Column): Column =
+    transform(vec, e => graft.operators.ProductQuantizer.sq8Code(e, amax))
 
   /** Scalar-quantized (SQ8) brute-force top-10 — the remaining member
     * of the FAISS encoding family (Flat → SQ8 → PQ → IVFPQ → residual):
@@ -1035,11 +982,8 @@ object SemanticQ {
     val q = emb.where(col("vec_id") === 0L).select(col("embedding").as("qe"))
     emb.crossJoin(broadcast(g)).crossJoin(broadcast(q))
       .select(col("vec_id"),
-        aggregate(
-          zip_with(sq8Codes(col("embedding"), col("amax")),
-            sq8Codes(col("qe"), col("amax")),
-            (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("qdist"))
+        KMeansOp.intDist(sq8Codes(col("embedding"), col("amax")),
+          sq8Codes(col("qe"), col("amax"))).as("qdist"))
       .orderBy(col("qdist").asc, col("vec_id").asc)
       .limit(10)
   }
@@ -1062,18 +1006,9 @@ object SemanticQ {
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val scored = emb.crossJoin(broadcast(g)).crossJoin(broadcast(probes))
       .select(col("qid"), col("vec_id"),
-        aggregate(
-          zip_with(sq8Codes(col("embedding"), col("amax")),
-            sq8Codes(col("qe"), col("amax")),
-            (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("qdist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("qdist").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= 3)
-      .select(col("qid"), col("rnk"), col("vec_id"), col("qdist"))
-      .orderBy(col("qid").asc, col("rnk").asc)
+        KMeansOp.intDist(sq8Codes(col("embedding"), col("amax")),
+          sq8Codes(col("qe"), col("amax"))).as("qdist"))
+    graft.operators.ProductQuantizer.perProbeTopK(scored, "qdist", 3)
   }
 
   /** IVF + SQ8 — FAISS's IndexIVFScalarQuantizer (QT_8bit), the most
@@ -1088,11 +1023,9 @@ object SemanticQ {
     * cell and code-distance together — shuffle-free until the top-k.
     */
   def annIvfSq8Q(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val cents = trainedCentroids(s, d)
     val emb = Tables.embeddings(s, d)
-    val qv = intVecs(s, d).where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
+    val qv = probeVec(s, d)
     val probeCells = KMeansOp.nearestCells(cents, qv, 2)
     val g = emb.agg(
       graft.operators.ProductQuantizer.amaxExpr(col("embedding"))
@@ -1102,11 +1035,8 @@ object SemanticQ {
       .select(col("vec_id"),
         graft.operators.ProductQuantizer
           .nearestCid(KMeansOp.intVec(col("embedding")), cents).as("cell"),
-        aggregate(
-          zip_with(sq8Codes(col("embedding"), col("amax")),
-            sq8Codes(col("qe"), col("amax")),
-            (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("qdist"))
+        KMeansOp.intDist(sq8Codes(col("embedding"), col("amax")),
+          sq8Codes(col("qe"), col("amax"))).as("qdist"))
       .where(col("cell").isin(probeCells: _*))
       .select(col("vec_id"), col("qdist"))
       .orderBy(col("qdist").asc, col("vec_id").asc)
@@ -1117,23 +1047,9 @@ object SemanticQ {
     * cell-miss and scalar-quantization losses into one monitor, the
     * IVF_SQ8 row of the per-encoding recall family. BIGINT ppm.
     */
-  def recallIvfSq8Q(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val exact = vecs
-      .select(col("vec_id"),
-        KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"))
-    val approx = annIvfSq8Q(s, d).select(col("vec_id"))
-    exact.join(approx, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(10L)).cast("long").as("recall_ppm"))
-  }
+  def recallIvfSq8Q(s: SparkSession, d: String): DataFrame =
+    recallPpm(exactTopK(intVecs(s, d), probeVec(s, d), 10), annIvfSq8Q(s, d),
+      Seq("vec_id"), 10)
 
   /** The persisted-SQ8-index schema: 1-byte-per-dim codes as an array
     * column (BIGINT here for the exact integer contract; the byte story
@@ -1189,10 +1105,8 @@ object SemanticQ {
     * corpus scan. Identical results to q_ann_ivf_sq8 (shared oracle).
     */
   def annIvfSq8PartQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val cents = trainedCentroids(s, d)
-    val qv = intVecs(s, d).where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
+    val qv = probeVec(s, d)
     val probeCells = KMeansOp.nearestCells(cents, qv, 2)
     val codes = s.read.schema(sq8PartSchema).parquet(sq8IndexPath(s, d))
     val amax1 = codes.select(col("amax")).limit(1)
@@ -1203,9 +1117,7 @@ object SemanticQ {
     codes.where(col("cell").isin(probeCells: _*))
       .crossJoin(broadcast(qc))
       .select(col("vec_id"),
-        aggregate(zip_with(col("code"), col("qcode"),
-          (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("qdist"))
+        KMeansOp.intDist(col("code"), col("qcode")).as("qdist"))
       .orderBy(col("qdist").asc, col("vec_id").asc)
       .limit(10)
   }
@@ -1221,7 +1133,7 @@ object SemanticQ {
     * floats are touched only for the Q probe rows. The collected
     * probed-cell union additionally stops the file LISTING at the
     * probed directories ([[graft.operators.ProductQuantizer
-    * .collectProbeCells]], plan-pinned in ServingTiersSpec) — the
+    * .pinProbesWithCells]], plan-pinned in ServingTiersSpec) — the
     * one-row amax read rides the pruned scan (the scale is constant
     * across rows, so any surviving cell serves it).
     */
@@ -1239,26 +1151,16 @@ object SemanticQ {
     val codes = s.read.schema(sq8PartSchema).parquet(sq8IndexPath(s, d))
       .where(col("cell").isin(cells: _*))
     val amax1 = codes.select(col("amax")).limit(1)
-    val cellArr = graft.operators.ProductQuantizer.probeCellArr(
-      cents, KMeansOp.intVec(col("qe")))
     val probes = rawProbes.df
       .crossJoin(broadcast(amax1))
       .select(col("qid"), col("qe"), sq8Codes(col("qe"), col("amax")).as("qcode"))
-    val probeCells = probes
-      .select(col("qid"), col("qcode"), explode(slice(cellArr, 1, 2)).as("pc"))
-      .select(col("qid"), col("qcode"), col("pc.cid").as("cell"))
-    val scored = codes.join(broadcast(probeCells), Seq("cell"))
-      .select(col("qid"), col("vec_id"),
-        aggregate(zip_with(col("code"), col("qcode"),
-          (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("qdist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("qdist").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= 3)
-      .select(col("qid"), col("rnk"), col("vec_id"), col("qdist"))
-      .orderBy(col("qid").asc, col("rnk").asc)
+    val probeCells = graft.operators.ProductQuantizer.probeCellRows(
+      probes, cents, KMeansOp.intVec(col("qe")), 2, "qcode")
+    graft.operators.ProductQuantizer.perProbeTopK(
+      codes.join(broadcast(probeCells), Seq("cell"))
+        .select(col("qid"), col("vec_id"),
+          KMeansOp.intDist(col("code"), col("qcode")).as("qdist")),
+      "qdist", 3)
   }
 
   /** Per-DIMENSION SQ8 training — FAISS's actual ScalarQuantizer
@@ -1280,7 +1182,7 @@ object SemanticQ {
     * expressions are written with IDENTICAL operation order in both
     * engines, so the oracle replays the whole derivation bit-for-bit.
     */
-  private def sq8DimScales(emb: DataFrame): DataFrame =
+  private[graft] def sq8DimScales(emb: DataFrame): DataFrame =
     emb.select(posexplode(col("embedding")).as(Seq("pos", "e")))
       .groupBy(col("pos"))
       .agg(min(col("e").cast("double")).as("mn"),
@@ -1290,47 +1192,21 @@ object SemanticQ {
       .select(transform(col("a"), x => x.getField("mn")).as("vmn"),
         transform(col("a"), x => x.getField("mx")).as("vmx"))
 
-  /** Dequantized scaled-integer corpus vector under the per-dim scales:
-    * dim i's code floor((x−vmn)/Δ+0.5) decoded to floor((vmn + c·Δ)·10^6)
-    * — STRUCTURALLY the [[sq8DimDecode]] ∘ [[sq8DimCode]] composition
-    * (codes are small integers, so the long round-trip is exact), so
-    * the in-flight q_sq8_dim and the persisted q_sq8_dim_part can never
-    * drift: there is exactly one spelling of the code and one of the
-    * decode.
+  /** The per-dim CODE and DECODE arrays under the trained [vmn, vmx]
+    * intervals (`vmn`/`vmx` columns in scope): the shared
+    * [[graft.operators.ProductQuantizer.sq8DimCode]] / `sq8DimDecode`
+    * per element, so the in-flight q_sq8_dim (encode-then-decode —
+    * codes are small integers, so the long round-trip is exact), the
+    * persisted q_sq8_dim_part and the maintained per-dim index can
+    * never drift.
     */
-  private def sq8DimDequant(vec: Column): Column =
-    sq8DimDecode(sq8DimCode(vec))
+  private[graft] def sq8DimCode(vec: Column): Column =
+    transform(vec, (e, i) => graft.operators.ProductQuantizer.sq8DimCode(
+      e, element_at(col("vmn"), i + 1), element_at(col("vmx"), i + 1)))
 
-  /** The per-dim scalar CODE array under the trained [vmn, vmx]
-    * intervals — the 1-byte-per-dim payload the per-dim index persists
-    * (requires `vmn`/`vmx` columns in scope): dim i's code is
-    * floor((x − vmn_i)/Δ_i + 0.5), Δ_i = (vmax_i − vmin_i)/255 — the
-    * same expression [[sq8DimDequant]] folds inline, split out so the
-    * build can STORE the code and the serving side can decode it.
-    */
-  private def sq8DimCode(vec: Column): Column =
-    transform(vec, (e, i) => {
-      val mn = element_at(col("vmn"), i + 1)
-      val mx = element_at(col("vmx"), i + 1)
-      val delta = (mx - mn) / lit(255.0)
-      when(mx === mn, lit(0L))
-        .otherwise(floor((e.cast("double") - mn) / delta + lit(0.5))
-          .cast("long"))
-    })
-
-  /** Dequantize a PERSISTED per-dim code array back into the shared
-    * ×10^6 integer domain (asymmetric DC: the corpus code is decoded,
-    * the query never quantized) — operation-for-operation the tail of
-    * [[sq8DimDequant]], so a persisted-code decode is bit-identical to
-    * the in-flight encode-then-decode.
-    */
-  private def sq8DimDecode(code: Column): Column =
-    transform(code, (c, i) => {
-      val mn = element_at(col("vmn"), i + 1)
-      val mx = element_at(col("vmx"), i + 1)
-      val delta = (mx - mn) / lit(255.0)
-      floor((mn + c.cast("double") * delta) * lit(1000000.0)).cast("long")
-    })
+  private[graft] def sq8DimDecode(code: Column): Column =
+    transform(code, (c, i) => graft.operators.ProductQuantizer.sq8DimDecode(
+      c, element_at(col("vmn"), i + 1), element_at(col("vmx"), i + 1)))
 
   /** Top-10 under the per-dim-trained SQ8 encoding ([[sq8DimScales]]):
     * one corpus projection dequantizes each vector's codes into the
@@ -1346,10 +1222,8 @@ object SemanticQ {
       .select(col("v").as("qv"))
     emb.crossJoin(broadcast(sq8DimScales(emb))).crossJoin(broadcast(q))
       .select(col("vec_id"),
-        aggregate(
-          zip_with(sq8DimDequant(col("embedding")), col("qv"),
-            (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("qdist"))
+        KMeansOp.intDist(sq8DimDecode(sq8DimCode(col("embedding"))),
+          col("qv")).as("qdist"))
       .orderBy(col("qdist").asc, col("vec_id").asc)
       .limit(10)
   }
@@ -1359,23 +1233,9 @@ object SemanticQ {
     * it must meet or beat [[recallSq8Q]] at identical scan cost.
     * Deterministic BIGINT ppm.
     */
-  def recallSq8DimQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val exact = vecs
-      .select(col("vec_id"),
-        KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"))
-    val approx = sq8DimTopkQ(s, d).select(col("vec_id"))
-    exact.join(approx, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(10L)).cast("long").as("recall_ppm"))
-  }
+  def recallSq8DimQ(s: SparkSession, d: String): DataFrame =
+    recallPpm(exactTopK(intVecs(s, d), probeVec(s, d), 10), sq8DimTopkQ(s, d),
+      Seq("vec_id"), 10)
 
   /** The persisted per-dim-SQ8 index schema: per-dim codes plus the
     * trained 2×d scale table riding IN each row (constant → parquet RLE
@@ -1430,18 +1290,13 @@ object SemanticQ {
     * oracle replays the per-dim scale chain over the probed cells.
     */
   def sq8DimPartQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val cents = trainedCentroids(s, d)
-    val qv = intVecs(s, d).where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
+    val qv = probeVec(s, d)
     val probeCells = KMeansOp.nearestCells(cents, qv, 2)
     s.read.schema(sq8DimPartSchema).parquet(sq8DimIndexPath(s, d))
       .where(col("cell").isin(probeCells: _*))
       .select(col("vec_id"),
-        aggregate(
-          zip_with(sq8DimDecode(col("code")), typedLit(qv),
-            (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("qdist"))
+        KMeansOp.intDist(sq8DimDecode(col("code")), typedLit(qv)).as("qdist"))
       .orderBy(col("qdist").asc, col("vec_id").asc)
       .limit(10)
   }
@@ -1456,7 +1311,7 @@ object SemanticQ {
     * scaled-integer domain end to end (asymmetric DC). The collected
     * probed-cell union additionally stops the file LISTING at the
     * probed directories ([[graft.operators.ProductQuantizer
-    * .collectProbeCells]], plan-pinned in ServingTiersSpec).
+    * .pinProbesWithCells]], plan-pinned in ServingTiersSpec).
     */
   def sq8DimBatchQ(s: SparkSession, d: String): DataFrame = {
     val cents = trainedCentroids(s, d)
@@ -1469,24 +1324,13 @@ object SemanticQ {
       cents, nProbe = 2, col("qv"))
     val codes = s.read.schema(sq8DimPartSchema).parquet(sq8DimIndexPath(s, d))
       .where(col("cell").isin(cells: _*))
-    val cellArr = graft.operators.ProductQuantizer.probeCellArr(
-      cents, col("qv"))
-    val probeCells = probes.df
-      .select(col("qid"), col("qv"), explode(slice(cellArr, 1, 2)).as("pc"))
-      .select(col("qid"), col("qv"), col("pc.cid").as("cell"))
-    val scored = codes.join(broadcast(probeCells), Seq("cell"))
-      .select(col("qid"), col("vec_id"),
-        aggregate(
-          zip_with(sq8DimDecode(col("code")), col("qv"),
-            (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("qdist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("qdist").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= 3)
-      .select(col("qid"), col("rnk"), col("vec_id"), col("qdist"))
-      .orderBy(col("qid").asc, col("rnk").asc)
+    val probeCells = graft.operators.ProductQuantizer.probeCellRows(
+      probes.df, cents, col("qv"), 2, "qv")
+    graft.operators.ProductQuantizer.perProbeTopK(
+      codes.join(broadcast(probeCells), Seq("cell"))
+        .select(col("qid"), col("vec_id"),
+          KMeansOp.intDist(sq8DimDecode(col("code")), col("qv")).as("qdist")),
+      "qdist", 3)
   }
 
   /** Recall@10 of the persisted IVF + per-dim SQ8 serving vs the
@@ -1495,23 +1339,9 @@ object SemanticQ {
     * family for the last encoding to graduate to a persisted tier.
     * Deterministic BIGINT ppm.
     */
-  def recallSq8DimPartQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val exact = vecs
-      .select(col("vec_id"),
-        KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"))
-    val approx = sq8DimPartQ(s, d).select(col("vec_id"))
-    exact.join(approx, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(10L)).cast("long").as("recall_ppm"))
-  }
+  def recallSq8DimPartQ(s: SparkSession, d: String): DataFrame =
+    recallPpm(exactTopK(intVecs(s, d), probeVec(s, d), 10), sq8DimPartQ(s, d),
+      Seq("vec_id"), 10)
 
   /** Recall@10 of the SQ8 search vs the integer-exact top-10 — the
     * quantization-loss monitor for the 1-byte encoding, completing the
@@ -1519,23 +1349,9 @@ object SemanticQ {
     * q_recall_ivfpq* the composed indexes; this one prices the SQ8
     * memory/recall trade). Deterministic BIGINT ppm.
     */
-  def recallSq8Q(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val exact = vecs
-      .select(col("vec_id"),
-        KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"))
-    val approx = sq8TopkQ(s, d).select(col("vec_id"))
-    exact.join(approx, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(10L)).cast("long").as("recall_ppm"))
-  }
+  def recallSq8Q(s: SparkSession, d: String): DataFrame =
+    recallPpm(exactTopK(intVecs(s, d), probeVec(s, d), 10), sq8TopkQ(s, d),
+      Seq("vec_id"), 10)
 
   /** Recall of the BATCH IVFADC path, aggregated over the probe SET —
     * the monitor a serving tier actually publishes (per-probe recall is
@@ -1546,25 +1362,13 @@ object SemanticQ {
     * scan, qid-partitioned rank).
     */
   def recallIvfPqBatchQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val vecs = intVecs(s, d)
-    val qids = Seq(0L, 1L, 2L)
-    val probeDf = vecs.where(col("vec_id").isin(qids: _*))
+    val probeDf = vecs.where(col("vec_id").isin(0L, 1L, 2L))
       .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("d").asc, col("vec_id").asc)
-    val exact = vecs.crossJoin(broadcast(probeDf))
-      .select(col("qid"), col("vec_id"),
-        KMeansOp.intDist(col("v"), col("qv")).as("d"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 3)
-      .select(col("qid"), col("vec_id"))
-    val approx = annIvfPqBatchQ(s, d).select(col("qid"), col("vec_id"))
-    exact.join(approx, Seq("qid", "vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(9L)).cast("long").as("recall_ppm"))
+    val exact = graft.operators.ProductQuantizer.perProbeTopK(
+      vecs.crossJoin(broadcast(probeDf)).select(col("qid"), col("vec_id"),
+        KMeansOp.intDist(col("v"), col("qv")).as("d")), "d", 3)
+    recallPpm(exact, annIvfPqBatchQ(s, d), Seq("qid", "vec_id"), 9)
   }
 
   /** Index-quality monitoring for the PQ tier: recall@10 of the ADC
@@ -1572,22 +1376,9 @@ object SemanticQ {
     * compression-loss metric that sizes m and k in production (the PQ
     * twin of q_recall_ivf). Deterministic BIGINT ppm.
     */
-  def recallPqQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val exact = vecs
-      .select(col("vec_id"), KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"))
-    val pq = annPqQ(s, d).select(col("vec_id"))
-    exact.join(pq, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(10L)).cast("long").as("recall_ppm"))
-  }
+  def recallPqQ(s: SparkSession, d: String): DataFrame =
+    recallPpm(exactTopK(intVecs(s, d), probeVec(s, d), 10), annPqQ(s, d),
+      Seq("vec_id"), 10)
 
   // ---- OPQ: pre-rotation by dimension allocation (r18 verdict #6) ---
 
@@ -1659,12 +1450,10 @@ object SemanticQ {
     * allocation must not lose recall against the contiguous split.
     */
   def annOpqQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val perm = opqPerm(s, d)
     val books = opqBooks(s, d)
     val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
+    val qv = probeVec(s, d)
     val luts = books.zipWithIndex.map { case (book, m) =>
       val qSub = perm(m).map(qv(_))
       book.map { case (cid, c) => cid -> KMeansOp.intDistLocal(c, qSub) }.toMap
@@ -1682,7 +1471,7 @@ object SemanticQ {
     * `slice(w, m·subDim + 1, subDim)` of the permuted vector IS
     * [[opqSubVec]](v, perm(m)) — so the ENTIRE existing IVFADC
     * machinery (indexProjection, adcTables/adcTopK, adcBatchServe,
-    * collectProbeCells) serves OPQ unchanged over permuted vectors. A
+    * pinProbesWithCells) serves OPQ unchanged over permuted vectors. A
     * permutation is orthogonal: L2 distances — including the coarse
     * cell argmin against equally-permuted centroids — are preserved
     * exactly, ties and all.
@@ -1732,12 +1521,10 @@ object SemanticQ {
     * raw-domain probe cells, and the ADC joins bit-for-bit.
     */
   def annOpqPartQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val p = opqFlatPerm(s, d)
     val coarse = opqCoarse(s, d)
     val books = opqBooks(s, d)
-    val qv = intVecs(s, d).where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
+    val qv = probeVec(s, d)
     val qw = p.map(qv(_))
     val probeCells = KMeansOp.nearestCells(coarse, qw, 2)
     val luts = graft.operators.ProductQuantizer.adcTables(qw, books, PqSubDim)
@@ -1779,23 +1566,9 @@ object SemanticQ {
     * isotropic, which is exactly when allocation ≈ identity).
     * Deterministic BIGINT ppm.
     */
-  def recallOpqQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val exact = vecs
-      .select(col("vec_id"),
-        KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"))
-    val approx = annOpqQ(s, d).select(col("vec_id"))
-    exact.join(approx, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(10L)).cast("long").as("recall_ppm"))
-  }
+  def recallOpqQ(s: SparkSession, d: String): DataFrame =
+    recallPpm(exactTopK(intVecs(s, d), probeVec(s, d), 10), annOpqQ(s, d),
+      Seq("vec_id"), 10)
 
   /** SemDeDup with the PRODUCTION quantizer size — k = ceil(√N) — the
     * fix the sf1 scale probe prescribed for the fixed-k family: cluster
@@ -2033,8 +1806,15 @@ object SemanticQ {
     * resurrections, not a fresh build.
     */
   private[graft] def cdcLifecycleDir(s: SparkSession, d: String): String =
-    cdcLifecycleWith(s, d, "cdclife")(graft.streaming.IndexStream.Quantizers(
-      trainedCentroids(s, d), pqCodebooks(s, d), PqSubDim))
+    cdcLifecycleWith(s, d, "cdclife")(pqQuantizers(s, d))
+
+  /** The session's frozen plain-PQ quantizer handle: the fixed-k coarse
+    * centroids + the PQ codebooks.
+    */
+  private def pqQuantizers(s: SparkSession, d: String)
+      : graft.streaming.IndexStream.Quantizers =
+    graft.streaming.IndexStream.Quantizers(
+      trainedCentroids(s, d), pqCodebooks(s, d), PqSubDim)
 
   /** Recall@10 of the MAINTAINED CDC index mid-lifecycle
     * ([[cdcLifecycleDir]]: full insert → delete 10% → resurrect half)
@@ -2049,27 +1829,11 @@ object SemanticQ {
     * the IVFADC chain with the lifecycle's live-set predicate.
     */
   def recallCdcQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val qz = graft.streaming.IndexStream.Quantizers(
-      trainedCentroids(s, d), pqCodebooks(s, d), PqSubDim)
-    val dir = cdcLifecycleDir(s, d)
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val approx = graft.streaming.IndexStream
-      .searchCommittedCdc(s, dir, qz, qv, 2, 10)
-      .select(col("vec_id"))
-    val live = vecs.where(cdcLive(col("vec_id")))
-    val exact = live
-      .select(col("vec_id"),
-        KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"))
-    exact.join(approx, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(10L)).cast("long").as("recall_ppm"))
+    val qv = probeVec(s, d)
+    val approx = graft.streaming.IndexStream.searchCommittedCdc(
+      s, cdcLifecycleDir(s, d), pqQuantizers(s, d), qv, 2, 10)
+    recallPpm(exactTopK(intVecs(s, d).where(cdcLive(col("vec_id"))), qv, 10),
+      approx, Seq("vec_id"), 10)
   }
 
   /** The session's frozen OPQ quantizer handle: the permuted coarse
@@ -2105,26 +1869,11 @@ object SemanticQ {
     * the live-set predicate.
     */
   def recallCdcOpqQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val qz = opqQuantizers(s, d)
-    val dir = cdcLifecycleOpqDir(s, d)
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val approx = graft.streaming.IndexStream
-      .searchCommittedCdc(s, dir, qz, qv, 2, 10)
-      .select(col("vec_id"))
-    val live = vecs.where(cdcLive(col("vec_id")))
-    val exact = live
-      .select(col("vec_id"),
-        KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"))
-    exact.join(approx, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(10L)).cast("long").as("recall_ppm"))
+    val qv = probeVec(s, d)
+    val approx = graft.streaming.IndexStream.searchCommittedCdc(
+      s, cdcLifecycleOpqDir(s, d), opqQuantizers(s, d), qv, 2, 10)
+    recallPpm(exactTopK(intVecs(s, d).where(cdcLive(col("vec_id"))), qv, 10),
+      approx, Seq("vec_id"), 10)
   }
 
   /** The trained SQ8 global scale (corpus max |coordinate|) memoized
@@ -2176,27 +1925,13 @@ object SemanticQ {
     */
   def recallCdcSq8Q(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val qz = sq8Quantizers(s, d)
-    val dir = cdcLifecycleSq8Dir(s, d)
     val qEmb = Tables.embeddings(s, d).where(col("vec_id") === 0L)
       .select(col("embedding").cast("array<double>")).as[Seq[Double]].head()
-    val approx = graft.streaming.IndexStream
-      .searchCommittedCdcSq8(s, dir, qz, qEmb, 2, 10)
-      .select(col("vec_id"))
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val live = vecs.where(cdcLive(col("vec_id")))
-    val exact = live
-      .select(col("vec_id"),
-        KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"))
-    exact.join(approx, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(10L)).cast("long").as("recall_ppm"))
+    val approx = graft.streaming.IndexStream.searchCommittedCdcSq8(
+      s, cdcLifecycleSq8Dir(s, d), sq8Quantizers(s, d), qEmb, 2, 10)
+    recallPpm(
+      exactTopK(intVecs(s, d).where(cdcLive(col("vec_id"))), probeVec(s, d), 10),
+      approx, Seq("vec_id"), 10)
   }
 
   /** The trained PER-DIM SQ8 scale tables, collected — the 2×d-double
@@ -2252,26 +1987,11 @@ object SemanticQ {
     * chain with the lifecycle's live-set predicate.
     */
   def recallCdcSq8DimQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val qz = sq8DimQuantizers(s, d)
-    val dir = cdcLifecycleSq8DimDir(s, d)
-    val vecs = intVecs(s, d)
-    val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
-      .as[Seq[Long]].head()
-    val approx = graft.streaming.IndexStream
-      .searchCommittedCdcSq8Dim(s, dir, qz, qv, 2, 10)
-      .select(col("vec_id"))
-    val live = vecs.where(cdcLive(col("vec_id")))
-    val exact = live
-      .select(col("vec_id"),
-        KMeansOp.intDist(col("v"), typedLit(qv)).as("dist_scaled"))
-      .orderBy(col("dist_scaled").asc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"))
-    exact.join(approx, Seq("vec_id"), "left_semi")
-      .agg(count(lit(1)).as("n_hits"))
-      .select(col("n_hits"),
-        (col("n_hits") * lit(1000000L) / lit(10L)).cast("long").as("recall_ppm"))
+    val qv = probeVec(s, d)
+    val approx = graft.streaming.IndexStream.searchCommittedCdcSq8Dim(
+      s, cdcLifecycleSq8DimDir(s, d), sq8DimQuantizers(s, d), qv, 2, 10)
+    recallPpm(exactTopK(intVecs(s, d).where(cdcLive(col("vec_id"))), qv, 10),
+      approx, Seq("vec_id"), 10)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -2774,7 +2494,7 @@ object SemanticQ {
        |ORDER BY qid ASC, rnk ASC""".stripMargin
   }
 
-  /** The per-dim SQ8 derivation ([[sq8DimScales]]/[[sq8DimDequant]] in
+  /** The per-dim SQ8 derivation ([[sq8DimScales]]/[[sq8DimCode]]/[[sq8DimDecode]] in
     * SQL, operation order aligned expression-for-expression): per-dim
     * min/max, the two scale arrays as one row, and the dequantized
     * scaled-integer corpus table `dq(vec_id, dv)`.

@@ -128,80 +128,32 @@ object IndexStream {
   private def permuteLocal(v: Seq[Long], p: Seq[Int]): Seq[Long] =
     p.map(v(_))
 
-  // ---- The SQ8 encode expression, in ONE spelling ------------------
-  //
-  // Corpus codes, single-probe query codes, and batch-probe query
-  // codes must agree bit-for-bit with each other AND with the batch
-  // tier's persisted index (the CdcIndexSpec/IndexStreamSpec parity
-  // pins) — so the floor(e / (amax/127) + 0.5) expression exists once
-  // as a Column (per element / per array) and once as its driver-side
-  // IEEE mirror, never inline.
-
-  /** One dimension's scalar code under the frozen global scale. */
-  private def sq8CodeElem(e: Column, amax: Double): Column =
-    if (amax == 0.0) lit(0L)
-    else floor(e.cast("double") / lit(amax / 127.0) + lit(0.5)).cast("long")
-
-  /** The full per-dim code array of an embedding column. */
-  private def sq8CodeArr(emb: Column, amax: Double): Column =
-    transform(emb, e => sq8CodeElem(e, amax))
-
-  /** Driver-side mirror of [[sq8CodeElem]] — identical IEEE ops. */
-  private def sq8CodeLocal(e: Double, amax: Double): Long =
-    if (amax == 0.0) 0L else math.floor(e / (amax / 127.0) + 0.5).toLong
-
-  /** One dimension's PER-DIM scalar code under the frozen trained
-    * [vmn, vmx] interval — operation-for-operation the column spelling
-    * the batch tier's per-dim index write uses (delta computed as
-    * (mx − mn)/255.0 first, then floor((e − mn)/Δ + 0.5)), with the
-    * frozen scales folded in as literals, so a maintained per-dim
-    * index is bit-identical to the persisted q_sq8_dim_part one.
-    */
-  private def sq8DimCodeElem(e: Column, mn: Double, mx: Double): Column =
-    if (mx == mn) lit(0L)
-    else floor((e.cast("double") - lit(mn)) / lit((mx - mn) / 255.0)
-      + lit(0.5)).cast("long")
-
-  /** Dequantize one persisted per-dim code back into the shared ×10^6
-    * integer domain (asymmetric DC: the corpus code decodes, the query
-    * is never quantized) — the literal-scale twin of the batch tier's
-    * decode, same operation order.
-    */
-  private def sq8DimDecodeElem(c: Column, mn: Double, mx: Double): Column =
-    floor((lit(mn) + c.cast("double") * lit((mx - mn) / 255.0))
-      * lit(1000000.0)).cast("long")
-
   /** The per-batch/per-rebuild corpus projection for this encoding —
     * takes the RAW (vec_id, embedding) rows: the PQ encodings code the
-    * ×10^6 scaled-integer vector, while SQ8 codes the raw double
-    * coordinates under the frozen global scale (the exact expression
-    * the batch tier's q_ann_ivf_sq8 index write uses, so a maintained
-    * SQ8 index is bit-identical to the persisted batch one).
+    * ×10^6 scaled-integer vector, while the SQ8 encodings code each raw
+    * coordinate under the frozen scales, passed as literals to the
+    * shared [[ProductQuantizer.sq8Code]] / [[ProductQuantizer.sq8DimCode]]
+    * (the expressions the batch tier's persisted SQ8 index writes use,
+    * so a maintained SQ8 index is bit-identical to the persisted one).
     */
   private def project(batch: DataFrame, q: Quantizers): DataFrame = {
     val vecs = batch.select(col("vec_id"),
       KMeansOp.intVec(col("embedding")).as("v"))
-    (q.sq8Amax, q.sq8Dims) match {
-      case (Some(amax), _) =>
-        val codeCols = (0 until q.dim).map { i =>
-          sq8CodeElem(element_at(col("embedding"), i + 1), amax).as(s"code_$i")
-        }
+    val sq8Code: Option[(Column, Int) => Column] =
+      q.sq8Amax.map(a => (e: Column, _: Int) =>
+        ProductQuantizer.sq8Code(e, lit(a))).orElse(
+      q.sq8Dims.map { case (vmn, vmx) => (e: Column, i: Int) =>
+        ProductQuantizer.sq8DimCode(e, lit(vmn(i)), lit(vmx(i))) })
+    sq8Code match {
+      case Some(code) =>
         batch.select(col("vec_id") +:
           ProductQuantizer.nearestCid(
             KMeansOp.intVec(col("embedding")), q.coarse).as("cell") +:
-          codeCols: _*)
-      case (None, Some((vmn, vmx))) =>
-        val codeCols = (0 until q.dim).map { i =>
-          sq8DimCodeElem(element_at(col("embedding"), i + 1),
-            vmn(i), vmx(i)).as(s"code_$i")
-        }
-        batch.select(col("vec_id") +:
-          ProductQuantizer.nearestCid(
-            KMeansOp.intVec(col("embedding")), q.coarse).as("cell") +:
-          codeCols: _*)
-      case (None, None) if q.residual =>
+          (0 until q.dim).map(i =>
+            code(element_at(col("embedding"), i + 1), i).as(s"code_$i")): _*)
+      case None if q.residual =>
         ProductQuantizer.residualIndexProjection(vecs, q.coarse, q.books, q.subDim)
-      case (None, None) =>
+      case None =>
         // OPQ = plain PQ over the permuted domain: permute each vector
         // once here (the artifact's coarse/books are already permuted)
         val w = q.opqPerm.map(p => vecs.select(col("vec_id"),
@@ -472,16 +424,16 @@ object IndexStream {
         "through searchCommittedCdcSq8Dim")
     val amax = q.sq8Amax.get
     val v = emb.map(e => math.floor(e * 1000000d).toLong)
-    (v, emb.map(sq8CodeLocal(_, amax)))
+    (v, emb.map(ProductQuantizer.sq8CodeLocal(_, amax)))
   }
 
-  /** Integer code-space squared L2 of the persisted code COLUMNS
-    * against a literal query code — one codegen'd expression, no
-    * arrays rebuilt at scan time.
+  /** Integer code-space squared L2 of the m persisted code COLUMNS
+    * against the query code `qc(i)` per dimension — one codegen'd
+    * expression, no arrays rebuilt at scan time.
     */
-  private def sq8Dist(qCode: Seq[Long]): Column =
-    qCode.zipWithIndex.map { case (qc, i) =>
-      (col(s"code_$i") - lit(qc)) * (col(s"code_$i") - lit(qc))
+  private def sq8Dist(m: Int, qc: Int => Column): Column =
+    (0 until m).map { i =>
+      (col(s"code_$i") - qc(i)) * (col(s"code_$i") - qc(i))
     }.reduce(_ + _)
 
   /** IVF_SQ8 search over the LIVE rows of the maintained index: probe
@@ -494,7 +446,8 @@ object IndexStream {
   def searchCommittedCdcSq8(s: SparkSession, stateDir: String, q: Quantizers,
       emb: Seq[Double], nProbe: Int, k: Int): DataFrame = {
     val (v, qCode) = sq8Query(q, emb)
-    probedTopK(s, stateDir, q, v, nProbe, sq8Dist(qCode), "qdist", k)
+    probedTopK(s, stateDir, q, v, nProbe,
+      sq8Dist(q.m, i => lit(qCode(i))), "qdist", k)
   }
 
   /** BATCH IVF_SQ8 serving over the LIVE rows of the maintained index —
@@ -510,7 +463,7 @@ object IndexStream {
     * work the ≤ Q·nProbe collected distinct probed cells, pushed as a
     * static partition predicate so the state table's file LISTING also
     * stops at the probed `cell=` directories
-    * ([[ProductQuantizer.collectProbeCells]] over the same argmin the
+    * ([[ProductQuantizer.pinProbesWithCells]] over the same argmin the
     * join evaluates). Returns (qid, rnk, vec_id, qdist).
     */
   def searchCommittedBatchCdcSq8(s: SparkSession, stateDir: String,
@@ -518,50 +471,39 @@ object IndexStream {
     require(q.sq8Amax.isDefined,
       "this entry serves SQ8 state only — a PQ/residual handle serves " +
         "through searchCommittedBatchCdc")
-    val codes = liveCodes(s, stateDir, q.m)
-    val amax = q.sq8Amax.get
-    val qCodeExpr = sq8CodeArr(col("embedding"), amax)
     // pin + collect the listing-prune cells in ONE action
     // ([[ProductQuantizer.pinProbesWithCells]], r21 — dedup on qid, pin
     // by value, cells from the same pass): the cells and the broadcast
     // probe relation read the same Q rows, and a duplicated probe row
     // can't double its candidates under the rank window
-    val (pinned, probedCells) = ProductQuantizer.pinProbesWithCells(
-      probes, q.coarse, nProbe, KMeansOp.intVec(col("embedding")))
-    val prunedCodes = codes.where(col("cell").isin(probedCells: _*))
-    val cellArr = ProductQuantizer.probeCellArr(q.coarse,
-      KMeansOp.intVec(col("embedding")))
-    val probeCells = pinned.df
-      .select(col("qid"), qCodeExpr.as("qcode"),
-        explode(slice(cellArr, 1, nProbe)).as("pc"))
-      .select(col("qid"), col("qcode"), col("pc.cid").as("cell"))
-    val dist = (0 until q.m).map { i =>
-      (col(s"code_$i") - element_at(col("qcode"), i + 1)) *
-        (col(s"code_$i") - element_at(col("qcode"), i + 1))
-    }.reduce(_ + _)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("qdist").asc, col("vec_id").asc)
-    prunedCodes.join(broadcast(probeCells), Seq("cell"))
-      .select(col("qid"), col("vec_id"), dist.as("qdist"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vec_id"), col("qdist"))
-      .orderBy(col("qid").asc, col("rnk").asc)
+    val intVec = KMeansOp.intVec(col("embedding"))
+    val (pinned, probedCells) =
+      ProductQuantizer.pinProbesWithCells(probes, q.coarse, nProbe, intVec)
+    val amax = lit(q.sq8Amax.get)
+    val probeCells = ProductQuantizer.probeCellRows(
+      pinned.df.withColumn("qcode",
+        transform(col("embedding"), e => ProductQuantizer.sq8Code(e, amax))),
+      q.coarse, intVec, nProbe, "qcode")
+    ProductQuantizer.perProbeTopK(
+      liveCodes(s, stateDir, q.m).where(col("cell").isin(probedCells: _*))
+        .join(broadcast(probeCells), Seq("cell"))
+        .select(col("qid"), col("vec_id"),
+          sq8Dist(q.m, i => element_at(col("qcode"), i + 1)).as("qdist")),
+      "qdist", k)
   }
 
   /** Asymmetric per-dim code-space squared L2 of the persisted code
     * COLUMNS against a literal scaled-integer query: each code decodes
     * under its dimension's frozen [vmn, vmx] interval
-    * ([[sq8DimDecodeElem]]); the query enters exact — quantization
+    * ([[ProductQuantizer.sq8DimDecode]]); the query enters exact — quantization
     * error once, never twice (FAISS's DC convention, the same
     * asymmetric discipline as the batch tier's q_sq8_dim family).
     */
   private def sq8DimDist(q: Quantizers, query: Seq[Long]): Column = {
     val (vmn, vmx) = q.sq8Dims.get
     (0 until q.dim).map { i =>
-      val dv = sq8DimDecodeElem(col(s"code_$i"), vmn(i), vmx(i)) -
-        lit(query(i))
+      val dv = ProductQuantizer.sq8DimDecode(
+        col(s"code_$i"), lit(vmn(i)), lit(vmx(i))) - lit(query(i))
       dv * dv
     }.reduce(_ + _)
   }
@@ -595,7 +537,7 @@ object IndexStream {
     * collected DISTINCT probed cells, which ride back as a static
     * partition predicate so the code table's file LISTING stops at the
     * probed `cell=` directories (the broadcast join alone scopes
-    * scoring, not listing — [[ProductQuantizer.collectProbeCells]]). A
+    * scoring, not listing — [[ProductQuantizer.pinProbesWithCells]]). A
     * row's liveness is decided per row against the (unpruned)
     * tombstone relation, never by rows in other cells, so filtering the
     * live view on `cell` pushes to the codes scan and changes nothing

@@ -80,4 +80,14 @@ class PageRankSpec extends AnyFunSuite {
         verts.toDF("node"), edges.toDF("src", "dst", "w"), 1, maxNodes = 2)
     }
   }
+
+  test("runBoundedLocal requires distinct node ids: a duplicated vertex " +
+    "row throws instead of diverging from run") {
+    // run joins the edges once per vertex ROW, so a duplicated node
+    // would push its outflow twice there; the local twin keys by node
+    intercept[IllegalArgumentException] {
+      PageRank.runBoundedLocal((verts :+ "a").toDF("node"),
+        edges.toDF("src", "dst", "w"), 2, maxNodes = 8)
+    }
+  }
 }

@@ -10,6 +10,21 @@ import org.scalatest.funsuite.AnyFunSuite
 class PqSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** The DISTINCT probed cells of a pinned (qid, vector) probe frame,
+    * collected in their own job — the two-job reference spelling
+    * (pin, then collect) that [[ProductQuantizer.pinProbesWithCells]]
+    * fuses into one action. Evaluates the same
+    * [[ProductQuantizer.probeCellArr]] expression the serving joins do.
+    */
+  private def collectProbeCells(probes: ProductQuantizer.PinnedProbes,
+      coarse: Seq[(Long, Seq[Long])], nProbe: Int,
+      v: org.apache.spark.sql.Column = col("v")): Seq[Long] =
+    probes.df
+      .select(explode(slice(ProductQuantizer.probeCellArr(coarse, v), 1, nProbe))
+        .as("pc"))
+      .select(col("pc.cid")).distinct()
+      .collect().map(_.getLong(0)).sorted.toSeq
+
   /** 2 subspaces × 1 dim, codebooks given directly: encode must pick the
     * nearest entry per subspace independently, ties to the lower cid.
     *
@@ -763,7 +778,7 @@ class PqSpec extends AnyFunSuite {
         cur
       }
       val pinned = ProductQuantizer.pinProbes(probes)
-      val cells = ProductQuantizer.collectProbeCells(pinned, coarse, 2)
+      val cells = collectProbeCells(pinned, coarse, 2)
       assert(cells.nonEmpty)
       val afterPin = settled()
       assert(afterPin > 0, "the pin itself is eager")
@@ -806,7 +821,7 @@ class PqSpec extends AnyFunSuite {
       vecsDf, coarse, plainBooks, subDim)
     // reference: the two-job spelling
     val refPinned = ProductQuantizer.pinProbes(probes)
-    val refCells = ProductQuantizer.collectProbeCells(refPinned, coarse, 2)
+    val refCells = collectProbeCells(refPinned, coarse, 2)
     // fused: one action; a duplicated probe row must still dedup
     val (pinned, cells) = ProductQuantizer.pinProbesWithCells(
       probes.union(probes), coarse, 2)
@@ -876,5 +891,65 @@ class PqSpec extends AnyFunSuite {
     val row = queries.SemanticQ.queries("q_recall_ivfpq_res")(spark, d).head()
     assert(row.getLong(0) == hits)
     assert(row.getLong(1) == hits * 1000000L / 10L)
+  }
+
+  test("SQ8 codec edges: amax = 0 and a constant dimension code to 0 in " +
+    "the array form, the maintained per-column form and the driver " +
+    "mirror; the constant dimension decodes to floor(vmn·10^6)") {
+    import spark.implicits._
+    import graft.streaming.IndexStream
+    val sq = queries.SemanticQ
+    val coarse = Seq(0L -> Seq(0L, 0L))
+    def liveCodes(rows: Seq[(Long, Seq[Float])], q: IndexStream.Quantizers) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_sq8_edge").toString
+      IndexStream.processBatchCdc(rows.toDF("vec_id", "embedding"), 1L, q, dir)
+      IndexStream.liveCodes(spark, dir, q.m)
+    }
+
+    // global scale: an all-zero coordinate set trains amax = 0
+    val zeros = Seq((0L, Seq(0.0f, 0.0f)), (1L, Seq(0.0f, -0.0f)))
+    val zeroEmb = zeros.toDF("vec_id", "embedding")
+    val amaxRel = zeroEmb.agg(ProductQuantizer.amaxExpr(col("embedding")).as("amax"))
+    assert(amaxRel.head().getDouble(0) == 0.0)
+    // the array form, with amax a column of the trained relation (the
+    // persisted tiers' spelling: the `when` is decided per row)
+    val arrayCodes = zeroEmb.crossJoin(amaxRel)
+      .select(sq.sq8Codes(col("embedding"), col("amax")))
+      .as[Seq[Long]].collect().toSeq
+    assert(arrayCodes == Seq(Seq(0L, 0L), Seq(0L, 0L)))
+    // the per-column form under a frozen literal scale
+    val colCodes = liveCodes(zeros, IndexStream.Quantizers(coarse, Nil, 2,
+        sq8Amax = Some(0.0)))
+      .select(col("code_0"), col("code_1")).as[(Long, Long)].collect().toSeq
+    assert(colCodes == Seq((0L, 0L), (0L, 0L)))
+    // the driver mirror
+    assert(zeros.flatMap(_._2).map(e =>
+      ProductQuantizer.sq8CodeLocal(e.toDouble, 0.0)) == Seq(0L, 0L, 0L, 0L))
+
+    // per-dim scales: dimension 0 is constant (vmn == vmx)
+    val rows = Seq((0L, Seq(0.1f, 1.5f)), (1L, Seq(0.1f, -2.0f)),
+      (2L, Seq(0.1f, 0.25f)))
+    val emb = rows.toDF("vec_id", "embedding")
+    val scales = sq.sq8DimScales(emb)
+    val (vmn, vmx) = scales.as[(Seq[Double], Seq[Double])].head()
+    assert(vmn.head == vmx.head && vmn.head == 0.1f.toDouble)
+    val floorMn = math.floor(vmn.head * 1000000.0).toLong
+    assert(floorMn == 100000L)
+    // the array forms: code, and decode of the code
+    val arr = emb.crossJoin(scales)
+      .select(col("vec_id"), sq.sq8DimCode(col("embedding")).as("code"),
+        sq.sq8DimDecode(sq.sq8DimCode(col("embedding"))).as("dq"))
+      .orderBy("vec_id").as[(Long, Seq[Long], Seq[Long])].collect().toSeq
+    assert(arr.map(_._2.head) == Seq(0L, 0L, 0L))
+    assert(arr.map(_._3.head) == Seq(floorMn, floorMn, floorMn))
+    // the per-column forms under the frozen literal scales, against the
+    // array forms dimension by dimension
+    val maintained = liveCodes(rows, IndexStream.Quantizers(coarse, Nil, 2,
+        sq8Dims = Some((vmn, vmx))))
+      .select(col("vec_id"), col("code_0"), col("code_1"),
+        ProductQuantizer.sq8DimDecode(col("code_0"), lit(vmn(0)), lit(vmx(0))),
+        ProductQuantizer.sq8DimDecode(col("code_1"), lit(vmn(1)), lit(vmx(1))))
+      .orderBy("vec_id").as[(Long, Long, Long, Long, Long)].collect().toSeq
+    assert(maintained.map(r => (r._1, Seq(r._2, r._3), Seq(r._4, r._5))) == arr)
   }
 }

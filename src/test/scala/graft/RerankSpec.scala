@@ -105,4 +105,18 @@ class RerankSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.toList == List((0L, 1L, 1L), (0L, 2L, 2L), (1L, 1L, 7L)))
   }
+
+  test("boundedDeltas driver-local greedy requires distinct (qid, id) " +
+    "candidates: a duplicated candidate row throws") {
+    // the distributed loop keeps both rows of a duplicated candidate,
+    // the local twin would fold them through its per-qid map
+    val dup = Seq((0L, 1L, 0.9), (0L, 2L, 0.8), (0L, 1L, 0.9))
+      .toDF("qid", "id", "rel")
+    val bsims = Seq((0L, 1L, 2L, 0.2), (0L, 2L, 1L, 0.2))
+      .toDF("qid", "ia", "ib", "sim")
+    intercept[IllegalArgumentException] {
+      Rerank.mmrSelectBatch(dup, bsims, k = 2, lambda = 0.5,
+        boundedDeltas = Some(100))
+    }
+  }
 }

@@ -565,8 +565,9 @@ class ServingTiersSpec extends AnyFunSuite {
     "probed cells; results identical to the in-flight twins") {
     val ivecs = intVecsLocal()
     val cents = queries.SemanticQ.trainedCentroids(spark, d)
-    // the independent replay of collectProbeCells: per-qid 2-nearest
-    // cells for the declared probe batch (vec_ids 0/1/2), unioned
+    // the independent replay of the cells pinProbesWithCells collects:
+    // per-qid 2-nearest cells for the declared probe batch (vec_ids
+    // 0/1/2), unioned
     val expectCells = Seq(0L, 1L, 2L)
       .flatMap(q => KMeansOp.nearestCells(cents, ivecs(q), 2))
       .distinct.size
