@@ -20,6 +20,58 @@ object Bench {
     "q_lsh_brp_topk" -> 2,
   )
 
+  /** Run each named step once, in order, timing it: the one loop that
+    * stamps `derivations_sec` in Bench and both scale probes (each
+    * caller keeps its own step list). A failing step is recorded with
+    * its exception for the artifact's `derivation_errors` block, never
+    * swallowed; the remaining steps still run.
+    */
+  private[graft] def timeSteps(steps: Seq[(String, () => Unit)])
+      : (Seq[(String, Double)], Seq[(String, Throwable)]) = {
+    val errors = Seq.newBuilder[(String, Throwable)]
+    val secs = steps.map { case (n, f) =>
+      val t0 = System.nanoTime()
+      try f() catch { case scala.util.control.NonFatal(e) => errors += n -> e }
+      n -> (System.nanoTime() - t0) / 1e9
+    }
+    (secs, errors.result())
+  }
+
+  /** The artifact block of [[timeSteps]] results:
+    * `"derivations_sec":{…},"derivation_errors":[…]`. */
+  private[graft] def derivationsJson(secs: Seq[(String, Double)],
+      errors: Seq[(String, Throwable)]): String =
+    s""""derivations_sec":${secs.map { case (k, v) => jstr(k) + ":" + v }
+      .mkString("{", ",", "}")},""" +
+      s""""derivation_errors":${Jsons.failures("name", errors)}"""
+
+  /** Warm-up steps `warm.<table>.<tag>`: one `limit(1).count()` per
+    * table of each tagged dir (codegen compiler, parquet footer reads,
+    * shuffle machinery), so the first measured query isn't charged for
+    * JVM startup; a failure lands in `derivation_errors`.
+    */
+  private[graft] def warmSteps(spark: SparkSession, dirs: Seq[(String, String)],
+      tables: Seq[String]): Seq[(String, () => Unit)] =
+    for ((tag, d) <- dirs; t <- tables) yield
+      (s"warm.$t.$tag" -> (() => {
+        // events needs its dedicated reader (TIMESTAMP(NANOS) legacy conf)
+        val df = if (t == "events") Tables.events(spark, d) else Tables.table(spark, d, t)
+        df.limit(1).count(); ()
+      }))
+
+  /** The local session every harness main runs on: `cpus` cores and
+    * shuffle partitions, UTC, no UI, WARN logging. */
+  private[graft] def localSession(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** 1-minute load average from /proc/loadavg (-1 when unreadable). */
   private def loadAvg1(): Double =
     try new String(java.nio.file.Files.readAllBytes(
@@ -51,13 +103,7 @@ object Bench {
       load = loadAvg1()
     }
     val loaded = load > loadMax
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = localSession(cpus)
     // No args (driver mode): run everything. With args: run only the named
     // queries and dump their formatted plans (local profiling aid).
     val selected =
@@ -66,16 +112,7 @@ object Bench {
     if (args.nonEmpty) selected.foreach { case (name, fn) =>
       println(s"===== $name ====="); fn(spark, sfDir).explain("formatted")
     }
-    // Warm up the session (codegen compiler, parquet footer reads, shuffle
-    // machinery) so the first measured query isn't charged for JVM startup.
-    // events needs its dedicated reader (TIMESTAMP(NANOS) legacy conf).
-    Tables.names.foreach { t =>
-      try {
-        val df = if (t == "events") Tables.events(spark, sfDir)
-                 else Tables.table(spark, sfDir, t)
-        df.limit(1).count()
-      } catch { case _: Throwable => () }
-    }
+    val (_, warmErrors) = timeSteps(warmSteps(spark, Seq("sf" -> sfDir), Tables.names))
     // Shared fact derivations (the canon dedup-assignment table, the
     // token/shingle signature tables, the trade-edge fact, the two
     // quantizer fits) are session-cached, so the per-query times below
@@ -108,11 +145,7 @@ object Bench {
       "cdc_lifecycle_sq8" -> (() => { queries.SemanticQ.cdcLifecycleSq8Dir(spark, sfDir); () }),
       "cdc_lifecycle_sq8dim" -> (() => { queries.SemanticQ.cdcLifecycleSq8DimDir(spark, sfDir); () }),
     )
-    val derivSecs: Seq[(String, Double)] = derivationBuilds.map { case (n, f) =>
-      val t0 = System.nanoTime()
-      try f() catch { case _: Throwable => () } // failure surfaces in the query pass
-      n -> (System.nanoTime() - t0) / 1e9
-    }
+    val (derivSecs, derivErrors) = timeSteps(derivationBuilds)
     // Best-of-N timing (round 5's single-shot numbers were unusable: a
     // host stall window recorded 20-160x "regressions" on unchanged
     // code). N full passes over the query list — interleaved, so one
@@ -161,7 +194,8 @@ object Bench {
       s"""{"bench_schema":2,"metric":"total","value":$minTotal,"unit":"sec","queries":${jmap(mins)},""" +
         s""""queries_median":${jmap(meds)},"queries_first":${jmap(firsts)},""" +
         s""""median_total":$medTotal,"first_total":${firsts.map(_._2).sum},""" +
-        s""""query_versions":$qvers,"derivations_sec":${jmap(derivSecs)},""" +
+        s""""query_versions":$qvers,""" +
+        derivationsJson(derivSecs, warmErrors ++ derivErrors) + "," +
         s""""load_avg":$load,"load_max":$loadMax,"loaded":$loaded,""" +
         s""""load_deferred_sec":$loadDeferredSec,""" +
         s""""reps":$reps,"errors":$errs,"failed":${errors.size},"sf":${jstr(sfDir)}}"""

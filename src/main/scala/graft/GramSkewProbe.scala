@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Skew probe for the gram-partitioned windows the r20 rewrites
@@ -31,13 +30,7 @@ object GramSkewProbe {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val sf1 = if (args.length > 1) Some(args(1)) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession(cpus)
     val nPart = cpus.toInt
 
     def stats(tag: String, rel: org.apache.spark.sql.DataFrame): String = {

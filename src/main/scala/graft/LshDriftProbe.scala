@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-split diagnostic for the q_dup_clusters_lsh scale drift
@@ -31,13 +30,7 @@ object LshDriftProbe {
     val dst = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession(cpus)
     ScaleProbe.buildSf1(spark, src, dst)
     def timed(f: => Unit): Double = ScaleProbe.medianOf((1 to reps).map { _ =>
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

@@ -41,29 +41,20 @@ object MediaProbe {
     val baseN = args.headOption.map(_.toInt).getOrElse(100)
     val outFile = if (args.length > 1) args(1) else "BENCH_MEDIA_PROBE.json"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession(cpus)
     val scales = Seq("base" -> baseN, "mid" -> baseN * 10, "probe" -> baseN * 100)
     val dirs = scales.map { case (tag, n) => (tag, n, MediaScaleCorpus.ensure(n)) }
     val totalBytes = dirs.map { case (tag, _, d) =>
-      tag -> java.nio.file.Files.list(java.nio.file.Paths.get(d))
-        .mapToLong(p => p.toFile.length).sum
+      val files = java.nio.file.Files.list(java.nio.file.Paths.get(d))
+      try tag -> files.mapToLong(p => p.toFile.length).sum
+      finally files.close()
     }
     // warm: one tiny listing per dir (JVM/codegen warmers)
     dirs.foreach { case (_, _, d) =>
       spark.read.format("binary-head").option("head", 64).load(d)
         .select("path").limit(1).count()
     }
-    def time(f: String => DataFrame, d: String): Double = {
-      val t0 = System.nanoTime()
-      f(d).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def time(f: String => DataFrame, d: String): Double = ScaleProbe.noopSecs(f(d))
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "1").toInt.max(1)
     val rows = pipelines(spark).map { case (name, f) =>
       val secs = dirs.map { case (tag, _, d) =>

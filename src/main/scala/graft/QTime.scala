@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** One-off per-query timer for local iteration: runs the named queries
   * N times each against a dir and prints min/median wall seconds.
@@ -10,17 +9,11 @@ object QTime {
     val reps = args(1).toInt
     val names = args.drop(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Bench.localSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
-      val ts = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, d).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+      val ts = (1 to reps)
+        .map(_ => ScaleProbe.noopSecs(SparkEntry.queries(n)(spark, d))).sorted
       println(f"QTIME $n min=${ts.head}%.3f med=${ts(ts.size / 2)}%.3f")
     }
     spark.stop()

@@ -39,6 +39,21 @@ object ScaleProbe {
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 
+  /** Wall seconds of building `df` and running it into a noop-format
+    * WRITE, not .count(): a count lets Catalyst prune unreferenced
+    * projections and drop sorts, so a projection-only stage (BPE
+    * counts, cosine projections) would be optimized out of the probed
+    * plan and its superlinearity would go unmeasured. The noop sink
+    * materializes every output column through the full plan — the same
+    * work Verify's parquet write executes, minus the IO. Every probe
+    * main times with it.
+    */
+  private[graft] def noopSecs(df: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    df.write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   /** The heaviest queries by the medians artifact, plus the scale-path
     * corpus builds (v3 = √N SemDeDup, lsh = bucket-union components)
     * whose ratios gate the round-11 composition work.
@@ -184,23 +199,24 @@ object ScaleProbe {
     }.write.mode("overwrite").parquet(s"$dst/embeddings.parquet")
   }
 
-  /** Documents+embeddings-only scaled dir (idempotent) — the sf10 probe
+  /** Documents+embeddings-only scaled dir (idempotent, cross-process-
+    * atomic via [[Artifacts.publish]]; returns `dst`) — the sf10 probe
     * input: the probed linear content paths read nothing else, and
     * skipping the TPC-H facts keeps a 100× build cheap.
     */
-  def buildDocsOnly(spark: SparkSession, src: String, dst: String, copies: Int): Unit = {
-    val okPath = java.nio.file.Paths.get(dst, "_GENERATED_OK")
-    if (java.nio.file.Files.exists(okPath)) return
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
-    writeDocsEmb(spark, src, dst, copies)
-    java.nio.file.Files.createFile(okPath)
-  }
+  def buildDocsOnly(spark: SparkSession, src: String, dst: String, copies: Int): String =
+    Artifacts.publish(java.nio.file.Paths.get(dst))(stage =>
+      writeDocsEmb(spark, src, stage.toString, copies))
 
-  /** Build the sf1 tables under `dst` (idempotent via an _OK marker). */
-  def buildSf1(spark: SparkSession, src: String, dst: String, copies: Int = 10): Unit = {
-    val okPath = java.nio.file.Paths.get(dst, "_GENERATED_OK")
-    if (java.nio.file.Files.exists(okPath)) return
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
+  /** Build the sf1 tables under `dst` (idempotent, cross-process-atomic
+    * via [[Artifacts.publish]]; returns `dst`).
+    */
+  def buildSf1(spark: SparkSession, src: String, dst: String, copies: Int = 10): String =
+    Artifacts.publish(java.nio.file.Paths.get(dst))(stage =>
+      writeSf1(spark, src, stage.toString, copies))
+
+  private def writeSf1(spark: SparkSession, src: String, dst: String,
+      copies: Int): Unit = {
     writeDocsEmb(spark, src, dst, copies)
 
     def copied(df: DataFrame)(f: (DataFrame, Int) => DataFrame): DataFrame =
@@ -246,8 +262,6 @@ object ScaleProbe {
     for (t <- Seq("nation", "region"))
       Tables.table(spark, src, t)
         .write.mode("overwrite").parquet(s"$dst/$t.parquet")
-
-    java.nio.file.Files.createFile(okPath)
   }
 
   def main(args: Array[String]): Unit = {
@@ -257,21 +271,11 @@ object ScaleProbe {
     // args 4+ restrict the probe to the named queries (re-probe after a fix)
     val selected = if (args.length > 3) heavy.filter(args.drop(3).contains) else heavy
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession(cpus)
     buildSf1(spark, src, dst)
     // warm both table sets (footers, codegen)
-    for (d <- Seq(src, dst); t <- Tables.names) {
-      try {
-        val df = if (t == "events") Tables.events(spark, d) else Tables.table(spark, d, t)
-        df.limit(1).count()
-      } catch { case _: Throwable => () }
-    }
+    val (_, warmErrors) = Bench.timeSteps(
+      Bench.warmSteps(spark, Seq("base" -> src, "probe" -> dst), Tables.names))
     // pre-build the session-cached trained artifacts per dir (the
     // ScaleProbe100 discipline), RECORDING each build's wall time into
     // the artifact ("derivations_sec", r18 verdict #3/#4): without the
@@ -282,7 +286,7 @@ object ScaleProbe {
     // the STAMP, a derivation regression hides in whichever rep ran
     // first (q_bpe_train probed 31.7x at r18 precisely because the
     // merge-schedule build was unstamped here while Bench stamps it)
-    val derivSecs: Seq[(String, Double)] = (for {
+    val (derivSecs, derivErrors) = Bench.timeSteps(for {
       (tag, d) <- Seq("base" -> src, "probe" -> dst)
       (dn, f) <- Seq[(String, () => Unit)](
         // r20: q_vocab_growth now consumes the shared shingle-set
@@ -291,8 +295,8 @@ object ScaleProbe {
         "shingle_sets" -> (() => { queries.Analysis.shingleSets(spark, d).count(); () }),
         "quantizer_fixed_k" -> (() => { queries.SemanticQ.trainedCentroids(spark, d); () }),
         "pq_codebooks" -> (() => { queries.SemanticQ.pqCodebooks(spark, d); () }),
-        // resCodebooks EXPLICITLY, not only via the index build: a
-        // _SUCCESS-cached index dir skips its build closure, and the
+        // resCodebooks EXPLICITLY, not only via the index build: an
+        // already persisted index dir skips its build closure, and the
         // first residual query of the session would then be charged
         // the codebook training (a build-time derivation)
         "res_codebooks" -> (() => { queries.SemanticQ.resCodebooks(spark, d); () }),
@@ -309,24 +313,9 @@ object ScaleProbe {
         "bpe_merges" -> (() => { queries.Analysis.cachedMergeSchedule(spark, d); () }),
         "bigram_mult" -> (() => { queries.Retrieval.bigramDocMult(spark, d).count(); () }),
         "bigram_score" -> (() => { queries.Retrieval.bigramScore(spark, d).count(); () }))
-    } yield {
-      val t0 = System.nanoTime()
-      try f() catch { case _: Throwable => () }
-      s"$dn.$tag" -> (System.nanoTime() - t0) / 1e9
-    })
-    // Timing executes a noop-format WRITE, not .count(): a count lets
-    // Catalyst prune unreferenced projections and drop sorts, so a
-    // projection-only stage (BPE counts, cosine projections) would be
-    // optimized out of the probed plan and its superlinearity would go
-    // unmeasured. The noop sink materializes every output column through
-    // the full plan — the same work Verify's parquet write executes,
-    // minus the IO.
-    def time(name: String, d: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, d)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    } yield s"$dn.$tag" -> f)
+    def time(name: String, d: String): Double =
+      noopSecs(SparkEntry.queries(name)(spark, d))
     // reps medians (SPARK_GRAFT_PROBE_REPS, default 1): single-shot sf1
     // ratios varied up to 2x across runs — the flagged tail re-probes at
     // reps=3 so round-over-round ratio deltas are trustworthy.
@@ -341,14 +330,14 @@ object ScaleProbe {
       println(f"[probe] $name%-24s base=$base%7.2fs probe=$probe%8.2fs ratio=$ratio%6.2fx")
       (name, base, probe, ratio)
     }
-    val djson = derivSecs.map { case (k, v) => s"${Jsons.escape(k)}:$v" }
-      .mkString(",")
     val json = rows.map { case (n, b, p, r) =>
       s"${Jsons.escape(n)}:{" + s""""base_sec":$b,"probe_sec":$p,"ratio":$r}"""
     }.mkString(
       s"""{"probe":"sf1","rows_ratio":10,"base":${Jsons.escape(src)},""" +
         s""""probe_dir":${Jsons.escape(dst)},"cpus":$cpus,"reps":$reps,""" +
-        s""""timing":"noop_write","derivations_sec":{$djson},"queries":{""",
+        s""""timing":"noop_write",""" +
+        Bench.derivationsJson(derivSecs, warmErrors ++ derivErrors) + "," +
+        s""""queries":{""",
       ",", "}}")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
     spark.sparkContext.setLogLevel("OFF")
@@ -423,21 +412,14 @@ object ScaleProbe100 {
     val outFile = if (args.length > 3) args(3) else "BENCH_SF10_PROBE.json"
     val selected = if (args.length > 4) linear.filter(args.drop(4).contains) else linear
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession(cpus)
     ScaleProbe.buildDocsOnly(spark, src, mid, copies = 10)
     ScaleProbe.buildDocsOnly(spark, src, dst, copies = 100)
     val dirs = Seq("base" -> src, "mid" -> mid, "probe" -> dst)
-    for ((_, d) <- dirs; t <- Seq("documents", "embeddings"))
-      try graft.Tables.table(spark, d, t).limit(1).count()
-      catch { case _: Throwable => () }
+    val (_, warmErrors) = Bench.timeSteps(
+      Bench.warmSteps(spark, dirs, Seq("documents", "embeddings")))
     // pre-build the session-cached derivations per dir, recording wall
-    val derivSecs: Seq[(String, Double)] = (for {
+    val (derivSecs, derivErrors) = Bench.timeSteps(for {
       (tag, d) <- dirs
       (dn, f) <- Seq[(String, () => Unit)](
         "shingle_sets" -> (() => { queries.Analysis.shingleSets(spark, d).count(); () }),
@@ -449,7 +431,7 @@ object ScaleProbe100 {
         // q_ann_ivfpq_part probe then serves from
         "quantizer_fixed_k" -> (() => { queries.SemanticQ.trainedCentroids(spark, d); () }),
         "pq_codebooks" -> (() => { queries.SemanticQ.pqCodebooks(spark, d); () }),
-        // explicit, not only via the index build: a _SUCCESS-cached
+        // explicit, not only via the index build: an already persisted
         // index skips its build closure, and the first residual query
         // would otherwise be charged the codebook training
         "res_codebooks" -> (() => { queries.SemanticQ.resCodebooks(spark, d); () }),
@@ -462,7 +444,7 @@ object ScaleProbe100 {
         // round 20: the OPQ artifacts and every CDC lifecycle fixture —
         // the monitors' state builds are derivations, so their 100×
         // rows measure the SERVING scan, not the fixture drive (the
-        // r19 _SUCCESS-cache lesson: an unbuilt fixture charges its
+        // r19 persisted-cache lesson: an unbuilt fixture charges its
         // whole lifecycle to the first timed rep)
         "opq_books" -> (() => { queries.SemanticQ.opqBooks(spark, d); () }),
         "ivfopq_part_index" -> (() => { queries.SemanticQ.partitionedOpqCodesPath(spark, d); () }),
@@ -470,17 +452,9 @@ object ScaleProbe100 {
         "cdc_lifecycle_sq8" -> (() => { queries.SemanticQ.cdcLifecycleSq8Dir(spark, d); () }),
         "cdc_lifecycle_sq8dim" -> (() => { queries.SemanticQ.cdcLifecycleSq8DimDir(spark, d); () }),
         "cdc_lifecycle_opq" -> (() => { queries.SemanticQ.cdcLifecycleOpqDir(spark, d); () }))
-    } yield {
-      val t0 = System.nanoTime()
-      try f() catch { case _: Throwable => () }
-      s"$dn.$tag" -> (System.nanoTime() - t0) / 1e9
-    })
-    def time(name: String, d: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, d)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    } yield s"$dn.$tag" -> f)
+    def time(name: String, d: String): Double =
+      ScaleProbe.noopSecs(SparkEntry.queries(name)(spark, d))
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "1").toInt.max(1)
     val rows = selected.map { name =>
       val base = ScaleProbe.medianOf((1 to reps).map(_ => math.min(time(name, src), time(name, src))))
@@ -497,12 +471,13 @@ object ScaleProbe100 {
         s""""base_sec":$b,"mid_sec":$m,"probe_sec":$p,""" +
         s""""ratio_mid":$rm,"ratio_probe":$rp}"""
     }.mkString(",")
-    val djson = derivSecs.map { case (k, v) => s"${Jsons.escape(k)}:$v" }.mkString(",")
     val json =
       s"""{"probe":"sf10","rows_ratio_mid":10,"rows_ratio_probe":100,""" +
         s""""base":${Jsons.escape(src)},"mid_dir":${Jsons.escape(mid)},""" +
         s""""probe_dir":${Jsons.escape(dst)},"cpus":$cpus,"reps":$reps,""" +
-        s""""timing":"noop_write","derivations_sec":{$djson},"queries":{$qjson}}"""
+        s""""timing":"noop_write",""" +
+        Bench.derivationsJson(derivSecs, warmErrors ++ derivErrors) + "," +
+        s""""queries":{$qjson}}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
     spark.sparkContext.setLogLevel("OFF")
     spark.stop()

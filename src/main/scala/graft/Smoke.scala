@@ -1,17 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local stand-in for the driver's t1 smoke: SparkEntry.entry rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession("4")
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")
     assert(n > 0, "entry must return >0 rows")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB compare (`tools/check.py`). Each
@@ -14,13 +13,7 @@ object Verify {
     val only: Option[Set[String]] =
       args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession(cpus)
     new java.io.File(outDir).mkdirs()
     // JSON string escape (shared Jsons.escape): a tab or CR in
     // builder-authored SQL would otherwise make the driver's json.load
@@ -30,7 +23,7 @@ object Verify {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .flatMap { case (name, fn) =>
         // a failed query must never pass on an earlier run's dump
-        rmrf(Paths.get(outDir, name))
+        Artifacts.rmrf(Paths.get(outDir, name))
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
@@ -40,15 +33,8 @@ object Verify {
           Some(name -> e)
         }
       }
-    val failuresJson = failures.map { case (name, e) =>
-      val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-        .drop(1).map(c => s"{${q("class")}: ${q(c.getClass.getName)}, " +
-          s"${q("message")}: ${q(String.valueOf(c.getMessage))}}")
-      s"{${q("query")}: ${q(name)}, ${q("class")}: ${q(e.getClass.getName)}, " +
-        s"${q("message")}: ${q(String.valueOf(e.getMessage))}, " +
-        s"${q("causes")}: ${chain.mkString("[", ",", "]")}}"
-    }.mkString("[", ",\n", "]")
-    Files.writeString(Paths.get(s"$outDir/failures.json"), failuresJson)
+    Files.writeString(Paths.get(s"$outDir/failures.json"),
+      Jsons.failures("query", failures))
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
@@ -60,12 +46,4 @@ object Verify {
       sys.exit(1)
     }
   }
-
-  private def rmrf(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val paths = Files.walk(p)
-      try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(x => Files.delete(x))
-      finally paths.close()
-    }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.functions.VectorOps
 import graft.operators.{AnnSearch, Dedup, TextAnalysis => TA}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -93,7 +93,7 @@ object Analysis {
     */
   private[graft] def tokenSets(s: SparkSession, d: String): DataFrame =
     CachedViews.cached(s, "graft_token_sets", d,
-      SemanticQ.snapshotKey(s, d, "documents")) {
+      Artifacts.snapshotKey(s, d, "documents")) {
       Tables.documents(s, d).select(col("source").as("block"), col("doc_id").as("id"),
         array_sort(array_distinct(transform(TA.tokens(col("text")),
           t => TA.md5Hash60(t)))).as("items"))
@@ -109,7 +109,7 @@ object Analysis {
     */
   private[graft] def shingleSets(s: SparkSession, d: String): DataFrame =
     CachedViews.cached(s, "graft_shingle_sets", d,
-      SemanticQ.snapshotKey(s, d, "documents")) {
+      Artifacts.snapshotKey(s, d, "documents")) {
       Dedup.hashedSets(Tables.documents(s, d), "doc_id", TA.shingles(col("text"), 3))
     }
 
@@ -559,25 +559,21 @@ object Analysis {
     * q_bpe_train_apply its application. Bounded state: 8 merge rows +
     * one Long per snapshot.
     */
-  private val mergeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, (Long, Seq[(Long, String, String, Long)]))]()
+  private val mergeCache =
+    new Artifacts.Memo[(Long, Seq[(Long, String, String, Long)])]()
 
   private[graft] def cachedMergeSchedule(s: SparkSession, d: String)
-      : (Long, Seq[(Long, String, String, Long)]) = {
-    val fp = SemanticQ.snapshotKey(s, d, "documents")
-    mergeCache.compute(d, (_, prev) =>
-      if (prev != null && prev._1 == fp) prev
-      else {
-        val vocab = graft.operators.BpeTrainer.weightedVocab(
-          Tables.documents(s, d), col("text"))
-        val alphabet = graft.operators.BpeTrainer.alphabetSize(vocab)
-        val schedule = graft.operators.BpeTrainer.train(vocab, rounds = 8)
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-          .toSeq
-        (fp, (alphabet, schedule))
-      })._2
-  }
+      : (Long, Seq[(Long, String, String, Long)]) =
+    mergeCache(d, Artifacts.snapshotKey(s, d, "documents")) {
+      val vocab = graft.operators.BpeTrainer.weightedVocab(
+        Tables.documents(s, d), col("text"))
+      val alphabet = graft.operators.BpeTrainer.alphabetSize(vocab)
+      val schedule = graft.operators.BpeTrainer.train(vocab, rounds = 8)
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .toSeq
+      (alphabet, schedule)
+    }
 
   /** BPE training to a TARGET VOCAB SIZE — how real tokenizer training
     * is parameterized (a 50k-token tokenizer is "vocab_size=50000", not

@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * long session doesn't accumulate superseded cache entries. Dir-only
   * keys proved unsound (a mid-session in-place rewrite of the input
   * parquet silently served stale derived facts); every caller passes a
-  * parquet-footer content fingerprint ([[SemanticQ.snapshotKey]]).
+  * parquet-footer content fingerprint ([[graft.Artifacts.snapshotKey]]).
   */
 private[graft] object CachedViews {
 
@@ -26,8 +26,7 @@ private[graft] object CachedViews {
     */
   def cached(s: SparkSession, prefix: String, scope: String, fp: String)
       (build: => DataFrame): DataFrame = {
-    val name = prefix + "_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+    val name = prefix + "_" + graft.Artifacts.md5Hex(fp.getBytes("UTF-8")).take(12)
     this.synchronized {
       val key = prefix + "|" + scope
       val prev = live.get(key)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.operators.{ConnectedComponents, Dedup, TextAnalysis => TA}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -252,11 +252,10 @@ object Clustering {
     */
   private[graft] def canonIds(s: SparkSession, d: String): DataFrame =
     // Keyed on the documents table's CONTENT fingerprint (the same
-    // parquet-footer hash SemanticQ's quantizer cache uses), not the
-    // dir alone: a mid-session rewrite of documents.parquet evicts the
+    // parquet-footer hash the quantizer memos use), not the dir alone: a mid-session rewrite of documents.parquet evicts the
     // stale view and rebuilds — dir-only keys proved unsound there.
     CachedViews.cached(s, "graft_canon_ids", d,
-      SemanticQ.snapshotKey(s, d, "documents")) {
+      Artifacts.snapshotKey(s, d, "documents")) {
       nearDupCanon(s, d, exactKeptIds(Tables.documents(s, d)))
     }
 

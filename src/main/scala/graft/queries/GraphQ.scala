@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.operators.{PageRank, Triangles}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -24,7 +24,7 @@ object GraphQ {
   private[graft] def tradeEdges(s: SparkSession, d: String): DataFrame =
     CachedViews.cached(s, "graft_trade_edges", d,
       Seq("lineitem", "orders", "customer", "supplier", "nation")
-        .map(SemanticQ.snapshotKey(s, d, _)).mkString(";")) {
+        .map(Artifacts.snapshotKey(s, d, _)).mkString(";")) {
       tradeEdgesPlan(s, d)
     }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.operators.{TextAnalysis => TA}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -267,7 +267,7 @@ object Retrieval {
     */
   private[graft] def bigramScore(s: SparkSession, d: String): DataFrame =
     CachedViews.cached(s, "graft_bigram_score", d,
-        SemanticQ.snapshotKey(s, d, "documents")) {
+        Artifacts.snapshotKey(s, d, "documents")) {
       bigramScoreOf(bigramDocMult(s, d))
     }
 
@@ -286,7 +286,7 @@ object Retrieval {
     */
   private[graft] def bigramDocMult(s: SparkSession, d: String): DataFrame =
     CachedViews.cached(s, "graft_bigram_mult", d,
-        SemanticQ.snapshotKey(s, d, "documents")) {
+        Artifacts.snapshotKey(s, d, "documents")) {
       bigramMult(Tables.documents(s, d), "doc_id", col("text"))
     }
 

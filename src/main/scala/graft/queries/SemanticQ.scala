@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.functions.VectorOps
 import graft.operators.KMeansOp
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -29,81 +29,21 @@ object SemanticQ {
   private val PqM = 4
   private val PqSubDim = 16
 
-  /** Trained centroids memoized per dataset CONTENT, not per path:
-    * the cache key folds in the embeddings files' (name, length, mtime)
-    * listing, so overwriting a dataset dir in place invalidates the
-    * entry and retrains instead of serving a stale quantizer. Training
-    * is deterministic (integer Lloyd on an immutable snapshot), so a
-    * hit is sound; it mirrors production, where a trained quantizer is
-    * a PERSISTED artifact keyed to its corpus snapshot that the
-    * serving/dedup/eval jobs all load rather than re-train. Four
-    * declared queries share one training here.
-    *
-    * The map is keyed by dataset DIR with the content fingerprint stored
-    * alongside the value: inserting a new snapshot of the same dir
-    * replaces (evicts) the superseded entry, so a long-lived session
-    * that overwrites dataset dirs repeatedly holds one quantizer per
-    * dir, not one per historical snapshot.
+  /** Trained centroids memoized per dataset CONTENT, not per path
+    * ([[Artifacts.snapshotKey]]), under (dir, policy): overwriting a
+    * dataset dir in place retrains instead of serving a stale
+    * quantizer, and the superseded entry is replaced — one live
+    * quantizer per (dir, policy), never one per historical snapshot.
+    * Training is deterministic (integer Lloyd on an immutable
+    * snapshot), so a hit is sound; it mirrors production, where a
+    * trained quantizer is a PERSISTED artifact keyed to its corpus
+    * snapshot that the serving/dedup/eval jobs all load rather than
+    * re-train.
     */
-  private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (String, Seq[(Long, Seq[Long])])]()
-
-  /** Content identity of `$d`'s `$table` parquet table: per part file,
-    * the name, length, and an md5 over the parquet FOOTER bytes (footer
-    * length from the 8-byte trailer; capped at 1 MiB). The footer holds
-    * the schema, row-group offsets, and column statistics, so any data
-    * rewrite perturbs it — including an in-place same-length rewrite
-    * within the same mtime second, the residual the previous
-    * (name, len, mtime) fingerprint could not see. Cost is one
-    * driver-side footer read per part file — no data pages are read.
-    * Files too short or non-parquet fall back to (len, mtime).
-    */
-  private[graft] def snapshotKey(s: SparkSession, d: String,
-      table: String = "embeddings"): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$d/$table.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def footerHash(st: org.apache.hadoop.fs.FileStatus): Option[String] =
-      if (!st.getPath.getName.endsWith(".parquet") || st.getLen < 12) None
-      else scala.util.Try {
-        val in = fs.open(st.getPath)
-        try {
-          val trailer = new Array[Byte](8)
-          in.readFully(st.getLen - 8, trailer)
-          val footerLen = java.nio.ByteBuffer.wrap(trailer, 0, 4)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt.toLong
-          val n = math.min(math.max(footerLen + 8, 8L),
-            math.min(st.getLen, 1L << 20)).toInt
-          val buf = new Array[Byte](n)
-          in.readFully(st.getLen - n, buf)
-          java.security.MessageDigest.getInstance("MD5").digest(buf)
-            .map("%02x".format(_)).mkString
-        } finally in.close()
-      }.toOption
-    val parts =
-      if (!fs.exists(path)) Seq("absent")
-      else fs.listStatus(path).toSeq.sortBy(_.getPath.getName)
-        .map(st => footerHash(st) match {
-          case Some(h) => s"${st.getPath.getName}:${st.getLen}:$h"
-          case None => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
-        })
-    s"$d/$table|${parts.mkString(",")}"
-  }
-
-  /** Drop every memoized quantizer (test hook / operational reset). */
-  private[graft] def clearCentroidCache(): Unit = centroidCache.clear()
-
-  /** Memoize a deterministic quantizer fit under (dir, policy), keyed to
-    * the dataset's content fingerprint: a hit is sound because training
-    * is a pure function of the snapshot, and a changed snapshot replaces
-    * (evicts) the superseded entry — one live quantizer per (dir,
-    * policy), never one per historical snapshot.
-    */
+  private val centroidCache = new Artifacts.Memo[Seq[(Long, Seq[Long])]]()
   private def cachedCentroids(s: SparkSession, d: String, policy: String)
-      (train: => Seq[(Long, Seq[Long])]): Seq[(Long, Seq[Long])] = {
-    val fp = snapshotKey(s, d)
-    centroidCache.compute((d, policy), (_, prev) =>
-      if (prev != null && prev._1 == fp) prev else (fp, train))._2
-  }
+      (train: => Seq[(Long, Seq[Long])]): Seq[(Long, Seq[Long])] =
+    centroidCache(s"$d|$policy", Artifacts.snapshotKey(s, d))(train)
 
   private[graft] def trainedCentroids(s: SparkSession, d: String): Seq[(Long, Seq[Long])] =
     cachedCentroids(s, d, s"fixed$K")(
@@ -596,6 +536,31 @@ object SemanticQ {
     recallPpm(exactTopK(intVecs(s, d), probeVec(s, d), 10), annIvfPqResQ(s, d),
       Seq("vec_id"), 10)
 
+  /** Code/layout version folded into every content-addressed index key
+    * (ADVICE r17): a change to quantizer training, the projection, or
+    * the on-disk layout bumps this, so a marked dir built by an OLDER
+    * code version can never be reused across sessions — the content
+    * fingerprint alone only sees the DATA snapshot.
+    */
+  private val IndexLayoutVersion = 3
+
+  /** Content-addressed persisted-index dir under `tag`, on the
+    * [[Artifacts.persisted]] lifecycle: reused while (layout version,
+    * tag, data snapshot) all match — also across sessions, the write
+    * being a pure function of the three — else `build` fills a staging
+    * dir that is atomically installed under
+    * `java.io.tmpdir/graft_idx_<tag>_<md5>`. One live dir per (dataset
+    * dir, tag).
+    */
+  private def persistedIndexPath(s: SparkSession, d: String, tag: String)
+      (build: String => Unit): String = {
+    val fp = s"v$IndexLayoutVersion|$tag|${Artifacts.snapshotKey(s, d)}"
+    Artifacts.persisted(s"$d|$tag", fp, java.nio.file.Paths.get(
+      sys.props("java.io.tmpdir"),
+      s"graft_idx_${tag}_${Artifacts.md5Hex(fp.getBytes("UTF-8"))}"))(
+      dir => build(dir.toString))
+  }
+
   /** Content-addressed CELL-PARTITIONED code table on scratch disk —
     * the layout a production IVFADC deployment actually persists: the
     * index write is `partitionBy(cell)`, so a probed-cell predicate is
@@ -605,213 +570,10 @@ object SemanticQ {
     * "scan the whole 4-byte code table and filter" and "read exactly
     * |probed cells|/k of its FILES": the filter moves from row-group
     * evaluation to the file listing. Keyed to the dataset content
-    * fingerprint like every trained artifact here (a stale snapshot
-    * rebuilds; an unchanged one reuses the `_SUCCESS`-marked write,
-    * also across sessions — the write is a pure function of the
-    * snapshot). Reference tie: `/root/reference/vectorDB.py:38` — the
-    * persisted index whose build the reference redoes per request.
+    * fingerprint like every trained artifact here ([[persistedIndexPath]]).
+    * Reference tie: `vectorDB.py:38` — the persisted index whose build
+    * the reference redoes per request.
     */
-  private val partIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** Code/layout version folded into every content-addressed index key
-    * (ADVICE r17): a change to quantizer training, the projection, or
-    * the on-disk layout bumps this, so a `_SUCCESS`-marked dir built by
-    * an OLDER code version can never be reused across sessions — the
-    * content fingerprint alone only sees the DATA snapshot.
-    */
-  private val IndexLayoutVersion = 3
-
-  /** Superseded index dirs are parked here and deleted at JVM exit, not
-    * inline (ADVICE r17): a same-session lazy plan may still hold the
-    * old path, and an inline delete would fail it at scan time. The
-    * husks are bounded by the number of in-place snapshot rewrites in
-    * one session; cross-session leftovers live under java.io.tmpdir and
-    * die with it.
-    */
-  private val supersededDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def rmrfDir(dir: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    scala.util.Try(rm(new java.io.File(dir))); ()
-  }
-  private lazy val supersededCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      supersededDirs.forEach(rmrfDir(_))))
-
-  /** One-time-per-JVM sweep of STALE persisted-index dirs (ADVICE r18):
-    * layout-version bumps and dir-prefix renames orphan prior sessions'
-    * content-addressed dirs permanently (their key can never be
-    * recomputed, so the `_SUCCESS` reuse path never touches them), and
-    * on hosts where java.io.tmpdir persists those full code-table
-    * copies accumulate forever. Age classes are deliberately tiered so
-    * the sweep can never yank a dir out from under a CONCURRENT
-    * long-lived JVM (the race the atomic-rename fix exists to close):
-    * `.build-` staging dirs, parked `.torn-` repair husks, and legacy
-    * `graft_ivfpq_part_*` dirs go at 24 h (a build takes minutes, and
-    * no current-layout code can ever key the legacy prefix), while
-    * live-layout `graft_idx_*` dirs only go after 7 IDLE days —
-    * [[persistedIndexPath]] bumps a dir's mtime on EVERY reuse,
-    * cross-session misses and in-session fast-path hits alike (ADVICE
-    * r19), so "old" means a week with no session keying it at all.
-    */
-  private lazy val staleIndexSweep: Unit = {
-    val now = System.currentTimeMillis()
-    val day = 24L * 3600 * 1000
-    // a staging dir is STALE only when nothing under it moved for 24 h:
-    // an in-progress build (even a day-long one on a loaded host) keeps
-    // writing part files, so its newest child mtime stays fresh — the
-    // root mtime alone only reflects the last file CREATION
-    def newestMtime(f: java.io.File): Long =
-      (f.lastModified() +: Option(f.listFiles()).getOrElse(Array.empty)
-        .map(c => if (c.isDirectory) newestMtime(c) else c.lastModified())
-        .toSeq).max
-    Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter { f =>
-        val n = f.getName
-        f.isDirectory && (
-          (((n.contains(".build-") || n.contains(".torn-")) &&
-            n.startsWith("graft_idx_")) ||
-            n.startsWith("graft_ivfpq_part_")) &&
-            newestMtime(f) < now - day ||
-          (n.startsWith("graft_idx_") && !n.contains(".build-") &&
-            !n.contains(".torn-") &&
-            f.lastModified() < now - 7 * day))
-      }
-      .foreach(f => rmrfDir(f.getPath))
-  }
-
-  /** Content-addressed persisted-index dir under `tag`: reuse the
-    * `_SUCCESS`-marked write when (layout version, tag, data snapshot)
-    * all match — also across sessions, the write being a pure function
-    * of the three — else run `build` into a SESSION-UNIQUE staging dir
-    * and atomically rename it into the content-addressed name (ADVICE
-    * r18: two concurrent JVMs on the same host/data race on the same
-    * MD5-named dir; with build-then-rename each builds privately, the
-    * loser discards its finished copy, and no reader can ever observe
-    * a half-built dir under the final name). One live dir per (dataset
-    * dir, tag); a replaced snapshot parks its superseded copy for
-    * shutdown deletion.
-    */
-  private def marked(dir: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
-
-  private def persistedIndexPath(s: SparkSession, d: String, tag: String)
-      (build: String => Unit): String = {
-    staleIndexSweep
-    val fp = s"v$IndexLayoutVersion|$tag|${snapshotKey(s, d)}"
-    partIndexCache.compute(s"$d|$tag", (_, prev) =>
-      // the fast path re-stats the marker (one stat per query build):
-      // an EXTERNALLY deleted dir — a racing sweep, a tmpdir cleaner,
-      // an operator rm — heals by rebuilding instead of serving a
-      // cached path into FileNotFoundException for the session's life
-      if (prev != null && prev._1 == fp && marked(prev._2)) {
-        // refresh the idle clock on the fast path too (ADVICE r19):
-        // without this only a cache MISS bumped mtime, so a JVM alive
-        // past the sweep's 7-day horizon while serving cache hits
-        // could have its live index reaped by a newly started
-        // session's sweep — one setLastModifiedTime beside the stat
-        // the marker check already pays closes that window
-        scala.util.Try(java.nio.file.Files.setLastModifiedTime(
-          java.nio.file.Paths.get(prev._2),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis())))
-        prev
-      }
-      else {
-        if (prev != null) { supersededCleanupHook; supersededDirs.add(prev._2); () }
-        val h = java.security.MessageDigest.getInstance("MD5")
-          .digest(fp.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-          s"graft_idx_${tag}_$h").toString
-        if (marked(dir)) {
-          // cross-session reuse: refresh the dir's idle clock so the
-          // 7-day sweep only ever reaps indexes NO session keys anymore
-          scala.util.Try(java.nio.file.Files.setLastModifiedTime(
-            java.nio.file.Paths.get(dir),
-            java.nio.file.attribute.FileTime.fromMillis(
-              System.currentTimeMillis())))
-          (fp, dir)
-        } else {
-          val tmp = dir + ".build-" + java.util.UUID.randomUUID().toString.take(8)
-          build(tmp)
-          try {
-            java.nio.file.Files.move(
-              java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(dir),
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            (fp, dir)
-          } catch {
-            case _: java.nio.file.FileSystemException if marked(dir) =>
-              // a concurrent session completed the same key first —
-              // serve its copy, discard ours
-              rmrfDir(tmp)
-              (fp, dir)
-            case _: java.nio.file.FileSystemException =>
-              // the target exists WITHOUT a marker. Installs are
-              // atomic-with-marker, so this can only be a crashed
-              // PRE-RENAME-ERA build's torn dir — never a concurrent
-              // install mid-flight (a concurrent winner appears fully
-              // marked or not at all). Repair it (ADVICE r19): rename
-              // the torn dir aside to a parked .torn- name (the 24 h
-              // sweep class) and retry the install ONCE; if the
-              // rename-aside loses a race, fall back to the old
-              // behavior — serve this session from its own complete
-              // staging copy (the build is a pure function of the
-              // key, so the copies are equivalent).
-              supersededCleanupHook
-              val parked =
-                dir + ".torn-" + java.util.UUID.randomUUID().toString.take(8)
-              // repair ONLY a cold, still-unmarked dir, both re-checked
-              // immediately before the rename-aside (review r20): a
-              // sibling session that just completed the same key
-              // appears MARKED, and a sibling mid-anything appears
-              // FRESH (its newest mtime is seconds old) — either way
-              // renaming it aside could yank a live index out from
-              // under its readers, so those fall through to the
-              // serve-from-staging path below. A genuine
-              // pre-rename-era husk is by definition old and cold.
-              def coldTorn(p: String): Boolean = {
-                def newest(f: java.io.File): Long =
-                  (f.lastModified() +: Option(f.listFiles())
-                    .getOrElse(Array.empty).map(newest).toSeq).max
-                scala.util.Try(
-                  newest(new java.io.File(p)) <
-                    System.currentTimeMillis() - 3600L * 1000
-                ).getOrElse(false)
-              }
-              val repaired = scala.util.Try {
-                require(!marked(dir) && coldTorn(dir))
-                java.nio.file.Files.move(
-                  java.nio.file.Paths.get(dir),
-                  java.nio.file.Paths.get(parked),
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-                java.nio.file.Files.move(
-                  java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(dir),
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-              }
-              if (repaired.isSuccess) {
-                supersededDirs.add(parked)
-                (fp, dir)
-              } else if (marked(dir)) {
-                // a concurrent session completed the key mid-repair
-                rmrfDir(tmp)
-                scala.util.Try(rmrfDir(parked))
-                (fp, dir)
-              } else {
-                // if the rename-aside half succeeded, the parked torn
-                // copy is ours to reclaim at shutdown too
-                supersededDirs.add(parked)
-                supersededDirs.add(tmp)
-                (fp, tmp)
-              }
-          }
-        }
-      })._2
-  }
-
   private[graft] def partitionedCodesPath(s: SparkSession, d: String): String =
     persistedIndexPath(s, d, "ivfpq") { dir =>
       graft.operators.ProductQuantizer
@@ -1382,41 +1144,15 @@ object SemanticQ {
 
   // ---- OPQ: pre-rotation by dimension allocation (r18 verdict #6) ---
 
-  /** OPQ dimension ALLOCATION — the pre-rotation step of Optimized
-    * Product Quantization (Ge et al., CVPR 2013): PQ's distortion
-    * drops when per-subspace variance is balanced, so OPQ applies an
-    * orthogonal transform before the subspace split. Here the
-    * transform is restricted to the PERMUTATION subgroup of the
-    * rotation family (the paper's parametric "eigenvalue allocation",
-    * with the identity eigenbasis) so both engines replay it EXACTLY:
-    * rank dimensions by the exact-BIGINT first-absolute-moment energy
-    * Σ_rows |v_d| (ties to the lower dimension index — an integer
-    * dispersion statistic instead of a float eigenvalue, overflow-safe
-    * to ~10^12 rows at the ×10^6 scale), then deal the ranked
-    * dimensions round-robin across the PqM subspaces: each subspace
-    * gets one of the top-M dims, one of the next M, … — the balanced
-    * allocation, where the contiguous split can load one subspace with
-    * every high-energy dimension. One bounded corpus aggregate (d
-    * rows); the permutation memoizes under the content fingerprint
-    * like every trained artifact here. Returns the 0-based dim
-    * positions per subspace, in rank order.
+  /** OPQ dimension ALLOCATION over the corpus
+    * ([[graft.operators.ProductQuantizer.opqAllocation]]), memoized
+    * under the content fingerprint like every trained artifact here.
+    * Returns the 0-based dim positions per subspace, in rank order.
     */
-  private val opqPermCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[Int])]()
-  private[graft] def opqPerm(s: SparkSession, d: String): Seq[Seq[Int]] = {
-    val fp = snapshotKey(s, d)
-    val ranked = opqPermCache.compute(d, (_, prev) =>
-      if (prev != null && prev._1 == fp) prev
-      else (fp, {
-        val en = intVecs(s, d)
-          .select(posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy(col("pos")).agg(sum(abs(col("x"))).as("e"))
-          .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-        en.sortBy { case (pos, e) => (-e, pos) }.map(_._1)
-      }))._2
-    (0 until PqM).map(sub =>
-      ranked.zipWithIndex.collect { case (pos, r) if r % PqM == sub => pos })
-  }
+  private val opqPermCache = new Artifacts.Memo[Seq[Seq[Int]]]()
+  private[graft] def opqPerm(s: SparkSession, d: String): Seq[Seq[Int]] =
+    opqPermCache(d, Artifacts.snapshotKey(s, d))(
+      graft.operators.ProductQuantizer.opqAllocation(intVecs(s, d), PqM))
 
   /** The permuted subspace vector: the subspace's allocated dims, in
     * rank order — the engine side of the oracle's `list(v[pos] ORDER BY
@@ -1778,11 +1514,11 @@ object SemanticQ {
     * them, through the real
     * [[graft.streaming.IndexStream.processBatchCdc]] against the given
     * frozen quantizers, materialized once per content snapshot (the
-    * same `_SUCCESS`-gated lifecycle as every persisted index here;
-    * the staging dir is session-unique, so a torn partial run is never
-    * visible under the served name). ONE body shared by every
-    * encoding's fixture, so the monitored lifecycles can never drift
-    * apart (the same single-source rule as the predicates above).
+    * same [[persistedIndexPath]] lifecycle as every persisted index
+    * here, so a torn partial run is never visible under the served
+    * name). ONE body shared by every encoding's fixture, so the
+    * monitored lifecycles can never drift apart (the same
+    * single-source rule as the predicates above).
     */
   private def cdcLifecycleWith(s: SparkSession, d: String, tag: String)
       (qz: => graft.streaming.IndexStream.Quantizers): String =
@@ -1797,7 +1533,6 @@ object SemanticQ {
         2L, q, dir)
       graft.streaming.IndexStream.processBatchCdc(
         emb.where(cdcResurrected(col("vec_id"))), 3L, q, dir)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_SUCCESS"))
       ()
     }
 
@@ -1881,16 +1616,11 @@ object SemanticQ {
     * on the [[cachedCentroids]] lifecycle (one bounded aggregate; a
     * changed snapshot retrains, an unchanged one reuses).
     */
-  private val amaxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Double)]()
-  private[graft] def trainedAmax(s: SparkSession, d: String): Double = {
-    val fp = snapshotKey(s, d)
-    amaxCache.compute(d, (_, prev) =>
-      if (prev != null && prev._1 == fp) prev
-      else (fp, Tables.embeddings(s, d)
-        .agg(graft.operators.ProductQuantizer.amaxExpr(col("embedding")))
-        .head().getDouble(0)))._2
-  }
+  private val amaxCache = new Artifacts.Memo[Double]()
+  private[graft] def trainedAmax(s: SparkSession, d: String): Double =
+    amaxCache(d, Artifacts.snapshotKey(s, d))(Tables.embeddings(s, d)
+      .agg(graft.operators.ProductQuantizer.amaxExpr(col("embedding")))
+      .head().getDouble(0))
 
   /** The session's frozen IVF_SQ8 quantizer handle: the shared fixed-k
     * coarse centroids + the trained global scale — what a maintained
@@ -1940,18 +1670,14 @@ object SemanticQ {
     * the same values the persisted tier's rows carry), memoized per
     * dataset content like [[trainedAmax]].
     */
-  private val sq8DimScalesCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, (Seq[Double], Seq[Double]))]()
+  private val sq8DimScalesCache =
+    new Artifacts.Memo[(Seq[Double], Seq[Double])]()
   private[graft] def trainedSq8DimScales(s: SparkSession, d: String)
-      : (Seq[Double], Seq[Double]) = {
-    val fp = snapshotKey(s, d)
-    sq8DimScalesCache.compute(d, (_, prev) =>
-      if (prev != null && prev._1 == fp) prev
-      else (fp, {
-        val r = sq8DimScales(Tables.embeddings(s, d)).head()
-        (r.getSeq[Double](0).toSeq, r.getSeq[Double](1).toSeq)
-      }))._2
-  }
+      : (Seq[Double], Seq[Double]) =
+    sq8DimScalesCache(d, Artifacts.snapshotKey(s, d)) {
+      val r = sq8DimScales(Tables.embeddings(s, d)).head()
+      (r.getSeq[Double](0).toSeq, r.getSeq[Double](1).toSeq)
+    }
 
   /** The session's frozen per-dim SQ8 quantizer handle: the shared
     * fixed-k coarse centroids + the trained [vmn, vmx] interval tables

@@ -130,8 +130,7 @@ object MediaCorpus {
   )
 
   /** Write the corpus (idempotent, process-temp, cross-process-atomic
-    * via [[AtomicDir.publish]] — stage + rename, r21) and return its
-    * dir.
+    * via [[graft.Artifacts.publish]]) and return its dir.
     */
   def ensure(): String = synchronized {
     // v2: malformed fixtures (broken.png / noise.wav / junk.xyz) + the
@@ -141,9 +140,7 @@ object MediaCorpus {
     // glob with extras.
     val target = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft_media_corpus_v2")
-    val names = expected.map(_.fileName).toSet
-    AtomicDir.publish(target)(d => java.nio.file.Files.isDirectory(d) &&
-      names.forall(n => java.nio.file.Files.exists(d.resolve(n)))) { dir =>
+    graft.Artifacts.publish(target) { dir =>
       write(dir, "photo.png", png(320, 200))
       write(dir, "scan.jpg", jpeg(640, 480))
       write(dir, "anim.gif", gif(48, 32))

@@ -11,9 +11,9 @@ package graft.sources
   * the rest rotate small PNG (size varies with index), JPEG and MP4
   * files. ~513 MB per 1000 files, ~80% of it rejected junk.
   *
-  * Idempotent per (dir, n) via the `_GENERATED_OK` marker, mirroring
-  * the /tmp/graft_sf1 discipline; the marker's leading underscore also
-  * keeps it out of both binaryFile and binary-head listings.
+  * Idempotent per (dir, n) and cross-process-atomic via
+  * [[graft.Artifacts.publish]]; the marker's leading underscore keeps
+  * it out of both binaryFile and binary-head listings.
   */
 object MediaScaleCorpus {
 
@@ -21,13 +21,9 @@ object MediaScaleCorpus {
     java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       s"graft_media_scale2_$n").toString
 
-  /** Generate (if absent) and return the corpus dir for `n` files
-    * (cross-process-atomic via [[AtomicDir.publish]], r21).
-    */
+  /** Generate (if absent) and return the corpus dir for `n` files. */
   def ensure(n: Int): String = synchronized {
-    val target = java.nio.file.Paths.get(dirFor(n))
-    AtomicDir.publish(target)(d =>
-      java.nio.file.Files.exists(d.resolve("_GENERATED_OK"))) { dir =>
+    graft.Artifacts.publish(java.nio.file.Paths.get(dirFor(n))) { dir =>
     // small files are generated ONCE and reused byte-identically per
     // shape — the probe measures scan/parse cost, not writer cost
     val bigWav = MediaCorpus.wav(16000, channels = 1, bits = 16, dataBytes = 1 << 20)
@@ -55,7 +51,6 @@ object MediaScaleCorpus {
         else (f"v$i%07d.mp4", smallMp4)
       java.nio.file.Files.write(dir.resolve(name), bytes)
     }
-    java.nio.file.Files.createFile(dir.resolve("_GENERATED_OK"))
     }
   }
 
@@ -71,8 +66,7 @@ object MediaScaleCorpus {
   def ensureTailAnchored(n: Int, payload: Int): String = synchronized {
     val target = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       s"graft_media_tailvar_${n}_$payload")
-    AtomicDir.publish(target)(d =>
-      java.nio.file.Files.exists(d.resolve("_GENERATED_OK"))) { dir =>
+    graft.Artifacts.publish(target) { dir =>
     def be32(v: Int) = Array[Byte](
       (v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     val trailingMoov = {
@@ -99,7 +93,6 @@ object MediaScaleCorpus {
         else (f"p$i%07d.png", pngs(i % 8))
       java.nio.file.Files.write(dir.resolve(name), bytes)
     }
-    java.nio.file.Files.createFile(dir.resolve("_GENERATED_OK"))
     }
   }
 }

@@ -69,15 +69,7 @@ object Multimodal {
     * `utils.py:12-19`).
     */
   def fromBinaryFiles(spark: SparkSession, glob: String): DataFrame =
-    spark.read.format("binaryFile").load(glob)
-      .select(
-        xxhash64(col("path")).as("media_id"),
-        when(col("path").rlike("(?i)\\.(png|jpe?g|gif|bmp|webp)$"), "image")
-          .when(col("path").rlike("(?i)\\.(wav|mp3|flac|ogg|opus)$"), "audio")
-          .when(col("path").rlike("(?i)\\.(mp4|avi|mkv|webm)$"), "video")
-          .otherwise("unknown").as("modality"),
-        col("content").as("bytes"),
-        map(lit("path"), col("path"), lit("length"), col("length").cast("string")).as("meta"))
+    toCanonical(spark.read.format("binaryFile").load(glob), "content")
 
   /** Head-bytes variant of [[fromBinaryFiles]] for METADATA-ONLY
     * ingest: rides the [[BinaryHeadSource]] DSv2 scan, so each file
@@ -109,15 +101,9 @@ object Multimodal {
     */
   def fromBinaryFilesHead(spark: SparkSession, glob: String,
       headBytes: Int = 65536): DataFrame =
-    spark.read.format("binary-head").option("head", headBytes).load(glob)
-      .select(
-        xxhash64(col("path")).as("media_id"),
-        when(col("path").rlike("(?i)\\.(png|jpe?g|gif|bmp|webp)$"), "image")
-          .when(col("path").rlike("(?i)\\.(wav|mp3|flac|ogg|opus)$"), "audio")
-          .when(col("path").rlike("(?i)\\.(mp4|avi|mkv|webm)$"), "video")
-          .otherwise("unknown").as("modality"),
-        col("head").as("bytes"),
-        map(lit("path"), col("path"), lit("length"), col("length").cast("string")).as("meta"))
+    toCanonical(
+      spark.read.format("binary-head").option("head", headBytes).load(glob),
+      "head")
 
   /** Replace (or add) the `bytes` column by re-reading each row's FULL
     * blob from `pathCol` executor-side — the second phase of a

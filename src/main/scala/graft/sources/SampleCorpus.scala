@@ -36,15 +36,12 @@ object SampleCorpus {
   )
 
   /** Write the corpus (idempotent, process-temp, cross-process-atomic
-    * via [[AtomicDir.publish]] — stage + rename, r21) and return its
-    * dir.
+    * via [[graft.Artifacts.publish]]) and return its dir.
     */
   def ensure(): String = synchronized {
     val target = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft_sample_corpus_v1")
-    val names = expected.map(_._1).toSet
-    AtomicDir.publish(target)(d => java.nio.file.Files.isDirectory(d) &&
-      names.forall(n => java.nio.file.Files.exists(d.resolve(n)))) { dir =>
+    graft.Artifacts.publish(target) { dir =>
       val texts = expected.toMap
       def pdfLines(name: String): Array[Byte] = {
         val ops = texts(name).split("\n")

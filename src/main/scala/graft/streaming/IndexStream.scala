@@ -708,21 +708,12 @@ object IndexStream {
       corpus, "vec_id", col("embedding"), k, iters)
     val vecs = corpus.select(col("vec_id"),
       KMeansOp.intVec(col("embedding")).as("v"))
-    // an OPQ rebuild REFITS the allocation on the snapshot: rank dims
-    // by the exact-BIGINT Σ|v_d| energy (ties to the lower index),
-    // deal round-robin across subspaces, flatten subspace-major — the
-    // same derivation as the batch tier's allocation, so a rebuild on
+    // an OPQ rebuild REFITS the allocation on the snapshot, flattened
+    // subspace-major — the batch tier's derivation, so a rebuild on
     // the tier's corpus reproduces its permutation exactly
     val opqPermFlat: Option[Seq[Int]] =
       if (!opq) None
-      else Some {
-        val en = vecs.select(posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy(col("pos")).agg(sum(abs(col("x"))).as("e"))
-          .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-        val ranked = en.sortBy { case (pos, e) => (-e, pos) }.map(_._1)
-        (0 until m).flatMap(sub => ranked.zipWithIndex.collect {
-          case (pos, r) if r % m == sub => pos })
-      }
+      else Some(ProductQuantizer.opqAllocation(vecs, m).flatten)
     val books =
       if (residual) {
         // residual codebooks train on v − centroid[cell] — already-

@@ -327,7 +327,7 @@ class KMeansSpec extends AnyFunSuite {
     Seq((0L, Seq(1.0f, 2.0f)), (1L, Seq(3.0f, 4.0f)))
       .toDF("vec_id", "embedding")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val k1 = graft.queries.SemanticQ.snapshotKey(spark, dir)
+    val k1 = graft.Artifacts.snapshotKey(spark, dir)
     // flip one byte INSIDE the footer of the part file, then restore the
     // mtime — the old (name, len, mtime) fingerprint cannot see this
     val part = new java.io.File(s"$dir/embeddings.parquet").listFiles()
@@ -341,9 +341,9 @@ class KMeansSpec extends AnyFunSuite {
       raf.write(b ^ 0x55)
     } finally raf.close()
     assert(part.setLastModified(mtime), "mtime restore must succeed")
-    val k2 = graft.queries.SemanticQ.snapshotKey(spark, dir)
+    val k2 = graft.Artifacts.snapshotKey(spark, dir)
     assert(k1 != k2, "footer content change must change the snapshot key")
     // and key stability: no change → same key
-    assert(graft.queries.SemanticQ.snapshotKey(spark, dir) == k2)
+    assert(graft.Artifacts.snapshotKey(spark, dir) == k2)
   }
 }

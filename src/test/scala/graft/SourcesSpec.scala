@@ -112,35 +112,4 @@ class SourcesSpec extends AnyFunSuite {
         jsonlSchema, mode = "FAILFAST").collect()
     }
   }
-
-  test("AtomicDir.publish: stage+rename never exposes a torn dir — " +
-    "fresh target published whole, complete target short-circuits, " +
-    "torn pre-fix leftovers are bypassed via the staged copy (r21)") {
-    import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_atomicdir_spec")
-    def completeIn(d: java.nio.file.Path) =
-      Files.exists(d.resolve("a.txt")) && Files.exists(d.resolve("b.txt"))
-    def writeAll(d: java.nio.file.Path): Unit = {
-      Files.write(d.resolve("a.txt"), "alpha".getBytes)
-      Files.write(d.resolve("b.txt"), "beta".getBytes)
-    }
-    // 1. fresh target: published at the deterministic path, complete
-    val t1 = base.resolve("corpus_v1")
-    val got1 = graft.sources.AtomicDir.publish(t1)(completeIn)(writeAll)
-    assert(got1 == t1.toString && completeIn(t1))
-    // 2. complete target: returned as-is without re-running the writer
-    var ran = false
-    val got2 = graft.sources.AtomicDir.publish(t1)(completeIn) { _ => ran = true }
-    assert(got2 == t1.toString && !ran, "complete dir must short-circuit")
-    // 3. torn leftover (non-empty, incomplete — the pre-fix crash shape):
-    //    rename can't replace it, so the caller gets the staged dir,
-    //    complete, and the torn dir is left untouched
-    val t3 = base.resolve("corpus_torn")
-    Files.createDirectories(t3)
-    Files.write(t3.resolve("a.txt"), "alpha".getBytes) // b.txt missing
-    val got3 = graft.sources.AtomicDir.publish(t3)(completeIn)(writeAll)
-    assert(got3 != t3.toString, "must not return the torn dir")
-    assert(completeIn(Paths.get(got3)), "staged fallback must be complete")
-    assert(!Files.exists(t3.resolve("b.txt")), "torn dir left as-is")
-  }
 }
