@@ -1,4 +1,5 @@
 package graft
+import graft.operators.Encoding
 import org.apache.spark.sql.SparkSession
 object Bench {
   private def jstr(s: String): String = Jsons.escape(s)
@@ -77,7 +78,19 @@ object Bench {
     try new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")))
       .split("\\s+")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+    catch { case scala.util.control.NonFatal(_) => -1.0 }
+
+  /** Write the bench artifact to `path`. Best-effort — an unwritable
+    * target must not fail the bench — but never silent: a failed write
+    * prints one stderr line with the path and the cause.
+    */
+  private[graft] def writeArtifact(path: String, json: String): Unit =
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(path), json + "\n")
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        Console.err.println(
+          s"[bench] could not write $path: ${e.getClass.getName}: ${e.getMessage}")
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -129,21 +142,21 @@ object Bench {
       "quantizer_fixed_k" -> (() => { queries.SemanticQ.trainedCentroids(spark, sfDir); () }),
       "quantizer_sqrt_n" -> (() => { queries.SemanticQ.scaledCentroids(spark, sfDir); () }),
       "quantizer_sqrt_n_sampled" -> (() => { queries.SemanticQ.sampledCentroids(spark, sfDir); () }),
-      "res_codebooks" -> (() => { queries.SemanticQ.resCodebooks(spark, sfDir); () }),
-      "opq_books" -> (() => { queries.SemanticQ.opqBooks(spark, sfDir); () }),
+      "res_codebooks" -> (() => { queries.SemanticQ.quantizers(spark, sfDir, Encoding.ResidualPq); () }),
+      "opq_books" -> (() => { queries.SemanticQ.quantizers(spark, sfDir, Encoding.Opq); () }),
       "bpe_merges" -> (() => { queries.Analysis.cachedMergeSchedule(spark, sfDir); () }),
       "bigram_mult" -> (() => { queries.Retrieval.bigramDocMult(spark, sfDir).count(); () }),
       "bigram_score" -> (() => { queries.Retrieval.bigramScore(spark, sfDir).count(); () }),
       // the persisted serving artifacts: one-time content-addressed
       // index writes the partitioned tiers then serve from, and the CDC
       // lifecycle fixture the recall monitor reads
-      "ivfpq_part_index" -> (() => { queries.SemanticQ.partitionedCodesPath(spark, sfDir); () }),
-      "ivfpqres_part_index" -> (() => { queries.SemanticQ.partitionedResCodesPath(spark, sfDir); () }),
-      "ivfsq8_index" -> (() => { queries.SemanticQ.sq8IndexPath(spark, sfDir); () }),
-      "sq8dim_index" -> (() => { queries.SemanticQ.sq8DimIndexPath(spark, sfDir); () }),
-      "cdc_lifecycle" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, sfDir); () }),
-      "cdc_lifecycle_sq8" -> (() => { queries.SemanticQ.cdcLifecycleSq8Dir(spark, sfDir); () }),
-      "cdc_lifecycle_sq8dim" -> (() => { queries.SemanticQ.cdcLifecycleSq8DimDir(spark, sfDir); () }),
+      "ivfpq_part_index" -> (() => { queries.SemanticQ.indexPath(spark, sfDir, Encoding.Pq); () }),
+      "ivfpqres_part_index" -> (() => { queries.SemanticQ.indexPath(spark, sfDir, Encoding.ResidualPq); () }),
+      "ivfsq8_index" -> (() => { queries.SemanticQ.indexPath(spark, sfDir, Encoding.Sq8); () }),
+      "sq8dim_index" -> (() => { queries.SemanticQ.indexPath(spark, sfDir, Encoding.Sq8Dim); () }),
+      "cdc_lifecycle" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, sfDir, Encoding.Pq); () }),
+      "cdc_lifecycle_sq8" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, sfDir, Encoding.Sq8); () }),
+      "cdc_lifecycle_sq8dim" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, sfDir, Encoding.Sq8Dim); () }),
     )
     val (derivSecs, derivErrors) = timeSteps(derivationBuilds)
     // Best-of-N timing (round 5's single-shot numbers were unusable: a
@@ -204,7 +217,6 @@ object Bench {
     // machine-readable per-query timings) — the full JSON always lands in
     // BENCH_LAST.json (or SPARK_GRAFT_BENCH_OUT) next to the repo, so
     // medians/derivation tooling reads structure, not a tail string.
-    // Best-effort: an unwritable target must not fail the bench itself.
     // Default path is anchored to the enclosing sbt project root (walk
     // up from user.dir to the nearest build.sbt), not the bare cwd — a
     // bench launched from a scratch directory must not silently drop
@@ -215,9 +227,7 @@ object Bench {
         .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
         .getOrElse(cwd).resolve("BENCH_LAST.json").toString
     })
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), json + "\n")
-    catch { case scala.util.control.NonFatal(_) => () }
+    writeArtifact(outPath, json)
     // Stdout for the driver — printed LAST, after the session is fully
     // stopped with logging silenced, so no shutdown WARN line can trail
     // the JSON (r1's driver parse failed on exactly that).

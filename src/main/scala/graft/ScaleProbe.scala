@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Encoding
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -294,22 +295,22 @@ object ScaleProbe {
         // pre-build it so no probed row is charged the build
         "shingle_sets" -> (() => { queries.Analysis.shingleSets(spark, d).count(); () }),
         "quantizer_fixed_k" -> (() => { queries.SemanticQ.trainedCentroids(spark, d); () }),
-        "pq_codebooks" -> (() => { queries.SemanticQ.pqCodebooks(spark, d); () }),
-        // resCodebooks EXPLICITLY, not only via the index build: an
+        "pq_codebooks" -> (() => { queries.SemanticQ.quantizers(spark, d, Encoding.Pq); () }),
+        // the residual codebooks EXPLICITLY, not only via the index build: an
         // already persisted index dir skips its build closure, and the
         // first residual query of the session would then be charged
         // the codebook training (a build-time derivation)
-        "res_codebooks" -> (() => { queries.SemanticQ.resCodebooks(spark, d); () }),
-        "ivfpq_part_index" -> (() => { queries.SemanticQ.partitionedCodesPath(spark, d); () }),
-        "ivfpqres_part_index" -> (() => { queries.SemanticQ.partitionedResCodesPath(spark, d); () }),
-        "ivfsq8_index" -> (() => { queries.SemanticQ.sq8IndexPath(spark, d); () }),
-        "sq8dim_index" -> (() => { queries.SemanticQ.sq8DimIndexPath(spark, d); () }),
-        "cdc_lifecycle" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, d); () }),
-        "cdc_lifecycle_sq8" -> (() => { queries.SemanticQ.cdcLifecycleSq8Dir(spark, d); () }),
-        "cdc_lifecycle_sq8dim" -> (() => { queries.SemanticQ.cdcLifecycleSq8DimDir(spark, d); () }),
-        "opq_books" -> (() => { queries.SemanticQ.opqBooks(spark, d); () }),
-        "ivfopq_part_index" -> (() => { queries.SemanticQ.partitionedOpqCodesPath(spark, d); () }),
-        "cdc_lifecycle_opq" -> (() => { queries.SemanticQ.cdcLifecycleOpqDir(spark, d); () }),
+        "res_codebooks" -> (() => { queries.SemanticQ.quantizers(spark, d, Encoding.ResidualPq); () }),
+        "ivfpq_part_index" -> (() => { queries.SemanticQ.indexPath(spark, d, Encoding.Pq); () }),
+        "ivfpqres_part_index" -> (() => { queries.SemanticQ.indexPath(spark, d, Encoding.ResidualPq); () }),
+        "ivfsq8_index" -> (() => { queries.SemanticQ.indexPath(spark, d, Encoding.Sq8); () }),
+        "sq8dim_index" -> (() => { queries.SemanticQ.indexPath(spark, d, Encoding.Sq8Dim); () }),
+        "cdc_lifecycle" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Pq); () }),
+        "cdc_lifecycle_sq8" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Sq8); () }),
+        "cdc_lifecycle_sq8dim" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Sq8Dim); () }),
+        "opq_books" -> (() => { queries.SemanticQ.quantizers(spark, d, Encoding.Opq); () }),
+        "ivfopq_part_index" -> (() => { queries.SemanticQ.indexPath(spark, d, Encoding.Opq); () }),
+        "cdc_lifecycle_opq" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Opq); () }),
         "bpe_merges" -> (() => { queries.Analysis.cachedMergeSchedule(spark, d); () }),
         "bigram_mult" -> (() => { queries.Retrieval.bigramDocMult(spark, d).count(); () }),
         "bigram_score" -> (() => { queries.Retrieval.bigramScore(spark, d).count(); () }))
@@ -430,28 +431,28 @@ object ScaleProbe100 {
         // passes) and the ONE-TIME cell-partitioned index write the
         // q_ann_ivfpq_part probe then serves from
         "quantizer_fixed_k" -> (() => { queries.SemanticQ.trainedCentroids(spark, d); () }),
-        "pq_codebooks" -> (() => { queries.SemanticQ.pqCodebooks(spark, d); () }),
+        "pq_codebooks" -> (() => { queries.SemanticQ.quantizers(spark, d, Encoding.Pq); () }),
         // explicit, not only via the index build: an already persisted
         // index skips its build closure, and the first residual query
         // would otherwise be charged the codebook training
-        "res_codebooks" -> (() => { queries.SemanticQ.resCodebooks(spark, d); () }),
+        "res_codebooks" -> (() => { queries.SemanticQ.quantizers(spark, d, Encoding.ResidualPq); () }),
         "bigram_mult" -> (() => { queries.Retrieval.bigramDocMult(spark, d).count(); () }),
         "bigram_score" -> (() => { queries.Retrieval.bigramScore(spark, d).count(); () }),
-        "ivfpq_part_index" -> (() => { queries.SemanticQ.partitionedCodesPath(spark, d); () }),
-        "ivfpqres_part_index" -> (() => { queries.SemanticQ.partitionedResCodesPath(spark, d); () }),
-        "ivfsq8_index" -> (() => { queries.SemanticQ.sq8IndexPath(spark, d); () }),
-        "sq8dim_index" -> (() => { queries.SemanticQ.sq8DimIndexPath(spark, d); () }),
+        "ivfpq_part_index" -> (() => { queries.SemanticQ.indexPath(spark, d, Encoding.Pq); () }),
+        "ivfpqres_part_index" -> (() => { queries.SemanticQ.indexPath(spark, d, Encoding.ResidualPq); () }),
+        "ivfsq8_index" -> (() => { queries.SemanticQ.indexPath(spark, d, Encoding.Sq8); () }),
+        "sq8dim_index" -> (() => { queries.SemanticQ.indexPath(spark, d, Encoding.Sq8Dim); () }),
         // round 20: the OPQ artifacts and every CDC lifecycle fixture —
         // the monitors' state builds are derivations, so their 100×
         // rows measure the SERVING scan, not the fixture drive (the
         // r19 persisted-cache lesson: an unbuilt fixture charges its
         // whole lifecycle to the first timed rep)
-        "opq_books" -> (() => { queries.SemanticQ.opqBooks(spark, d); () }),
-        "ivfopq_part_index" -> (() => { queries.SemanticQ.partitionedOpqCodesPath(spark, d); () }),
-        "cdc_lifecycle" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, d); () }),
-        "cdc_lifecycle_sq8" -> (() => { queries.SemanticQ.cdcLifecycleSq8Dir(spark, d); () }),
-        "cdc_lifecycle_sq8dim" -> (() => { queries.SemanticQ.cdcLifecycleSq8DimDir(spark, d); () }),
-        "cdc_lifecycle_opq" -> (() => { queries.SemanticQ.cdcLifecycleOpqDir(spark, d); () }))
+        "opq_books" -> (() => { queries.SemanticQ.quantizers(spark, d, Encoding.Opq); () }),
+        "ivfopq_part_index" -> (() => { queries.SemanticQ.indexPath(spark, d, Encoding.Opq); () }),
+        "cdc_lifecycle" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Pq); () }),
+        "cdc_lifecycle_sq8" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Sq8); () }),
+        "cdc_lifecycle_sq8dim" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Sq8Dim); () }),
+        "cdc_lifecycle_opq" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Opq); () }))
     } yield s"$dn.$tag" -> f)
     def time(name: String, d: String): Double =
       ScaleProbe.noopSecs(SparkEntry.queries(name)(spark, d))

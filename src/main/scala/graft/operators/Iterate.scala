@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Lineage cap for iterative dataflows (connected components, PageRank,
   * MMR): every round must materialize its relation, or Catalyst
@@ -79,13 +79,21 @@ private[graft] object Iterate {
     * pull data to the driver (the same discipline as
     * KMeansOp.lloydCentroidsLocal / VectorOps.queryVector).
     */
-  def boundedLocal(df: DataFrame, maxRows: Int): DataFrame = {
-    val rows = df.collect()
-    require(rows.length <= maxRows,
-      s"boundedLocal: ${rows.length} rows exceed the declared bound $maxRows — " +
-        "this path is for algorithm-bounded sets only")
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
+  def boundedLocal(df: DataFrame, maxRows: Int): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(
+      collectBounded(df, maxRows)(s"boundedLocal: more than $maxRows rows " +
+        "exceed the declared bound — this path is for algorithm-bounded " +
+        "sets only"): _*), df.schema)
+
+  /** The one bounded driver collect: `df`'s rows when there are at most
+    * `bound`, read through `limit(bound + 1)` so a violated bound brings
+    * bound + 1 rows to the driver, never the whole frame, before it
+    * throws `overflow` as an IllegalArgumentException.
+    */
+  def collectBounded(df: DataFrame, bound: Long)(overflow: => String): Array[Row] = {
+    val rows = df.limit(math.min(bound + 1, Int.MaxValue.toLong).toInt).collect()
+    require(rows.length <= bound, overflow)
+    rows
   }
 
   def withRunScopedCheckpoints(baseDir: String)

@@ -60,8 +60,10 @@ object PageRank {
     * the same integer recurrence, iterated over the collected edge
     * list — bit-identical output by construction (every operation is
     * the same positive-operand BIGINT floor arithmetic, and the only
-    * aggregation is an overflow-free Long sum, order-independent;
-    * PageRankSpec pins equality against [[run]] on randomized graphs).
+    * aggregation is a Long sum, order-independent; like the dataflow,
+    * it throws on overflow under ANSI and wraps without it — PageRankSpec
+    * pins equality against [[run]] on randomized graphs and on an
+    * overflowing weight under both settings).
     *
     * Why it exists: each distributed round is 2 joins + 1 aggregate +
     * a lineage-cap materialization job — pure fixed overhead when the
@@ -76,10 +78,9 @@ object PageRank {
       iterations: Int, maxNodes: Int,
       scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
-    val vRows = vertices.select(col("node")).collect()
-    require(vRows.length <= maxNodes,
-      s"runBoundedLocal: ${vRows.length} vertices exceed the declared " +
-        s"bound $maxNodes — this path is for schema-bounded graphs only")
+    val vRows = Iterate.collectBounded(vertices.select(col("node")), maxNodes)(
+      s"runBoundedLocal: more than $maxNodes vertices exceed the declared " +
+        "bound — this path is for schema-bounded graphs only")
     require(vRows.nonEmpty, "empty vertex set")
     val vs = vRows.map(_.get(0))
     // ranks are keyed by node here, while [[run]] joins the edges once
@@ -87,15 +88,20 @@ object PageRank {
     // there and once here
     require(vs.distinct.length == vs.length,
       "runBoundedLocal: duplicate node ids in the vertex set")
-    val es = edges.select(col("src"), col("dst"), col("w")).collect()
+    val es = Iterate.collectBounded(edges.select(col("src"), col("dst"), col("w")),
+        maxNodes.toLong * maxNodes)(
+        s"runBoundedLocal: more than $maxNodes² edges exceed the " +
+          "pre-aggregated bound — aggregate multi-edges first")
       .map(r => (r.get(0), r.get(1), r.getLong(2)))
-    require(es.length <= maxNodes * maxNodes,
-      s"runBoundedLocal: ${es.length} edges exceed the pre-aggregated " +
-        s"bound $maxNodes² — aggregate multi-edges first")
+    // the dataflow's BIGINT arithmetic throws on overflow under ANSI
+    // and wraps without it; the twin does the same
+    val ansi = vertices.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
+    def add(a: Long, b: Long) = if (ansi) Math.addExact(a, b) else a + b
+    def mul(a: Long, b: Long) = if (ansi) Math.multiplyExact(a, b) else a * b
     val n = vs.length
     val base = scale / n
     val teleport = 15L * base / 100L
-    val ow = es.groupBy(_._1).map { case (s0, g) => s0 -> g.map(_._3).sum }
+    val ow = es.groupBy(_._1).map { case (s0, g) => s0 -> g.map(_._3).reduce(add) }
     var r: Map[Any, Long] = vs.map(v => (v: Any) -> base).toMap
     for (_ <- 1 to iterations) {
       val inflow = scala.collection.mutable.Map.empty[Any, Long]
@@ -103,9 +109,9 @@ object PageRank {
       es.foreach { case (s0, d0, w) =>
         // inner-join semantics of the dataflow: an edge whose src is
         // outside the vertex spine contributes nothing
-        r.get(s0).foreach(rs => inflow(d0) += rs * w / ow(s0))
+        r.get(s0).foreach(rs => inflow(d0) = add(inflow(d0), mul(rs, w) / ow(s0)))
       }
-      r = vs.map(v => (v: Any) -> (teleport + 85L * inflow(v) / 100L)).toMap
+      r = vs.map(v => (v: Any) -> add(teleport, mul(85L, inflow(v)) / 100L)).toMap
     }
     val outSchema = org.apache.spark.sql.types.StructType(Seq(
       vertices.select(col("node")).schema.fields.head,

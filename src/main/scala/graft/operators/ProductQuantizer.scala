@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -44,25 +44,13 @@ object ProductQuantizer {
     */
   def train(emb: DataFrame, idCol: String, embCol: Column,
       m: Int, subDim: Int, k: Int, iters: Int): Seq[Seq[(Long, Seq[Long])]] =
-    (0 until m).map(s => trainSubspace(emb, idCol, embCol, s, subDim, k, iters))
-
-  /** One subspace's codebook alone — callers that memoize per subspace
-    * (a changed corpus retrains all of them, but a cache layer should not
-    * pay m fits to fill one slot).
-    */
-  def trainSubspace(emb: DataFrame, idCol: String, embCol: Column,
-      s: Int, subDim: Int, k: Int, iters: Int): Seq[(Long, Seq[Long])] =
-    KMeansOp.lloydCentroidsLocal(
+    (0 until m).map(s => KMeansOp.lloydCentroidsLocal(
       emb.select(col(idCol), slice(embCol, s * subDim + 1, subDim).as("e")),
-      idCol, col("e"), k, iters)
+      idCol, col("e"), k, iters))
 
   /** The SQ8 global-scale TRAINING aggregate — the corpus max
-    * |coordinate| as an exact double. One spelling shared by the batch
-    * tier's in-flight SQ8 queries, the persisted IVF_SQ8 index build,
-    * the session quantizer handle, and a rebuilt CDC generation's amax
-    * refit: their bit-identity is a pinned serving contract (a
-    * last-ulp drift in the scale flips floor() boundary codes), so the
-    * expression must never be re-spelled inline.
+    * |coordinate| as an exact double, [[Encoding.train]]'s one spelling:
+    * a last-ulp drift in the scale flips floor() boundary codes.
     */
   def amaxExpr(emb: Column): Column =
     max(array_max(transform(emb, e => abs(e.cast("double")))))
@@ -108,16 +96,20 @@ object ProductQuantizer {
     }: _*)).getField("cid")
 
   /** Encode scaled-integer vectors (vec_id, v) into their PQ codes:
-    * (vec_id, code_0 … code_{m-1}). One narrow projection — this IS the
-    * compressed index a PQ deployment persists.
+    * (vec_id, code_0 … code_{m-1}). One narrow projection.
     */
   def encode(vecs: DataFrame, books: Seq[Seq[(Long, Seq[Long])]],
       subDim: Int): DataFrame =
-    vecs.select(col("vec_id") +:
-      books.zipWithIndex.map { case (book, s) =>
-        nearestCid(slice(col("v"), s * subDim + 1, subDim), book)
-          .as(s"code_$s")
-      }: _*)
+    vecs.select(col("vec_id") +: codeCols(col("v"), books, subDim): _*)
+
+  /** The m code columns of vector column `v`: per subspace, the
+    * nearest codebook entry of its slice.
+    */
+  private[graft] def codeCols(v: Column, books: Seq[Seq[(Long, Seq[Long])]],
+      subDim: Int): Seq[Column] =
+    books.zipWithIndex.map { case (book, s) =>
+      nearestCid(slice(v, s * subDim + 1, subDim), book).as(s"code_$s")
+    }
 
   /** Coarse-residual projection: each vector's cell and the INTEGER
     * residual v − centroid[cell] — the space the true IVFADC (Jégou et
@@ -132,21 +124,6 @@ object ProductQuantizer {
     vecs.select(col("vec_id"), cell.as("cell"),
       zip_with(col("v"), element_at(centsMap, cell), (x, c) => x - c).as("r"))
   }
-
-  /** The full index projection: each scaled-integer vector's coarse IVF
-    * cell AND its PQ codes in ONE shuffle-free pass —
-    * (vec_id, cell, code_0 … code_{m-1}). This is what an IVFADC build
-    * persists, and what continuous index maintenance appends per batch.
-    */
-  def indexProjection(vecs: DataFrame, coarse: Seq[(Long, Seq[Long])],
-      books: Seq[Seq[(Long, Seq[Long])]], subDim: Int): DataFrame =
-    vecs.select(
-      col("vec_id") +:
-      nearestCid(col("v"), coarse).as("cell") +:
-      books.zipWithIndex.map { case (book, s) =>
-        nearestCid(slice(col("v"), s * subDim + 1, subDim), book)
-          .as(s"code_$s")
-      }: _*)
 
   /** ADC lookup tables for one query vector: per subspace, the integer
     * distance from the query's subvector to every codebook entry.
@@ -168,27 +145,17 @@ object ProductQuantizer {
       element_at(typedLit(lut), col(s"code_$s"))
     }.reduce(_ + _)
 
-  /** Approximate top-k by asymmetric distance: scan the code table,
-    * sum the per-subspace LUT entries, take the k lowest (ties to the
-    * lower vec_id). Output (vec_id, adc_scaled).
-    */
-  def adcTopK(codes: DataFrame, luts: Seq[Map[Long, Long]], k: Int): DataFrame =
-    codes.select(col("vec_id"), adcDist(luts).as("adc_scaled"))
-      .orderBy(col("adc_scaled").asc, col("vec_id").asc)
-      .limit(k)
-
   // ---- The SQ8 codec, in ONE spelling ------------------------------
   //
   // Every SQ8 code and decode in the engine is one of the expressions
-  // below: the batch tiers' array forms (`transform` over these, with
-  // the trained scales as columns of a broadcast relation), the
-  // maintained index's per-column forms (frozen scales passed as `lit`,
-  // which Catalyst folds to the same doubles), and the driver-side
-  // query mirror. Corpus codes, query codes and decodes must agree
-  // bit-for-bit across all of them (the CdcIndexSpec parity pins), so
-  // none of them may be re-spelled inline. floor(x + 0.5) mirrors
-  // q_quantize_embeddings' convention (ROUND-on-double differs across
-  // engines; floor does not).
+  // below: per code column under frozen scales passed as `lit` (the
+  // corpus projection and the per-dim decode, [[Quantizers]]), the
+  // `transform` form for a batch probe frame's query codes, and the
+  // driver-side query mirror. Corpus codes, query codes and decodes
+  // must agree bit-for-bit across all of them (the CdcIndexSpec parity
+  // pins), so none of them may be re-spelled inline. floor(x + 0.5)
+  // mirrors q_quantize_embeddings' convention (ROUND-on-double differs
+  // across engines; floor does not).
 
   /** One coordinate's code under the GLOBAL symmetric scale amax/127
     * (FAISS's QT_8bit_uniform): floor(e / (amax/127) + 0.5), and 0 when
@@ -227,7 +194,7 @@ object ProductQuantizer {
 
   /** The sorted (dist, cid) coarse-argmin array for a probe's vector
     * column — ONE spelling of the per-qid probe-cell derivation, shared
-    * by the batch serving dataflows and [[pinProbesWithCells]] (ties to
+    * by the batch scorers and [[pinProbesWithCells]] (ties to
     * the lower cid, the engine/oracle convention): `slice(_, 1, nProbe)`
     * of this array IS the probe's cell list.
     */
@@ -269,50 +236,32 @@ object ProductQuantizer {
       .orderBy(col("qid").asc, col("rnk").asc)
   }
 
-  /** A probe frame that [[pinProbes]] has deduplicated on qid and
-    * checkpointed — the type-level witness the batch dataflows accept
-    * so a caller that already pinned never pays a second checkpoint
-    * job (the r19 double-pin: the committed-state batch search pinned, then
-    * `adcBatchServe` unconditionally re-pinned the same frame — a
-    * redundant Q-row job per batch query). The constructor is private
-    * to this object, so the ONLY way to mint the witness is the one
-    * pinning spelling below; holding a `PinnedProbes` IS the proof the
-    * checkpoint happened.
+  /** A probe frame deduplicated on qid and pinned — the type-level
+    * witness the batch scorers accept, so every consumer of the frame
+    * (the collected listing-prune cells, the broadcast cell relation,
+    * the broadcast LUTs) reads the same Q rows and none pays a second
+    * pin. Only [[pinProbesWithCells]] mints one in the engine.
     */
-  final class PinnedProbes private[ProductQuantizer] (val df: DataFrame)
-
-  /** Deduplicate a probe frame on qid and PIN it (one bounded exchange
-    * + checkpoint over Q rows) — the ONE probe-pinning spelling every
-    * batch serving consumer shares: the pinned frame feeds multiple
-    * subtrees (the collected listing-prune cells, the broadcast cell
-    * relation, the broadcast LUTs), and an un-pinned lineage would
-    * re-execute per consumer — so a nondeterministic probe source
-    * (sample, rand-ordered dedup pick, a table gaining files between
-    * jobs) could disagree between them, which for the listing prune
-    * means cells the join probes could be missing from the pruned
-    * listing. Pinning once makes every consumer read the same Q rows.
-    */
-  def pinProbes(probesIn: DataFrame): PinnedProbes =
-    new PinnedProbes(probesIn.dropDuplicates("qid").localCheckpoint())
+  final class PinnedProbes private[operators] (val df: DataFrame)
 
   /** Dedup + pin a probe frame AND collect its DISTINCT probed cells in
-    * ONE action (r21). The cells — ≤ Q·nProbe longs, algorithm-bounded
-    * the way the k collected centroids are — let a serving tier over a
+    * ONE action. The cells — ≤ Q·nProbe longs, algorithm-bounded the way
+    * the k collected centroids are — let a serving tier over a
     * PERSISTED cell-partitioned table push a static partition predicate
     * into its file listing: the broadcast (qid, cell) join inside the
-    * batch dataflows scopes which rows are SCORED per qid, but Spark
-    * plants no dynamic-partition-pruning subquery for that shape
-    * (verified r18), so without this predicate a batch read LISTS every
-    * cell directory it will never score. One collect returns the
-    * dedup'd probe rows WITH their probe-cell slices, the pinned frame
-    * is rebuilt as a LocalRelation from the collected rows (pinned BY
-    * VALUE — strictly stronger than the checkpoint: every consumer reads
-    * literally the same rows), and the cells fall out of the extra
-    * column. Evaluates the same [[probeCellArr]] expression the serving
-    * joins evaluate, so the pruned listing is a superset of every
-    * (qid, cell) the join touches by construction. `v` names the vector
-    * column (default `v`; SQ8 callers pass the int-scaled view of their
-    * raw-embedding column).
+    * batch scorers scopes which rows are SCORED per qid, but Spark
+    * plants no dynamic-partition-pruning subquery for that shape, so
+    * without this predicate a batch read LISTS every cell directory it
+    * will never score. One collect returns the dedup'd probe rows WITH
+    * their probe-cell slices; the pinned frame is rebuilt as a
+    * LocalRelation from those rows (pinned BY VALUE: every consumer
+    * reads literally the same rows, so a nondeterministic probe source
+    * cannot disagree between them), and the cells fall out of the extra
+    * column. It evaluates the same [[probeCellArr]] expression the
+    * serving joins evaluate, so the pruned listing is a superset of
+    * every (qid, cell) the join touches. The qid dedup matters for
+    * exactness: a duplicated probe row would fan out its cell and LUT
+    * rows and fail the `nsub === m` filter. `v` names the vector column.
     */
   def pinProbesWithCells(probesIn: DataFrame, coarse: Seq[(Long, Seq[Long])],
       nProbe: Int, v: Column = col("v")): (PinnedProbes, Seq[Long]) = {
@@ -331,28 +280,35 @@ object ProductQuantizer {
     (new PinnedProbes(spark.createDataFrame(pinnedRows, base.schema)), cells)
   }
 
-  /** The bounded codebook-entry relation (sub, code, c): m·k rows, the
-    * broadcast side of every per-probe LUT build.
+  /** The per-probe ADC LUT relation: each (qid, `keys`…, v) probe row
+    * against the BOUNDED codebook-entry relation (m·k rows, broadcast),
+    * giving (qid, keys…, sub, code, d) with d the integer distance of
+    * the probe's subspace slice to that entry — built by executors,
+    * never on the driver.
     */
-  private def bookRows(s: SparkSession,
-      books: Seq[Seq[(Long, Seq[Long])]]): DataFrame = {
+  private[graft] def lutRows(probes: DataFrame, books: Seq[Seq[(Long, Seq[Long])]],
+      subDim: Int, keys: String*): DataFrame = {
+    val s = probes.sparkSession
     import s.implicits._
-    (for {
+    val entries = (for {
       (book, sub) <- books.zipWithIndex
       (cid, c) <- book
     } yield (sub, cid, c)).toDF("sub", "code", "c")
+    probes.crossJoin(broadcast(entries))
+      .select((col("qid") +: keys.map(col)) ++ Seq(col("sub"), col("code"),
+        KMeansOp.intDist(
+          slice(col("v"), col("sub") * lit(subDim) + lit(1), lit(subDim)),
+          col("c")).as("d")): _*)
   }
 
-  /** The ADC scoring body both batch encodings share: melt each
-    * candidate code row per subspace into (probeKeys…, vec_id, sub,
-    * code), join the broadcast LUT relation on probeKeys + (sub, code),
-    * sum per (qid, vec_id), keep only rows all m subspaces matched (the
-    * `nsub === m` exactness filter), and rank per probe. `probeKeys` is
-    * (qid) for plain PQ and (qid, cell) for the residual encoding,
-    * whose LUTs are per probed cell — there the cell key doubles as the
-    * probed-cell filter.
+  /** The ADC scoring body of the batch PQ scorers: melt each candidate
+    * code row per subspace into (probeKeys…, vec_id, sub, code), join
+    * the broadcast LUT relation on probeKeys + (sub, code), sum per
+    * (qid, vec_id), keep only rows all m subspaces matched (the
+    * `nsub === m` exactness filter), and rank per probe. Exchanges stay
+    * at the aggregation + the qid rank window regardless of probe count.
     */
-  private def adcRankBatch(cand: DataFrame, luts: DataFrame,
+  private[graft] def adcRankBatch(cand: DataFrame, luts: DataFrame,
       probeKeys: Seq[String], m: Int, topK: Int): DataFrame = {
     val codesLong = cand.select(probeKeys.map(col) :+ col("vec_id") :+
       posexplode(array((0 until m).map(i => col(s"code_$i")): _*))
@@ -363,130 +319,5 @@ object ProductQuantizer {
       .agg(sum(col("d")).as("adc_scaled"), count(lit(1)).as("nsub"))
       .where(col("nsub") === m)
     perProbeTopK(adc, "adc_scaled", topK)
-  }
-
-  /** Public entry for an un-pinned probe frame: dedup + pin once
-    * ([[pinProbes]] — the probe frame feeds two broadcast relations,
-    * cells and LUTs, so an un-pinned dedup would re-execute per
-    * subtree and a nondeterministic duplicate pick could disagree
-    * between them), then serve. A caller that already holds the
-    * [[PinnedProbes]] witness (because it collected listing-prune
-    * cells from the same frame) calls the pinned overload directly —
-    * exactly one checkpoint job on every batch path.
-    */
-  def adcBatchServe(indexed: DataFrame, probesIn: DataFrame,
-      coarse: Seq[(Long, Seq[Long])], books: Seq[Seq[(Long, Seq[Long])]],
-      subDim: Int, nProbe: Int, topK: Int): DataFrame =
-    adcBatchServe(indexed, pinProbes(probesIn), coarse, books, subDim,
-      nProbe, topK)
-
-  /** Batch IVFADC serving over an INDEXED code table — the whole
-    * serving dataflow with BOTH sides distributed, shared by the batch
-    * query tier (SemanticQ) and the committed-state serving tier
-    * (IndexStream). `indexed` must carry (vec_id, cell, code_0 …);
-    * the probes are any (qid, v) frame — a probe fleet is a DataFrame,
-    * not a driver loop:
-    *
-    *  - per-qid nProbe-nearest coarse cells: [[probeCellRows]], the
-    *    same literal-argmin the corpus side's [[indexProjection]] uses,
-    *    generalized to argmin-n.
-    *  - per-qid ADC LUTs: the probes joined against the BOUNDED
-    *    codebook-entry relation (m·k rows, broadcast) with a
-    *    per-subspace slice — Q·m·k LUT rows built by executors.
-    *  - both probe-side relations ship as BROADCASTS; the cell join
-    *    prunes the code table BEFORE the per-subspace melt, so only
-    *    probed-cell rows reach the LUT join and the (qid, vec)
-    *    aggregation. Exchanges stay at the aggregation + the qid rank
-    *    window regardless of probe count (plan-pinned in PqSpec).
-    *
-    * Output (qid, rnk, vec_id, adc_scaled), top-k per qid, ordered.
-    *
-    * The probe frame is deduplicated on qid first (one bounded
-    * exchange over Q rows): a duplicated probe row would otherwise
-    * duplicate both its probe-cell rows and its LUT rows, making every
-    * candidate's per-subspace join fan out and fail the `nsub === m`
-    * exactness filter — zero results for that qid instead of its
-    * top-k. Distinct VECTORS under one qid remain a caller error (the
-    * dedup keeps one arbitrarily, as the replaced driver-side `.toMap`
-    * did).
-    */
-  def adcBatchServe(indexed: DataFrame, pinned: PinnedProbes,
-      coarse: Seq[(Long, Seq[Long])], books: Seq[Seq[(Long, Seq[Long])]],
-      subDim: Int, nProbe: Int, topK: Int): DataFrame = {
-    val probes = pinned.df
-    val probeCells = probeCellRows(probes, coarse, col("v"), nProbe)
-    val luts = probes.crossJoin(broadcast(bookRows(indexed.sparkSession, books)))
-      .select(col("qid"), col("sub"), col("code"),
-        KMeansOp.intDist(
-          slice(col("v"), col("sub") * lit(subDim) + lit(1), lit(subDim)),
-          col("c")).as("d"))
-    // coarse filter FIRST: the broadcast (qid, cell) join prunes the
-    // code table to probed cells before any per-subspace work
-    adcRankBatch(indexed.join(broadcast(probeCells), Seq("cell")), luts,
-      Seq("qid"), books.size, topK)
-  }
-
-  /** The residual-index projection a residual-IVFADC build persists:
-    * (vec_id, cell, code_0 …) where the codes quantize v −
-    * centroid[cell] ([[residuals]]) against the residual-trained
-    * codebooks — one shuffle-free pass, the residual twin of
-    * [[indexProjection]].
-    */
-  def residualIndexProjection(vecs: DataFrame, coarse: Seq[(Long, Seq[Long])],
-      books: Seq[Seq[(Long, Seq[Long])]], subDim: Int): DataFrame = {
-    val res = residuals(vecs, coarse)
-    res.select(
-      col("vec_id") +: col("cell") +:
-      books.zipWithIndex.map { case (book, s) =>
-        nearestCid(slice(col("r"), s * subDim + 1, subDim), book)
-          .as(s"code_$s")
-      }: _*)
-  }
-
-  /** Batch serving over the RESIDUAL index — [[adcBatchServe]] for
-    * FAISS's default encoding, where the ADC tables are PER PROBED
-    * CELL (the query's residual differs per cell, Jégou et al. §IV.B).
-    * All probe-side relations are dataflows:
-    *
-    *  - per-qid nProbe-nearest cells exactly as [[adcBatchServe]];
-    *  - per-(qid, cell) query residuals: the probe-cell relation
-    *    carrying the probe vector, with the cell centroid looked up in
-    *    a bounded broadcast map literal — `rv = v − centroid[cell]` is
-    *    one zip_with projection;
-    *  - per-(qid, cell) LUTs: the residual rows against the broadcast
-    *    codebook-entry relation — Q·nProbe·m·k rows, executor-built.
-    *
-    * The scan joins the LUT on (qid, CELL, sub, code) — the cell key
-    * doubles as the probed-cell filter, the same trick the
-    * single-probe q_ann_ivfpq_res plays with its chained-when LUTs.
-    * Exchanges stay at the aggregation + the qid rank window.
-    *
-    * Probes are deduplicated on qid first, for the same fan-out
-    * exactness reason as [[adcBatchServe]]; the DataFrame entry pins
-    * once and delegates, the [[PinnedProbes]] overload serves a frame
-    * the caller already pinned (no second checkpoint job).
-    */
-  def adcBatchServeResidual(indexed: DataFrame, probesIn: DataFrame,
-      coarse: Seq[(Long, Seq[Long])], books: Seq[Seq[(Long, Seq[Long])]],
-      subDim: Int, nProbe: Int, topK: Int): DataFrame =
-    adcBatchServeResidual(indexed, pinProbes(probesIn), coarse, books,
-      subDim, nProbe, topK)
-
-  def adcBatchServeResidual(indexed: DataFrame, pinned: PinnedProbes,
-      coarse: Seq[(Long, Seq[Long])], books: Seq[Seq[(Long, Seq[Long])]],
-      subDim: Int, nProbe: Int, topK: Int): DataFrame = {
-    val probeCells = probeCellRows(pinned.df, coarse, col("v"), nProbe, "v")
-    val centsMap = typedLit(coarse.toMap)
-    val qres = probeCells.select(col("qid"), col("cell"),
-      zip_with(col("v"), element_at(centsMap, col("cell")),
-        (x, c) => x - c).as("rv"))
-    val luts = qres.crossJoin(broadcast(bookRows(indexed.sparkSession, books)))
-      .select(col("qid"), col("cell"), col("sub"), col("code"),
-        KMeansOp.intDist(
-          slice(col("rv"), col("sub") * lit(subDim) + lit(1), lit(subDim)),
-          col("c")).as("d"))
-    val cand = indexed.join(
-      broadcast(probeCells.select(col("qid"), col("cell"))), Seq("cell"))
-    adcRankBatch(cand, luts, Seq("qid", "cell"), books.size, topK)
   }
 }

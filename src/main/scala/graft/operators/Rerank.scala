@@ -145,14 +145,12 @@ object Rerank {
     require(p.schema("sim").dataType == DoubleType,
       "mmrSelectLocal: sim must be DOUBLE")
     val idOrd = sparkOrd(c.schema("id").dataType)
-    val cRows = c.collect()
-    require(cRows.length <= n,
-      s"mmrSelectLocal: ${cRows.length} candidate rows exceed the declared " +
-        s"bound $n — this path is for algorithm-bounded sets only")
-    val sRows = p.collect()
-    require(sRows.length <= n,
-      s"mmrSelectLocal: ${sRows.length} sim rows exceed the declared " +
-        s"bound $n — this path is for algorithm-bounded sets only")
+    val cRows = Iterate.collectBounded(c, n)(
+      s"mmrSelectLocal: more than $n candidate rows exceed the declared " +
+        "bound — this path is for algorithm-bounded sets only")
+    val sRows = Iterate.collectBounded(p, n)(
+      s"mmrSelectLocal: more than $n sim rows exceed the declared " +
+        "bound — this path is for algorithm-bounded sets only")
     cRows.foreach(r => require(!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2),
       "mmrSelectLocal: null qid/id/rel"))
     // the greedy below folds candidates per (qid, id) through `.toMap`,

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.operators.{KMeansOp, ProductQuantizer}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import graft.operators.{Encoding, KMeansOp}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -24,13 +24,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * micro-batch of (vec_id, embedding, `__op`) rows ([[processBatchCdc]];
   * a stream without the op column is all inserts):
   *  1. one shuffle-free projection computes each inserted vector's
-  *     coarse cell and codes against the frozen quantizers (literal
-  *     argmins, broadcast by value) — [[ProductQuantizer.indexProjection]]
-  *     for plain PQ, [[ProductQuantizer.residualIndexProjection]] when
-  *     the artifact's codebooks quantize v − centroid[cell] (FAISS's
-  *     default residual encoding; `Quantizers.residual`), or the
-  *     per-dimension scalar codes under the frozen scales when the
-  *     artifact is IVF_SQ8 (`Quantizers.sq8Amax` / `sq8Dims`);
+  *     coarse cell and codes against the frozen quantizers
+  *     ([[Quantizers.project]], the layout every tier shares);
   *  2. an insert whose vec_id is LIVE before this batch (and not
   *     deleted by it) is dropped by one anti-join against the live code
   *     table (new↔existing only; the index is never re-scanned
@@ -53,114 +48,22 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * the state. Every code write — per-batch, rebuild generation,
   * compacted base — lays the rows out `partitionBy(cell)`, so the
   * MAINTAINED index IS the pruned serving artifact (the same layout the
-  * batch tier persists, SemanticQ.partitionedCodesPath): search over
-  * the live index ([[searchCommittedCdc]] and its SQ8/batch siblings)
-  * answers its probed-cell predicate by DIRECTORY pruning at the
-  * listing, never by scanning non-probed cells' files, and
+  * batch tier persists, SemanticQ.indexPath): search over the live
+  * index ([[searchCommittedCdc]], [[searchCommittedBatchCdc]]) answers
+  * its probed-cell predicate by DIRECTORY pruning at the listing, never
+  * by scanning non-probed cells' files, and
   * compaction's tombstone GC preserves the partitioning (CdcIndexSpec
   * pins the pruned plan).
   */
 object IndexStream {
 
-  /** The frozen index artifact: coarse centroids + per-subspace PQ
-    * codebooks (all driver-local and bounded — k·d + m·k·subDim
-    * BIGINTs), as trained by KMeansOp/ProductQuantizer on the build
-    * snapshot. `residual` = true means the codebooks quantize
-    * v − centroid[cell] (FAISS's default IVFADC encoding,
-    * [[ProductQuantizer.residualIndexProjection]]) instead of v
-    * itself. `sq8Amax` = Some(a) selects the IVF_SQ8 encoding
-    * (FAISS's IndexIVFScalarQuantizer QT_8bit under the global
-    * symmetric scale a/127 — the batch tier's q_ann_ivf_sq8): no
-    * codebooks, one 1-byte scalar code PER DIMENSION, with `a` the
-    * trained corpus max |coordinate| riding the artifact exactly like
-    * the codebooks do. `sq8Dims` = Some((vmn, vmx)) selects the
-    * PER-DIMENSION variant (FAISS's actual QT_8bit, trained [vmin,
-    * vmax] intervals per dimension — the batch tier's q_sq8_dim_part):
-    * codes are floor((x − vmn_d)/Δ_d + 0.5) with Δ_d = (vmx_d −
-    * vmn_d)/255, search is ASYMMETRIC (the persisted code is
-    * dequantized into the shared ×10^6 integer domain; the query is
-    * never quantized). Assignment and serving dispatch on the
-    * encoding, and every flag persists with the generation artifact so
-    * a restarted maintainer can never mix encodings.
+  /** The frozen index artifact: coarse centroids, codebooks and the
+    * [[Encoding]] they were trained as ([[graft.operators.Quantizers]]).
+    * The encoding persists with a generation, so a restarted maintainer
+    * can never mix encodings.
     */
-  final case class Quantizers(coarse: Seq[(Long, Seq[Long])],
-      books: Seq[Seq[(Long, Seq[Long])]], subDim: Int,
-      residual: Boolean = false, sq8Amax: Option[Double] = None,
-      sq8Dims: Option[(Seq[Double], Seq[Double])] = None,
-      opqPerm: Option[Seq[Int]] = None) {
-    require(!(sq8Amax.isDefined && sq8Dims.isDefined),
-      "global-amax and per-dimension SQ8 are exclusive encodings")
-    // `opqPerm` = Some(p) selects the OPQ encoding (Ge et al.'s
-    // dimension allocation, the permutation subgroup of the rotation
-    // family — the batch tier's q_ann_opq_part): p is the FLAT
-    // subspace-major permutation, and BY CONVENTION the artifact's
-    // coarse centroids and codebooks live in the PERMUTED domain
-    // (books trained on permuted slices; centroids permuted entry-wise
-    // — a permutation preserves every L2 distance, so cell assignment
-    // matches the raw domain exactly). Every vector or probe entering
-    // assignment/serving is permuted at ONE choke point each, then the
-    // plain-PQ machinery applies unchanged.
-    require(opqPerm.isEmpty ||
-      (!residual && sq8Amax.isEmpty && sq8Dims.isEmpty),
-      "OPQ composes with the plain-PQ encoding only")
-    opqPerm.foreach(p => require(
-      p.length == coarse.head._2.size && p.sorted == p.indices,
-      "opqPerm must be a permutation of ALL dimension indices — a " +
-        "short permutation would silently truncate every permuted vector"))
-    /** Vector dimensionality, from the coarse centroids. */
-    def dim: Int = coarse.head._2.size
-    /** Code-column count of this encoding's persisted state: one code
-      * per PQ subspace, or one per DIMENSION for the SQ8 variants.
-      */
-    def m: Int =
-      if (sq8Amax.isDefined || sq8Dims.isDefined) dim else books.size
-  }
-
-  /** The permuted view of a scaled-integer vector column — the one
-    * Column spelling of the OPQ pre-rotation (subspace-major, so
-    * `slice(w, m·subDim + 1, subDim)` is subspace m's allocated dims in
-    * rank order, matching the codebooks' training slices).
-    */
-  private def permuteVec(v: Column, p: Seq[Int]): Column =
-    array(p.map(i => element_at(v, i + 1)): _*)
-
-  /** Driver-side mirror of [[permuteVec]] for single-probe queries. */
-  private def permuteLocal(v: Seq[Long], p: Seq[Int]): Seq[Long] =
-    p.map(v(_))
-
-  /** The per-batch/per-rebuild corpus projection for this encoding —
-    * takes the RAW (vec_id, embedding) rows: the PQ encodings code the
-    * ×10^6 scaled-integer vector, while the SQ8 encodings code each raw
-    * coordinate under the frozen scales, passed as literals to the
-    * shared [[ProductQuantizer.sq8Code]] / [[ProductQuantizer.sq8DimCode]]
-    * (the expressions the batch tier's persisted SQ8 index writes use,
-    * so a maintained SQ8 index is bit-identical to the persisted one).
-    */
-  private def project(batch: DataFrame, q: Quantizers): DataFrame = {
-    val vecs = batch.select(col("vec_id"),
-      KMeansOp.intVec(col("embedding")).as("v"))
-    val sq8Code: Option[(Column, Int) => Column] =
-      q.sq8Amax.map(a => (e: Column, _: Int) =>
-        ProductQuantizer.sq8Code(e, lit(a))).orElse(
-      q.sq8Dims.map { case (vmn, vmx) => (e: Column, i: Int) =>
-        ProductQuantizer.sq8DimCode(e, lit(vmn(i)), lit(vmx(i))) })
-    sq8Code match {
-      case Some(code) =>
-        batch.select(col("vec_id") +:
-          ProductQuantizer.nearestCid(
-            KMeansOp.intVec(col("embedding")), q.coarse).as("cell") +:
-          (0 until q.dim).map(i =>
-            code(element_at(col("embedding"), i + 1), i).as(s"code_$i")): _*)
-      case None if q.residual =>
-        ProductQuantizer.residualIndexProjection(vecs, q.coarse, q.books, q.subDim)
-      case None =>
-        // OPQ = plain PQ over the permuted domain: permute each vector
-        // once here (the artifact's coarse/books are already permuted)
-        val w = q.opqPerm.map(p => vecs.select(col("vec_id"),
-          permuteVec(col("v"), p).as("v"))).getOrElse(vecs)
-        ProductQuantizer.indexProjection(w, q.coarse, q.books, q.subDim)
-    }
-  }
+  type Quantizers = graft.operators.Quantizers
+  val Quantizers = graft.operators.Quantizers
 
   /** The persisted code-table schema: (vec_id, cell, code_0 … code_{m−1},
     * src_batch), src_batch being the batch that wrote the row.
@@ -294,7 +197,7 @@ object IndexStream {
       .select(col("vec_id")).distinct()
     val ins = ops.where(coalesce(col(OpColumn), lit("insert")) =!= "delete")
       .select(col("vec_id"), col("embedding"))
-    val indexed0 = project(ins, q)
+    val indexed0 = q.project(ins)
     val codeCols = indexed0.columns.filter(_ != "vec_id").toSeq
     val indexed = indexed0.groupBy(col("vec_id"))
       .agg(min(struct(codeCols.map(col): _*)).as("k"))
@@ -367,203 +270,33 @@ object IndexStream {
 
   // ---- Serving ------------------------------------------------------
 
-  /** The single-probe serving tail every encoding shares: probe the
-    * `nProbe` coarse cells nearest `coarseQuery` driver-side, score the
-    * probed cells' LIVE rows by `dist`, and keep the k lowest (ties to
-    * the lower vec_id). Returns (vec_id, `distName`).
+  /** The live code rows as a serving layout (the batch bookkeeping
+    * column dropped). A row's liveness is decided per row against the
+    * (unpruned) tombstone relation, never by rows in other cells, so
+    * the serve's probed-cell filter pushes to the codes scan and its
+    * file listing stops at the probed `cell=` directories.
     */
-  private def probedTopK(s: SparkSession, stateDir: String, q: Quantizers,
-      coarseQuery: Seq[Long], nProbe: Int, dist: Column, distName: String,
-      k: Int): DataFrame = {
-    val probeCells = KMeansOp.nearestCells(q.coarse, coarseQuery, nProbe)
-    liveCodes(s, stateDir, q.m)
-      .where(col("cell").isin(probeCells: _*))
-      .select(col("vec_id"), dist.as(distName))
-      .orderBy(col(distName).asc, col("vec_id").asc)
-      .limit(k)
-  }
+  private def liveLayout(s: SparkSession, stateDir: String, q: Quantizers): DataFrame =
+    liveCodes(s, stateDir, q.m).drop("src_batch")
 
-  /** IVFADC search over the LIVE rows of the maintained index: probe
-    * the `nProbe` coarse cells nearest the scaled-integer query, then
-    * ADC top-k over the probed cells' codes — identical mechanics to the
-    * batch q_ann_ivfpq, but serving from the incrementally-maintained
-    * state (raw vectors are never read): deleted ids never surface,
+  /** Single-probe search over the LIVE rows of the maintained index,
+    * `probe` being the query's raw embedding: deleted ids never surface,
     * re-inserted ids serve their newest codes. Returns
-    * (vec_id, adc_scaled).
+    * (vec_id, adc_scaled) — (vec_id, qdist) for SQ8 state.
     */
   def searchCommittedCdc(s: SparkSession, stateDir: String, q: Quantizers,
-      query: Seq[Long], nProbe: Int, k: Int): DataFrame = {
-    require(q.sq8Amax.isEmpty && q.sq8Dims.isEmpty,
-      "SQ8 CDC state serves through searchCommittedCdcSq8/" +
-        "searchCommittedCdcSq8Dim")
-    if (q.residual) {
-      // residual ADC tables are per probed cell — serve the single
-      // probe through the shared residual batch dataflow and strip the
-      // probe bookkeeping back off
-      import s.implicits._
-      return searchCommittedBatchCdc(s, stateDir, q,
-          Seq((0L, query)).toDF("qid", "v"), nProbe, k)
-        .select(col("vec_id"), col("adc_scaled"))
-    }
-    // OPQ probes enter the permuted domain once, here
-    val qw = q.opqPerm.map(permuteLocal(query, _)).getOrElse(query)
-    probedTopK(s, stateDir, q, qw, nProbe,
-      ProductQuantizer.adcDist(ProductQuantizer.adcTables(qw, q.books, q.subDim)),
-      "adc_scaled", k)
-  }
+      probe: Seq[Double], nProbe: Int, k: Int): DataFrame =
+    q.serve(liveLayout(s, stateDir, q), probe, nProbe, k)
 
-  /** The SQ8 query projection, driver-side: the scaled-integer vector
-    * (for the coarse probe) and the per-dimension scalar codes under
-    * the frozen global scale — the same floor conventions as the
-    * distributed projection, applied to the one probe row.
-    */
-  private def sq8Query(q: Quantizers, emb: Seq[Double]): (Seq[Long], Seq[Long]) = {
-    require(q.sq8Amax.isDefined,
-      "this entry serves global-amax SQ8 state only — PQ/residual " +
-        "handles serve through searchCommittedCdc, per-dim handles " +
-        "through searchCommittedCdcSq8Dim")
-    val amax = q.sq8Amax.get
-    val v = emb.map(e => math.floor(e * 1000000d).toLong)
-    (v, emb.map(ProductQuantizer.sq8CodeLocal(_, amax)))
-  }
-
-  /** Integer code-space squared L2 of the m persisted code COLUMNS
-    * against the query code `qc(i)` per dimension — one codegen'd
-    * expression, no arrays rebuilt at scan time.
-    */
-  private def sq8Dist(m: Int, qc: Int => Column): Column =
-    (0 until m).map { i =>
-      (col(s"code_$i") - qc(i)) * (col(s"code_$i") - qc(i))
-    }.reduce(_ + _)
-
-  /** IVF_SQ8 search over the LIVE rows of the maintained index: probe
-    * the nProbe nearest coarse cells, then integer code-space top-k over
-    * the probed cells' scalar codes — [[searchCommittedCdc]] at the
-    * 1-byte-per-dim encoding. `emb` is the probe's RAW embedding (the
-    * query is encoded against the frozen amax exactly as the corpus
-    * was). Returns (vec_id, qdist), the q_ann_ivf_sq8 contract shape.
-    */
-  def searchCommittedCdcSq8(s: SparkSession, stateDir: String, q: Quantizers,
-      emb: Seq[Double], nProbe: Int, k: Int): DataFrame = {
-    val (v, qCode) = sq8Query(q, emb)
-    probedTopK(s, stateDir, q, v, nProbe,
-      sq8Dist(q.m, i => lit(qCode(i))), "qdist", k)
-  }
-
-  /** BATCH IVF_SQ8 serving over the LIVE rows of the maintained index —
-    * the probe-fleet form at the 1-byte encoding
-    * ([[searchCommittedBatchCdc]]'s role for the PQ encodings): `probes`
-    * is any (qid, embedding) frame of RAW embeddings; per-qid
-    * nProbe-nearest coarse cells come from the literal-argmin array
-    * (shuffle-free), each probe's scalar codes are built in-flight
-    * against the frozen amax literal, the (qid, cell, qcode) relation
-    * broadcasts into the code scan so only probed-cell rows are scored,
-    * and one qid-partitioned rank serves the per-probe top-k — ONE
-    * state-scan lineage for any probe count, the only per-batch driver
-    * work the ≤ Q·nProbe collected distinct probed cells, pushed as a
-    * static partition predicate so the state table's file LISTING also
-    * stops at the probed `cell=` directories
-    * ([[ProductQuantizer.pinProbesWithCells]] over the same argmin the
-    * join evaluates). Returns (qid, rnk, vec_id, qdist).
-    */
-  def searchCommittedBatchCdcSq8(s: SparkSession, stateDir: String,
-      q: Quantizers, probes: DataFrame, nProbe: Int, k: Int): DataFrame = {
-    require(q.sq8Amax.isDefined,
-      "this entry serves SQ8 state only — a PQ/residual handle serves " +
-        "through searchCommittedBatchCdc")
-    // pin + collect the listing-prune cells in ONE action
-    // ([[ProductQuantizer.pinProbesWithCells]], r21 — dedup on qid, pin
-    // by value, cells from the same pass): the cells and the broadcast
-    // probe relation read the same Q rows, and a duplicated probe row
-    // can't double its candidates under the rank window
-    val intVec = KMeansOp.intVec(col("embedding"))
-    val (pinned, probedCells) =
-      ProductQuantizer.pinProbesWithCells(probes, q.coarse, nProbe, intVec)
-    val amax = lit(q.sq8Amax.get)
-    val probeCells = ProductQuantizer.probeCellRows(
-      pinned.df.withColumn("qcode",
-        transform(col("embedding"), e => ProductQuantizer.sq8Code(e, amax))),
-      q.coarse, intVec, nProbe, "qcode")
-    ProductQuantizer.perProbeTopK(
-      liveCodes(s, stateDir, q.m).where(col("cell").isin(probedCells: _*))
-        .join(broadcast(probeCells), Seq("cell"))
-        .select(col("qid"), col("vec_id"),
-          sq8Dist(q.m, i => element_at(col("qcode"), i + 1)).as("qdist")),
-      "qdist", k)
-  }
-
-  /** Asymmetric per-dim code-space squared L2 of the persisted code
-    * COLUMNS against a literal scaled-integer query: each code decodes
-    * under its dimension's frozen [vmn, vmx] interval
-    * ([[ProductQuantizer.sq8DimDecode]]); the query enters exact — quantization
-    * error once, never twice (FAISS's DC convention, the same
-    * asymmetric discipline as the batch tier's q_sq8_dim family).
-    */
-  private def sq8DimDist(q: Quantizers, query: Seq[Long]): Column = {
-    val (vmn, vmx) = q.sq8Dims.get
-    (0 until q.dim).map { i =>
-      val dv = ProductQuantizer.sq8DimDecode(
-        col(s"code_$i"), lit(vmn(i)), lit(vmx(i))) - lit(query(i))
-      dv * dv
-    }.reduce(_ + _)
-  }
-
-  /** Per-dimension SQ8 search over the LIVE rows of the maintained
-    * index — [[searchCommittedCdcSq8]] at the per-dim-trained encoding:
-    * probe the nProbe nearest coarse cells, then asymmetric decoded
-    * top-k over the probed cells' codes. `query` is the probe's
-    * SCALED-INTEGER vector (never quantized — the asymmetric side needs
-    * no encode). Returns (vec_id, qdist), the q_sq8_dim_part contract
-    * shape.
-    */
-  def searchCommittedCdcSq8Dim(s: SparkSession, stateDir: String,
-      q: Quantizers, query: Seq[Long], nProbe: Int, k: Int): DataFrame = {
-    require(q.sq8Dims.isDefined,
-      "this entry serves per-dimension SQ8 state only — global-amax " +
-        "handles serve through searchCommittedCdcSq8")
-    probedTopK(s, stateDir, q, query, nProbe, sq8DimDist(q, query), "qdist", k)
-  }
-
-  /** Batch IVFADC serving over the LIVE rows of the maintained index —
-    * the q_ann_ivfpq_batch shape (per-qid coarse cell lists + per-qid
-    * LUTs as broadcast relations, probed-cells-only scan, one
-    * aggregation + one rank window) pointed at the
-    * incrementally-maintained state instead of a freshly-encoded
-    * corpus: how a serving tier answers a probe batch against the live
-    * index. `probes` is any (qid, scaled-vector) FRAME — per-qid coarse
-    * cells and ADC LUTs are built by executors (the shared
-    * [[ProductQuantizer.adcBatchServe]] dataflow), so thousands of
-    * concurrent probes never touch the driver beyond the ≤ Q·nProbe
-    * collected DISTINCT probed cells, which ride back as a static
-    * partition predicate so the code table's file LISTING stops at the
-    * probed `cell=` directories (the broadcast join alone scopes
-    * scoring, not listing — [[ProductQuantizer.pinProbesWithCells]]). A
-    * row's liveness is decided per row against the (unpruned)
-    * tombstone relation, never by rows in other cells, so filtering the
-    * live view on `cell` pushes to the codes scan and changes nothing
-    * the join would have scored. Returns (qid, rnk, vec_id, adc_scaled),
-    * top-k per qid.
+  /** Batch search over the LIVE rows of the maintained index: `probes`
+    * is any (qid, v) frame — (qid, embedding) for SQ8 state — served by
+    * executors, the only driver work the ≤ Q·nProbe collected distinct
+    * probed cells. Returns (qid, rnk, vec_id, adc_scaled | qdist), top-k
+    * per qid.
     */
   def searchCommittedBatchCdc(s: SparkSession, stateDir: String,
-      q: Quantizers, probes: DataFrame, nProbe: Int, k: Int): DataFrame = {
-    require(q.sq8Amax.isEmpty && q.sq8Dims.isEmpty,
-      "SQ8 CDC state serves through searchCommittedBatchCdcSq8 or the " +
-        "per-dim single-probe entries")
-    // OPQ probe frames enter the permuted domain once, here
-    val w = q.opqPerm.map(p => probes.select(col("qid"),
-      permuteVec(col("v"), p).as("v"))).getOrElse(probes)
-    // pin + cells in one action (r21); prune cells and serving read the
-    // same Q rows
-    val (pinned, cells) = ProductQuantizer.pinProbesWithCells(w, q.coarse, nProbe)
-    val live = liveCodes(s, stateDir, q.m).drop("src_batch")
-      .where(col("cell").isin(cells: _*))
-    if (q.residual)
-      ProductQuantizer.adcBatchServeResidual(
-        live, pinned, q.coarse, q.books, q.subDim, nProbe, k)
-    else
-      ProductQuantizer.adcBatchServe(
-        live, pinned, q.coarse, q.books, q.subDim, nProbe, k)
-  }
+      q: Quantizers, probes: DataFrame, nProbe: Int, k: Int): DataFrame =
+    q.serve(liveLayout(s, stateDir, q), probes, nProbe, k)
 
   /** Quantizer-staleness monitor: live cell occupancy. A healthy index
     * keeps cells balanced near the training distribution; a drifting
@@ -615,31 +348,27 @@ object IndexStream {
     */
   private[graft] def saveQuantizers(s: SparkSession, dir: String,
       q: Quantizers): Unit = {
-    // the encoding flags ride as marker rows (kind = "residual" /
-    // "sq8" / "sq8dim_*"), so pre-flag artifacts load as plain-PQ
-    // without a schema migration; the sq8 global scale persists EXACTLY
-    // via its IEEE-754 bits in the BIGINT cid slot, and the per-dim
-    // [vmn, vmx] interval tables via their bits in the BIGINT array
-    // slot (a decimal round-trip could perturb the code arithmetic's
+    // the encoding rides as marker rows (kind = "residual" / "opq_perm"
+    // / "sq8" / "sq8dim_*"), so plain-PQ artifacts carry none; the SQ8
+    // scales persist EXACTLY via their IEEE-754 bits in the BIGINT
+    // slots (a decimal round-trip could perturb the code arithmetic's
     // last ulp)
-    val meta =
-      (if (q.residual)
-        Seq(Row("residual", -1, 0L, Seq.empty[Long], q.subDim)) else Nil) ++
-      q.opqPerm.map(p =>
-        Row("opq_perm", -1, 0L, p.map(_.toLong), q.subDim)) ++
-      q.sq8Amax.map(a => Row("sq8", -1,
-        java.lang.Double.doubleToRawLongBits(a), Seq.empty[Long], q.subDim)) ++
-      q.sq8Dims.toSeq.flatMap { case (vmn, vmx) => Seq(
-        Row("sq8dim_mn", -1, 0L,
-          vmn.map(java.lang.Double.doubleToRawLongBits), q.subDim),
-        Row("sq8dim_mx", -1, 0L,
-          vmx.map(java.lang.Double.doubleToRawLongBits), q.subDim)) }
+    def meta(kind: String, cid: Long = 0L, c: Seq[Long] = Nil) =
+      Row(kind, -1, cid, c, q.subDim)
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
     val rows =
       q.coarse.map { case (cid, c) => Row("coarse", -1, cid, c, q.subDim) } ++
       q.books.zipWithIndex.flatMap { case (book, m) =>
         book.map { case (cid, c) => Row("book", m, cid, c, q.subDim) }
-      } ++ meta
-    s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), quantizersSchema)
+      } ++ (q.encoding match {
+        case Encoding.Pq => Nil
+        case Encoding.ResidualPq => Seq(meta("residual"))
+        case Encoding.Opq(p) => Seq(meta("opq_perm", c = p.map(_.toLong)))
+        case Encoding.Sq8(a) => Seq(meta("sq8", bits(Seq(a)).head))
+        case Encoding.Sq8Dim(vmn, vmx) =>
+          Seq(meta("sq8dim_mn", c = bits(vmn)), meta("sq8dim_mx", c = bits(vmx)))
+      })
+    s.createDataFrame(s.sparkContext.parallelize(rows, 1), quantizersSchema)
       .write.mode("overwrite").parquet(s"$dir/quantizers")
   }
 
@@ -647,43 +376,41 @@ object IndexStream {
   def loadQuantizers(s: SparkSession, dir: String): Quantizers = {
     val rows = s.read.schema(quantizersSchema).parquet(s"$dir/quantizers")
       .collect()
-    val subDim = rows.head.getInt(4)
-    val coarse = rows.filter(_.getString(0) == "coarse")
-      .map(r => (r.getLong(2), r.getSeq[Long](3))).sortBy(_._1).toSeq
-    val bookRows = rows.filter(_.getString(0) == "book")
+    def kind(k: String) = rows.filter(_.getString(0) == k)
+    def entries(rs: Array[Row]) =
+      rs.map(r => (r.getLong(2), r.getSeq[Long](3))).sortBy(_._1).toSeq
+    def doubles(k: String) = kind(k).headOption.map(
+      _.getSeq[Long](3).map(java.lang.Double.longBitsToDouble).toSeq)
+    val bookRows = kind("book")
     val m = if (bookRows.isEmpty) 0 else bookRows.map(_.getInt(1)).max + 1
-    val books = (0 until m).map { sub =>
-      bookRows.filter(_.getInt(1) == sub)
-        .map(r => (r.getLong(2), r.getSeq[Long](3))).sortBy(_._1).toSeq
-    }
-    Quantizers(coarse, books, subDim,
-      residual = rows.exists(_.getString(0) == "residual"),
-      opqPerm = rows.find(_.getString(0) == "opq_perm")
-        .map(_.getSeq[Long](3).map(_.toInt).toSeq),
-      sq8Amax = rows.find(_.getString(0) == "sq8")
-        .map(r => java.lang.Double.longBitsToDouble(r.getLong(2))),
-      sq8Dims = rows.find(_.getString(0) == "sq8dim_mn").map { mnRow =>
-        val mxRow = rows.find(_.getString(0) == "sq8dim_mx").getOrElse(
-          throw new IllegalStateException(
-            "per-dim SQ8 artifact persisted vmn without vmx"))
-        (mnRow.getSeq[Long](3).map(java.lang.Double.longBitsToDouble).toSeq,
-          mxRow.getSeq[Long](3).map(java.lang.Double.longBitsToDouble).toSeq)
-      })
+    val encoding =
+      if (kind("residual").nonEmpty) Encoding.ResidualPq
+      else kind("opq_perm").headOption.map(r =>
+        Encoding.Opq(r.getSeq[Long](3).map(_.toInt).toSeq))
+      .orElse(kind("sq8").headOption.map(r =>
+        Encoding.Sq8(java.lang.Double.longBitsToDouble(r.getLong(2)))))
+      .orElse(doubles("sq8dim_mn").map(Encoding.Sq8Dim(_,
+        doubles("sq8dim_mx").getOrElse(throw new IllegalStateException(
+          "per-dim SQ8 artifact persisted vmn without vmx")))))
+      .getOrElse(Encoding.Pq)
+    Quantizers(entries(kind("coarse")),
+      (0 until m).map(sub => entries(bookRows.filter(_.getInt(1) == sub))),
+      rows.head.getInt(4), encoding)
   }
 
-  /** REBUILD: retrain the quantizers on a corpus snapshot (the raw
-    * vectors live in the corpus table — code-only state is by design
-    * too small to retrain from), re-encode the snapshot into a FRESH
-    * generation (codes carry `src_batch = 0`, an empty tombstone
+  /** REBUILD: retrain the quantizers as `encoding` on a corpus snapshot
+    * (the raw vectors live in the corpus table — code-only state is by
+    * design too small to retrain from), re-encode the snapshot into a
+    * FRESH generation (codes carry `src_batch = 0`, an empty tombstone
     * partition rides under the same commit marker), persist the
     * quantizers beside it, and atomically swap `_current` to the new
     * generation. The old generation keeps serving until the swap
     * marker lands; a crash at any earlier point changes nothing a
     * reader can see. Returns the new quantizers.
     *
-    * Training is the deterministic integer Lloyd of [[KMeansOp]] /
-    * [[ProductQuantizer]], so rebuilding on an unchanged corpus is a
-    * no-op in search results — the equivalence the spec pins.
+    * Training is [[Encoding.train]] — the batch tiers' derivation — so
+    * rebuilding on an unchanged corpus is a no-op in search results,
+    * the equivalence the spec pins.
     *
     * A CDC maintainer CONTINUES over the new generation —
     * delete/re-insert cycles pick up where the rebuild left off. The
@@ -697,65 +424,13 @@ object IndexStream {
     */
   def rebuildCdc(s: SparkSession, indexRoot: String, corpus: DataFrame,
       k: Int, iters: Int, m: Int, subDim: Int,
-      residual: Boolean = false, sq8: Boolean = false,
-      sq8dim: Boolean = false, opq: Boolean = false): Quantizers = {
-    require(Seq(residual, sq8, sq8dim, opq).count(identity) <= 1,
-      "residual, sq8, sq8dim, and opq are exclusive encodings")
+      encoding: Encoding.Kind = Encoding.Pq): Quantizers = {
     val next = StreamState.markerIdsIn(s, s"$indexRoot/_current")
       .lastOption.getOrElse(-1L) + 1L
     val dir = genDir(indexRoot, next)
-    val coarse = KMeansOp.lloydCentroidsLocal(
-      corpus, "vec_id", col("embedding"), k, iters)
-    val vecs = corpus.select(col("vec_id"),
-      KMeansOp.intVec(col("embedding")).as("v"))
-    // an OPQ rebuild REFITS the allocation on the snapshot, flattened
-    // subspace-major — the batch tier's derivation, so a rebuild on
-    // the tier's corpus reproduces its permutation exactly
-    val opqPermFlat: Option[Seq[Int]] =
-      if (!opq) None
-      else Some(ProductQuantizer.opqAllocation(vecs, m).flatten)
-    val books =
-      if (residual) {
-        // residual codebooks train on v − centroid[cell] — already-
-        // integer vectors, so the fits enter Lloyd through the
-        // pre-scaled door (the same derivation as the batch tier's
-        // resCodebooks)
-        lazy val res = ProductQuantizer.residuals(vecs, coarse)
-        (0 until m).map(sub => KMeansOp.lloydCentroidsLocalInt(
-          res.select(col("vec_id"),
-            slice(col("r"), sub * subDim + 1, subDim).as("v")),
-          k, iters))
-      } else if (sq8 || sq8dim) Nil
-      else if (opq) {
-        // permuted-slice codebooks: subspace m trains on its allocated
-        // dims in rank order (the permuted domain's contiguous slice)
-        val p = opqPermFlat.get
-        (0 until m).map(sub => KMeansOp.lloydCentroidsLocalInt(
-          vecs.select(col("vec_id"),
-            permuteVec(col("v"),
-              p.slice(sub * subDim, (sub + 1) * subDim)).as("v")),
-          k, iters))
-      }
-      else ProductQuantizer.train(
-        corpus, "vec_id", col("embedding"), m, subDim, k, iters)
-    // the SQ8 generations retrain their scales on the snapshot — the
-    // amax / per-dim interval artifacts ride the generation exactly
-    // like the codebooks (amax via the shared aggregate spelling
-    // ProductQuantizer.amaxExpr; the per-dim tables are exact double
-    // min/max per dimension — order-insensitive, so no spelling can
-    // drift them)
-    val q = Quantizers(
-      // the OPQ artifact stores the PERMUTED centroids (the Quantizers
-      // convention: all artifact geometry lives in the permuted domain)
-      opqPermFlat.map(p => coarse.map { case (cid, c) =>
-        (cid, p.map(c(_))) }).getOrElse(coarse),
-      books, subDim, residual,
-      sq8Amax = if (sq8) Some(
-        corpus.agg(ProductQuantizer.amaxExpr(col("embedding")))
-          .head().getDouble(0)) else None,
-      sq8Dims = if (sq8dim) Some(trainSq8DimScales(corpus)) else None,
-      opqPerm = opqPermFlat)
-    project(corpus.select(col("vec_id"), col("embedding")), q)
+    val q = Encoding.train(encoding, corpus, KMeansOp.lloydCentroidsLocal(
+      corpus, "vec_id", col("embedding"), k, iters), k, iters, m, subDim)
+    q.project(corpus.select(col("vec_id"), col("embedding")))
       .withColumn("src_batch", lit(0L))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/codes/batch_id=0")
@@ -771,23 +446,5 @@ object IndexStream {
     // the atomic reader switch: _current marker LAST
     StreamState.writeMarkerIn(s, s"$indexRoot/_current", next)
     q
-  }
-
-  /** The per-dim SQ8 interval TRAINING aggregate over a rebuild
-    * snapshot: exact double min/max per dimension, collected as the
-    * 2×d scale tables. min/max of doubles is order-insensitive (unlike
-    * a sum, no op-order ulp risk), so this and the batch tier's
-    * sq8DimScales derivation can never disagree on the same rows.
-    */
-  private def trainSq8DimScales(corpus: DataFrame)
-      : (Seq[Double], Seq[Double]) = {
-    val rows = corpus
-      .select(posexplode(col("embedding")).as(Seq("pos", "e")))
-      .groupBy(col("pos"))
-      .agg(min(col("e").cast("double")).as("mn"),
-        max(col("e").cast("double")).as("mx"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1)
-    (rows.map(_._2).toSeq, rows.map(_._3).toSeq)
   }
 }

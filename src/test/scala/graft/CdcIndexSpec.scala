@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{KMeansOp, ProductQuantizer}
+import graft.operators.{Encoding, KMeansOp}
 import graft.streaming.{IndexStream, StreamState}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -20,10 +20,7 @@ class CdcIndexSpec extends AnyFunSuite {
   private val d = TestSpark.sf0001
 
   private def quantizers: IndexStream.Quantizers =
-    IndexStream.Quantizers(
-      queries.SemanticQ.trainedCentroids(spark, d),
-      queries.SemanticQ.pqCodebooks(spark, d),
-      subDim = 16)
+    queries.SemanticQ.quantizers(spark, d, Encoding.Pq)
 
   private def fullRows: Seq[(Long, Seq[Float])] =
     Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
@@ -34,6 +31,19 @@ class CdcIndexSpec extends AnyFunSuite {
 
   private def intVecOf(e: Seq[Float]): Seq[Long] =
     e.map(x => math.floor(x.toDouble * 1e6).toLong)
+
+  /** A probe's raw embedding, as the single-probe entry takes it. */
+  private def embOf(e: Seq[Float]): Seq[Double] = e.map(_.toDouble)
+
+  /** The trained parameters of each parameterized encoding. */
+  private def amaxOf(q: IndexStream.Quantizers): Double =
+    q.encoding.asInstanceOf[Encoding.Sq8].amax
+  private def dimsOf(q: IndexStream.Quantizers): (Seq[Double], Seq[Double]) = {
+    val e = q.encoding.asInstanceOf[Encoding.Sq8Dim]
+    (e.vmn, e.vmx)
+  }
+  private def permOf(q: IndexStream.Quantizers): Seq[Int] =
+    q.encoding.asInstanceOf[Encoding.Opq].perm
 
   /** The lifecycle live-set predicate, from the ONE shared constant set
     * (ADVICE r18) — the scalar twin of SemanticQ.cdcLive.
@@ -73,18 +83,15 @@ class CdcIndexSpec extends AnyFunSuite {
   }
 
   /** Single-probe PQ/OPQ serving from an index root's active generation. */
-  private def searchActive(root: String, qv: Seq[Long]): DataFrame = {
+  private def searchActive(root: String, probe: Seq[Double]): DataFrame = {
     val (gen, q) = current(root)
-    IndexStream.searchCommittedCdc(spark, gen, q, qv, 2, 10)
+    IndexStream.searchCommittedCdc(spark, gen, q, probe, 2, 10)
   }
 
   /** The one-shot projection of (id, embedding) pairs through `q`. */
   private def projected(q: IndexStream.Quantizers,
       rs: Seq[(Long, Seq[Float])]): Seq[(Long, Long, Seq[Long])] =
-    ProductQuantizer.indexProjection(
-        rs.toDF("vec_id", "embedding").select(col("vec_id"),
-          KMeansOp.intVec(col("embedding")).as("v")),
-        q.coarse, q.books, q.subDim)
+    q.project(rs.toDF("vec_id", "embedding"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),
         Seq(r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
@@ -112,8 +119,8 @@ class CdcIndexSpec extends AnyFunSuite {
     assert(!live1.contains(0L) && !live1.contains(1L) && !live1.contains(2L))
     assert(live1.contains(3L) && live1.contains(399L) && live1.contains(400L))
     // serving: vec 0's own embedding can no longer find vec 0
-    val qv0 = intVecOf(byId(0L))
-    val served1 = IndexStream.searchCommittedCdc(spark, stateDir, q, qv0,
+    val qe0 = embOf(byId(0L))
+    val served1 = IndexStream.searchCommittedCdc(spark, stateDir, q, qe0,
         nProbe = 2, k = 10).collect().map(_.getLong(0)).toSeq
     assert(!served1.contains(0L), "deleted id surfaced in search")
     // the histogram counts live rows only
@@ -159,7 +166,7 @@ class CdcIndexSpec extends AnyFunSuite {
 
     // replay of committed batch 2 recomputes the same state
     val servedBefore = IndexStream.searchCommittedCdc(spark, stateDir, q,
-        qv0, 2, 10).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        qe0, 2, 10).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     IndexStream.processBatchCdc(
       cdcDf(Seq(
         (0L, byId(450L), "insert"),
@@ -175,7 +182,7 @@ class CdcIndexSpec extends AnyFunSuite {
     assert(base.nonEmpty)
     assert(liveRows(stateDir) == live2, "compaction changed liveness")
     val servedAfter = IndexStream.searchCommittedCdc(spark, stateDir, q,
-        qv0, 2, 10).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        qe0, 2, 10).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(servedAfter == servedBefore, "compaction changed search results")
   }
 
@@ -209,22 +216,20 @@ class CdcIndexSpec extends AnyFunSuite {
 
   test("RESIDUAL CDC: delete excluded from the residual batch serving " +
     "path") {
-    val base = quantizers
-    val q = IndexStream.Quantizers(base.coarse,
-      queries.SemanticQ.resCodebooks(spark, d), base.subDim, residual = true)
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.ResidualPq)
     val rows = fullRows
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_cdc_res").toString
     IndexStream.processBatchCdc(
       cdcDf(rows.map(r => (r._1, r._2, "insert"))), 0L, q, stateDir)
-    val qv = intVecOf(rows.head._2)
-    val before = IndexStream.searchCommittedCdc(spark, stateDir, q, qv, 2, 10)
+    val qe = embOf(rows.head._2)
+    val before = IndexStream.searchCommittedCdc(spark, stateDir, q, qe, 2, 10)
       .collect().map(_.getLong(0)).toSeq
     assert(before.nonEmpty)
     val victim = before.head
     IndexStream.processBatchCdc(
       cdcDf(Seq((victim, Seq.empty[Float], "delete"))), 1L, q, stateDir)
-    val after = IndexStream.searchCommittedCdc(spark, stateDir, q, qv, 2, 10)
+    val after = IndexStream.searchCommittedCdc(spark, stateDir, q, qe, 2, 10)
       .collect().map(_.getLong(0)).toSeq
     assert(!after.contains(victim), "deleted id surfaced in residual serving")
     assert(after == before.filterNot(_ == victim).take(10) ||
@@ -258,16 +263,16 @@ class CdcIndexSpec extends AnyFunSuite {
     IndexStream.processBatchCdc(
       cdcDf(Seq((9000L, byId(451L), "insert"))), 3L, q, stateDir)
 
-    val qv0 = intVecOf(byId(0L))
+    val qe0 = embOf(byId(0L))
     val liveBefore = liveRows(stateDir)
     val servedBefore = IndexStream.searchCommittedCdc(spark, stateDir, q,
-        qv0, 2, 10).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        qe0, 2, 10).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
     val base = IndexStream.compactStateCdcResolve(spark, stateDir, 4)
     assert(base.nonEmpty)
     assert(liveRows(stateDir) == liveBefore, "resolve changed liveness")
     val servedAfter = IndexStream.searchCommittedCdc(spark, stateDir, q,
-        qv0, 2, 10).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        qe0, 2, 10).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(servedAfter == servedBefore, "resolve changed search results")
     // physically GONE: zero tombstones anywhere, zero dead code rows —
     // total persisted rows equal the live set
@@ -295,28 +300,28 @@ class CdcIndexSpec extends AnyFunSuite {
     val gen = IndexStream.currentRoot(spark, root).get
     // the rebuilt generation serves every row live
     assert(IndexStream.liveCodes(spark, gen, 4).count() == rows.length.toLong)
-    val qv = intVecOf(rows.head._2)
-    val before = searchActive(root, qv)
+    val qe = embOf(rows.head._2)
+    val before = searchActive(root, qe)
       .collect().map(_.getLong(0)).toSeq
     assert(before.nonEmpty && before.contains(0L))
     // CDC continues on the generation (same-checkpoint discipline:
     // batch ids strictly above the rebuild's 0)
     IndexStream.processBatchCdc(
       cdcDf(Seq((0L, Seq.empty[Float], "delete"))), 1L, q, gen)
-    val after = searchActive(root, qv)
+    val after = searchActive(root, qe)
       .collect().map(_.getLong(0)).toSeq
     assert(!after.contains(0L), "deleted id served from rebuilt generation")
     // a fresh server loads the persisted quantizers and agrees
     val loaded = IndexStream.loadQuantizers(spark, gen)
     assert(loaded.coarse.sortBy(_._1).map { case (c, v) => (c, v.toSeq) } ==
       q.coarse.sortBy(_._1).map { case (c, v) => (c, v.toSeq) } &&
-      loaded.residual == q.residual)
+      loaded.encoding == q.encoding)
     // a second rebuild swaps atomically; the old deletes are consumed
     // by rebuilding from the new corpus snapshot (here: corpus minus 0)
     IndexStream.rebuildCdc(spark, root,
       rows.filter(_._1 != 0L).toDF("vec_id", "embedding"),
       k = 8, iters = 2, m = 4, subDim = 16)
-    val after2 = searchActive(root, qv)
+    val after2 = searchActive(root, qe)
       .collect().map(_.getLong(0)).toSeq
     assert(!after2.contains(0L))
     assert(IndexStream.currentRoot(spark, root).get != gen)
@@ -356,9 +361,9 @@ class CdcIndexSpec extends AnyFunSuite {
     val exact10 = live.map(id => (id, dist(vecs(id), qv)))
       .sortBy { case (id, dd) => (dd, id) }.take(10).map(_._1).toSet
     // the served side, straight from the maintained state dir
-    val dir = queries.SemanticQ.cdcLifecycleDir(spark, d)
+    val dir = queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Pq)
     val served = IndexStream.searchCommittedCdc(spark, dir, quantizers,
-      qv.toSeq, 2, 10).collect().map(_.getLong(0)).toSeq
+      embOf(rows.head._2), 2, 10).collect().map(_.getLong(0)).toSeq
     assert(served.toSet.subsetOf(live.toSet),
       "CDC serving surfaced a deleted (non-resurrected) id")
     val hits = exact10.count(served.toSet.contains)
@@ -375,14 +380,15 @@ class CdcIndexSpec extends AnyFunSuite {
   test("cell-partitioned maintained state: searchCommittedCdc answers " +
     "the probe by DIRECTORY pruning over the cell= layout") {
     val q = quantizers
-    val dir = queries.SemanticQ.cdcLifecycleDir(spark, d)
+    val dir = queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Pq)
     // the layout itself: every committed codes batch is laid out by cell
     val b1 = new java.io.File(s"$dir/codes/batch_id=1")
     assert(b1.listFiles().exists(_.getName.startsWith("cell=")),
       "committed codes batches must be partitionBy(cell) directories")
     val qv = intVecOf(fullRows.head._2)
     val probed = KMeansOp.nearestCells(q.coarse, qv, 2).toSet
-    val df = IndexStream.searchCommittedCdc(spark, dir, q, qv, 2, 10)
+    val df = IndexStream.searchCommittedCdc(spark, dir, q,
+      embOf(fullRows.head._2), 2, 10)
     val plan = df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.executedPlan
@@ -408,7 +414,7 @@ class CdcIndexSpec extends AnyFunSuite {
     "every codes-batch LISTING to (a subset of) the fleet's probed-cell " +
     "union, and serves live rows only") {
     val q = quantizers
-    val dir = queries.SemanticQ.cdcLifecycleDir(spark, d)
+    val dir = queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Pq)
     val vecs = fullRows.map { case (id, e) => id -> intVecOf(e) }.toMap
     val qids = Seq(0L, 1L, 2L)
     val expected = qids
@@ -466,7 +472,7 @@ class CdcIndexSpec extends AnyFunSuite {
 
   test("SQ8 CDC: a pure-insert stream through processBatchCdc serves " +
     "BIT-IDENTICAL results to the persisted batch IVF_SQ8 index") {
-    val q = queries.SemanticQ.sq8Quantizers(spark, d)
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Sq8)
     assert(q.m == q.dim, "SQ8 codes one scalar per dimension")
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_cdc_sq8_pure").toString
@@ -474,7 +480,7 @@ class CdcIndexSpec extends AnyFunSuite {
       Tables.embeddings(spark, d).select(col("vec_id"), col("embedding")),
       0L, q, stateDir)
     val qEmb = fullRows.head._2.map(_.toDouble)
-    val served = IndexStream.searchCommittedCdcSq8(
+    val served = IndexStream.searchCommittedCdc(
         spark, stateDir, q, qEmb, nProbe = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val batchTier = queries.SemanticQ.queries("q_ann_ivf_sq8_part")(spark, d)
@@ -486,8 +492,8 @@ class CdcIndexSpec extends AnyFunSuite {
   test("SQ8 CDC lifecycle: deletes tombstone, resurrection carries new " +
     "codes, and q_recall_cdc_sq8 matches a scalar recount over the live " +
     "set") {
-    val q = queries.SemanticQ.sq8Quantizers(spark, d)
-    val amax = q.sq8Amax.get
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Sq8)
+    val amax = amaxOf(q)
     val rows = fullRows
     val vecs = rows.map { case (id, e) => id -> intVecOf(e).toArray }.toMap
     def code(e: Seq[Float]): Seq[Long] = e.map(x =>
@@ -497,10 +503,10 @@ class CdcIndexSpec extends AnyFunSuite {
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
     val live = rows.filter(r => liveId(r._1))
     assert(live.size < rows.size, "the lifecycle's deletes must bite")
-    val dir = queries.SemanticQ.cdcLifecycleSq8Dir(spark, d)
+    val dir = queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Sq8)
     // served side: probed-cell scalar-code scan over the live rows
     val qEmb = rows.head._2.map(_.toDouble)
-    val served = IndexStream.searchCommittedCdcSq8(
+    val served = IndexStream.searchCommittedCdc(
         spark, dir, q, qEmb, 2, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(served.map(_._1).forall(liveId),
@@ -535,7 +541,7 @@ class CdcIndexSpec extends AnyFunSuite {
   test("SQ8 batch CDC serving: pure-insert state serves bit-identical " +
     "rows to q_ann_ivf_sq8_batch; post-lifecycle batch serving is " +
     "live-only") {
-    val q = queries.SemanticQ.sq8Quantizers(spark, d)
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Sq8)
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_cdc_sq8_batch").toString
     IndexStream.processBatchCdc(
@@ -544,7 +550,7 @@ class CdcIndexSpec extends AnyFunSuite {
     val probes = Tables.embeddings(spark, d)
       .where(col("vec_id").isin(0L, 1L, 2L))
       .select(col("vec_id").as("qid"), col("embedding"))
-    val got = IndexStream.searchCommittedBatchCdcSq8(
+    val got = IndexStream.searchCommittedBatchCdc(
         spark, stateDir, q, probes, nProbe = 2, k = 3)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
@@ -553,8 +559,8 @@ class CdcIndexSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(got == want,
       "maintained SQ8 batch serving diverged from the persisted batch tier")
-    val lifecycle = queries.SemanticQ.cdcLifecycleSq8Dir(spark, d)
-    val served = IndexStream.searchCommittedBatchCdcSq8(
+    val lifecycle = queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Sq8)
+    val served = IndexStream.searchCommittedBatchCdc(
         spark, lifecycle, q, probes, nProbe = 2, k = 10)
       .collect().map(_.getLong(2)).toSeq
     assert(served.forall(liveId),
@@ -569,17 +575,17 @@ class CdcIndexSpec extends AnyFunSuite {
       .createTempDirectory("graft_cdc_sq8_rebuild").toString
     val q = IndexStream.rebuildCdc(spark, root,
       Tables.embeddings(spark, d).select(col("vec_id"), col("embedding")),
-      k = 8, iters = 2, m = 4, subDim = 16, sq8 = true)
-    assert(q.sq8Amax.isDefined && q.books.isEmpty)
+      k = 8, iters = 2, m = 4, subDim = 16, encoding = Encoding.Sq8)
+    assert(q.encoding.isInstanceOf[Encoding.Sq8] && q.books.isEmpty)
     val gen = IndexStream.currentRoot(spark, root).get
     val loaded = IndexStream.loadQuantizers(spark, gen)
-    assert(java.lang.Double.doubleToRawLongBits(loaded.sq8Amax.get) ==
-      java.lang.Double.doubleToRawLongBits(q.sq8Amax.get))
+    assert(java.lang.Double.doubleToRawLongBits(amaxOf(loaded)) ==
+      java.lang.Double.doubleToRawLongBits(amaxOf(q)))
     // rebuilt-corpus serving == the persisted batch IVF_SQ8 index
     val qEmb = fullRows.head._2.map(_.toDouble)
     def servedSq8() = {
       val (g, lq) = current(root)
-      IndexStream.searchCommittedCdcSq8(spark, g, lq, qEmb, 2, 10)
+      IndexStream.searchCommittedCdc(spark, g, lq, qEmb, 2, 10)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
     val served = servedSq8()
@@ -599,29 +605,18 @@ class CdcIndexSpec extends AnyFunSuite {
   test("SQ8 quantizer artifact round-trips through save/loadQuantizers " +
     "with the global scale bit-exact, and the PQ search entries refuse " +
     "an SQ8 handle") {
-    val q = queries.SemanticQ.sq8Quantizers(spark, d)
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Sq8)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sq8_artifact").toString
     IndexStream.saveQuantizers(spark, dir, q)
     val loaded = IndexStream.loadQuantizers(spark, dir)
-    assert(loaded.sq8Amax.isDefined)
-    assert(java.lang.Double.doubleToRawLongBits(loaded.sq8Amax.get) ==
-      java.lang.Double.doubleToRawLongBits(q.sq8Amax.get),
+    assert(java.lang.Double.doubleToRawLongBits(amaxOf(loaded)) ==
+      java.lang.Double.doubleToRawLongBits(amaxOf(q)),
       "the frozen scale must round-trip bit-exact")
     // loadQuantizers returns the centroids cid-sorted; every consumer
     // is order-independent (argmin over (dist, cid))
     assert(loaded.coarse.sortBy(_._1) == q.coarse.sortBy(_._1) &&
       loaded.books.isEmpty)
-    // misuse guard: the scaled-integer-query entries cannot serve SQ8
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft_cdc_sq8_guard").toString
-    IndexStream.processBatchCdc(
-      cdcDf(fullRows.take(5).map(r => (r._1, r._2, "insert"))),
-      0L, q, stateDir)
-    intercept[IllegalArgumentException] {
-      IndexStream.searchCommittedCdc(spark, stateDir, q,
-        intVecOf(fullRows.head._2), 2, 10)
-    }
   }
 
   // ---- Per-dim SQ8 maintenance: the last encoding asymmetry — the
@@ -630,16 +625,15 @@ class CdcIndexSpec extends AnyFunSuite {
 
   test("per-dim SQ8 CDC: a pure-insert stream through processBatchCdc " +
     "serves BIT-IDENTICAL results to the persisted q_sq8_dim_part index") {
-    val q = queries.SemanticQ.sq8DimQuantizers(spark, d)
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Sq8Dim)
     assert(q.m == q.dim, "per-dim SQ8 codes one scalar per dimension")
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_cdc_sq8dim_pure").toString
     IndexStream.processBatchCdc(
       Tables.embeddings(spark, d).select(col("vec_id"), col("embedding")),
       0L, q, stateDir)
-    val qv = intVecOf(fullRows.head._2)
-    val served = IndexStream.searchCommittedCdcSq8Dim(
-        spark, stateDir, q, qv, nProbe = 2, k = 10)
+    val served = IndexStream.searchCommittedCdc(
+        spark, stateDir, q, embOf(fullRows.head._2), nProbe = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val batchTier = queries.SemanticQ.queries("q_sq8_dim_part")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -649,8 +643,8 @@ class CdcIndexSpec extends AnyFunSuite {
 
   test("per-dim SQ8 CDC lifecycle: deletes tombstone, and " +
     "q_recall_cdc_sq8dim matches a scalar recount over the live set") {
-    val q = queries.SemanticQ.sq8DimQuantizers(spark, d)
-    val (vmn, vmx) = q.sq8Dims.get
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Sq8Dim)
+    val (vmn, vmx) = dimsOf(q)
     val rows = fullRows
     val vecs = rows.map { case (id, e) => id -> intVecOf(e).toArray }.toMap
     // the driver-side IEEE mirror of the encode-then-decode chain
@@ -666,10 +660,10 @@ class CdcIndexSpec extends AnyFunSuite {
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
     val live = rows.filter(r => liveId(r._1))
     assert(live.size < rows.size, "the lifecycle's deletes must bite")
-    val dir = queries.SemanticQ.cdcLifecycleSq8DimDir(spark, d)
+    val dir = queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Sq8Dim)
     val qv = vecs(0L).toSeq
-    val served = IndexStream.searchCommittedCdcSq8Dim(
-        spark, dir, q, qv, 2, 10)
+    val served = IndexStream.searchCommittedCdc(
+        spark, dir, q, embOf(rows.head._2), 2, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(served.map(_._1).forall(liveId),
       "per-dim SQ8 CDC serving surfaced a deleted (non-resurrected) id")
@@ -701,31 +695,16 @@ class CdcIndexSpec extends AnyFunSuite {
 
   test("per-dim SQ8 quantizer artifact round-trips with both interval " +
     "tables bit-exact, and the other encodings' entries refuse the handle") {
-    val q = queries.SemanticQ.sq8DimQuantizers(spark, d)
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Sq8Dim)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_sq8dim_artifact").toString
     IndexStream.saveQuantizers(spark, dir, q)
     val loaded = IndexStream.loadQuantizers(spark, dir)
-    assert(loaded.sq8Dims.isDefined && loaded.sq8Amax.isEmpty)
-    val (lmn, lmx) = loaded.sq8Dims.get
-    val (qmn, qmx) = q.sq8Dims.get
+    val (lmn, lmx) = dimsOf(loaded)
+    val (qmn, qmx) = dimsOf(q)
     def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
     assert(bits(lmn) == bits(qmn) && bits(lmx) == bits(qmx),
       "the frozen interval tables must round-trip bit-exact")
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft_cdc_sq8dim_guard").toString
-    IndexStream.processBatchCdc(
-      cdcDf(fullRows.take(5).map(r => (r._1, r._2, "insert"))),
-      0L, q, stateDir)
-    // the PQ scaled-integer entry and the global-amax entry both refuse
-    intercept[IllegalArgumentException] {
-      IndexStream.searchCommittedCdc(spark, stateDir, q,
-        intVecOf(fullRows.head._2), 2, 10)
-    }
-    intercept[IllegalArgumentException] {
-      IndexStream.searchCommittedCdcSq8(spark, stateDir, q,
-        fullRows.head._2.map(_.toDouble), 2, 10)
-    }
   }
 
   test("per-dim SQ8 rebuildCdc: the generation freezes the snapshot's " +
@@ -736,20 +715,20 @@ class CdcIndexSpec extends AnyFunSuite {
       .createTempDirectory("graft_cdc_sq8dim_rebuild").toString
     val q = IndexStream.rebuildCdc(spark, root,
       Tables.embeddings(spark, d).select(col("vec_id"), col("embedding")),
-      k = 8, iters = 2, m = 4, subDim = 16, sq8dim = true)
-    assert(q.sq8Dims.isDefined && q.sq8Amax.isEmpty && q.books.isEmpty)
+      k = 8, iters = 2, m = 4, subDim = 16, encoding = Encoding.Sq8Dim)
+    assert(q.encoding.isInstanceOf[Encoding.Sq8Dim] && q.books.isEmpty)
     val gen = IndexStream.currentRoot(spark, root).get
     val loaded = IndexStream.loadQuantizers(spark, gen)
     def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
-    assert(bits(loaded.sq8Dims.get._1) == bits(q.sq8Dims.get._1) &&
-      bits(loaded.sq8Dims.get._2) == bits(q.sq8Dims.get._2))
+    assert(bits(dimsOf(loaded)._1) == bits(dimsOf(q)._1) &&
+      bits(dimsOf(loaded)._2) == bits(dimsOf(q)._2))
     // the rebuilt generation's scale refit saw the same rows the batch
     // tier trained on (min/max is order-insensitive), so a restarted
     // server serves the persisted q_sq8_dim_part results bit-for-bit
-    val qv = intVecOf(fullRows.head._2)
+    val qe = embOf(fullRows.head._2)
     def servedSq8Dim() = {
       val (g, lq) = current(root)
-      IndexStream.searchCommittedCdcSq8Dim(spark, g, lq, qv, 2, 10)
+      IndexStream.searchCommittedCdc(spark, g, lq, qe, 2, 10)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
     val served = servedSq8Dim()
@@ -772,17 +751,16 @@ class CdcIndexSpec extends AnyFunSuite {
   test("OPQ CDC: a pure-insert stream through processBatchCdc serves " +
     "BIT-IDENTICAL results to the persisted q_ann_opq_part index, " +
     "single-probe and batch") {
-    val q = queries.SemanticQ.opqQuantizers(spark, d)
-    assert(q.opqPerm.isDefined && q.books.nonEmpty)
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Opq)
+    assert(q.encoding.isInstanceOf[Encoding.Opq] && q.books.nonEmpty)
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_cdc_opq_pure").toString
     IndexStream.processBatchCdc(
       Tables.embeddings(spark, d).select(col("vec_id"), col("embedding")),
       0L, q, stateDir)
     // single probe: the entry permutes the RAW-domain query itself
-    val qv = intVecOf(fullRows.head._2)
     val served = IndexStream.searchCommittedCdc(
-        spark, stateDir, q, qv, nProbe = 2, k = 10)
+        spark, stateDir, q, embOf(fullRows.head._2), nProbe = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val partTier = queries.SemanticQ.queries("q_ann_opq_part")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -806,15 +784,16 @@ class CdcIndexSpec extends AnyFunSuite {
 
   test("OPQ CDC lifecycle: deletes tombstone, serving is live-only, and " +
     "q_recall_cdc_opq matches a scalar recount over the live set") {
-    val q = queries.SemanticQ.opqQuantizers(spark, d)
-    val perm = q.opqPerm.get
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Opq)
+    val perm = permOf(q)
     val rows = fullRows
     val vecs = rows.map { case (id, e) => id -> intVecOf(e) }.toMap
     val live = rows.filter(r => liveId(r._1))
     assert(live.size < rows.size, "the lifecycle's deletes must bite")
-    val dir = queries.SemanticQ.cdcLifecycleOpqDir(spark, d)
+    val dir = queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Opq)
     val qv = vecs(0L)
-    val served = IndexStream.searchCommittedCdc(spark, dir, q, qv, 2, 10)
+    val served = IndexStream.searchCommittedCdc(spark, dir, q,
+        embOf(rows.head._2), 2, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(served.map(_._1).forall(liveId),
       "OPQ CDC serving surfaced a deleted (non-resurrected) id")
@@ -858,18 +837,19 @@ class CdcIndexSpec extends AnyFunSuite {
       .createTempDirectory("graft_cdc_opq_rebuild").toString
     val q = IndexStream.rebuildCdc(spark, root,
       Tables.embeddings(spark, d).select(col("vec_id"), col("embedding")),
-      k = 8, iters = 2, m = 4, subDim = 16, opq = true)
+      k = 8, iters = 2, m = 4, subDim = 16, encoding = Encoding.Opq)
     // the refit reproduces the batch tier's allocation (same corpus,
     // same exact-BIGINT energy ranking)
-    assert(q.opqPerm.get == queries.SemanticQ.opqFlatPerm(spark, d),
+    assert(permOf(q) ==
+      permOf(queries.SemanticQ.quantizers(spark, d, Encoding.Opq)),
       "rebuild's allocation refit diverged from the tier's derivation")
     val gen = IndexStream.currentRoot(spark, root).get
     val loaded = IndexStream.loadQuantizers(spark, gen)
-    assert(loaded.opqPerm == q.opqPerm,
+    assert(loaded.encoding == q.encoding,
       "the allocation must round-trip through the persisted artifact")
     assert(loaded.coarse.sortBy(_._1) == q.coarse.sortBy(_._1))
-    val qv = intVecOf(fullRows.head._2)
-    val served = searchActive(root, qv)
+    val qe = embOf(fullRows.head._2)
+    val served = searchActive(root, qe)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val partTier = queries.SemanticQ.queries("q_ann_opq_part")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -878,7 +858,7 @@ class CdcIndexSpec extends AnyFunSuite {
     // the lifecycle CONTINUES: a delete lands against the rebuilt base
     IndexStream.processBatchCdc(
       cdcDf(Seq((served.head._1, Seq.empty[Float], "delete"))), 1L, q, gen)
-    val after = searchActive(root, qv)
+    val after = searchActive(root, qe)
       .collect().map(_.getLong(0)).toSeq
     assert(!after.contains(served.head._1),
       "delete against the rebuilt OPQ generation did not land")
@@ -886,33 +866,19 @@ class CdcIndexSpec extends AnyFunSuite {
 
   test("OPQ quantizer artifact: the permutation round-trips through " +
     "save/loadQuantizers, and a non-permutation is refused") {
-    val q = queries.SemanticQ.opqQuantizers(spark, d)
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Opq)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_opq_artifact").toString
     IndexStream.saveQuantizers(spark, dir, q)
     val loaded = IndexStream.loadQuantizers(spark, dir)
-    assert(loaded.opqPerm == q.opqPerm)
+    assert(loaded.encoding == q.encoding)
     // loadQuantizers returns cid-sorted entries; every consumer is
     // order-independent (argmin over (dist, cid))
     assert(loaded.coarse.sortBy(_._1) == q.coarse.sortBy(_._1) &&
       loaded.books.map(_.sortBy(_._1)) == q.books.map(_.sortBy(_._1)))
     intercept[IllegalArgumentException] {
       IndexStream.Quantizers(q.coarse, q.books, q.subDim,
-        opqPerm = Some(Seq(0, 0, 1)))
-    }
-    intercept[IllegalArgumentException] {
-      IndexStream.Quantizers(q.coarse, q.books, q.subDim,
-        residual = true, opqPerm = q.opqPerm)
-    }
-    // OPQ composes with plain PQ only — both SQ8 variants refuse too
-    intercept[IllegalArgumentException] {
-      IndexStream.Quantizers(q.coarse, Seq.empty, q.subDim,
-        sq8Amax = Some(1.0), opqPerm = q.opqPerm)
-    }
-    intercept[IllegalArgumentException] {
-      IndexStream.Quantizers(q.coarse, Seq.empty, q.subDim,
-        sq8Dims = Some((Seq.fill(64)(0.0), Seq.fill(64)(1.0))),
-        opqPerm = q.opqPerm)
+        Encoding.Opq(Seq(0, 0, 1)))
     }
   }
 }

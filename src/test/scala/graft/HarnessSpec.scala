@@ -23,4 +23,20 @@ class HarnessSpec extends AnyFunSuite {
       """"causes": [{"class": "java.io.IOException", "message": "disk \"full\""}]}]""")
     assert(Jsons.failures("query", Nil) == "[]")
   }
+
+  test("an unwritable bench artifact path prints one stderr line with the " +
+    "path and the cause, and does not fail the bench") {
+    // a path under a regular FILE can never be created
+    val file = java.nio.file.Files.createTempFile("graft_bench_out", ".txt")
+    val path = file.resolve("BENCH_LAST.json").toString
+    val err = new java.io.ByteArrayOutputStream()
+    Console.withErr(new java.io.PrintStream(err, true)) {
+      Bench.writeArtifact(path, "{}")
+    }
+    val lines = err.toString("UTF-8").linesIterator.toSeq
+    assert(lines.size == 1, s"expected one stderr line, got: $lines")
+    assert(lines.head.contains(path) && lines.head.contains("Exception"),
+      s"the line must name the path and the cause: ${lines.head}")
+    java.nio.file.Files.delete(file)
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{KMeansOp, ProductQuantizer}
+import graft.operators.Encoding
 import graft.streaming.{IndexStream, StreamState}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -21,10 +21,7 @@ class IndexStreamSpec extends AnyFunSuite {
   private val d = TestSpark.sf0001
 
   private def quantizers: IndexStream.Quantizers =
-    IndexStream.Quantizers(
-      queries.SemanticQ.trainedCentroids(spark, d),
-      queries.SemanticQ.pqCodebooks(spark, d),
-      subDim = 16)
+    queries.SemanticQ.quantizers(spark, d, Encoding.Pq)
 
   private def fullRows: Seq[(Long, Seq[Float])] =
     Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
@@ -32,6 +29,9 @@ class IndexStreamSpec extends AnyFunSuite {
 
   private def intVecOf(e: Seq[Float]): Seq[Long] =
     e.map(x => math.floor(x.toDouble * 1e6).toLong)
+
+  /** A probe's raw embedding, as the single-probe entry takes it. */
+  private def embOf(e: Seq[Float]): Seq[Double] = e.map(_.toDouble)
 
   /** (vec_id, cell, codes) of the live rows of an m = 4 state, sorted. */
   private def committedCodes(stateDir: String): Seq[(Long, Long, Seq[Long])] =
@@ -53,10 +53,10 @@ class IndexStreamSpec extends AnyFunSuite {
     * as a restarted server does it: resolve `_current`, load the
     * persisted quantizers, search.
     */
-  private def searchActive(root: String, qv: Seq[Long]): Seq[(Long, Long)] = {
+  private def searchActive(root: String, probe: Seq[Double]): Seq[(Long, Long)] = {
     val gen = IndexStream.currentRoot(spark, root).get
     IndexStream.searchCommittedCdc(spark, gen,
-        IndexStream.loadQuantizers(spark, gen), qv, nProbe = 2, k = 10)
+        IndexStream.loadQuantizers(spark, gen), probe, nProbe = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
   }
 
@@ -86,10 +86,7 @@ class IndexStreamSpec extends AnyFunSuite {
     val got = committedCodes(stateDir)
     assert(got.map(_._1) == rows.map(_._1), "one row per vec_id, no dups")
     // one-shot build twin
-    val expect = ProductQuantizer.indexProjection(
-        Tables.embeddings(spark, d).select(col("vec_id"),
-          KMeansOp.intVec(col("embedding")).as("v")),
-        q.coarse, q.books, q.subDim)
+    val expect = q.project(Tables.embeddings(spark, d))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),
         Seq(r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
@@ -97,8 +94,8 @@ class IndexStreamSpec extends AnyFunSuite {
     assert(got == expect)
 
     // serving parity: committed-state search == the batch q_ann_ivfpq
-    val qv = intVecOf(rows.head._2)
-    val served = IndexStream.searchCommittedCdc(spark, stateDir, q, qv,
+    val qe = embOf(rows.head._2)
+    val served = IndexStream.searchCommittedCdc(spark, stateDir, q, qe,
         nProbe = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val batch = queries.SemanticQ.queries("q_ann_ivfpq")(spark, d)
@@ -125,7 +122,7 @@ class IndexStreamSpec extends AnyFunSuite {
     // index: score-project the committed-state ADC top-5 — must equal
     // the declared q_shortlist_ann row for row (the headline route off
     // the continuously-maintained compressed index, not a fresh build)
-    val servedShortlist = IndexStream.searchCommittedCdc(spark, stateDir, q, qv,
+    val servedShortlist = IndexStream.searchCommittedCdc(spark, stateDir, q, qe,
         nProbe = 2, k = 5)
       .select(
         concat(lit("vec_"), lpad(col("vec_id").cast("string"), 6, "0"))
@@ -152,7 +149,7 @@ class IndexStreamSpec extends AnyFunSuite {
     val folded = IndexStream.compactStateCdcResolve(spark, stateDir, q.m)
     assert(folded.nonEmpty)
     assert(committedCodes(stateDir) == expect, "compaction changed the index")
-    val served2 = IndexStream.searchCommittedCdc(spark, stateDir, q, qv, 2, 10)
+    val served2 = IndexStream.searchCommittedCdc(spark, stateDir, q, qe, 2, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(served2 == batch, "post-compaction search diverged")
   }
@@ -196,7 +193,7 @@ class IndexStreamSpec extends AnyFunSuite {
       "empty batch must still commit its marker")
     assert(committedCodes(stateDir) == before)
     val served = IndexStream.searchCommittedCdc(spark, stateDir, q,
-      intVecOf(fullRows.head._2), 2, 10)
+      embOf(fullRows.head._2), 2, 10)
     assert(served.count() <= 10) // scan over state incl. the empty partition works
   }
 
@@ -214,10 +211,7 @@ class IndexStreamSpec extends AnyFunSuite {
     assert(got.map(_._1) == five.map(_._1), "one row per vec_id")
     // deterministic pick: min over the (cell, codes) tuple of the two
     // candidate encodings for vec 3
-    val cands = ProductQuantizer.indexProjection(
-        Seq(five(3), mutated).toDF("vec_id", "embedding")
-          .select(col("vec_id"), KMeansOp.intVec(col("embedding")).as("v")),
-        q.coarse, q.books, q.subDim)
+    val cands = q.project(Seq(five(3), mutated).toDF("vec_id", "embedding"))
       .collect()
       .map(r => Seq(r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
@@ -270,12 +264,12 @@ class IndexStreamSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     val q1 = IndexStream.rebuildCdc(spark, root, corpus,
       k = 8, iters = 2, m = 4, subDim = 16)
-    val qv = intVecOf(fullRows.head._2)
+    val qe = embOf(fullRows.head._2)
     val batch = queries.SemanticQ.queries("q_ann_ivfpq")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     // same training budget as the declared query → identical quantizers
     // (deterministic integer Lloyd) → identical search
-    assert(searchActive(root, qv) == batch)
+    assert(searchActive(root, qe) == batch)
     // the persisted artifact round-trips (a restarted server loads it)
     val gen0 = IndexStream.currentRoot(spark, root).get
     assert(gen0.endsWith("gen=0"))
@@ -288,7 +282,7 @@ class IndexStreamSpec extends AnyFunSuite {
     // rebuild on the unchanged corpus: a NEW generation, same answers
     IndexStream.rebuildCdc(spark, root, corpus, 8, 2, 4, 16)
     assert(IndexStream.currentRoot(spark, root).get.endsWith("gen=1"))
-    assert(searchActive(root, qv) == batch,
+    assert(searchActive(root, qe) == batch,
       "rebuild on an unchanged corpus changed results")
     // torn rebuild: a generation directory WITHOUT the _current marker
     // is invisible, even with its own internal commit marker
@@ -296,7 +290,7 @@ class IndexStreamSpec extends AnyFunSuite {
     StreamState.commitMarker(spark, s"$root/gen=99", 0L)
     assert(IndexStream.currentRoot(spark, root).get.endsWith("gen=1"),
       "an unswapped generation must not become current")
-    assert(searchActive(root, qv) == batch, "torn rebuild leaked into serving")
+    assert(searchActive(root, qe) == batch, "torn rebuild leaked into serving")
   }
 
   test("drift → histogram signal → rebuild rebalances the cells") {
@@ -328,18 +322,13 @@ class IndexStreamSpec extends AnyFunSuite {
 
   test("indexBatch plan: the per-batch projection does not shuffle") {
     val q = quantizers
-    val vecs = Tables.embeddings(spark, d).select(col("vec_id"),
-      KMeansOp.intVec(col("embedding")).as("v"))
-    val plan = ProductQuantizer.indexProjection(vecs, q.coarse, q.books, q.subDim)
+    val plan = q.project(Tables.embeddings(spark, d))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"index projection shuffled:\n$plan")
   }
 
   private def resQuantizers: IndexStream.Quantizers =
-    IndexStream.Quantizers(
-      queries.SemanticQ.trainedCentroids(spark, d),
-      queries.SemanticQ.resCodebooks(spark, d),
-      subDim = 16, residual = true)
+    queries.SemanticQ.quantizers(spark, d, Encoding.ResidualPq)
 
   test("RESIDUAL maintenance across batches + restart equals the " +
     "one-shot residual build; committed serving equals the declared " +
@@ -364,18 +353,15 @@ class IndexStreamSpec extends AnyFunSuite {
     val got = committedCodes(stateDir)
     assert(got.map(_._1) == rows.map(_._1), "one row per vec_id, no dups")
     // one-shot residual build twin
-    val expect = ProductQuantizer.residualIndexProjection(
-        Tables.embeddings(spark, d).select(col("vec_id"),
-          KMeansOp.intVec(col("embedding")).as("v")),
-        q.coarse, q.books, q.subDim)
+    val expect = q.project(Tables.embeddings(spark, d))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),
         Seq(r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
       .toSeq.sortBy(_._1)
     assert(got == expect, "streamed residual index diverges from the one-shot build")
     // single-probe serving == the declared residual search
-    val qv = intVecOf(rows.head._2)
-    def servedSingle() = IndexStream.searchCommittedCdc(spark, stateDir, q, qv,
+    def servedSingle() = IndexStream.searchCommittedCdc(spark, stateDir, q,
+        embOf(rows.head._2),
         nProbe = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val declared = queries.SemanticQ.queries("q_ann_ivfpq_res")(spark, d)
@@ -409,24 +395,25 @@ class IndexStreamSpec extends AnyFunSuite {
     val corpus = Tables.embeddings(spark, d)
       .select(col("vec_id"), col("embedding"))
     val q = IndexStream.rebuildCdc(spark, root, corpus,
-      k = 8, iters = 2, m = 4, subDim = 16, residual = true)
-    assert(q.residual)
+      k = 8, iters = 2, m = 4, subDim = 16, encoding = Encoding.ResidualPq)
+    assert(q.encoding == Encoding.ResidualPq)
     val dir = IndexStream.currentRoot(spark, root).get
     val loaded = IndexStream.loadQuantizers(spark, dir)
-    assert(loaded.residual, "the residual flag must survive the artifact roundtrip")
+    assert(loaded.encoding == Encoding.ResidualPq,
+      "the residual encoding must survive the artifact roundtrip")
     // loadQuantizers returns cid-sorted entries; compare as sets
     assert(loaded.coarse.sortBy(_._1) == q.coarse.sortBy(_._1))
     assert(loaded.books.map(_.sortBy(_._1)) == q.books.map(_.sortBy(_._1)))
     val declared = queries.SemanticQ.queries("q_ann_ivfpq_res")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(searchActive(root, intVecOf(fullRows.head._2)) == declared,
+    assert(searchActive(root, embOf(fullRows.head._2)) == declared,
       "a residual rebuildCdc generation must reproduce q_ann_ivfpq_res")
   }
 
   test("SQ8 maintenance across batches: overlapping inserts serve " +
     "bit-identical single-probe AND batch results to the persisted " +
     "IVF_SQ8 tiers") {
-    val q = queries.SemanticQ.sq8Quantizers(spark, d)
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Sq8)
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_ix_sq8").toString
     val emb = Tables.embeddings(spark, d)
@@ -441,7 +428,7 @@ class IndexStreamSpec extends AnyFunSuite {
       .select(col("src_batch")).distinct().collect().map(_.getLong(0)).toSeq ==
       Seq(0L), "an overlapping insert displaced the first write")
     val qEmb = fullRows.head._2.map(_.toDouble)
-    val single = IndexStream.searchCommittedCdcSq8(
+    val single = IndexStream.searchCommittedCdc(
         spark, stateDir, q, qEmb, nProbe = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val part = queries.SemanticQ.queries("q_ann_ivf_sq8_part")(spark, d)
@@ -451,7 +438,7 @@ class IndexStreamSpec extends AnyFunSuite {
     val probes = Tables.embeddings(spark, d)
       .where(col("vec_id").isin(0L, 1L, 2L))
       .select(col("vec_id").as("qid"), col("embedding"))
-    val batch = IndexStream.searchCommittedBatchCdcSq8(
+    val batch = IndexStream.searchCommittedBatchCdc(
         spark, stateDir, q, probes, nProbe = 2, k = 3)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq

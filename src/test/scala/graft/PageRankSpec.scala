@@ -90,4 +90,36 @@ class PageRankSpec extends AnyFunSuite {
         edges.toDF("src", "dst", "w"), 2, maxNodes = 8)
     }
   }
+
+  test("runBoundedLocal overflow: a weight whose r·w passes 2^63 throws " +
+    "under ANSI on both forms and wraps identically without it") {
+    // base rank 5·10^11 × w = 10^8 is 5·10^19 > Long.MaxValue
+    val vs = Seq("a", "b")
+    val es = Seq(("a", "b", 100000000L), ("b", "a", 1L))
+    def withAnsi[T](on: Boolean)(body: => T): T = {
+      val prev = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", on.toString)
+      try body finally spark.conf.set("spark.sql.ansi.enabled", prev)
+    }
+    def ranks(local: Boolean): Map[String, Long] = {
+      val (v, e) = (vs.toDF("node"), es.toDF("src", "dst", "w"))
+      (if (local) PageRank.runBoundedLocal(v, e, 1, maxNodes = 2)
+        else PageRank.run(v, e, 1))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    def arithmetic(t: Throwable): Boolean =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException])
+    Seq(true, false).foreach { local =>
+      val thrown = withAnsi(on = true)(scala.util.Try(ranks(local))).failed
+      assert(thrown.toOption.exists(arithmetic),
+        s"local=$local must throw ArithmeticException under ANSI: $thrown")
+    }
+    val wrapped = withAnsi(on = false)(ranks(local = true))
+    assert(wrapped == withAnsi(on = false)(ranks(local = false)))
+    // the product really wrapped: b's rank is not the exact one
+    val exactB = BigInt(15L * 500000000000L / 100L) +
+      BigInt(85) * (BigInt(500000000000L) * 100000000L / 100000000L) / 100
+    assert(BigInt(wrapped("b")) != exactB)
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{KMeansOp, ProductQuantizer}
+import graft.operators.{Encoding, KMeansOp, PqTwins, ProductQuantizer}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,7 +60,7 @@ class PqSpec extends AnyFunSuite {
       .toDF("vec_id", "code_0", "code_1")
     val luts = Seq(Map(0L -> 10L, 1L -> 7L), Map(0L -> 5L, 1L -> 2L))
     // adc: v0=10+2=12, v1=7+5=12, v2=10+5=15 → tie v0<v1, then v2
-    val got = ProductQuantizer.adcTopK(codes, luts, 3).collect()
+    val got = PqTwins.adcTopK(codes, luts, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == Seq((0L, 12L), (1L, 12L), (2L, 15L)))
   }
@@ -489,16 +490,15 @@ class PqSpec extends AnyFunSuite {
 
   test("code table partitioned by cell: ADC probe prunes to the probed " +
     "directories and serves the same top-10") {
-    import graft.operators.{KMeansOp, ProductQuantizer}
     val d = TestSpark.sf0001
-    val cents = queries.SemanticQ.trainedCentroids(spark, d)
-    val books = queries.SemanticQ.pqCodebooks(spark, d)
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Pq)
+    val (cents, books) = (q.coarse, q.books)
     val vecs = Tables.embeddings(spark, d).select(col("vec_id"),
       KMeansOp.intVec(col("embedding")).as("v"))
     val path = java.nio.file.Files.createTempDirectory("graft_pq_part")
       .toString + "/codes"
     // the persisted index: one directory per coarse cell
-    ProductQuantizer.indexProjection(vecs, cents, books, 16)
+    q.project(Tables.embeddings(spark, d))
       .write.partitionBy("cell").parquet(path)
     // serve the vec_id=0 probe from the layout
     val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
@@ -512,7 +512,7 @@ class PqSpec extends AnyFunSuite {
     val physical = scan.queryExecution.executedPlan.toString
     assert(physical.contains("PartitionFilters") && physical.contains("cell"),
       s"cell filter did not reach partition pruning:\n$physical")
-    val served = ProductQuantizer.adcTopK(scan, luts, 10)
+    val served = PqTwins.adcTopK(scan, luts, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val batch = queries.SemanticQ.queries("q_ann_ivfpq")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -603,12 +603,10 @@ class PqSpec extends AnyFunSuite {
         .sortBy { case (id, adc) => (adc, id) }.take(3).zipWithIndex
         .map { case ((id, adc), i) => (qid, (i + 1).toLong, id, adc) }
     }
-    val vecsDf = Tables.embeddings(spark, d).select(col("vec_id"),
-      KMeansOp.intVec(col("embedding")).as("v"))
     val probesDf = probes.map { case (q, v) => (q, v.toSeq) }.toDF("qid", "v")
-    val df = queries.SemanticQ.annIvfPqBatch(vecsDf, probesDf,
-      queries.SemanticQ.trainedCentroids(spark, d),
-      queries.SemanticQ.pqCodebooks(spark, d), nProbe = 2, topK = 3)
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Pq)
+    val df = q.serve(q.project(Tables.embeddings(spark, d)), probesDf,
+      nProbe = 2, k = 3)
     // probe-side work must not add shuffles: exchanges stay at the
     // (qid, vec) aggregation + the qid rank window (plan captured
     // BEFORE execution — the post-AQE string duplicates every node
@@ -639,11 +637,9 @@ class PqSpec extends AnyFunSuite {
       qid -> vecs.toSeq.map { case (id, v) => (id, dist(v, qv)) }
         .sortBy { case (id, dd) => (dd, id) }.take(3).map(_._1).toSet
     }.toMap
-    val vecsDf = Tables.embeddings(spark, d).select(col("vec_id"),
-      KMeansOp.intVec(col("embedding")).as("v"))
     val probesDf = probes.map { case (q, v) => (q, v.toSeq) }.toDF("qid", "v")
-    val tcents = queries.SemanticQ.trainedCentroids(spark, d)
-    val bks = queries.SemanticQ.pqCodebooks(spark, d)
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Pq)
+    val indexed = q.project(Tables.embeddings(spark, d))
     def scalarAt(nProbe: Int): Seq[(Long, Long, Long, Long)] =
       probes.flatMap { case (qid, qv) =>
         val probed = cents.map { case (cid, c) => (cid, dist(c, qv)) }
@@ -669,8 +665,7 @@ class PqSpec extends AnyFunSuite {
       exact3(qid).count(id => probed.contains(cellOf(id)))
     }.sum
     val sweep = Seq(1, 2, 4, 8).map { nProbe =>
-      val got = queries.SemanticQ
-        .annIvfPqBatch(vecsDf, probesDf, tcents, bks, nProbe, topK = 3)
+      val got = q.serve(indexed, probesDf, nProbe, k = 3)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
       assert(got == scalarAt(nProbe), s"engine != scalar replay at nProbe=$nProbe")
@@ -683,8 +678,7 @@ class PqSpec extends AnyFunSuite {
     }
     // nProbe = k: the coarse filter is vacuous — the result must equal
     // the plain (unfiltered) PQ ADC top-3 per probe
-    val full = queries.SemanticQ
-      .annIvfPqBatch(vecsDf, probesDf, tcents, bks, nProbe = 8, topK = 3)
+    val full = q.serve(indexed, probesDf, nProbe = 8, k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     val plainPq = probes.flatMap { case (qid, qv) =>
       val luts = books.zipWithIndex.map { case (book, s) =>
@@ -713,23 +707,24 @@ class PqSpec extends AnyFunSuite {
     // candidate for the duplicated qids (zero rows instead of top-3)
     val dup = probes.unionAll(probes).unionAll(probes)
     val coarse = queries.SemanticQ.trainedCentroids(spark, d)
-    val plainBooks = queries.SemanticQ.pqCodebooks(spark, d)
-    val resBooks = queries.SemanticQ.resCodebooks(spark, d)
+    val plainBooks = queries.SemanticQ.quantizers(spark, d, Encoding.Pq).books
+    val resBooks = queries.SemanticQ.quantizers(spark, d, Encoding.ResidualPq).books
     val subDim = 16
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val plainIdx = ProductQuantizer.indexProjection(vecsDf, coarse, plainBooks, subDim)
-    assert(rows(ProductQuantizer.adcBatchServe(
+    val plainIdx = queries.SemanticQ.quantizers(spark, d, Encoding.Pq)
+      .project(Tables.embeddings(spark, d))
+    assert(rows(PqTwins.adcBatchServe(
         plainIdx, dup, coarse, plainBooks, subDim, 2, 3)) ==
-      rows(ProductQuantizer.adcBatchServe(
+      rows(PqTwins.adcBatchServe(
         plainIdx, probes, coarse, plainBooks, subDim, 2, 3)))
-    assert(rows(ProductQuantizer.adcBatchServe(
+    assert(rows(PqTwins.adcBatchServe(
       plainIdx, dup, coarse, plainBooks, subDim, 2, 3)).nonEmpty)
-    val resIdx = ProductQuantizer.residualIndexProjection(
-      vecsDf, coarse, resBooks, subDim)
-    assert(rows(ProductQuantizer.adcBatchServeResidual(
+    val resIdx = queries.SemanticQ.quantizers(spark, d, Encoding.ResidualPq)
+      .project(Tables.embeddings(spark, d))
+    assert(rows(PqTwins.adcBatchServeResidual(
         resIdx, dup, coarse, resBooks, subDim, 2, 3)) ==
-      rows(ProductQuantizer.adcBatchServeResidual(
+      rows(PqTwins.adcBatchServeResidual(
         resIdx, probes, coarse, resBooks, subDim, 2, 3)))
   }
 
@@ -743,13 +738,13 @@ class PqSpec extends AnyFunSuite {
     val probes = vecsDf.where(col("vec_id").isin(0L, 1L, 2L))
       .select(col("vec_id").as("qid"), col("v"))
     val coarse = queries.SemanticQ.trainedCentroids(spark, d)
-    val plainBooks = queries.SemanticQ.pqCodebooks(spark, d)
-    val resBooks = queries.SemanticQ.resCodebooks(spark, d)
+    val plainBooks = queries.SemanticQ.quantizers(spark, d, Encoding.Pq).books
+    val resBooks = queries.SemanticQ.quantizers(spark, d, Encoding.ResidualPq).books
     val subDim = 16
-    val plainIdx = ProductQuantizer.indexProjection(
-      vecsDf, coarse, plainBooks, subDim)
-    val resIdx = ProductQuantizer.residualIndexProjection(
-      vecsDf, coarse, resBooks, subDim)
+    val plainIdx = queries.SemanticQ.quantizers(spark, d, Encoding.Pq)
+      .project(Tables.embeddings(spark, d))
+    val resIdx = queries.SemanticQ.quantizers(spark, d, Encoding.ResidualPq)
+      .project(Tables.embeddings(spark, d))
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -777,14 +772,14 @@ class PqSpec extends AnyFunSuite {
         }
         cur
       }
-      val pinned = ProductQuantizer.pinProbes(probes)
+      val pinned = PqTwins.pinProbes(probes)
       val cells = collectProbeCells(pinned, coarse, 2)
       assert(cells.nonEmpty)
       val afterPin = settled()
       assert(afterPin > 0, "the pin itself is eager")
-      val servedPlain = ProductQuantizer.adcBatchServe(
+      val servedPlain = PqTwins.adcBatchServe(
         plainIdx, pinned, coarse, plainBooks, subDim, 2, 3)
-      val servedRes = ProductQuantizer.adcBatchServeResidual(
+      val servedRes = PqTwins.adcBatchServeResidual(
         resIdx, pinned, coarse, resBooks, subDim, 2, 3)
       assert(settled() == afterPin,
         s"constructing the pre-pinned serves must trigger no eager job " +
@@ -792,7 +787,7 @@ class PqSpec extends AnyFunSuite {
           s"is back if this fires")
       // the DataFrame entry PAYS the pin at construction — the delta
       // the witness overload shaves off every already-pinned batch query
-      val viaWrapper = ProductQuantizer.adcBatchServe(
+      val viaWrapper = PqTwins.adcBatchServe(
         plainIdx, probes, coarse, plainBooks, subDim, 2, 3)
       assert(settled() > afterPin,
         "the un-pinned entry should have pinned eagerly at construction")
@@ -800,7 +795,7 @@ class PqSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSeq
       assert(rows(servedPlain) == rows(viaWrapper))
-      assert(rows(servedRes) == rows(ProductQuantizer.adcBatchServeResidual(
+      assert(rows(servedRes) == rows(PqTwins.adcBatchServeResidual(
         resIdx, probes, coarse, resBooks, subDim, 2, 3)))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -815,12 +810,12 @@ class PqSpec extends AnyFunSuite {
     val probes = vecsDf.where(col("vec_id").isin(0L, 1L, 2L))
       .select(col("vec_id").as("qid"), col("v"))
     val coarse = queries.SemanticQ.trainedCentroids(spark, d)
-    val plainBooks = queries.SemanticQ.pqCodebooks(spark, d)
+    val plainBooks = queries.SemanticQ.quantizers(spark, d, Encoding.Pq).books
     val subDim = 16
-    val plainIdx = ProductQuantizer.indexProjection(
-      vecsDf, coarse, plainBooks, subDim)
+    val plainIdx = queries.SemanticQ.quantizers(spark, d, Encoding.Pq)
+      .project(Tables.embeddings(spark, d))
     // reference: the two-job spelling
-    val refPinned = ProductQuantizer.pinProbes(probes)
+    val refPinned = PqTwins.pinProbes(probes)
     val refCells = collectProbeCells(refPinned, coarse, 2)
     // fused: one action; a duplicated probe row must still dedup
     val (pinned, cells) = ProductQuantizer.pinProbesWithCells(
@@ -847,14 +842,14 @@ class PqSpec extends AnyFunSuite {
         cur
       }
       val before = settled()
-      val served = ProductQuantizer.adcBatchServe(
+      val served = PqTwins.adcBatchServe(
         plainIdx, pinned, coarse, plainBooks, subDim, 2, 3)
       assert(settled() == before,
         "serving a fused-pinned frame must trigger no eager job at construction")
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSeq
-      assert(rows(served) == rows(ProductQuantizer.adcBatchServe(
+      assert(rows(served) == rows(PqTwins.adcBatchServe(
         plainIdx, refPinned, coarse, plainBooks, subDim, 2, 3)),
         "fused-pinned serve diverged from checkpoint-pinned serve")
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -898,8 +893,14 @@ class PqSpec extends AnyFunSuite {
     "mirror; the constant dimension decodes to floor(vmn·10^6)") {
     import spark.implicits._
     import graft.streaming.IndexStream
-    val sq = queries.SemanticQ
     val coarse = Seq(0L -> Seq(0L, 0L))
+    // the array forms, with the trained scales as columns in scope
+    def sq8Codes(v: Column, amax: Column) =
+      transform(v, e => ProductQuantizer.sq8Code(e, amax))
+    def sq8DimCode(v: Column) = transform(v, (e, i) => ProductQuantizer.sq8DimCode(
+      e, element_at(col("vmn"), i + 1), element_at(col("vmx"), i + 1)))
+    def sq8DimDecode(c: Column) = transform(c, (x, i) => ProductQuantizer.sq8DimDecode(
+      x, element_at(col("vmn"), i + 1), element_at(col("vmx"), i + 1)))
     def liveCodes(rows: Seq[(Long, Seq[Float])], q: IndexStream.Quantizers) = {
       val dir = java.nio.file.Files.createTempDirectory("graft_sq8_edge").toString
       IndexStream.processBatchCdc(rows.toDF("vec_id", "embedding"), 1L, q, dir)
@@ -914,12 +915,12 @@ class PqSpec extends AnyFunSuite {
     // the array form, with amax a column of the trained relation (the
     // persisted tiers' spelling: the `when` is decided per row)
     val arrayCodes = zeroEmb.crossJoin(amaxRel)
-      .select(sq.sq8Codes(col("embedding"), col("amax")))
+      .select(sq8Codes(col("embedding"), col("amax")))
       .as[Seq[Long]].collect().toSeq
     assert(arrayCodes == Seq(Seq(0L, 0L), Seq(0L, 0L)))
     // the per-column form under a frozen literal scale
     val colCodes = liveCodes(zeros, IndexStream.Quantizers(coarse, Nil, 2,
-        sq8Amax = Some(0.0)))
+        Encoding.Sq8(0.0)))
       .select(col("code_0"), col("code_1")).as[(Long, Long)].collect().toSeq
     assert(colCodes == Seq((0L, 0L), (0L, 0L)))
     // the driver mirror
@@ -930,22 +931,23 @@ class PqSpec extends AnyFunSuite {
     val rows = Seq((0L, Seq(0.1f, 1.5f)), (1L, Seq(0.1f, -2.0f)),
       (2L, Seq(0.1f, 0.25f)))
     val emb = rows.toDF("vec_id", "embedding")
-    val scales = sq.sq8DimScales(emb)
-    val (vmn, vmx) = scales.as[(Seq[Double], Seq[Double])].head()
+    val Encoding.Sq8Dim(vmn, vmx) =
+      Encoding.train(Encoding.Sq8Dim, emb, coarse, 1, 1, 1, 2).encoding
+    val scales = Seq((vmn, vmx)).toDF("vmn", "vmx")
     assert(vmn.head == vmx.head && vmn.head == 0.1f.toDouble)
     val floorMn = math.floor(vmn.head * 1000000.0).toLong
     assert(floorMn == 100000L)
     // the array forms: code, and decode of the code
     val arr = emb.crossJoin(scales)
-      .select(col("vec_id"), sq.sq8DimCode(col("embedding")).as("code"),
-        sq.sq8DimDecode(sq.sq8DimCode(col("embedding"))).as("dq"))
+      .select(col("vec_id"), sq8DimCode(col("embedding")).as("code"),
+        sq8DimDecode(sq8DimCode(col("embedding"))).as("dq"))
       .orderBy("vec_id").as[(Long, Seq[Long], Seq[Long])].collect().toSeq
     assert(arr.map(_._2.head) == Seq(0L, 0L, 0L))
     assert(arr.map(_._3.head) == Seq(floorMn, floorMn, floorMn))
     // the per-column forms under the frozen literal scales, against the
     // array forms dimension by dimension
     val maintained = liveCodes(rows, IndexStream.Quantizers(coarse, Nil, 2,
-        sq8Dims = Some((vmn, vmx))))
+        Encoding.Sq8Dim(vmn, vmx)))
       .select(col("vec_id"), col("code_0"), col("code_1"),
         ProductQuantizer.sq8DimDecode(col("code_0"), lit(vmn(0)), lit(vmx(0))),
         ProductQuantizer.sq8DimDecode(col("code_1"), lit(vmn(1)), lit(vmx(1))))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.KMeansOp
+import graft.operators.{Encoding, KMeansOp}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -45,7 +45,7 @@ class ServingTiersSpec extends AnyFunSuite {
       s"scan listed ${scan.selectedPartitions.partitionCount} partitions, " +
         "expected exactly the 2 probed cells")
     // ... out of the K = 8 cell directories the write laid down
-    val base = queries.SemanticQ.partitionedCodesPath(spark, d)
+    val base = queries.SemanticQ.indexPath(spark, d, Encoding.Pq)
     val cellDirs = new java.io.File(base).listFiles()
       .count(_.getName.startsWith("cell="))
     assert(cellDirs == 8, s"expected 8 cell= directories, found $cellDirs")
@@ -104,13 +104,10 @@ class ServingTiersSpec extends AnyFunSuite {
     val vecs = intVecsLocal()
     // the declared batch query serves topK=3; rebuild the topK=10
     // shortlist through the same private dataflow the rerank composes
-    val vdf = Tables.embeddings(spark, d).select(col("vec_id"),
-      graft.operators.KMeansOp.intVec(col("embedding")).as("v"))
-    val probes = vdf.where(col("vec_id").isin(0L, 1L, 2L))
-      .select(col("vec_id").as("qid"), col("v"))
-    val shortlist = queries.SemanticQ.annIvfPqBatch(vdf, probes,
-        queries.SemanticQ.trainedCentroids(spark, d),
-        queries.SemanticQ.pqCodebooks(spark, d), nProbe = 2, topK = 10)
+    val q = queries.SemanticQ.quantizers(spark, d, Encoding.Pq)
+    val emb = Tables.embeddings(spark, d)
+    val shortlist = q.serve(q.project(emb),
+        q.probes(emb.where(col("vec_id").isin(0L, 1L, 2L))), nProbe = 2, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
     val expect = Seq(0L, 1L, 2L).flatMap { qid =>
       shortlist.filter(_._1 == qid)
@@ -220,7 +217,7 @@ class ServingTiersSpec extends AnyFunSuite {
     assert(scans.head.selectedPartitions.partitionCount == 2,
       s"scan listed ${scans.head.selectedPartitions.partitionCount} " +
         "partitions, expected exactly the 2 probed cells")
-    val base = queries.SemanticQ.partitionedResCodesPath(spark, d)
+    val base = queries.SemanticQ.indexPath(spark, d, Encoding.ResidualPq)
     val cellDirs = new java.io.File(base).listFiles()
       .count(_.getName.startsWith("cell="))
     assert(cellDirs == 8, s"expected 8 cell= directories, found $cellDirs")
@@ -289,12 +286,13 @@ class ServingTiersSpec extends AnyFunSuite {
     val ranked = dims.sortBy(i => (-energy(i), i))
     val perm = (0 until 4).map(sub =>
       ranked.zipWithIndex.collect { case (pos, r) if r % 4 == sub => pos })
-    assert(queries.SemanticQ.opqPerm(spark, d) == perm,
+    assert(queries.SemanticQ.quantizers(spark, d, Encoding.Opq).encoding ==
+      Encoding.Opq(perm.flatten),
       "allocation diverged from the scalar energy ranking")
     // every dim lands in exactly one subspace (it IS a permutation)
     assert(perm.flatten.sorted == dims, "allocation must be a permutation")
     // scalar replay of the ADC top-10 over the permuted subspaces
-    val books = queries.SemanticQ.opqBooks(spark, d)
+    val books = queries.SemanticQ.quantizers(spark, d, Encoding.Opq).books
     def subVec(v: Seq[Long], m: Int): Seq[Long] = perm(m).map(v(_))
     def code(v: Seq[Long], m: Int): Long =
       books(m).map { case (cid, c) => (idist(c, subVec(v, m)), cid) }.min._2
@@ -325,7 +323,7 @@ class ServingTiersSpec extends AnyFunSuite {
     // inequality with no code defect. Gate with a 1% tolerance here;
     // the ANISOTROPIC fixture test below pins the material margin on
     // the case the operator exists for.
-    val pqBooks = queries.SemanticQ.pqCodebooks(spark, d)
+    val pqBooks = queries.SemanticQ.quantizers(spark, d, Encoding.Pq).books
     def pqSub(v: Seq[Long], m: Int): Seq[Long] = v.slice(m * 16, m * 16 + 16)
     val dOpq = ivecs.valuesIterator.map(v => (0 until 4).map(m =>
       books(m).map { case (_, c) => idist(c, subVec(v, m)) }.min).sum).sum
@@ -369,8 +367,8 @@ class ServingTiersSpec extends AnyFunSuite {
     val root = java.nio.file.Files
       .createTempDirectory("graft_opq_aniso").toString
     val q = graft.streaming.IndexStream.rebuildCdc(spark, root, corpus,
-      k = 8, iters = 2, m = 4, subDim = subDim, opq = true)
-    val perm = q.opqPerm.get
+      k = 8, iters = 2, m = 4, subDim = subDim, encoding = Encoding.Opq)
+    val Encoding.Opq(perm) = q.encoding
     val pqBooks = graft.operators.ProductQuantizer.train(
       corpus, "vec_id", col("embedding"), 4, subDim, 8, 2)
     // the deal is balanced: each subspace gets exactly 4 of the 16
@@ -413,7 +411,7 @@ class ServingTiersSpec extends AnyFunSuite {
     // ... out of the K = 8 cell directories the write laid down — the
     // permuted index has the SAME cell layout as the raw-domain one
     // (orthogonality preserves the coarse argmin, ties included)
-    val base = queries.SemanticQ.partitionedOpqCodesPath(spark, d)
+    val base = queries.SemanticQ.indexPath(spark, d, Encoding.Opq)
     val cellDirs = new java.io.File(base).listFiles()
       .count(_.getName.startsWith("cell="))
     assert(cellDirs == 8, s"expected 8 cell= directories, found $cellDirs")
@@ -421,8 +419,9 @@ class ServingTiersSpec extends AnyFunSuite {
     // preserves the coarse argmin), ADC over the permuted subspaces
     val ivecs = intVecsLocal()
     val cents = queries.SemanticQ.trainedCentroids(spark, d)
-    val perm = queries.SemanticQ.opqPerm(spark, d)
-    val books = queries.SemanticQ.opqBooks(spark, d)
+    val perm = queries.SemanticQ.quantizers(spark, d, Encoding.Opq).encoding
+      .asInstanceOf[Encoding.Opq].perm.grouped(16).toSeq
+    val books = queries.SemanticQ.quantizers(spark, d, Encoding.Opq).books
     def subVec(v: Seq[Long], m: Int): Seq[Long] = perm(m).map(v(_))
     def code(v: Seq[Long], m: Int): Long =
       books(m).map { case (cid, c) => (idist(c, subVec(v, m)), cid) }.min._2
