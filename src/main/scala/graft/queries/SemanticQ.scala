@@ -97,12 +97,14 @@ object SemanticQ {
 
   /** Recall@k of a single-probe result against the integer-exact top-k
     * for the same probe — over the CDC lifecycle's live set when `live`.
+    * The probe is collected once and handed to both sides.
     */
-  private def recall(s: SparkSession, d: String, approx: DataFrame,
+  private def recall(s: SparkSession, d: String, approx: Seq[Double] => DataFrame,
       k: Int = 10, live: Boolean = false): DataFrame = {
+    val p = probe(s, d)
     val vecs = intVecs(s, d)
     recallPpm(exactTopK(if (live) vecs.where(cdcLive(col("vec_id"))) else vecs,
-      Encoding.scaled(probe(s, d)), k), approx, Seq("vec_id"), k)
+      Encoding.scaled(p), k), approx(p), Seq("vec_id"), k)
   }
 
   /** Integer-exact Lloyd assignment after 2 rounds, seeded on the 8
@@ -166,12 +168,13 @@ object SemanticQ {
     * q_ann_ivf, whose cells are raw seed vectors: the driver-local
     * centroids pick the 2 probe cells for the vec_id=0 query, then ONE
     * corpus pass assigns + filters to the probed cells and
-    * TakeOrderedAndProject returns the integer-exact top-10.
+    * TakeOrderedAndProject returns the integer-exact top-10. `p` is the
+    * collected probe.
     */
-  def annIvfTrainedQ(s: SparkSession, d: String): DataFrame = {
+  private def annIvfTrained(s: SparkSession, d: String, p: Seq[Double]): DataFrame = {
     import s.implicits._
     val cents = trainedCentroids(s, d)
-    val qv = Encoding.scaled(probe(s, d))
+    val qv = Encoding.scaled(p)
     exactTopK(KMeansOp.assign(intVecs(s, d), cents.toDF("cid", "c"))
       .where(col("cid").isin(KMeansOp.nearestCells(cents, qv, 2): _*)), qv, 10)
   }
@@ -216,11 +219,13 @@ object SemanticQ {
     }
   }
 
-  /** The vec_id=0 probe's top-k: (vec_id, adc_scaled | qdist). */
+  /** The top-k of `p`, the collected vec_id=0 probe:
+    * (vec_id, adc_scaled | qdist).
+    */
   private def ann(s: SparkSession, d: String, kind: Kind, at: Layout,
-      k: Int = 10): DataFrame = {
+      p: Seq[Double], k: Int = 10): DataFrame = {
     val (q, rows) = layout(s, d, kind, at)
-    q.serve(rows, probe(s, d), if (at == Flat) 1 else 2, k)
+    q.serve(rows, p, if (at == Flat) 1 else 2, k)
   }
 
   /** Per-probe top-k of the vec_id 0/1/2 probe batch:
@@ -251,7 +256,7 @@ object SemanticQ {
     * terminal ROUND, so the oracle replays it bit-for-bit.
     */
   def shortlistAnnQ(s: SparkSession, d: String): DataFrame =
-    ann(s, d, Pq, InFlight, k = 5)
+    ann(s, d, Pq, InFlight, probe(s, d), k = 5)
       .select(
         concat(lit("vec_"), lpad(col("vec_id").cast("string"), 6, "0"))
           .as("file_name"),
@@ -265,12 +270,13 @@ object SemanticQ {
   /** IVFADC + exact REFINE (FAISS's `IndexRefineFlat`): the in-flight
     * IVFADC top-10 shortlist is re-ranked by the integer-exact distance
     * over ONLY those raw vectors (a broadcast semi-join back into the
-    * vector table), and the exact top-3 is served.
+    * vector table), and the exact top-3 of the collected probe `p` is
+    * served.
     */
-  def annIvfPqRerankQ(s: SparkSession, d: String): DataFrame =
-    exactTopK(intVecs(s, d).join(broadcast(ann(s, d, Pq, InFlight)
+  private def annIvfPqRerank(s: SparkSession, d: String, p: Seq[Double]): DataFrame =
+    exactTopK(intVecs(s, d).join(broadcast(ann(s, d, Pq, InFlight, p)
       .select(col("vec_id"))), Seq("vec_id"), "left_semi"),
-      Encoding.scaled(probe(s, d)), 3)
+      Encoding.scaled(p), 3)
 
   /** The refine stage at the BATCH tier: the batch IVFADC proposes a
     * per-qid top-10, the ≤ Q·10-row candidate relation broadcasts back
@@ -576,8 +582,11 @@ object SemanticQ {
       ()
     }
 
+  private def annOf(k: Kind, at: Layout): (SparkSession, String) => DataFrame =
+    (s, d) => ann(s, d, k, at, probe(s, d))
+
   private def recallOf(k: Kind, at: Layout): (SparkSession, String) => DataFrame =
-    (s, d) => recall(s, d, ann(s, d, k, at), live = at == Maintained)
+    (s, d) => recall(s, d, ann(s, d, k, at, _), live = at == Maintained)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_kmeans" -> kmeansQ,
@@ -585,37 +594,37 @@ object SemanticQ {
     "q_semdedup_scaled" -> semdedupScaledQ,
     "q_semdedup_sampled" -> semdedupSampledQ,
     "q_semdedup_capped" -> semdedupCappedQ,
-    "q_ann_ivf_trained" -> annIvfTrainedQ,
-    "q_recall_ivf" -> ((s, d) => recall(s, d, annIvfTrainedQ(s, d))),
+    "q_ann_ivf_trained" -> ((s, d) => annIvfTrained(s, d, probe(s, d))),
+    "q_recall_ivf" -> ((s, d) => recall(s, d, annIvfTrained(s, d, _))),
     "q_pq_codes" -> pqCodesQ,
-    "q_ann_pq" -> ((s, d) => ann(s, d, Pq, Flat)),
-    "q_ann_opq" -> ((s, d) => ann(s, d, Opq, Flat)),
-    "q_ann_opq_part" -> ((s, d) => ann(s, d, Opq, Persisted)),
+    "q_ann_pq" -> annOf(Pq, Flat),
+    "q_ann_opq" -> annOf(Opq, Flat),
+    "q_ann_opq_part" -> annOf(Opq, Persisted),
     "q_ann_opq_batch" -> ((s, d) => annBatch(s, d, Opq, Persisted)),
     "q_recall_opq" -> recallOf(Opq, Flat),
-    "q_ann_ivfpq" -> ((s, d) => ann(s, d, Pq, InFlight)),
-    "q_ann_ivfpq_part" -> ((s, d) => ann(s, d, Pq, Persisted)),
-    "q_ann_ivfpq_res_part" -> ((s, d) => ann(s, d, ResidualPq, Persisted)),
-    "q_ann_ivfpq_rerank" -> annIvfPqRerankQ,
+    "q_ann_ivfpq" -> annOf(Pq, InFlight),
+    "q_ann_ivfpq_part" -> annOf(Pq, Persisted),
+    "q_ann_ivfpq_res_part" -> annOf(ResidualPq, Persisted),
+    "q_ann_ivfpq_rerank" -> ((s, d) => annIvfPqRerank(s, d, probe(s, d))),
     "q_ann_ivfpq_rerank_batch" -> annIvfPqRerankBatchQ,
-    "q_recall_ivfpq_rerank" -> ((s, d) => recall(s, d, annIvfPqRerankQ(s, d), k = 3)),
-    "q_sq8_topk" -> ((s, d) => ann(s, d, Sq8, Flat)),
+    "q_recall_ivfpq_rerank" -> ((s, d) => recall(s, d, annIvfPqRerank(s, d, _), k = 3)),
+    "q_sq8_topk" -> annOf(Sq8, Flat),
     "q_recall_sq8" -> recallOf(Sq8, Flat),
     "q_sq8_batch" -> ((s, d) => annBatch(s, d, Sq8, Flat)),
-    "q_sq8_dim" -> ((s, d) => ann(s, d, Sq8Dim, Flat)),
-    "q_sq8_dim_part" -> ((s, d) => ann(s, d, Sq8Dim, Persisted)),
+    "q_sq8_dim" -> annOf(Sq8Dim, Flat),
+    "q_sq8_dim_part" -> annOf(Sq8Dim, Persisted),
     "q_sq8_dim_batch" -> ((s, d) => annBatch(s, d, Sq8Dim, Persisted)),
     "q_recall_sq8_dim" -> recallOf(Sq8Dim, Flat),
     "q_recall_sq8_dim_part" -> recallOf(Sq8Dim, Persisted),
-    "q_ann_ivf_sq8" -> ((s, d) => ann(s, d, Sq8, InFlight)),
-    "q_ann_ivf_sq8_part" -> ((s, d) => ann(s, d, Sq8, Persisted)),
+    "q_ann_ivf_sq8" -> annOf(Sq8, InFlight),
+    "q_ann_ivf_sq8_part" -> annOf(Sq8, Persisted),
     "q_ann_ivf_sq8_batch" -> ((s, d) => annBatch(s, d, Sq8, Persisted)),
     "q_recall_ivf_sq8" -> recallOf(Sq8, InFlight),
     "q_recall_cdc" -> recallOf(Pq, Maintained),
     "q_recall_cdc_opq" -> recallOf(Opq, Maintained),
     "q_recall_cdc_sq8" -> recallOf(Sq8, Maintained),
     "q_recall_cdc_sq8dim" -> recallOf(Sq8Dim, Maintained),
-    "q_ann_ivfpq_res" -> ((s, d) => ann(s, d, ResidualPq, InFlight)),
+    "q_ann_ivfpq_res" -> annOf(ResidualPq, InFlight),
     "q_ann_ivfpq_res_batch" -> ((s, d) => annBatch(s, d, ResidualPq, InFlight)),
     "q_ann_pq_batch" -> ((s, d) => annBatch(s, d, Pq, Flat)),
     "q_ann_ivfpq_batch" -> ((s, d) => annBatch(s, d, Pq, InFlight)),

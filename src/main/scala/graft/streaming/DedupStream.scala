@@ -40,26 +40,18 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField,
   */
 object DedupStream {
 
-  private val setsSchema = StructType(Seq(
-    StructField("id", LongType), StructField("hsorted", ArrayType(LongType))))
-  private val bandsSchema = StructType(Seq(
-    StructField("id", LongType), StructField("bkey", StringType)))
-
-  /** Commit-gated state reads/writes live in StreamState (shared with
-    * DriftStream): markers written LAST gate what restarts may read, a
-    * damaged COMMITTED partition still aborts at scan time — state must
-    * never silently disable dedup and admit every duplicate in a batch.
-    * Unlike DriftStream, reads here take ALL committed batches (a
-    * replayed batch's own earlier rows are superseded by the incremental
-    * operator's anti-joins, not by exclusion).
-    */
-  private def readCommittedState(s: SparkSession, stateDir: String,
-      table: String, schema: StructType): DataFrame =
-    StreamState.readCommitted(s, stateDir, table, schema)
+  private val Sets = StreamState.Table("sets", StructType(Seq(
+    StructField("id", LongType), StructField("hsorted", ArrayType(LongType)))))
+  private val Bands = StreamState.Table("bands", StructType(Seq(
+    StructField("id", LongType), StructField("bkey", StringType))))
 
   /** One micro-batch: gate `batch` against the persisted state under
-    * `stateDir`, append kept docs to `outDir/batch_id=N` and kept
+    * `stateDir`, append kept docs to `outDir/batch_id=N` and commit kept
     * signatures/bands to the state tables (all overwrite-by-batch-id).
+    * State reads take ALL committed batches: a replayed batch's own
+    * earlier rows are superseded by the incremental operator's
+    * anti-joins, not by exclusion — and a damaged COMMITTED partition
+    * aborts the scan, so state can never silently disable dedup.
     * Exposed for direct testing, like `Sinks.writeBatchIdempotent`.
     */
   def processBatch(batch: Dataset[Row], batchId: Long, stateDir: String,
@@ -70,27 +62,20 @@ object DedupStream {
         batch.select(col("doc_id"), col("text")), "doc_id",
         array_distinct(TA.tokens(col("text"))))
       .localCheckpoint() // feeds the band table and both verify sides
-    val existingSets = readCommittedState(s, stateDir, "sets", setsSchema)
-    val existingBands = readCommittedState(s, stateDir, "bands", bandsSchema)
-    val pairs = Dedup.minhashNearDupIncremental(newSets, existingSets,
-      bands, rowsPerBand, threshold, existingBanded = Some(existingBands))
+    val pairs = Dedup.minhashNearDupIncremental(newSets,
+      StreamState.read(s, stateDir, Sets), bands, rowsPerBand, threshold,
+      existingBanded = Some(StreamState.read(s, stateDir, Bands)))
     // monotone ids: id_b is always the later arrival, so dropping every
     // id_b implements "duplicate of an earlier doc"
     val dropped = pairs.select(col("id_b").as("id")).distinct()
     val keptSets = newSets.join(dropped, Seq("id"), "left_anti").localCheckpoint()
-    val keptDocs = batch.join(dropped.withColumnRenamed("id", "doc_id"),
-      Seq("doc_id"), "left_anti")
-    keptDocs.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    keptSets.write.mode("overwrite").parquet(s"$stateDir/sets/batch_id=$batchId")
-    Dedup.bandTable(keptSets, bands, rowsPerBand)
-      .write.mode("overwrite").parquet(s"$stateDir/bands/batch_id=$batchId")
-    // marker LAST: a crash anywhere above leaves batchId uncommitted and
-    // its partial directories unread on restart
-    StreamState.commitMarker(s, stateDir, batchId)
-    // auto-compaction: both tables fold under one marker once more than
-    // `autoCompactEvery` committed batches accumulate (see
-    // StreamState.maybeCompact for the crash contract)
-    StreamState.maybeCompact(s, stateDir, autoCompactEvery)(compactState(s, stateDir))
+    Sinks.writeBatchIdempotent(batch.join(
+      dropped.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left_anti"),
+      batchId, outDir)
+    // both tables fold under one marker once more than
+    // `autoCompactEvery` committed batches accumulate
+    StreamState.commit(s, stateDir, batchId, autoCompactEvery)(
+      Sets -> keptSets, Bands -> Dedup.bandTable(keptSets, bands, rowsPerBand))
   }
 
   /** Compact the committed signature + band state: both tables fold
@@ -102,9 +87,7 @@ object DedupStream {
     * which otherwise grows with every batch forever.
     */
   def compactState(s: SparkSession, stateDir: String): Option[Long] =
-    StreamState.compact(s, stateDir, Seq(
-      ("sets", setsSchema, (df: DataFrame) => df),
-      ("bands", bandsSchema, (df: DataFrame) => df)))
+    StreamState.compact(s, stateDir, Seq(Sets, Bands))
 
   /** Start the ingestion stream over a streaming (doc_id, text, ...)
     * frame. Readers see the growing corpus as one partitioned parquet
@@ -112,18 +95,13 @@ object DedupStream {
     *
     * `autoCompactEvery` defaults to 16 on this long-running entry point:
     * state reads stay O(base + ≤16 batch dirs) forever with zero
-    * operator intervention (StreamState.maybeCompact — a killed
+    * operator intervention (StreamState.commit's valve — a killed
     * compaction is invisible). 0 disables; the per-batch primitive
     * [[processBatch]] keeps 0 as its default for test isolation.
     */
   def nearDupIngest(docs: DataFrame, stateDir: String, outDir: String,
       checkpointDir: String, bands: Int = 8, rowsPerBand: Int = 2,
       threshold: Double = 0.9, autoCompactEvery: Int = 16): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch, batchId, stateDir, outDir, bands, rowsPerBand,
-          threshold, autoCompactEvery)
-      }
-      .start()
+    Sinks.foreachBatch(docs, checkpointDir)(processBatch(_, _, stateDir,
+      outDir, bands, rowsPerBand, threshold, autoCompactEvery))
 }

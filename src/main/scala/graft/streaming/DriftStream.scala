@@ -29,53 +29,67 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *
   * Scale: per-batch cost tracks the batch (one tokenize collapsing
   * map-side to (source, word) grain) plus the committed reference at
-  * VOCAB grain — the corpus's documents are never re-read; a production
-  * deployment periodically compacts the count partitions, which the
-  * append discipline makes a pure concatenation.
+  * VOCAB grain — the corpus's documents are never re-read, and the
+  * commit's auto-compaction valve re-aggregates the count partitions to
+  * vocab grain.
   */
 object DriftStream {
 
-  private val countsSchema = StructType(Seq(
-    StructField("w", StringType), StructField("c_w", LongType)))
+  /** Word counts at vocab grain; the merge is the sum a reference read
+    * computes, so compaction folds batches without changing a score.
+    */
+  private val Counts = StreamState.Table("counts", StructType(Seq(
+      StructField("w", StringType), StructField("c_w", LongType))),
+    (df, _) => df.groupBy(col("w")).agg(sum(col("c_w")).as("c_w")))
 
   /** Reference word counts visible to batch `batchId`: all committed
     * batches strictly before it, summed to (w, c_w).
     */
   private def referenceCounts(s: SparkSession, stateDir: String,
       batchId: Long): DataFrame =
-    StreamState.readCommitted(s, stateDir, "counts", countsSchema, upTo = batchId)
-      .groupBy(col("w")).agg(sum(col("c_w")).as("c_w"))
+    Counts.merge(StreamState.read(s, stateDir, Counts, upTo = batchId), batchId)
 
   /** One micro-batch: score `batch` per source against the pre-batch
     * reference, write (source, n_tokens, l1_ppm) to `outDir/batch_id=N`
-    * and the batch's word counts to the state (both overwrite-by-batch-
-    * id), then commit. `autoCompactEvery > 0` triggers
-    * [[compactState]] once more than that many committed batches have
-    * accumulated since the last base — reads stay O(base + ≤N batches)
-    * with no manual compaction call, same crash contract
-    * (StreamState.maybeCompact). Exposed for direct testing.
+    * and commit the batch's word counts to the state (both
+    * overwrite-by-batch-id). `autoCompactEvery > 0` compacts once more
+    * than that many committed batches have accumulated since the last
+    * base — reads stay O(base + ≤N batches) with no manual compaction
+    * call, same crash contract (StreamState.commit). Exposed for direct
+    * testing.
     */
   def processBatch(batch: Dataset[Row], batchId: Long, stateDir: String,
-      outDir: String, autoCompactEvery: Int = 0): Unit = {
+      outDir: String, autoCompactEvery: Int = 0): Unit =
+    driftStep(batch, batchId, stateDir, outDir, autoCompactEvery)
+
+  /** [[processBatch]]'s drift step, returning the written scores. */
+  private def driftStep(batch: Dataset[Row], batchId: Long, stateDir: String,
+      outDir: String, autoCompactEvery: Int): DataFrame = {
     val s = batch.sparkSession
     val sw = Retrieval.sourceWordCounts(
         batch.select(col("source"), col("text")))
       .localCheckpoint() // feeds the drift score and the state fold
-    Retrieval.l1DriftPpm(sw, referenceCounts(s, stateDir, batchId))
+    val scores = Retrieval.l1DriftPpm(sw, referenceCounts(s, stateDir, batchId))
       .orderBy(col("source").asc)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    sw.groupBy(col("w")).agg(sum(col("c_sw")).as("c_w"))
-      .write.mode("overwrite").parquet(s"$stateDir/counts/batch_id=$batchId")
-    // marker LAST: a crash anywhere above leaves batchId uncommitted
-    StreamState.commitMarker(s, stateDir, batchId)
-    StreamState.maybeCompact(s, stateDir, autoCompactEvery)(compactState(s, stateDir))
+      .localCheckpoint() // feeds the score sink and any alert decision
+    Sinks.writeBatchIdempotent(scores, batchId, outDir)
+    StreamState.commit(s, stateDir, batchId, autoCompactEvery)(
+      Counts -> Counts.merge(sw.select(col("w"), col("c_sw").as("c_w")), batchId))
+    scores
   }
 
   // ---- thresholded alert surface -----------------------------------
 
-  private val alertStateSchema = StructType(Seq(
-    StructField("source", StringType), StructField("alerting",
-      org.apache.spark.sql.types.BooleanType), StructField("b", LongType)))
+  /** Per-source alert decisions stamped with their batch; the merge
+    * keeps the latest decision per source (what a read of the state
+    * reduces to).
+    */
+  private val AlertState = StreamState.Table("state", StructType(Seq(
+      StructField("source", StringType), StructField("alerting",
+        org.apache.spark.sql.types.BooleanType), StructField("b", LongType))),
+    (df, _) => df.groupBy(col("source"))
+      .agg(max_by(col("alerting"), col("b")).as("alerting"), max(col("b")).as("b"))
+      .select(col("source"), col("alerting"), col("b")))
 
   private def alertRoot(stateDir: String) = s"$stateDir/alerts"
 
@@ -106,53 +120,31 @@ object DriftStream {
           .otherwise(coalesce(col("was"), lit(false))).as("alerting"))
   }
 
-  /** Latest committed alert state per source visible to `batchId`
-    * (a source keeps its state until it reappears). Tiny: one row per
-    * source per batch, reduced by max_by on the batch stamp.
-    */
-  private def prevAlertState(s: SparkSession, stateDir: String,
-      batchId: Long): DataFrame =
-    StreamState.readCommitted(s, alertRoot(stateDir), "state", alertStateSchema,
-        upTo = batchId)
-      .groupBy(col("source"))
-      .agg(max_by(col("alerting"), col("b")).as("alerting"))
-
   /** One micro-batch of the ALERTING monitor: the drift step of
-    * [[processBatch]] plus the hysteresis decision, written to
+    * [[processBatch]] plus the hysteresis decision against the latest
+    * committed alert state per source visible to `batchId` (a source
+    * keeps its state until it reappears), written to
     * `alertDir/batch_id=N` as (source, n_tokens, l1_ppm, alerting) — the
     * boolean a pipeline gates on. Alert state lives under its own
-    * commit-gated root (`stateDir/alerts`), marker LAST, replays
-    * excluded via `upTo` — the same effectively-once discipline as the
-    * count state, torn writes invisible.
+    * commit-gated root (`stateDir/alerts`), replays excluded via `upTo`
+    * — the same effectively-once discipline as the count state, torn
+    * writes invisible — and each root compacts on its own
+    * committed-batch count.
     */
   def processAlertBatch(batch: Dataset[Row], batchId: Long, stateDir: String,
       outDir: String, alertDir: String, baseline: DataFrame,
       enterPpm: Long = 500_000L, exitPpm: Long = 300_000L,
       autoCompactEvery: Int = 0): Unit = {
     val s = batch.sparkSession
-    val sw = Retrieval.sourceWordCounts(
-        batch.select(col("source"), col("text")))
-      .localCheckpoint()
-    val scores = Retrieval.l1DriftPpm(sw, referenceCounts(s, stateDir, batchId))
-      .orderBy(col("source").asc)
-      .localCheckpoint() // feeds the score sink and the alert decision
-    scores.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    sw.groupBy(col("w")).agg(sum(col("c_sw")).as("c_w"))
-      .write.mode("overwrite").parquet(s"$stateDir/counts/batch_id=$batchId")
-    StreamState.commitMarker(s, stateDir, batchId)
-    val decided = alertDecide(scores,
-        baseline, prevAlertState(s, stateDir, batchId), enterPpm, exitPpm)
+    val scores = driftStep(batch, batchId, stateDir, outDir, autoCompactEvery)
+    val prev = AlertState.merge(
+      StreamState.read(s, alertRoot(stateDir), AlertState, upTo = batchId), batchId)
+    val decided = alertDecide(scores, baseline, prev, enterPpm, exitPpm)
       .orderBy(col("source").asc)
       .localCheckpoint()
-    decided.write.mode("overwrite").parquet(s"$alertDir/batch_id=$batchId")
-    decided.select(col("source"), col("alerting"), lit(batchId).as("b"))
-      .write.mode("overwrite")
-      .parquet(s"${alertRoot(stateDir)}/state/batch_id=$batchId")
-    StreamState.commitMarker(s, alertRoot(stateDir), batchId)
-    // each root compacts on its own committed-batch count
-    StreamState.maybeCompact(s, stateDir, autoCompactEvery)(compactState(s, stateDir))
-    StreamState.maybeCompact(s, alertRoot(stateDir), autoCompactEvery)(
-      compactAlertState(s, stateDir))
+    Sinks.writeBatchIdempotent(decided, batchId, alertDir)
+    StreamState.commit(s, alertRoot(stateDir), batchId, autoCompactEvery)(
+      AlertState -> decided.select(col("source"), col("alerting"), lit(batchId).as("b")))
   }
 
   /** Start the alerting monitor: [[driftMonitor]] plus the per-source
@@ -162,24 +154,14 @@ object DriftStream {
       alertDir: String, checkpointDir: String, baseline: DataFrame,
       enterPpm: Long = 500_000L, exitPpm: Long = 300_000L,
       autoCompactEvery: Int = 16): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processAlertBatch(batch, batchId, stateDir, outDir, alertDir,
-          baseline, enterPpm, exitPpm, autoCompactEvery)
-      }
-      .start()
+    Sinks.foreachBatch(docs, checkpointDir)(processAlertBatch(_, _, stateDir,
+      outDir, alertDir, baseline, enterPpm, exitPpm, autoCompactEvery))
 
   /** Compact the alert-state root (latest decision per source survives;
     * the count state compacts separately via [[compactState]]).
     */
   def compactAlertState(s: SparkSession, stateDir: String): Option[Long] =
-    StreamState.compact(s, alertRoot(stateDir), Seq(
-      ("state", alertStateSchema, (df: DataFrame) =>
-        df.groupBy(col("source"))
-          .agg(max_by(col("alerting"), col("b")).as("alerting"),
-            max(col("b")).as("b"))
-          .select(col("source"), col("alerting"), col("b")))))
+    StreamState.compact(s, alertRoot(stateDir), Seq(AlertState))
 
   /** Compact the monitor's committed word-count state: fold all but the
     * newest committed batch into one base partition, RE-AGGREGATED to
@@ -190,9 +172,7 @@ object DriftStream {
     * makes a killed compaction invisible (see StreamState.compact).
     */
   def compactState(s: SparkSession, stateDir: String): Option[Long] =
-    StreamState.compact(s, stateDir, Seq(
-      ("counts", countsSchema,
-        (df: DataFrame) => df.groupBy(col("w")).agg(sum(col("c_w")).as("c_w")))))
+    StreamState.compact(s, stateDir, Seq(Counts))
 
   /** Start the monitor over a streaming (doc_id, text, source) frame.
     * Readers see per-batch drift scores as one partitioned parquet table
@@ -202,15 +182,11 @@ object DriftStream {
     * ([[driftMonitor]], [[alertMonitor]]): reference reads stay
     * O(base + ≤16 batch dirs) for the life of the stream with zero
     * operator intervention, under the same crash contract
-    * (StreamState.maybeCompact). 0 disables; the per-batch primitives
+    * (StreamState.commit). 0 disables; the per-batch primitives
     * ([[processBatch]], [[processAlertBatch]]) keep 0 for test isolation.
     */
   def driftMonitor(docs: DataFrame, stateDir: String, outDir: String,
       checkpointDir: String, autoCompactEvery: Int = 16): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch, batchId, stateDir, outDir, autoCompactEvery)
-      }
-      .start()
+    Sinks.foreachBatch(docs, checkpointDir)(
+      processBatch(_, _, stateDir, outDir, autoCompactEvery))
 }

@@ -77,23 +77,42 @@ object IndexStream {
   private[graft] val tombSchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("del_batch", LongType)))
 
+  /** The tombstone table. Its merge drops every folded tombstone: each
+    * is SPENT once the fold resolves the codes ([[compactStateCdcResolve]]).
+    */
+  private val Tombs = StreamState.Table("tombs", tombSchema, (t, _) => t.limit(0))
+
+  /** The `cell`-partitioned code table of an m-code state. Its merge
+    * RESOLVES: the folded codes keep only the rows no tombstone committed
+    * at or below the fold id kills.
+    */
+  private def codesTable(s: SparkSession, stateDir: String, m: Int) =
+    StreamState.Table("codes", codesSchema(m), (codes, fold) =>
+      live(codes, StreamState.read(s, stateDir, Tombs, upTo = fold + 1)), Seq("cell"))
+
+  /** The liveness anti-join: a code row is dead iff a STRICTLY LATER
+    * tombstone names it — a same-batch tombstone does not kill the same
+    * batch's insert (delete-then-insert order within a batch).
+    */
+  private def live(codes: DataFrame, tombs: DataFrame): DataFrame =
+    codes.join(tombs,
+      codes("vec_id") === tombs("vec_id") &&
+        tombs("del_batch") > codes("src_batch"),
+      "left_anti")
+
   /** The code-column count (m) of the PERSISTED state, from the newest
-    * committed partition's own parquet schema — so a read-only consumer
-    * (the histogram) can never apply a wrong default m and silently
-    * drop code columns. None when nothing is committed yet. One
+    * committed code directory's own parquet schema — so a read-only
+    * consumer (the histogram) can never apply a wrong default m and
+    * silently drop code columns. None when nothing is committed yet. One
     * quantizer per state dir (mixed m is not a supported state).
     */
-  private def persistedM(s: SparkSession, stateDir: String): Option[Int] = {
-    val batch = StreamState.committedIds(s, stateDir).lastOption
-      .map(id => s"$stateDir/codes/batch_id=$id")
-    val base = StreamState.compactedIds(s, stateDir).lastOption
-      .map(b => s"$stateDir/codes/base_id=$b")
-    (batch.toSeq ++ base.toSeq).view.flatMap { dir =>
-      scala.util.Try(
-        s.read.parquet(dir).schema.fieldNames.count(_.startsWith("code_"))
-      ).toOption.filter(_ > 0)
-    }.headOption
-  }
+  private def persistedM(s: SparkSession, stateDir: String): Option[Int] =
+    StreamState.dirs(s, stateDir, codesTable(s, stateDir, 0)).reverse.view
+      .flatMap { dir =>
+        scala.util.Try(
+          s.read.parquet(dir).schema.fieldNames.count(_.startsWith("code_"))
+        ).toOption.filter(_ > 0)
+      }.headOption
 
   // ---- CDC maintenance: inserts, deletes and re-inserts -------------
   //
@@ -134,24 +153,15 @@ object IndexStream {
   }
 
   /** The LIVE code table as of (strictly before) `upTo`: committed
-    * codes minus the rows a STRICTLY LATER tombstone kills — a
-    * same-batch tombstone does not kill the same batch's insert
-    * (delete-then-insert order within a batch). One anti-join on
-    * (vec_id, del_batch > src_batch); tombstone state never grows past
-    * the delete stream itself, and compaction resolves and drops both
-    * sides (see [[compactStateCdcResolve]]).
+    * codes minus the rows a STRICTLY LATER tombstone kills ([[live]]).
+    * Tombstone state never grows past the delete stream itself, and
+    * compaction resolves and drops both sides (see
+    * [[compactStateCdcResolve]]).
     */
   def liveCodes(s: SparkSession, stateDir: String, m: Int,
-      upTo: Long = Long.MaxValue): DataFrame = {
-    val codes = StreamState.readCommitted(
-      s, stateDir, "codes", codesSchema(m), upTo, partitioned = true)
-    val tombs = StreamState.readCommitted(
-      s, stateDir, "tombs", tombSchema, upTo)
-    codes.join(tombs,
-      codes("vec_id") === tombs("vec_id") &&
-        tombs("del_batch") > codes("src_batch"),
-      "left_anti")
-  }
+      upTo: Long = Long.MaxValue): DataFrame =
+    live(StreamState.read(s, stateDir, codesTable(s, stateDir, m), upTo),
+      StreamState.read(s, stateDir, Tombs, upTo))
 
   /** One CDC micro-batch of (vec_id, embedding, __op) rows. Inserts are
     * assigned against the frozen quantizers; deletes append tombstones.
@@ -208,17 +218,13 @@ object IndexStream {
     val blocked = liveCodes(s, stateDir, q.m, upTo = batchId)
       .select(col("vec_id"))
       .join(dels, Seq("vec_id"), "left_anti")
-    indexed.join(blocked, Seq("vec_id"), "left_anti")
-      .withColumn("src_batch", lit(batchId))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$stateDir/codes/batch_id=$batchId")
-    dels.withColumn("del_batch", lit(batchId))
-      .write.mode("overwrite").parquet(s"$stateDir/tombs/batch_id=$batchId")
-    StreamState.commitMarker(s, stateDir, batchId)
     // the auto valve RESOLVES: continuous maintenance should never let
     // state size track the delete history instead of the live set
-    StreamState.maybeCompact(s, stateDir, autoCompactEvery)(
-      compactStateCdcResolve(s, stateDir, q.m))
+    StreamState.commit(s, stateDir, batchId, autoCompactEvery)(
+      codesTable(s, stateDir, q.m) ->
+        indexed.join(blocked, Seq("vec_id"), "left_anti")
+          .withColumn("src_batch", lit(batchId)),
+      Tombs -> dels.withColumn("del_batch", lit(batchId)))
   }
 
   /** Continuous CDC maintenance over a streaming (vec_id, embedding,
@@ -226,12 +232,8 @@ object IndexStream {
     */
   def maintainCdc(emb: DataFrame, q: Quantizers, stateDir: String,
       checkpointDir: String, autoCompactEvery: Int = 16): StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatchCdc(batch, batchId, q, stateDir, autoCompactEvery)
-      }
-      .start()
+    Sinks.foreachBatch(emb, checkpointDir)(
+      processBatchCdc(_, _, q, stateDir, autoCompactEvery))
 
   /** RESOLVE-at-compaction — the tombstone GC a log-structured index
     * runs at merge time (Lucene segment merges, LSM compaction): the
@@ -247,26 +249,15 @@ object IndexStream {
     * delete history. Crash contract inherited from [[StreamState
     * .compact]] (base written first, marker last, torn fold invisible).
     * The tombstone horizon is the FOLD ID the compaction itself hands
-    * to the merge ([[StreamState.compactWith]]) — codes and tombs can
-    * never resolve against different horizons, even if another batch
-    * commits mid-compaction. `m` must match the persisted quantizer's
+    * to the codes merge — codes and tombs can never resolve against
+    * different horizons, even if another batch commits mid-compaction. `m` must match the persisted quantizer's
     * code-column count (`Quantizers.m`): a smaller m would silently
     * drop code columns from the base, which is permanent index
     * corruption.
     */
   def compactStateCdcResolve(s: SparkSession, stateDir: String,
       m: Int): Option[Long] =
-    StreamState.compactWith(s, stateDir, Seq(
-      ("codes", codesSchema(m), (codes: DataFrame, fold: Long) => {
-        val tombs = StreamState.readCommitted(
-          s, stateDir, "tombs", tombSchema, upTo = fold + 1)
-        codes.join(tombs,
-          codes("vec_id") === tombs("vec_id") &&
-            tombs("del_batch") > codes("src_batch"),
-          "left_anti")
-      }),
-      ("tombs", tombSchema, (t: DataFrame, _: Long) => t.limit(0))),
-      partitionCols = Map("codes" -> Seq("cell")))
+    StreamState.compact(s, stateDir, Seq(codesTable(s, stateDir, m), Tombs))
 
   // ---- Serving ------------------------------------------------------
 
@@ -332,7 +323,7 @@ object IndexStream {
 
   /** The active generation's state dir, if any rebuild ever swapped. */
   def currentRoot(s: SparkSession, indexRoot: String): Option[String] =
-    StreamState.markerIdsIn(s, s"$indexRoot/_current").lastOption
+    StreamState.markerIds(s, s"$indexRoot/_current").lastOption
       .map(genDir(indexRoot, _))
 
   private val quantizersSchema = StructType(Seq(
@@ -425,26 +416,23 @@ object IndexStream {
   def rebuildCdc(s: SparkSession, indexRoot: String, corpus: DataFrame,
       k: Int, iters: Int, m: Int, subDim: Int,
       encoding: Encoding.Kind = Encoding.Pq): Quantizers = {
-    val next = StreamState.markerIdsIn(s, s"$indexRoot/_current")
+    val next = StreamState.markerIds(s, s"$indexRoot/_current")
       .lastOption.getOrElse(-1L) + 1L
     val dir = genDir(indexRoot, next)
     val q = Encoding.train(encoding, corpus, KMeansOp.lloydCentroidsLocal(
       corpus, "vec_id", col("embedding"), k, iters), k, iters, m, subDim)
-    q.project(corpus.select(col("vec_id"), col("embedding")))
-      .withColumn("src_batch", lit(0L))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/codes/batch_id=0")
-    s.createDataFrame(s.sparkContext.emptyRDD[Row], tombSchema)
-      .write.mode("overwrite").parquet(s"$dir/tombs/batch_id=0")
     saveQuantizers(s, dir, q)
     // flag that batch 0 carries a REBUILT corpus, not a stream batch —
     // processBatchCdc refuses a fresh-checkpoint batchId=0 against it
     val flag = new org.apache.hadoop.fs.Path(s"$dir/_rebuilt")
     flag.getFileSystem(s.sparkContext.hadoopConfiguration)
       .create(flag, true).close()
-    StreamState.commitMarker(s, dir, 0L)
+    StreamState.commit(s, dir, 0L, autoCompactEvery = 0)(
+      codesTable(s, dir, q.m) -> q.project(corpus.select(col("vec_id"), col("embedding")))
+        .withColumn("src_batch", lit(0L)),
+      Tombs -> s.createDataFrame(s.sparkContext.emptyRDD[Row], tombSchema))
     // the atomic reader switch: _current marker LAST
-    StreamState.writeMarkerIn(s, s"$indexRoot/_current", next)
+    StreamState.writeMarker(s, s"$indexRoot/_current", next)
     q
   }
 }

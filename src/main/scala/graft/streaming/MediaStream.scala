@@ -40,13 +40,27 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * pass, one digest per row, one digest-keyed anti-join probing the
   * committed state (equi-join, never pairwise). State is (digest,
   * media_id) pairs in plain parquet — 48 B/row regardless of blob
-  * size — folded by [[StreamState.maybeCompact]] so reads stay
+  * size — folded by [[StreamState.commit]]'s valve so reads stay
   * O(base + few batch dirs) forever.
   */
 object MediaStream {
 
-  private val digestsSchema = StructType(Seq(
-    StructField("digest", StringType), StructField("media_id", LongType)))
+  /** Each digest's first keeper lives in exactly one committed
+    * partition (a replayed batch overwrites its own), so the merge is
+    * identity.
+    */
+  private val Digests = StreamState.Table("digests", StructType(Seq(
+    StructField("digest", StringType), StructField("media_id", LongType))))
+
+  /** A `binaryFile` FILE STREAM over `dir`. The file stream source
+    * requires an explicit schema; binaryFile's is fixed by the format.
+    */
+  private def binaryFileStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.format("binaryFile").schema(StructType(Seq(
+      StructField("path", StringType),
+      StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
+      StructField("length", LongType),
+      StructField("content", org.apache.spark.sql.types.BinaryType)))).load(dir)
 
   /** One micro-batch of canonical media rows (the [[Multimodal]]
     * schema). Exposed for direct testing like DedupStream.processBatch.
@@ -54,8 +68,7 @@ object MediaStream {
   def processBatch(batch: Dataset[Row], batchId: Long, stateDir: String,
       outDir: String, rejectDir: String, autoCompactEvery: Int = 0): Unit = {
     val ann = annotateMedia(batch.toDF())
-    quarantineRows(ann)
-      .write.mode("overwrite").parquet(s"$rejectDir/batch_id=$batchId")
+    Sinks.writeBatchIdempotent(quarantineRows(ann), batchId, rejectDir)
     dedupAndAppend(ann.filter(isWellFormed), batch.select(col("media_id")),
       batchId, stateDir, outDir, autoCompactEvery)
   }
@@ -107,18 +120,14 @@ object MediaStream {
     // supersede those by media_id (this batch's rows re-claim their
     // digests) so replay reproduces the original kept set instead of
     // dropping everything; the DedupStream anti-join discipline.
-    val existing = StreamState.readCommitted(s, stateDir, "digests", digestsSchema)
+    val existing = StreamState.read(s, stateDir, Digests)
       .join(batchIds, Seq("media_id"), "left_anti")
     val novel = firstInBatch
       .join(existing.select(col("digest")), Seq("digest"), "left_anti")
       .localCheckpoint() // one computation feeds corpus + state writes
-    novel.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    novel.select(col("digest"), col("media_id"))
-      .write.mode("overwrite").parquet(s"$stateDir/digests/batch_id=$batchId")
-    // marker LAST: a crash above leaves batchId uncommitted, its partial
-    // directories unread on restart
-    StreamState.commitMarker(s, stateDir, batchId)
-    StreamState.maybeCompact(s, stateDir, autoCompactEvery)(compactState(s, stateDir))
+    Sinks.writeBatchIdempotent(novel, batchId, outDir)
+    StreamState.commit(s, stateDir, batchId, autoCompactEvery)(
+      Digests -> novel.select(col("digest"), col("media_id")))
   }
 
   /** HEAD-GATED ingestion batch — the two-phase shape of
@@ -218,9 +227,9 @@ object MediaStream {
             .select(col("media_id"), col("modality"), col("meta"), col("path")),
           "path")
         .drop("path"))
-    quarantineRows(decided).unionByName(quarantineRows(tailDecided))
-      .unionByName(quarantineRows(redone))
-      .write.mode("overwrite").parquet(s"$rejectDir/batch_id=$batchId")
+    Sinks.writeBatchIdempotent(quarantineRows(decided)
+      .unionByName(quarantineRows(tailDecided))
+      .unionByName(quarantineRows(redone)), batchId, rejectDir)
     // phase 2: head- and tail-decided survivors swap the head slice for
     // the full blob; re-read survivors already carry theirs
     val decidedSurvivors = Multimodal.withFullBytes(
@@ -240,13 +249,9 @@ object MediaStream {
       stateDir, outDir, autoCompactEvery)
   }
 
-  /** Fold the committed digest state under one marker (identity merge:
-    * each digest's first keeper lives in exactly one committed
-    * partition — a replayed batch overwrites its own).
-    */
+  /** Fold the committed digest state under one marker. */
   def compactState(s: SparkSession, stateDir: String): Option[Long] =
-    StreamState.compact(s, stateDir, Seq(
-      ("digests", digestsSchema, (df: DataFrame) => df)))
+    StreamState.compact(s, stateDir, Seq(Digests))
 
   /** Start the ingestion stream over a streaming canonical media frame
     * (e.g. a file-source stream wrapped by [[Multimodal]]'s schema, or
@@ -257,12 +262,8 @@ object MediaStream {
   def dedupIngest(media: DataFrame, stateDir: String, outDir: String,
       rejectDir: String, checkpointDir: String,
       autoCompactEvery: Int = 16): StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch, batchId, stateDir, outDir, rejectDir, autoCompactEvery)
-      }
-      .start()
+    Sinks.foreachBatch(media, checkpointDir)(
+      processBatch(_, _, stateDir, outDir, rejectDir, autoCompactEvery))
 
   /** Watch a directory for newly arriving blob files (Spark's
     * `binaryFile` FILE STREAM source — exactly-once file discovery via
@@ -280,19 +281,9 @@ object MediaStream {
     */
   def watchDirectory(spark: SparkSession, dir: String, stateDir: String,
       outDir: String, rejectDir: String, checkpointDir: String,
-      autoCompactEvery: Int = 16): StreamingQuery = {
-    // the file STREAM source requires an explicit schema; binaryFile's
-    // is fixed by the format
-    val binaryFileSchema = StructType(Seq(
-      StructField("path", StringType),
-      StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
-      StructField("length", LongType),
-      StructField("content", org.apache.spark.sql.types.BinaryType)))
-    val files = spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema).load(dir)
-    dedupIngest(toCanonical(files), stateDir, outDir, rejectDir,
-      checkpointDir, autoCompactEvery)
-  }
+      autoCompactEvery: Int = 16): StreamingQuery =
+    dedupIngest(toCanonical(binaryFileStream(spark, dir)), stateDir, outDir,
+      rejectDir, checkpointDir, autoCompactEvery)
 
   /** (path, length, content) file rows → the canonical media schema;
     * modality is dispatched on file extension (reference
@@ -315,21 +306,8 @@ object MediaStream {
   def watchDirectoryHead(spark: SparkSession, dir: String, stateDir: String,
       outDir: String, rejectDir: String, checkpointDir: String,
       headBytes: Int = 65536, autoCompactEvery: Int = 16,
-      tailBytes: Int = 65536): StreamingQuery = {
-    val binaryFileSchema = StructType(Seq(
-      StructField("path", StringType),
-      StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
-      StructField("length", LongType),
-      StructField("content", org.apache.spark.sql.types.BinaryType)))
-    val paths = spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema).load(dir)
-      .select(col("path"), col("length"))
-    paths.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatchHead(batch, batchId, stateDir, outDir, rejectDir,
-          headBytes, autoCompactEvery, tailBytes)
-      }
-      .start()
-  }
+      tailBytes: Int = 65536): StreamingQuery =
+    Sinks.foreachBatch(binaryFileStream(spark, dir).select(col("path"), col("length")),
+      checkpointDir)(processBatchHead(_, _, stateDir, outDir, rejectDir,
+        headBytes, autoCompactEvery, tailBytes))
 }

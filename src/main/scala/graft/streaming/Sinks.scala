@@ -19,6 +19,17 @@ object Sinks {
   def writeBatchIdempotent(batch: Dataset[Row], batchId: Long, outDir: String): Unit =
     batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
 
+  /** Start a stream that hands each micro-batch and its checkpointed
+    * batch id to `process` — the one stream start of the streaming
+    * operators.
+    */
+  def foreachBatch(df: DataFrame, checkpointDir: String)
+      (process: (Dataset[Row], Long) => Unit): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(process)
+      .start()
+
   /** Start a stream writing each micro-batch to `outDir/batch_id=N`.
     * Readers see the whole result as one partitioned parquet table
     * (`spark.read.parquet(outDir)` with `batch_id` as a partition
@@ -26,10 +37,5 @@ object Sinks {
     */
   def idempotentParquet(df: DataFrame, outDir: String,
                         checkpointDir: String): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        writeBatchIdempotent(batch, batchId, outDir)
-      }
-      .start()
+    foreachBatch(df, checkpointDir)(writeBatchIdempotent(_, _, outDir))
 }

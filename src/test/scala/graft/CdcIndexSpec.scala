@@ -70,9 +70,8 @@ class CdcIndexSpec extends AnyFunSuite {
     */
   private def compactStateCdc(stateDir: String, m: Int): Option[Long] =
     StreamState.compact(spark, stateDir, Seq(
-      ("codes", IndexStream.codesSchema(m), (df: DataFrame) => df),
-      ("tombs", IndexStream.tombSchema, (df: DataFrame) => df)),
-      partitionCols = Map("codes" -> Seq("cell")))
+      StreamState.Table("codes", IndexStream.codesSchema(m), partitionBy = Seq("cell")),
+      StreamState.Table("tombs", IndexStream.tombSchema)))
 
   /** The active generation of an index root and its persisted
     * quantizers — what a restarted server loads before it searches.
@@ -276,10 +275,10 @@ class CdcIndexSpec extends AnyFunSuite {
     assert(servedAfter == servedBefore, "resolve changed search results")
     // physically GONE: zero tombstones anywhere, zero dead code rows —
     // total persisted rows equal the live set
-    assert(StreamState.readCommitted(spark, stateDir, "tombs", tombSchema)
+    assert(StreamState.read(spark, stateDir, StreamState.Table("tombs", tombSchema))
       .count() == 0L, "spent tombstones survived the resolve")
-    assert(StreamState.readCommitted(spark, stateDir, "codes", cdcSchema,
-        partitioned = true)
+    assert(StreamState.read(spark, stateDir,
+        StreamState.Table("codes", cdcSchema, partitionBy = Seq("cell")))
       .count() == liveBefore.size.toLong, "dead rows survived the resolve")
 
     // the lifecycle continues over the resolved base
@@ -880,5 +879,25 @@ class CdcIndexSpec extends AnyFunSuite {
       IndexStream.Quantizers(q.coarse, q.books, q.subDim,
         Encoding.Opq(Seq(0, 0, 1)))
     }
+  }
+
+  test("a rebuilt generation compacts: its quantizers dir is not a state " +
+    "table, and the resolving fold keeps the live rows") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cdc_gencompact").toString
+    val corpus = (0L until 8L).map { i =>
+      val c = if (i < 4) 0f else 100f
+      (i, Seq(c + i, c, c + 1f, c - i))
+    }.toDF("vec_id", "embedding")
+    IndexStream.rebuildCdc(spark, root, corpus, 2, 2, 2, 2)
+    val gen = IndexStream.currentRoot(spark, root).get
+    val q = IndexStream.loadQuantizers(spark, gen)
+    IndexStream.processBatchCdc(cdcDf(Seq((3L, Seq.empty[Float], "delete"))), 1L, q, gen)
+    IndexStream.processBatchCdc(
+      cdcDf(Seq((20L, Seq(1f, 0f, 1f, 0f), "insert"))), 2L, q, gen)
+    def live = IndexStream.liveCodes(spark, gen, q.m).collect().map(_.toString).sorted.toSeq
+    val before = live
+    assert(IndexStream.compactStateCdcResolve(spark, gen, q.m) == Some(1L))
+    assert(live == before)
+    assert(!before.exists(_.startsWith("[3,")) && before.exists(_.startsWith("[20,")))
   }
 }

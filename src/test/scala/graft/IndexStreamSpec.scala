@@ -286,8 +286,10 @@ class IndexStreamSpec extends AnyFunSuite {
       "rebuild on an unchanged corpus changed results")
     // torn rebuild: a generation directory WITHOUT the _current marker
     // is invisible, even with its own internal commit marker
-    tornWrite(s"$root/gen=99", 424242L, 0L)
-    StreamState.commitMarker(spark, s"$root/gen=99", 0L)
+    StreamState.commit(spark, s"$root/gen=99", 0L, autoCompactEvery = 0)(
+      StreamState.Table("codes", IndexStream.codesSchema(4)) ->
+        Seq((424242L, 0L, 0L, 0L, 0L, 0L, 0L)).toDF("vec_id", "cell",
+          "code_0", "code_1", "code_2", "code_3", "src_batch"))
     assert(IndexStream.currentRoot(spark, root).get.endsWith("gen=1"),
       "an unswapped generation must not become current")
     assert(searchActive(root, qe) == batch, "torn rebuild leaked into serving")

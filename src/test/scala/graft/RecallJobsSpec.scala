@@ -1,0 +1,51 @@
+package graft
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Building a single-probe recall monitor collects its probe once: the
+  * served side and the exact side share the collected embedding. With
+  * the memos warm, the only jobs a `q_recall_*` DataFrame build starts
+  * are its driver-side reads, counted here by a SparkListener.
+  */
+class RecallJobsSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  test("each q_recall_* build starts exactly its pinned job count (one " +
+    "probe collect for both sides)") {
+    val d = TestSpark.sf0001
+    val recalls = queries.SemanticQ.queries.filter(_._1.startsWith("q_recall_"))
+    recalls.values.foreach(_(spark, d)) // warm the memos and the index dirs
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val got = try recalls.toSeq.sortBy(_._1).map { case (name, build) =>
+      ListenerBusDrain.drain(spark.sparkContext)
+      val before = jobs.get()
+      build(spark, d)
+      ListenerBusDrain.drain(spark.sparkContext)
+      name -> (jobs.get() - before)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(got == Seq(
+      "q_recall_cdc" -> 3,
+      "q_recall_cdc_opq" -> 3,
+      "q_recall_cdc_sq8" -> 3,
+      "q_recall_cdc_sq8dim" -> 3,
+      "q_recall_ivf" -> 4,
+      "q_recall_ivf_sq8" -> 4,
+      "q_recall_ivfpq" -> 4,
+      "q_recall_ivfpq_batch" -> 5,
+      "q_recall_ivfpq_rerank" -> 5,
+      "q_recall_ivfpq_res" -> 4,
+      "q_recall_opq" -> 4,
+      "q_recall_pq" -> 4,
+      "q_recall_shortlist_ann" -> 6,
+      "q_recall_sq8" -> 4,
+      "q_recall_sq8_dim" -> 4,
+      "q_recall_sq8_dim_part" -> 3,
+    ), got.map { case (n, c) => s"""    "$n" -> $c,""" }.mkString("\n"))
+  }
+}

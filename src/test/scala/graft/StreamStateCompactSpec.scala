@@ -90,23 +90,22 @@ class StreamStateCompactSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("c_w",
         org.apache.spark.sql.types.LongType)))
+    val counts = streaming.StreamState.Table("counts", schema,
+      (df, _) => df.groupBy("w").agg(sum("c_w").as("c_w")))
     (0L to 3L).foreach { b =>
-      Seq((s"w$b", b + 1)).toDF("w", "c_w")
-        .write.parquet(s"$stateDir/counts/batch_id=$b")
-      streaming.StreamState.commitMarker(spark, stateDir, b)
+      streaming.StreamState.commit(spark, stateDir, b, autoCompactEvery = 0)(
+        counts -> Seq((s"w$b", b + 1)).toDF("w", "c_w"))
     }
-    val merge = (df: org.apache.spark.sql.DataFrame) =>
-      df.groupBy("w").agg(sum("c_w").as("c_w"))
     // The reader lists committed = {0,1,2,3}; the hook then runs a full
     // compaction (base 2 appears, batch dirs 0..2 and their markers are
     // DELETED) before the reader lists the compacted floor. The old
     // (floor-first) ordering would have floor = none and batches {3}
     // only — batches 0..2 silently gone. Committed-first must read
     // base 2 + batch 3 = every row.
-    val got = streaming.StreamState.readCommittedWith(
-      spark, stateDir, "counts", schema, Long.MaxValue,
+    val got = streaming.StreamState.readWith(
+      spark, stateDir, counts, Long.MaxValue,
       () => assert(streaming.StreamState.compact(spark, stateDir,
-        Seq(("counts", schema, merge))) == Some(2L)))
+        Seq(counts)) == Some(2L)))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("w0" -> 1L, "w1" -> 2L, "w2" -> 3L, "w3" -> 4L),
       s"concurrent compaction dropped state: $got")
@@ -163,12 +162,12 @@ class StreamStateCompactSpec extends AnyFunSuite {
     assert(leaves.count(_.startsWith("base_id")) == 1, s"leaves: ${leaves.toSeq}")
     assert(leaves.count(_.startsWith("batch_id")) <= 17, s"leaves: ${leaves.toSeq}")
     // and the committed state still sums to EXACTLY the 50 batches' counts
-    val got = streaming.StreamState.readCommitted(spark, stateDir, "counts",
-        org.apache.spark.sql.types.StructType(Seq(
+    val got = streaming.StreamState.read(spark, stateDir,
+        streaming.StreamState.Table("counts", org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("w",
             org.apache.spark.sql.types.StringType),
           org.apache.spark.sql.types.StructField("c_w",
-            org.apache.spark.sql.types.LongType))))
+            org.apache.spark.sql.types.LongType)))))
       .groupBy(col("w")).agg(sum(col("c_w")).as("c"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == expected.toMap, "compacted state diverged from true counts")

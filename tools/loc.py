@@ -15,7 +15,14 @@ Prints, one `name: value` per line:
     ATOMIC_MOVE, modules naming the `_SUCCESS` marker, `aggregate(zip_with`
     folds, `row_number` tails in the ANN engine, and `.collect()` sites
     not read through a `limit(...)` on the same line (the bounded helper
-    collects through one).
+    collects through one);
+  - stream_state_code: the non-comment lines of the streaming state
+    family (StreamState, DedupStream, DriftStream, MediaStream,
+    IndexStream and Sinks);
+  - batch_dir_literals: `/batch_id=` and `/base_id=` literals in src/main
+    code outside StreamState and Sinks (the modules that own the state
+    and output layouts);
+  - stream_starts: `writeStream` occurrences in src/main code.
 """
 import os
 import re
@@ -29,6 +36,11 @@ ENGINE = [
     "src/main/scala/graft/operators/Encoding.scala",
 ]
 ORACLE_MARK = "// ---- DuckDB oracle"
+STREAMING = "src/main/scala/graft/streaming/"
+STREAM_STATE = [STREAMING + n + ".scala" for n in
+                ("StreamState", "DedupStream", "DriftStream", "MediaStream",
+                 "IndexStream", "Sinks")]
+LAYOUT_OWNERS = {STREAMING + "StreamState.scala", STREAMING + "Sinks.scala"}
 
 
 def tracked(root, prefix):
@@ -105,6 +117,15 @@ def main():
         1 for ls in code.values() for l in ls
         for m in re.finditer(r"\.collect\(\)", l)
         if not re.search(r"\.limit\([^)]*\)\s*$", l[:m.start()]))
+    counts["stream_state_code"] = sum(
+        len(code[p]) for p in STREAM_STATE if p in code)
+    for p in STREAM_STATE:
+        if p in code:
+            # indented past the engine breakdown, so IndexStream gets its own key
+            counts["    " + os.path.basename(p)[:-len(".scala")]] = len(code[p])
+    counts["batch_dir_literals"] = occurs(
+        r"/(batch_id|base_id)=", [p for p in main_files if p not in LAYOUT_OWNERS])
+    counts["stream_starts"] = occurs(r"\bwriteStream\b", main_files)
     for k, v in counts.items():
         print(f"{k}: {v}")
 
