@@ -40,24 +40,17 @@ object Media {
   def mediaIngestHead(s: SparkSession, d: String): DataFrame =
     ingestRows(Multimodal.fromBinaryFilesHead(s, MediaCorpus.ensure()))
 
+  /** A media row's file name: the last segment of its `meta` path. */
+  private val fileName =
+    regexp_extract(element_at(col("meta"), "path"), "[^/]+$", 0)
+
   /** Shared metadata-projection pipeline over any canonical media scan. */
-  private[graft] def ingestRows(base: DataFrame): DataFrame = {
-    // withAudioMeta and withVideoMeta both emit `duration_ms` (audio
-    // clip length / movie length) — stash the audio one before the
-    // video pass would overwrite it, then coalesce per row
-    val ann = Multimodal.withVideoMeta(
-      Multimodal.withAudioMeta(Multimodal.withImageMeta(base))
-        .withColumnRenamed("duration_ms", "audio_duration_ms"))
-    ann.select(
-        regexp_extract(element_at(col("meta"), "path"), "[^/]+$", 0).as("file_name"),
-        col("modality").as("kind"),
-        coalesce(col("img_format"), col("audio_format"), col("video_format"))
-          .as("format"),
-        col("width"), col("height"),
-        col("sample_rate"), col("channels"),
-        coalesce(col("audio_duration_ms"), col("duration_ms")).as("duration_ms"))
+  private[graft] def ingestRows(base: DataFrame): DataFrame =
+    Multimodal.annotate(base)
+      .select(fileName.as("file_name"), col("modality").as("kind"),
+        col("format"), col("width"), col("height"),
+        col("sample_rate"), col("channels"), col("duration_ms"))
       .orderBy(col("file_name").asc)
-  }
 
   /** q_media_features: the batched DECODE plumbing (mapPartitions over
     * opaque bytes — `Multimodal.extractFeatures`) driver-checked, not
@@ -71,8 +64,7 @@ object Media {
     */
   def mediaFeatures(s: SparkSession, d: String): DataFrame = {
     val base = Multimodal.fromBinaryFiles(s, MediaCorpus.ensure())
-      .withColumn("file_name",
-        regexp_extract(element_at(col("meta"), "path"), "[^/]+$", 0))
+      .withColumn("file_name", fileName)
     // file_name rides through the decode — joining it back would
     // re-execute the blob scan (see dedupAndFeatures)
     Multimodal.extractFeaturesCarrying(base, dim = 8, carry = Seq("file_name"))
@@ -97,8 +89,7 @@ object Media {
           map_concat(col("meta"), map(lit("n_frames"), lit("9"))))
           .otherwise(col("meta")))
     Multimodal.sampleFrames(
-        base.withColumn("file_name",
-          regexp_extract(element_at(col("meta"), "path"), "[^/]+$", 0)),
+        base.withColumn("file_name", fileName),
         everyNth = 3, dim = 4, carry = Seq("file_name"))
       .select(col("file_name"), col("frame_no"),
         posexplode(col("features")).as(Seq("dim_idx", "f")))
@@ -155,111 +146,39 @@ object Media {
     *
     * Gate decisions are exact even for tail-anchored metadata: rows
     * that are head-UNDECIDABLE (bigger than the cap and unparsed-from-
-    * head, or Opus whose duration lives in the last page) take a full
-    * re-read BEFORE gating — see [[curateRowsHead]]. That set is
-    * exactly the files whose bytes must be read to decide them.
+    * head, or Opus whose duration lives in the last page) are decided
+    * from a bounded tail read, or a full read where the two windows
+    * cannot decide them, BEFORE gating — see [[curateRowsHead]].
     */
   def mediaCurateHead(s: SparkSession, d: String): DataFrame =
     curateRowsHead(s, MediaCorpus.ensure())
 
-  /** The two-phase curate dataflow over any directory glob. Gate
-    * decisions are EXACT for any corpus, not just under-cap files:
-    * rows whose metadata is head-UNDECIDABLE — the file is larger than
-    * the cap AND its extension maps to a real modality AND either no
-    * container parsed from the head (trailing-moov MP4, SOF-past-EXIF
-    * JPEG, fmt-chunk-past-cap WAV, corrupt) or the format is Opus
-    * (duration lives in the LAST page's granule, so a head parse
-    * UNDER-reports it) — take a bounded TAIL read next, and the
-    * two-window parsers ([[Multimodal.videoMetaHeadTail]],
-    * [[Multimodal.opusMetaHeadTail]]) decide tail-anchored A/V
-    * metadata exactly at ≤(head+tail) bytes per file: a trailing-moov
-    * MP4's box walk skips the unread gap by size fields, an Opus
-    * duration re-syncs on the validated last page. Three-way outcome:
-    * decided-parsed rows gate on exact metadata; decided-unparseable
-    * rows gate out with NO further I/O (a full parse fails
-    * identically); only genuinely window-undecidable rows (mid-file
-    * moov, non-Ogg audio, JPEG SOF past the cap) pay the full re-read.
-    * Full-blob reads are therefore exactly: gate survivors (digest +
-    * features need whole bytes regardless) plus the window-undecidable
-    * residue — never a multi-GB blob whose gate decision lived in its
-    * first or last 64 KiB.
+  /** The two-phase curate dataflow over any directory glob: the
+    * bounded head scan is annotated, [[Multimodal.decideHeadTail]]
+    * decides every row's metadata exactly (a bounded tail read for the
+    * head-undecidable rows, a full read only for the window-undecidable
+    * residue), the gates run on that, and
+    * [[Multimodal.withSurvivorBytes]] reads the survivors' whole blobs
+    * for the digest and features. Full-blob reads are therefore
+    * exactly: gate survivors (digest + features need whole bytes
+    * regardless) plus the window-undecidable residue — never a
+    * multi-GB blob whose gate decision lived in its first or last
+    * 64 KiB.
     */
   private[graft] def curateRowsHead(s: SparkSession, glob: String,
       headBytes: Int = 65536, tailBytes: Int = 65536): DataFrame = {
-    // ONE bounded head scan, checkpointed: the decided path, the
-    // undecidable filter, and the tail branch all read the cached
-    // head-annotated rows instead of re-scanning the source — the
-    // empty-undecidable tail branch costs one near-free job over
-    // cached rows (zero blob I/O) rather than a second full head scan
-    // (the r16 +0.26 s). Memory shape is bounded by construction:
-    // ≤ headBytes per file, MEMORY_AND_DISK, freed when the frame is
-    // dereferenced — at the 100 TB design point this is "read each
-    // header once per curation pass", the minimum any two-phase gate
-    // pays.
-    val annHead = annotateMeta(
-        Multimodal.fromBinaryFilesHead(s, glob, headBytes))
-      .localCheckpoint()
-    val fileLen = element_at(col("meta"), "length").cast("long")
-    val undecidable = fileLen > headBytes && col("modality") =!= "unknown" &&
-      (col("format").isNull || col("format") === "opus")
-    // head-decided rows: gate on head metadata, survivors re-read in
-    // full for the whole-blob stages
-    val decidedSurvivors = Multimodal.withFullBytes(
-        gateAnnotated(annHead.filter(!undecidable)).select(
-          col("media_id"), element_at(col("meta"), "path").as("path"),
-          col("file_name"), col("modality"), col("format")))
-      .drop("path")
-    // undecidable rows: bounded tail read + two-window decision off
-    // the CACHED head rows — no second head scan of the source (the
-    // r16 shape re-scanned every head here, +0.26 s even when the
-    // undecidable set was empty). Checkpointed so the (small)
-    // undecidable set pays its tail reads once across the
-    // decided/residual consumers; on an all-decidable corpus this job
-    // filters cached rows and reads zero blob bytes.
-    val htUdf = udf(Multimodal.headTailAvMeta _)
-    val withTail = Multimodal.withTailBytes(
-        annHead.filter(undecidable)
-          .withColumn("path", element_at(col("meta"), "path")),
-        "path", tailBytes)
-      .withColumn("ht",
-        htUdf(col("modality"), col("bytes"), col("tail_bytes"), fileLen))
-      .localCheckpoint()
-    val tailDecided = withTail.filter(col("ht").isNotNull)
-      .withColumn("format", col("ht._2"))
-      .withColumn("dur", when(col("ht._1"), col("ht._5")))
-    val tailSurvivors = Multimodal.withFullBytes(
-        gateAnnotated(tailDecided).select(
-          col("media_id"), col("path"), col("file_name"), col("modality"),
-          col("format")))
-      .drop("path")
-    // window-undecidable residue: full re-read FIRST, re-annotate from
-    // exact bytes, then gate — survivors already carry their full bytes
-    val reAnnotated = annotateMeta(
-      Multimodal.withFullBytes(
-          withTail.filter(col("ht").isNull)
-            .select(col("media_id"), col("modality"), col("meta"), col("path")),
-          "path")
-        .drop("path"))
-    val rereadSurvivors = gateAnnotated(reAnnotated)
-      .select(col("media_id"), col("file_name"), col("modality"),
-        col("format"), col("bytes"))
-    dedupAndFeatures(decidedSurvivors
-      .unionByName(tailSurvivors)
-      .unionByName(rereadSurvivors))
+    val decided = Multimodal.decideHeadTail(
+      Multimodal.annotate(Multimodal.fromBinaryFilesHead(s, glob, headBytes)),
+      headBytes, tailBytes)
+    dedupAndFeatures(Multimodal.withSurvivorBytes(gateAnnotated(decided))
+      .withColumn("file_name", fileName))
   }
 
   /** Typed-metadata annotation over any canonical media scan
-    * (file_name, format, dur columns added; no filtering).
+    * ([[Multimodal.annotate]] plus `file_name`; no filtering).
     */
   private[graft] def annotateMeta(base: DataFrame): DataFrame =
-    Multimodal.withVideoMeta(
-      Multimodal.withAudioMeta(Multimodal.withImageMeta(base))
-        .withColumnRenamed("duration_ms", "audio_duration_ms"))
-      .withColumn("file_name",
-        regexp_extract(element_at(col("meta"), "path"), "[^/]+$", 0))
-      .withColumn("format",
-        coalesce(col("img_format"), col("audio_format"), col("video_format")))
-      .withColumn("dur", coalesce(col("audio_duration_ms"), col("duration_ms")))
+    Multimodal.annotate(base).withColumn("file_name", fileName)
 
   /** The hygiene/size gates over annotated rows. */
   private[graft] def gateAnnotated(ann: DataFrame): DataFrame =
@@ -267,7 +186,7 @@ object Media {
       col("format").isNotNull && col("modality") =!= "unknown" &&
         (col("modality") =!= "image" ||
           col("width").cast("long") * col("height") >= 4096L) &&
-        (!col("modality").isin("audio", "video") || col("dur") >= 1000L))
+        (!col("modality").isin("audio", "video") || col("duration_ms") >= 1000L))
 
   /** Stage 1 of the curate dataflow: annotation + gates in one pass —
     * valid whenever the scanned bytes decide the metadata exactly (a

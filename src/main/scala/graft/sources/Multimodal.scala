@@ -37,16 +37,6 @@ object Multimodal {
       mediaSchema)
   }
 
-  /** Every extension the modality dispatch maps to a real modality —
-    * the METADATA-ONLY precondition for "could any row be
-    * head-undecidable?": undecidability requires a known-modality
-    * extension AND length over the head cap, both readable from the
-    * listing alone. Curation paths test this before building their
-    * tail-read branch so an all-under-cap batch never pays it.
-    */
-  val mediaExtRe: String =
-    "(?i)\\.(png|jpe?g|gif|bmp|webp|wav|mp3|flac|ogg|opus|mp4|avi|mkv|webm)$"
-
   /** (path, length, <bytesCol>) file rows → the canonical media schema
     * (media_id, modality, bytes, meta); modality is dispatched on file
     * extension (reference format-dispatch analog, `utils.py:12-19`).
@@ -94,9 +84,9 @@ object Multimodal {
     * trailing-moov MP4 parses to NULL. Front-loaded formats (PNG/JPEG/
     * GIF/BMP/WEBP dims, WAV/FLAC headers, faststart MP4) are exact. A
     * production curation gate on clip duration therefore decides
-    * head-undecidable rows from a bounded TAIL read next — the
-    * two-window deciders [[videoMetaHeadTail]]/[[opusMetaHeadTail]]
-    * (as `Media.curateRowsHead` does) — and full-reads only the
+    * head-undecidable rows from a bounded TAIL read next —
+    * [[decideHeadTail]], which `Media.curateRowsHead` and
+    * `MediaStream.processBatchHead` call — and full-reads only the
     * window-undecidable residue.
     */
   def fromBinaryFilesHead(spark: SparkSession, glob: String,
@@ -317,92 +307,67 @@ object Multimodal {
     * (different serial), and taking whichever page happens to end last
     * would read some other stream's clock. A headers-only file (no audio
     * pages yet) yields duration 0; rate 0 ("unknown" per RFC 7845)
-    * returns None like the WAV/FLAC degenerate-rate paths.
+    * returns None like the WAV/FLAC degenerate-rate paths. This is
+    * [[opusMetaHeadTail]] over a window that holds the whole file.
     */
-  def opusMeta(bytes: Array[Byte]): Option[(String, Int, Int, Long)] = {
-    if (bytes == null || bytes.length < 47) return None
-    def u8(i: Int) = bytes(i) & 0xFF
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le32u(i: Int): Long =
-      (0 until 4).map(k => u8(i + k).toLong << (8 * k)).reduce(_ | _)
-    def le64(i: Int): Long =
-      (0 until 8).map(k => u8(i + k).toLong << (8 * k)).reduce(_ | _)
-    def pageAt(p: Int): Boolean =
-      p + 27 <= bytes.length && bytes(p) == 'O' && bytes(p + 1) == 'g' &&
-        bytes(p + 2) == 'g' && bytes(p + 3) == 'S' && u8(p + 4) == 0
-    if (!pageAt(0)) return None
-    val body = 27 + u8(26) // first packet starts after the segment table
-    if (body + 19 > bytes.length) return None
-    if (new String(bytes, body, 8, java.nio.charset.StandardCharsets.ISO_8859_1)
-        != "OpusHead") return None
-    // RFC 7845 §5.1: reject if the version's upper nibble isn't 0 — the
-    // field layout below is only defined for the v1 family.
-    if ((u8(body + 8) >> 4) != 0) return None
-    val channels = u8(body + 9)
-    val preSkip = le16(body + 10)
-    val inputRate = le16(body + 12) | (le16(body + 14) << 16)
-    // walk pages via segment-table lengths; keep the last valid granule
-    // (-1 marks a page where no packet completes — skip those) of the
-    // Opus stream identified by page 0's serial (bytes 14-17)
-    val serial = le32u(14)
-    var p = 0
-    var granule = -1L
-    var ok = true
-    while (ok && pageAt(p)) {
-      val ns = u8(p + 26)
-      if (p + 27 + ns > bytes.length) ok = false
-      else {
-        val g = le64(p + 6)
-        if (g >= 0 && le32u(p + 14) == serial) granule = g
-        var bodyLen = 0
-        for (k <- 0 until ns) bodyLen += u8(p + 27 + k)
-        p += 27 + ns + bodyLen
-      }
-    }
-    if (channels <= 0 || inputRate <= 0 || granule < 0) None
-    else Some(("opus", inputRate, channels,
-      math.max(0L, granule - preSkip) * 1000L / 48000L))
-  }
+  def opusMeta(bytes: Array[Byte]): Option[(String, Int, Int, Long)] =
+    if (bytes == null) None
+    else opusMetaHeadTail(bytes, null, bytes.length).flatten
 
   /** REAL video container metadata (no codec needed): ISO BMFF / MP4 box
     * walk to moov → mvhd, yielding (format, duration_ms) from the
     * movie-header timescale + duration (both mvhd v0 and v1 layouts).
-    * Completes the image/audio/video metadata family.
+    * Completes the image/audio/video metadata family. This is
+    * [[videoMetaHeadTail]] over a window that holds the whole file.
     */
-  def videoMeta(bytes: Array[Byte]): Option[(String, Long)] = {
-    if (bytes == null || bytes.length < 16) return None
-    def u8(i: Int) = bytes(i) & 0xFF
-    def be32(i: Int): Long = (u8(i).toLong << 24) | (u8(i + 1) << 16) |
-      (u8(i + 2) << 8) | u8(i + 3)
-    def be64(i: Int): Long = (be32(i) << 32) | be32(i + 4)
-    def boxType(i: Int) = new String(bytes, i + 4, 4,
-      java.nio.charset.StandardCharsets.ISO_8859_1)
-    if (boxType(0) != "ftyp") return None
-    // find a box's (payloadStart, payloadEnd) among siblings in [from, end)
-    def findBox(from: Int, end: Int, name: String): Option[(Int, Int)] = {
-      var i = from
-      while (i + 8 <= end) {
-        var size = be32(i)
-        var hdr = 8
-        if (size == 1 && i + 16 <= end) { size = be64(i + 8); hdr = 16 }
-        else if (size == 0) size = (end - i).toLong
-        if (size < hdr || size > end - i) return None
-        if (boxType(i) == name) return Some((i + hdr, i + size.toInt))
-        i += size.toInt
+  def videoMeta(bytes: Array[Byte]): Option[(String, Long)] =
+    if (bytes == null) None
+    else videoMetaHeadTail(bytes, null, bytes.length).flatten
+
+  /** A file of `len` bytes seen through a (head, tail) window pair. A
+    * byte inside a window reads as its value; a byte in the unread gap
+    * throws [[Window.InGap]] (a full read might decide otherwise) and a
+    * position past EOF throws [[Window.PastEof]] (no read can parse
+    * it). A window over the whole file has no gap, so the parsers below
+    * are their own full-file parsers.
+    */
+  private final class Window(head: Array[Byte], tail: Array[Byte], val len: Long) {
+    private val h = if (head == null) Array.emptyByteArray else head
+    private val t = if (tail == null) Array.emptyByteArray else tail
+    val tailStart: Long = len - t.length
+    def u8(i: Long): Int =
+      if (i < 0 || i >= len) throw Window.PastEof
+      else if (i < h.length) h(i.toInt) & 0xFF
+      else if (i >= tailStart) t((i - tailStart).toInt) & 0xFF
+      else throw Window.InGap
+    /** `n` bytes at `i` as one unsigned (n < 8) or raw 64-bit integer. */
+    def be(i: Long, n: Int): Long = {
+      var v = 0L; var k = 0
+      while (k < n) { v = (v << 8) | u8(i + k); k += 1 }
+      v
+    }
+    def le(i: Long, n: Int): Long = {
+      var v = 0L; var k = n - 1
+      while (k >= 0) { v = (v << 8) | u8(i + k); k -= 1 }
+      v
+    }
+    def ascii(i: Long, n: Int): String =
+      (0 until n).map(k => u8(i + k).toChar).mkString
+  }
+
+  private object Window {
+    object InGap extends scala.util.control.ControlThrowable
+    object PastEof extends scala.util.control.ControlThrowable
+
+    /** Three-way outcome of `parse` over `w`: `Some(result)` when it
+      * read only window bytes, `Some(None)` when it needed a byte past
+      * EOF, `None` when it needed a byte of the unread gap.
+      */
+    def decide[A](w: Window)(parse: Window => Option[A]): Option[Option[A]] =
+      try Some(parse(w)) catch {
+        case InGap => None
+        case PastEof => Some(None)
       }
-      None
-    }
-    for {
-      moov <- findBox(0, bytes.length, "moov")
-      mvhd <- findBox(moov._1, moov._2, "mvhd")
-      v = u8(mvhd._1)
-      if mvhd._2 - mvhd._1 >= (if (v == 1) 32 else 20)
-      timescale = if (v == 1) be32(mvhd._1 + 20) else be32(mvhd._1 + 12)
-      if timescale > 0
-    } yield {
-      val duration = if (v == 1) be64(mvhd._1 + 24) else be32(mvhd._1 + 16)
-      ("mp4", duration * 1000L / timescale)
-    }
   }
 
   /** [[videoMeta]] over a bounded (head, tail) WINDOW PAIR instead of
@@ -415,8 +380,8 @@ object Multimodal {
     *
     * Three-way outcome:
     *  - `Some(Some((format, duration_ms)))` — decided: parsed; the
-    *    values are IDENTICAL to a full-read [[videoMeta]] (same header
-    *    bytes, same arithmetic);
+    *    values are IDENTICAL to a full-read [[videoMeta]] (same walk
+    *    over the same header bytes);
     *  - `Some(None)` — decided: a full read would ALSO fail to parse
     *    (no leading `ftyp`, a malformed size field visible in-window,
     *    a completed walk with no moov/mvhd) — the caller may gate or
@@ -426,92 +391,58 @@ object Multimodal {
     *    read.
     */
   def videoMetaHeadTail(head: Array[Byte], tail: Array[Byte],
-      fileLen: Long): Option[Option[(String, Long)]] = {
-    if (head == null || fileLen < 16) return Some(None)
-    val t = if (tail == null) Array.emptyByteArray else tail
-    val tailStart = fileLen - t.length
-    def u8(i: Long): Int =
-      if (i < 0 || i >= fileLen) -1
-      else if (i < head.length) head(i.toInt) & 0xFF
-      else if (i >= tailStart) t((i - tailStart).toInt) & 0xFF
-      else -1 // the unread gap
-    def be32(i: Long): Long = {
-      var v = 0L; var k = 0
-      while (k < 4) {
-        val b = u8(i + k); if (b < 0) return Long.MinValue
-        v = (v << 8) | b; k += 1
-      }
-      v
-    }
-    def be64(i: Long): Long = {
-      val hi = be32(i); val lo = be32(i + 4)
-      if (hi == Long.MinValue || lo == Long.MinValue) Long.MinValue
-      else (hi << 32) | lo
-    }
-    def boxType(i: Long): String = {
-      val cs = (0 until 4).map(k => u8(i + 4 + k))
-      if (cs.exists(_ < 0)) null else cs.map(_.toChar).mkString
-    }
-    val t0 = boxType(0)
-    if (t0 == null) return None
-    if (t0 != "ftyp") return Some(None) // ftyp is mandatory-first; decided
-    // walk siblings in [from, end): Right(found/absent) vs Left(gap)
-    def findBox(from: Long, end: Long, name: String)
-        : Either[Unit, Option[(Long, Long)]] = {
+      fileLen: Long): Option[Option[(String, Long)]] =
+    if (head == null || fileLen < 16) Some(None)
+    else Window.decide(new Window(head, tail, fileLen))(mp4Meta)
+
+  private def mp4Meta(w: Window): Option[(String, Long)] = {
+    // find a box's (payloadStart, payloadEnd) among siblings in [from, end)
+    def findBox(from: Long, end: Long, name: String): Option[(Long, Long)] = {
       var i = from
       while (i + 8 <= end) {
-        val sz32 = be32(i)
-        if (sz32 == Long.MinValue) return Left(())
-        var size = sz32
+        var size = w.be(i, 4)
         var hdr = 8L
-        if (size == 1 && i + 16 <= end) {
-          val s64 = be64(i + 8)
-          if (s64 == Long.MinValue) return Left(())
-          size = s64; hdr = 16
-        } else if (size == 0) size = end - i
-        if (size < hdr || size > end - i) return Right(None) // malformed: decided
-        val bt = boxType(i)
-        if (bt == null) return Left(())
-        if (bt == name) return Right(Some((i + hdr, i + size)))
+        if (size == 1 && i + 16 <= end) { size = w.be(i + 8, 8); hdr = 16 }
+        else if (size == 0) size = end - i
+        if (size < hdr || size > end - i) return None
+        if (w.ascii(i + 4, 4) == name) return Some((i + hdr, i + size))
         i += size
       }
-      Right(None)
+      None
     }
-    findBox(0, fileLen, "moov") match {
-      case Left(()) => None
-      case Right(None) => Some(None)
-      case Right(Some((ms, me))) => findBox(ms, me, "mvhd") match {
-        case Left(()) => None
-        case Right(None) => Some(None)
-        case Right(Some((s, e))) =>
-          val v = u8(s)
-          if (v < 0) return None
-          if (e - s < (if (v == 1) 32 else 20)) return Some(None)
-          val timescale = if (v == 1) be32(s + 20) else be32(s + 12)
-          if (timescale == Long.MinValue) return None
-          if (timescale <= 0) return Some(None)
-          val duration = if (v == 1) be64(s + 24) else be32(s + 16)
-          if (duration == Long.MinValue) return None
-          Some(Some(("mp4", duration * 1000L / timescale)))
-      }
+    if (w.ascii(4, 4) != "ftyp") return None
+    for {
+      (ms, me) <- findBox(0, w.len, "moov")
+      (s, e) <- findBox(ms, me, "mvhd")
+      if e - s >= 20
+      v = w.u8(s)
+      if v != 1 || e - s >= 32
+      timescale = if (v == 1) w.be(s + 20, 4) else w.be(s + 12, 4)
+      if timescale > 0
+    } yield {
+      val duration = if (v == 1) w.be(s + 24, 8) else w.be(s + 16, 4)
+      ("mp4", duration * 1000L / timescale)
     }
   }
 
   /** Ogg/Opus over a bounded (head, tail) window pair: the OpusHead
     * fields (rate, channels, pre-skip, bitstream serial) are
-    * front-loaded in the head; the duration granule lives in the LAST
-    * page, inside the tail. The tail cannot be walked forward from the
-    * stream start (the window usually opens mid-page), so the last
-    * page is recovered by VALIDATED re-synchronization: the earliest
-    * offset in the tail from which a forward segment-table walk —
-    * every page bearing the "OggS" capture pattern and stream-
-    * structure version 0 — lands EXACTLY on end-of-file. Within that
-    * chain, the last non-negative granule of the serial-matching
-    * pages is the same value the full-file walk keeps. If no offset
-    * validates (truncated final page, no serial-matching granule in
-    * the window, a multiplexed stream whose matching pages end before
-    * the tail), the outcome is `None` and the caller falls back to a
-    * full read — bounded reads never trade correctness.
+    * front-loaded in page 0, and the page walk runs forward from page 0
+    * through the visible bytes exactly as [[opusMeta]] does — a walk
+    * that stops at a visible byte (EOF, or a non-page where the next
+    * page should start) decides the same value the full walk does.
+    * Only when the next page header lies in the unread gap does the
+    * walk hand over to VALIDATED re-synchronization in the tail: the
+    * earliest tail offset from which a forward walk — every page
+    * bearing the "OggS" capture pattern and stream-structure version
+    * 0 — lands EXACTLY on end-of-file, keeping that chain's last
+    * non-negative granule of page 0's serial. That hand-over trusts
+    * the unread gap to hold well-formed pages: junk inside the gap,
+    * which ends the full walk early, is out of the window's sight. If
+    * no offset validates (truncated final page, no serial-matching
+    * granule in the window, a multiplexed stream whose matching pages
+    * end before the tail), the outcome is `None` and the caller falls
+    * back to a full read.
     *
     * Same three-way contract as [[videoMetaHeadTail]]; only heads that
     * START with an Ogg capture pattern are decided here (a RIFF/WAVE
@@ -519,66 +450,61 @@ object Multimodal {
     * full bytes, so non-Ogg audio stays undecidable → full read).
     */
   def opusMetaHeadTail(head: Array[Byte], tail: Array[Byte],
-      fileLen: Long): Option[Option[(String, Int, Int, Long)]] = {
-    if (head == null || head.length < 4) return None
-    if (!(head(0) == 'O' && head(1) == 'g' && head(2) == 'g' && head(3) == 'S'))
-      return None // not an Ogg stream: a full read may still parse (WAV/FLAC)
-    def u8h(i: Int) = head(i) & 0xFF
-    // front matter: page 0 must carry a v1-family OpusHead (same checks
-    // as opusMeta — failing them fails the full parse identically,
-    // because audioMeta dispatches OggS-headed bytes to opusMeta only)
-    if (head.length < 47)
-      return if (fileLen < 47) Some(None) else None // cap smaller than page 0
-    if (u8h(4) != 0) return Some(None)
-    val body = 27 + u8h(26)
-    if (body + 19 > head.length)
-      return if (body + 19 > fileLen) Some(None) else None
-    if (new String(head, body, 8, java.nio.charset.StandardCharsets.ISO_8859_1)
-        != "OpusHead") return Some(None)
-    if ((u8h(body + 8) >> 4) != 0) return Some(None)
-    val channels = u8h(body + 9)
-    val preSkip = u8h(body + 10) | (u8h(body + 11) << 8)
-    val inputRate = u8h(body + 12) | (u8h(body + 13) << 8) |
-      (u8h(body + 14) << 16) | (u8h(body + 15) << 24)
-    if (channels <= 0 || inputRate <= 0) return Some(None)
-    val serial = (0 until 4).map(k => u8h(14 + k).toLong << (8 * k)).reduce(_ | _)
-    val t = if (tail == null) Array.emptyByteArray else tail
-    def u8t(i: Int) = t(i) & 0xFF
-    def markerAt(p: Int): Boolean =
-      p + 27 <= t.length && t(p) == 'O' && t(p + 1) == 'g' &&
-        t(p + 2) == 'g' && t(p + 3) == 'S' && u8t(p + 4) == 0
-    var o = 0
-    while (o + 27 <= t.length) {
-      if (markerAt(o)) {
-        // forward walk from the candidate; valid iff it lands on EOF
-        var p = o
-        var granule = -1L
-        var ok = true
-        while (ok && p < t.length) {
-          if (!markerAt(p)) ok = false
-          else {
-            val ns = u8t(p + 26)
-            if (p + 27 + ns > t.length) ok = false
-            else {
-              val g = (0 until 8).map(k => u8t(p + 6 + k).toLong << (8 * k))
-                .reduce(_ | _)
-              val ser = (0 until 4).map(k => u8t(p + 14 + k).toLong << (8 * k))
-                .reduce(_ | _)
-              if (g >= 0 && ser == serial) granule = g
-              var bodyLen = 0
-              var k = 0
-              while (k < ns) { bodyLen += u8t(p + 27 + k); k += 1 }
-              p += 27 + ns + bodyLen
-            }
-          }
-        }
-        if (ok && p == t.length && granule >= 0)
-          return Some(Some(("opus", inputRate, channels,
-            math.max(0L, granule - preSkip) * 1000L / 48000L)))
+      fileLen: Long): Option[Option[(String, Int, Int, Long)]] =
+    if (head == null || head.length < 4 || !(head(0) == 'O' && head(1) == 'g' &&
+        head(2) == 'g' && head(3) == 'S')) None // a full read may still parse (WAV/FLAC)
+    else Window.decide(new Window(head, tail, fileLen))(oggOpusMeta)
+
+  private def oggOpusMeta(w: Window): Option[(String, Int, Int, Long)] = {
+    def pageAt(p: Long): Boolean = // "OggS" capture pattern, version 0
+      p + 27 <= w.len && w.be(p, 4) == 0x4F676753L && w.u8(p + 4) == 0
+    if (w.len < 47 || !pageAt(0)) return None
+    val body = 27 + w.u8(26) // first packet starts after the segment table
+    if (body + 19 > w.len || w.ascii(body, 8) != "OpusHead") return None
+    // RFC 7845 §5.1: reject if the version's upper nibble isn't 0 — the
+    // field layout below is only defined for the v1 family.
+    if ((w.u8(body + 8) >> 4) != 0) return None
+    val channels = w.u8(body + 9)
+    val preSkip = w.le(body + 10, 2)
+    val inputRate = w.le(body + 12, 4).toInt
+    if (channels <= 0 || inputRate <= 0) return None
+    val serial = w.le(14, 4)
+    // forward walk from `from` via segment-table lengths: (the last
+    // non-negative granule of `serial`, -1 if none; where it stopped).
+    // A granule of -1 marks a page where no packet completes.
+    def walk(from: Long): (Long, Long) = {
+      var p = from
+      var granule = -1L
+      while (pageAt(p) && p + 27 + w.u8(p + 26) <= w.len) {
+        val ns = w.u8(p + 26)
+        val g = w.le(p + 6, 8)
+        if (g >= 0 && w.le(p + 14, 4) == serial) granule = g
+        var bodyLen = 0L
+        var k = 0
+        while (k < ns) { bodyLen += w.u8(p + 27 + k); k += 1 }
+        p += 27 + ns + bodyLen
       }
-      o += 1
+      (granule, p)
     }
-    None // no validated chain in the tail — full read decides
+    val granule =
+      try walk(0)._1
+      catch {
+        case Window.InGap =>
+          var o = w.tailStart
+          var found = -1L
+          while (found < 0 && o + 27 <= w.len) {
+            if (pageAt(o)) {
+              val (g, end) = walk(o)
+              if (end == w.len) found = g
+            }
+            o += 1
+          }
+          if (found < 0) throw Window.InGap // no validated chain: full read decides
+          found
+      }
+    if (granule < 0) None
+    else Some(("opus", inputRate, channels,
+      math.max(0L, granule - preSkip) * 1000L / 48000L))
   }
 
   /** The combined head+tail A/V decision a two-phase curation gate
@@ -604,6 +530,91 @@ object Multimodal {
     }
     case _ => None
   }
+
+  /** Exact typed metadata for HEAD-annotated rows — [[annotate]] over
+    * canonical rows whose `bytes` hold each file's first `headBytes`
+    * and whose `meta` carries `path` and `length` — returned for every
+    * row with a `full` flag set where `bytes` already holds the whole
+    * file. A row is head-UNDECIDABLE when its file is larger than the
+    * cap, its extension maps to a real modality, and either no
+    * container parsed from the head (trailing-moov MP4, SOF-past-EXIF
+    * JPEG, fmt-chunk-past-cap WAV, corrupt) or the format is Opus (a
+    * head parse UNDER-reports the last-page duration). Those rows take
+    * a bounded TAIL read and the [[headTailAvMeta]] decision:
+    * decided-parsed rows carry the exact metadata, decided-unparseable
+    * rows carry none (no further I/O — a full parse fails the same
+    * way), and only window-undecidable rows (mid-file moov, non-Ogg
+    * audio, JPEG SOF past the cap) are read in full and re-annotated.
+    *
+    * The input is checkpointed once: the undecidable test and every
+    * branch read the cached rows, and a batch with no undecidable row
+    * returns after that one cheap job without building the tail
+    * branch. The residue is checkpointed after its full read, so each
+    * of its blobs is read once however often the result is consumed.
+    */
+  def decideHeadTail(heads: DataFrame, headBytes: Int, tailBytes: Int): DataFrame = {
+    val ann = heads.localCheckpoint()
+    val fileLen = element_at(col("meta"), "length").cast("long")
+    val undecidable = fileLen > headBytes && col("modality") =!= "unknown" &&
+      (col("format").isNull || col("format") === "opus")
+    val headDecided = ann.filter(!undecidable).withColumn("full", lit(false))
+    if (ann.filter(undecidable).isEmpty) return headDecided
+    val ht = udf(headTailAvMeta _)
+    val withTail = withTailBytes(
+        ann.filter(undecidable).withColumn("path", element_at(col("meta"), "path")),
+        "path", tailBytes)
+      .withColumn("ht", ht(col("modality"), col("bytes"), col("tail_bytes"), fileLen))
+      .drop("tail_bytes")
+      .localCheckpoint()
+    val parsed = col("ht._1")
+    val isAudio = col("modality") === "audio"
+    val tailDecided = withTail.filter(col("ht").isNotNull)
+      .withColumn("audio_format", when(isAudio, col("ht._2")))
+      .withColumn("sample_rate", when(isAudio && parsed, col("ht._3")))
+      .withColumn("channels", when(isAudio && parsed, col("ht._4")))
+      .withColumn("audio_duration_ms", when(isAudio && parsed, col("ht._5")))
+      .withColumn("video_format", when(!isAudio, col("ht._2")))
+      .withColumn("duration_ms", when(parsed, col("ht._5")))
+      .withColumn("format", col("ht._2"))
+      .withColumn("full", lit(false))
+      .drop("ht", "path")
+    val residue = annotate(withFullBytes(
+          withTail.filter(col("ht").isNull)
+            .select((mediaSchema.fieldNames :+ "path").map(col).toSeq: _*),
+          "path")
+        .drop("path"))
+      .withColumn("full", lit(true))
+      .localCheckpoint()
+    headDecided.unionByName(tailDecided).unionByName(residue)
+  }
+
+  /** Full blobs for gate survivors of [[decideHeadTail]]: rows flagged
+    * `full` keep their bytes, the others swap the head slice for the
+    * whole blob read by path ([[withFullBytes]]); `full` is dropped.
+    */
+  def withSurvivorBytes(survivors: DataFrame): DataFrame =
+    withFullBytes(
+        survivors.filter(!col("full")).drop("bytes")
+          .withColumn("path", element_at(col("meta"), "path")),
+        "path")
+      .drop("path")
+      .unionByName(survivors.filter(col("full")))
+      .drop("full")
+
+  /** Every modality's typed metadata over whatever `bytes` the rows
+    * carry (full blobs or bounded heads — the parsers read header bytes
+    * either way): the [[withImageMeta]], [[withAudioMeta]] (its length
+    * as `audio_duration_ms`) and [[withVideoMeta]] columns, then
+    * `format` (the row's container) and `duration_ms` (audio or video
+    * length). No filtering.
+    */
+  def annotate(df: DataFrame): DataFrame =
+    withVideoMeta(withAudioMeta(withImageMeta(df))
+        .withColumnRenamed("duration_ms", "audio_duration_ms"))
+      .withColumn("format",
+        coalesce(col("img_format"), col("audio_format"), col("video_format")))
+      .withColumn("duration_ms",
+        coalesce(col("audio_duration_ms"), col("duration_ms")))
 
   /** Parsed (video_format, duration_ms) columns for video rows — NULL
     * for non-video or unparseable bytes.

@@ -67,25 +67,12 @@ object MediaStream {
     */
   def processBatch(batch: Dataset[Row], batchId: Long, stateDir: String,
       outDir: String, rejectDir: String, autoCompactEvery: Int = 0): Unit = {
-    val ann = annotateMedia(batch.toDF())
+    // parsed once, feeds quarantine + gate
+    val ann = Multimodal.annotate(batch.toDF()).localCheckpoint()
     Sinks.writeBatchIdempotent(quarantineRows(ann), batchId, rejectDir)
     dedupAndAppend(ann.filter(isWellFormed), batch.select(col("media_id")),
       batchId, stateDir, outDir, autoCompactEvery)
   }
-
-  /** Typed-metadata annotation over whatever `bytes` the rows carry
-    * (full blobs or bounded heads — the parsers only read header bytes
-    * either way). Checkpointed: parsed once, feeds gate + quarantine.
-    */
-  private def annotateMedia(batch: DataFrame): DataFrame =
-    Multimodal.withVideoMeta(
-      Multimodal.withAudioMeta(Multimodal.withImageMeta(batch))
-        .withColumnRenamed("duration_ms", "audio_duration_ms"))
-      .withColumn("format",
-        coalesce(col("img_format"), col("audio_format"), col("video_format")))
-      .withColumn("duration_ms",
-        coalesce(col("audio_duration_ms"), col("duration_ms")))
-      .localCheckpoint()
 
   private def isWellFormed =
     col("modality") =!= "unknown" && col("format").isNotNull
@@ -135,11 +122,12 @@ object MediaStream {
     * (no blob bytes shipped by the source at all):
     *
     *  1. phase 1 reads only the first `headBytes` of each discovered
-    *     file ([[Multimodal.withHeadBytes]]) and runs the parse +
-    *     quarantine gates on those heads — a 4 GiB junk blob costs 64
-    *     KiB to reject;
+    *     file ([[Multimodal.withHeadBytes]]), decides each row's
+    *     metadata from it ([[Multimodal.decideHeadTail]]) and runs the
+    *     quarantine gate on that — a 4 GiB junk blob costs 64 KiB to
+    *     reject;
     *  2. phase 2 re-reads ONLY gate survivors in full
-    *     ([[Multimodal.withFullBytes]]) for the whole-blob stages:
+    *     ([[Multimodal.withSurvivorBytes]]) for the whole-blob stages:
     *     content-digest dedup and the corpus append.
     *
     * Same commit discipline, same state/corpus/quarantine layout, same
@@ -157,94 +145,12 @@ object MediaStream {
   def processBatchHead(paths: Dataset[Row], batchId: Long, stateDir: String,
       outDir: String, rejectDir: String, headBytes: Int = 65536,
       autoCompactEvery: Int = 0, tailBytes: Int = 65536): Unit = {
-    val heads = annotateMedia(toCanonical(
-      Multimodal.withHeadBytes(
-        paths.select(col("path"), col("length")), "path", headBytes)
-        .withColumnRenamed("bytes", "content")))
-    // a file LARGER than the cap whose container did not parse from
-    // its head is UNDECIDABLE there (trailing-moov MP4, SOF-past-EXIF
-    // JPEG) — quarantining it on the head parse would be wrong. Opus
-    // is undecidable even when the head PARSES: duration lives in the
-    // LAST Ogg page's granule, so a head parse under-reports it and
-    // the under-reported value must never reach the corpus (the same
-    // predicate as Media.curateRowsHead).
-    //
-    // Gate the whole tail branch on a METADATA-ONLY precondition
-    // first: no file over the head cap with a media extension → no row
-    // can be undecidable, and the predicate folds to false so Catalyst
-    // propagates an empty relation through the branch — its
-    // localCheckpoint, tail reads, and re-reads all collapse to
-    // zero-I/O instead of paying a second head scan of the batch.
-    // The check reads only the discovery rows' (path, length).
-    val overCapExists = !paths
-      .where(col("length") > headBytes && col("path").rlike(Multimodal.mediaExtRe))
-      .isEmpty
-    val undecidable = if (!overCapExists) lit(false) else
-      element_at(col("meta"), "length").cast("long") > headBytes &&
-        col("modality") =!= "unknown" &&
-        (col("format").isNull || col("format") === "opus")
-    val decided = heads.filter(!undecidable)
-    // head-undecidable rows take a bounded TAIL read next: the
-    // two-window parsers decide tail-anchored A/V metadata exactly
-    // (trailing-moov MP4 box walk across the gap, Opus last-page
-    // granule by validated re-sync). Decided-unparseable rows
-    // quarantine at head+tail cost — a full parse would fail on the
-    // same bytes; only window-undecidable rows (mid-file moov,
-    // non-Ogg audio, JPEG SOF past the cap) pay a full re-read +
-    // re-annotation BEFORE the quarantine decision. Junk extensions
-    // stay head-only however large.
-    val htUdf = udf(Multimodal.headTailAvMeta _)
-    val withTail = Multimodal.withTailBytes(
-        heads.filter(undecidable)
-          .withColumn("path", element_at(col("meta"), "path")),
-        "path", tailBytes)
-      .withColumn("ht", htUdf(col("modality"), col("bytes"), col("tail_bytes"),
-        element_at(col("meta"), "length").cast("long")))
-      .localCheckpoint()
-    val isA = col("modality") === "audio"
-    val isV = col("modality") === "video"
-    val tailDecided = withTail.filter(col("ht").isNotNull)
-      .withColumn("format", col("ht._2"))
-      .withColumn("duration_ms", when(col("ht._1"), col("ht._5")))
-      .withColumn("audio_duration_ms",
-        when(col("ht._1") && isA, col("ht._5")).otherwise(col("audio_duration_ms")))
-      // the two-window decision re-derives rate/channels exactly, so a
-      // decided audio row whose HEAD parse failed (e.g. header pages
-      // carrying granule -1) still lands in the corpus with the values
-      // a full read would have produced — mirror the duration handling
-      .withColumn("sample_rate",
-        when(col("ht._1") && isA, col("ht._3")).otherwise(col("sample_rate")))
-      .withColumn("channels",
-        when(col("ht._1") && isA, col("ht._4")).otherwise(col("channels")))
-      .withColumn("audio_format",
-        when(col("ht._1") && isA, col("ht._2")).otherwise(col("audio_format")))
-      .withColumn("video_format",
-        when(col("ht._1") && isV, col("ht._2")).otherwise(col("video_format")))
-      .drop("ht", "tail_bytes", "path")
-    val redone = annotateMedia(
-      Multimodal.withFullBytes(
-          withTail.filter(col("ht").isNull)
-            .select(col("media_id"), col("modality"), col("meta"), col("path")),
-          "path")
-        .drop("path"))
-    Sinks.writeBatchIdempotent(quarantineRows(decided)
-      .unionByName(quarantineRows(tailDecided))
-      .unionByName(quarantineRows(redone)), batchId, rejectDir)
-    // phase 2: head- and tail-decided survivors swap the head slice for
-    // the full blob; re-read survivors already carry theirs
-    val decidedSurvivors = Multimodal.withFullBytes(
-      decided.filter(isWellFormed).drop("bytes")
-        .withColumn("path", element_at(col("meta"), "path")),
-      "path").drop("path")
-    val tailSurvivors = Multimodal.withFullBytes(
-      tailDecided.filter(isWellFormed).drop("bytes")
-        .withColumn("path", element_at(col("meta"), "path")),
-      "path").drop("path")
-    val survivors = decidedSurvivors
-      .unionByName(tailSurvivors.select(decidedSurvivors.columns.map(col).toSeq: _*))
-      .unionByName(redone.filter(isWellFormed)
-        .select(decidedSurvivors.columns.map(col).toSeq: _*))
-    dedupAndAppend(survivors,
+    val decided = Multimodal.decideHeadTail(
+      Multimodal.annotate(Multimodal.toCanonical(Multimodal.withHeadBytes(
+        paths.select(col("path"), col("length")), "path", headBytes), "bytes")),
+      headBytes, tailBytes)
+    Sinks.writeBatchIdempotent(quarantineRows(decided), batchId, rejectDir)
+    dedupAndAppend(Multimodal.withSurvivorBytes(decided.filter(isWellFormed)),
       paths.select(xxhash64(col("path")).as("media_id")), batchId,
       stateDir, outDir, autoCompactEvery)
   }
@@ -282,15 +188,8 @@ object MediaStream {
   def watchDirectory(spark: SparkSession, dir: String, stateDir: String,
       outDir: String, rejectDir: String, checkpointDir: String,
       autoCompactEvery: Int = 16): StreamingQuery =
-    dedupIngest(toCanonical(binaryFileStream(spark, dir)), stateDir, outDir,
+    dedupIngest(Multimodal.toCanonical(binaryFileStream(spark, dir)), stateDir, outDir,
       rejectDir, checkpointDir, autoCompactEvery)
-
-  /** (path, length, content) file rows → the canonical media schema;
-    * modality is dispatched on file extension (reference
-    * format-dispatch analog, `utils.py:12-19`).
-    */
-  private def toCanonical(files: DataFrame): DataFrame =
-    Multimodal.toCanonical(files)
 
   /** HEAD-GATED [[watchDirectory]]: the file stream source ships only
     * (path, length) — `binaryFile`'s reader materializes a column only

@@ -359,4 +359,69 @@ class MediaStreamSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(1L, 2L), "compacted state must keep suppressing dups")
   }
+
+  test("processBatch: an empty mvhd ending at EOF quarantines as " +
+    "container_parse_failed instead of failing the batch") {
+    val stateDir = java.nio.file.Files.createTempDirectory("graft_ms6_state").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_ms6_out").toString
+    val rejDir = java.nio.file.Files.createTempDirectory("graft_ms6_rej").toString
+    def be32(v: Int) = Array[Byte](
+      (v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
+    val emptyMvhd = be32(16) ++ "ftypisom".getBytes("US-ASCII") ++ be32(512) ++
+      be32(16) ++ "moov".getBytes("US-ASCII") ++ be32(8) ++
+      "mvhd".getBytes("US-ASCII")
+    val b0 = Seq(
+      (1L, "image", fixture("photo.png"), Map("s" -> "a")),
+      (2L, "video", emptyMvhd, Map("s" -> "a")))
+      .toDF("media_id", "modality", "bytes", "meta")
+    MediaStream.processBatch(b0, 0L, stateDir, outDir, rejDir)
+    val rejected = spark.read.parquet(rejDir).select("media_id", "reason")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(rejected == Set((2L, "container_parse_failed")))
+    assert(spark.read.parquet(outDir).select("media_id")
+      .collect().map(_.getLong(0)).toSet == Set(1L))
+  }
+
+  test("corpus and quarantine schemas (names, order, types) of processBatch " +
+    "and processBatchHead") {
+    import org.apache.spark.sql.types._
+    def layout(dir: String): Seq[(String, DataType)] =
+      spark.read.parquet(dir).schema.fields.map(f => f.name -> f.dataType).toSeq
+    val annotation = Seq(
+      "img_format" -> StringType, "width" -> IntegerType, "height" -> IntegerType,
+      "audio_format" -> StringType, "sample_rate" -> IntegerType,
+      "channels" -> IntegerType, "audio_duration_ms" -> LongType,
+      "video_format" -> StringType, "duration_ms" -> LongType,
+      "format" -> StringType)
+    val meta = "meta" -> MapType(StringType, StringType)
+    val quarantine = Seq("media_id" -> LongType, "modality" -> StringType,
+      "reason" -> StringType, "batch_id" -> IntegerType)
+    val names = Seq("photo.png", "broken.png", "voice.wav", "junk.xyz")
+
+    val stateDir = java.nio.file.Files.createTempDirectory("graft_ms7_state").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_ms7_out").toString
+    val rejDir = java.nio.file.Files.createTempDirectory("graft_ms7_rej").toString
+    val b0 = names.zipWithIndex.map { case (n, i) =>
+      (i.toLong, if (n.endsWith(".wav")) "audio"
+        else if (n.endsWith(".png")) "image" else "unknown", fixture(n), Map("s" -> "a"))
+    }.toDF("media_id", "modality", "bytes", "meta")
+    MediaStream.processBatch(b0, 0L, stateDir, outDir, rejDir)
+    assert(layout(outDir) == Seq("digest" -> StringType, "media_id" -> LongType,
+      "modality" -> StringType, "bytes" -> BinaryType, meta) ++ annotation :+
+      ("batch_id" -> IntegerType))
+    assert(layout(rejDir) == quarantine)
+
+    val watch = java.nio.file.Files.createTempDirectory("graft_ms7h_in")
+    names.foreach(n => java.nio.file.Files.write(watch.resolve(n), fixture(n)))
+    val hState = java.nio.file.Files.createTempDirectory("graft_ms7h_state").toString
+    val hOut = java.nio.file.Files.createTempDirectory("graft_ms7h_out").toString
+    val hRej = java.nio.file.Files.createTempDirectory("graft_ms7h_rej").toString
+    val paths = new java.io.File(watch.toString).listFiles().toSeq
+      .map(f => (f.getPath, f.length)).toDF("path", "length")
+    MediaStream.processBatchHead(paths, 0L, hState, hOut, hRej)
+    assert(layout(hOut) == Seq("digest" -> StringType, "media_id" -> LongType,
+      "modality" -> StringType, meta) ++ annotation ++
+      Seq("bytes" -> BinaryType, "batch_id" -> IntegerType))
+    assert(layout(hRej) == quarantine)
+  }
 }

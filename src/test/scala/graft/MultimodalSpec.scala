@@ -233,7 +233,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("videoMetaHeadTail three-way outcomes: exact parse across the gap, " +
     "decided-unparseable, and gap-undecidable") {
-    import graft.sources.MediaCorpus
+    import graft.sources.{MediaCorpus, MediaTwins}
     def be32(v: Int) = Array[Byte](
       (v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     def mdat(n: Int) = be32(8 + n) ++ "mdat".getBytes("US-ASCII") ++
@@ -241,7 +241,7 @@ class MultimodalSpec extends AnyFunSuite {
     val fs = MediaCorpus.mp4(timescale = 1000, duration = 4000L)
     // trailing moov, v0 mvhd: full == head+tail window pair
     val tm = fs.take(16) ++ mdat(5000) ++ fs.drop(16)
-    val full = Multimodal.videoMeta(tm)
+    val full = MediaTwins.videoMeta(tm)
     assert(full.contains(("mp4", 4000L)))
     val ht = Multimodal.videoMetaHeadTail(
       tm.take(2048), tm.takeRight(2048), tm.length.toLong)
@@ -251,7 +251,7 @@ class MultimodalSpec extends AnyFunSuite {
     val tmV1 = fsV1.take(16) ++ mdat(5000) ++ fsV1.drop(16)
     assert(Multimodal.videoMetaHeadTail(
         tmV1.take(2048), tmV1.takeRight(2048), tmV1.length.toLong)
-      .contains(Multimodal.videoMeta(tmV1)))
+      .contains(MediaTwins.videoMeta(tmV1)))
     // windows overlapping (file smaller than head+tail): still exact
     assert(Multimodal.videoMetaHeadTail(
         tm.take(4096), tm.takeRight(4096), tm.length.toLong)
@@ -268,7 +268,7 @@ class MultimodalSpec extends AnyFunSuite {
     // malformed size visible in-window: decided like the full parse
     val badSize = fs.take(16) ++ be32(Int.MaxValue) ++
       "mdat".getBytes("US-ASCII") ++ Array.fill[Byte](100)(0)
-    assert(Multimodal.videoMeta(badSize).isEmpty)
+    assert(MediaTwins.videoMeta(badSize).isEmpty)
     assert(Multimodal.videoMetaHeadTail(
       badSize.take(2048), badSize.takeRight(100), badSize.length.toLong)
       .contains(None))
@@ -276,14 +276,14 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("opusMetaHeadTail: validated last-page re-sync equals the full walk; " +
     "non-Ogg audio and truncated tails stay undecidable") {
-    import graft.sources.MediaCorpus
+    import graft.sources.{MediaCorpus, MediaTwins}
     val pad = Array.tabulate(200)(i => (i * 7 + 1).toByte)
     val longOpus = MediaCorpus.opus(48000, channels = 1, preSkip = 312,
         granule = 4800L) ++
       (1 to 24).map(i => MediaCorpus.oggPage(4800L * (i + 1), serial = 7, pad))
         .reduce(_ ++ _) ++
       MediaCorpus.oggPage(480312L, serial = 7, Array[Byte](9))
-    val full = Multimodal.opusMeta(longOpus)
+    val full = MediaTwins.opusMeta(longOpus)
     assert(full.contains(("opus", 48000, 1, 10000L)))
     val ht = Multimodal.opusMetaHeadTail(
       longOpus.take(2048), longOpus.takeRight(2048), longOpus.length.toLong)
@@ -295,7 +295,7 @@ class MultimodalSpec extends AnyFunSuite {
     val muxed = longOpus ++ MediaCorpus.oggPage(999999L, serial = 9, pad)
     assert(Multimodal.opusMetaHeadTail(
         muxed.take(2048), muxed.takeRight(300), muxed.length.toLong)
-      .contains(Multimodal.opusMeta(muxed)))
+      .contains(MediaTwins.opusMeta(muxed)))
     // ...and when the window holds ONLY other-serial pages, there is no
     // matching granule to validate → undecidable, full read decides
     assert(Multimodal.opusMetaHeadTail(
@@ -324,7 +324,7 @@ class MultimodalSpec extends AnyFunSuite {
       b(27 + 1) = 'X' // corrupt the "OpusHead" magic in page 0's packet
       b ++ Array.fill[Byte](3000)(0)
     }
-    assert(Multimodal.opusMeta(badHead).isEmpty)
+    assert(MediaTwins.opusMeta(badHead).isEmpty)
     assert(Multimodal.opusMetaHeadTail(
       badHead.take(2048), badHead.takeRight(2048), badHead.length.toLong)
       .contains(None))
@@ -332,7 +332,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("two-window soundness sweep: for EVERY window size, a decided " +
     "outcome equals the full parse (video and audio deciders)") {
-    import graft.sources.MediaCorpus
+    import graft.sources.{MediaCorpus, MediaTwins}
     def be32(v: Int) = Array[Byte](
       (v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
     def mdat(n: Int, seed: Int) = be32(8 + n) ++ "mdat".getBytes("US-ASCII") ++
@@ -361,16 +361,34 @@ class MultimodalSpec extends AnyFunSuite {
       MediaCorpus.wav(16000, 1, 16, 50000),           // non-Ogg (RIFF)
       MediaCorpus.wav(8000, 2, 8, 120000))            // non-Ogg, over-cap
     val caps = Seq(64, 256, 1024, 2048, 4096, 65536)
+    // page-aligned junk that ends the full walk early: a window decision
+    // trusts its unread gap to hold well-formed pages, so each junked
+    // file is swept where the walk meets the junk inside a window
+    val junk = Array.fill[Byte](7)(0x55)
+    val junked: Seq[(Array[Byte], Int)] = Seq(
+      (opusLong.take(534) ++ junk ++ opusLong.drop(534), 534),
+      {
+        val small = MediaCorpus.opus(48000, 2, 312, 96000L)
+        (small.take(47) ++ junk ++ small.drop(47), 47)
+      })
+    val junkedVisible = for {
+      (bytes, at) <- junked; hc <- caps; tc <- caps
+      if at < hc || at >= bytes.length - tc
+    } yield (bytes, hc, tc)
+    // only the long file's junk (offset 534) hides: heads 64 and 256
+    // under the five tails that start past it
+    assert(junkedVisible.size == 2 * caps.size * caps.size - 10)
     for (bytes <- videos; hc <- caps; tc <- caps) {
-      val full = Multimodal.videoMeta(bytes)
+      val full = MediaTwins.videoMeta(bytes)
       val ht = Multimodal.videoMetaHeadTail(
         bytes.take(hc), bytes.takeRight(tc), bytes.length.toLong)
       ht.foreach(decided => assert(decided == full,
         s"video decided != full at head=$hc tail=$tc len=${bytes.length}: " +
           s"$decided vs $full"))
     }
-    for (bytes <- audios; hc <- caps; tc <- caps) {
-      val full = Multimodal.audioMeta(bytes)
+    for ((bytes, hc, tc) <- audios.flatMap(b =>
+        for (hc <- caps; tc <- caps) yield (b, hc, tc)) ++ junkedVisible) {
+      val full = MediaTwins.audioMeta(bytes)
       val ht = Multimodal.opusMetaHeadTail(
         bytes.take(hc), bytes.takeRight(tc), bytes.length.toLong)
       ht.foreach(decided => assert(decided == full,
@@ -395,6 +413,42 @@ class MultimodalSpec extends AnyFunSuite {
     assert(got.isEmpty)
     assert(MediaIo.fullReadPaths.isEmpty,
       "a provably-unparseable blob must never be fully read")
+  }
+
+  test("videoMeta: an empty mvhd ending at EOF parses to None, never throws") {
+    def be32(v: Int) = Array[Byte](
+      (v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
+    // ftyp (16 B) ++ moov (16 B) whose 8-byte mvhd has no payload
+    val bytes = be32(16) ++ "ftypisom".getBytes("US-ASCII") ++ be32(512) ++
+      be32(16) ++ "moov".getBytes("US-ASCII") ++ be32(8) ++
+      "mvhd".getBytes("US-ASCII")
+    assert(bytes.length == 32)
+    assert(Multimodal.videoMeta(bytes).isEmpty)
+  }
+
+  test("junk after an early Ogg page: the head-gated curate gates exactly " +
+    "like the single-scan curate") {
+    import graft.sources.MediaCorpus
+    val dir = java.nio.file.Files.createTempDirectory("graft_opus_junk")
+    val pad = Array.tabulate(200)(i => (i * 7 + 1).toByte)
+    val opusLong = MediaCorpus.opus(48000, channels = 1, preSkip = 312,
+        granule = 4800L) ++
+      (1 to 24).map(i => MediaCorpus.oggPage(4800L * (i + 1), serial = 7, pad))
+        .reduce(_ ++ _) ++
+      MediaCorpus.oggPage(480312L, serial = 7, Array[Byte](9))
+    // the full walk stops at the junk (293 ms): a sub-second clip
+    val junked = opusLong.take(534) ++ Array.fill[Byte](7)(0x55) ++
+      opusLong.drop(534)
+    assert(Multimodal.audioMeta(junked).contains(("opus", 48000, 1, 293L)))
+    java.nio.file.Files.write(dir.resolve("junked.opus"), junked)
+    java.nio.file.Files.write(dir.resolve("pic.png"), MediaCorpus.png(128, 64))
+    val glob = dir.toString + "/*"
+    val expected = queries.Media.curateRows(
+      Multimodal.fromBinaryFiles(spark, glob)).collect().toSeq
+    assert(expected.map(_.getString(0)).distinct == Seq("pic.png"))
+    val got = queries.Media.curateRowsHead(spark, glob, headBytes = 2048)
+      .collect().toSeq
+    assert(got == expected)
   }
 }
 

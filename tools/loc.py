@@ -22,7 +22,16 @@ Prints, one `name: value` per line:
   - batch_dir_literals: `/batch_id=` and `/base_id=` literals in src/main
     code outside StreamState and Sinks (the modules that own the state
     and output layouts);
-  - stream_starts: `writeStream` occurrences in src/main code.
+  - stream_starts: `writeStream` occurrences in src/main code;
+  - media_family_code: the non-comment lines of the media metadata
+    family (Multimodal, Media and MediaStream);
+  - media_annotations: `withImageMeta(` call sites in src/main code
+    (its definition excluded), i.e. the spellings of the media
+    annotation;
+  - tail_decisions: `headTailAvMeta` uses in src/main code outside its
+    definition;
+  - full_rereads: `withFullBytes(` call sites in src/main code (its
+    definition excluded).
 """
 import os
 import re
@@ -41,6 +50,9 @@ STREAM_STATE = [STREAMING + n + ".scala" for n in
                 ("StreamState", "DedupStream", "DriftStream", "MediaStream",
                  "IndexStream", "Sinks")]
 LAYOUT_OWNERS = {STREAMING + "StreamState.scala", STREAMING + "Sinks.scala"}
+MEDIA = ["src/main/scala/graft/sources/Multimodal.scala",
+         "src/main/scala/graft/queries/Media.scala",
+         STREAMING + "MediaStream.scala"]
 
 
 def tracked(root, prefix):
@@ -126,6 +138,15 @@ def main():
     counts["batch_dir_literals"] = occurs(
         r"/(batch_id|base_id)=", [p for p in main_files if p not in LAYOUT_OWNERS])
     counts["stream_starts"] = occurs(r"\bwriteStream\b", main_files)
+    counts["media_family_code"] = sum(len(code[p]) for p in MEDIA if p in code)
+    for p in MEDIA:
+        if p in code:
+            counts["      " + os.path.basename(p)[:-len(".scala")]] = len(code[p])
+    uses = lambda name, call: occurs(
+        r"(?<!def )\b" + name + (r"\(" if call else r"\b"), main_files)
+    counts["media_annotations"] = uses("withImageMeta", True)
+    counts["tail_decisions"] = uses("headTailAvMeta", False)
+    counts["full_rereads"] = uses("withFullBytes", True)
     for k, v in counts.items():
         print(f"{k}: {v}")
 
