@@ -3,49 +3,40 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** BPE tokenizer TRAINING as a distributed dataflow (Sennrich et al.
-  * 2016; the GPT-2 construction whose APPLY side is
-  * [[BpeTokenizer]]/q_chunk_tokens_bpe): learn the top-R merges from
-  * the corpus itself.
+import scala.collection.mutable
+
+/** BPE tokenizer TRAINING (Sennrich et al. 2016; the GPT-2 construction
+  * whose APPLY side is [[BpeTokenizer]]/q_chunk_tokens_bpe): learn the
+  * top-R merges from the corpus itself.
   *
   * The scale formulation is the classic weighted-vocabulary trick: BPE
   * statistics depend only on the DISTINCT pre-token multiset, so the
-  * corpus is read ONCE into (word, freq) — Heaps' law keeps that table
-  * orders of magnitude smaller than the corpus — and every training
-  * round runs over the vocab table, never the text:
+  * corpus is read ONCE into (word, freq) — one distributed aggregate,
+  * and Heaps' law keeps that table orders of magnitude smaller than the
+  * corpus. Training then runs on the driver, as production trainers
+  * (HuggingFace tokenizers, SentencePiece) run it once the corpus pass
+  * is done:
   *
-  *   1. adjacent-pair counts: explode each word's current symbol
-  *      sequence into (sym_i, sym_i+1) weighted by freq — one
-  *      distributed aggregate at training START, thereafter maintained
-  *      INCREMENTALLY in a driver-held (x, y) → cnt table whose size
-  *      is bounded by the ALGORITHM (every symbol is base-alphabet ∪
-  *      learned merges, so distinct pairs ≤ (|alphabet| + r)²; at
-  *      round 0 ≤ |alphabet|² — the in-memory formulation HuggingFace
-  *      tokenizers and SentencePiece use). Each round collects only
-  *      the ± delta of the words the merge CHANGED — an exact recount
-  *      restricted to changed rows, so the table equals a full recount
-  *      by induction and the schedule is unchanged by construction;
-  *   2. argmax pair by (count DESC, pair ASC — the pinned
-  *      deterministic tie-break): a driver-local scan of the bounded
-  *      table, zero cluster work;
-  *   3. merge that pair into every word leftmost-greedily (a codegen'd
-  *      `aggregate` fold per word — no shuffle), localCheckpoint to
-  *      truncate lineage so each round is one vocab pass; changed
-  *      words keep their pre-merge symbols beside the merged ones so
-  *      the delta derives from the checkpoint, not a second fold.
+  *   1. the vocab is collected ONCE through [[Iterate.collectBounded]],
+  *      at most [[VocabBound]] rows; a larger vocab throws
+  *      IllegalArgumentException after reading bound + 1 rows, it is
+  *      never silently pulled whole;
+  *   2. adjacent-pair counts are one in-memory table, (x, y) → cnt
+  *      weighted by freq, plus a pair → words postings map, so a round
+  *      rewrites only the words that hold the merged pair and updates
+  *      the table by their ± delta (an exact recount restricted to the
+  *      changed words, so the table equals a full recount by induction);
+  *   3. argmax pair by (count DESC, x ASC, y ASC) — the pinned
+  *      deterministic tie-break, a scan of the table;
+  *   4. the merge sweeps each changed word left to right, appending to
+  *      an accumulator and replacing its LAST element when
+  *      (last == x && e == y) — the same fold as the DuckDB oracle's
+  *      replay, which differs from a skip-two sweep when x + y == x.
   *
-  * Rounds are bounded (R merges requested); a real 50k-vocab training
-  * is the same loop with R=50k — per round: ONE shuffle-free fold pass
-  * over a vocab table that SHRINKS as merges fuse symbols, plus one
-  * bounded delta aggregate over only the CHANGED words. Measured round
-  * cost (BpeTrainerSpec's 300-merge fixture, local[32]): ~194 ms/round
-  * with the previous full per-round recount → ~154 ms/round
-  * incremental, FLAT across all 300 rounds — and the removed term (the
-  * full-vocab explode + shuffle + sort each round) is exactly the one
-  * that grew with vocab size toward a real 30k-merge extrapolation;
-  * what remains per round is the fold pass and one bounded collect.
-  * The schedule past the oracle's 8-round unroll ceiling is pinned
-  * merge-for-merge against an independent scalar trainer by that spec.
+  * A pair holding a null symbol is never counted: the sweep can never
+  * merge it. The schedule past the oracle's 8-round unroll ceiling is
+  * pinned merge-for-merge against an independent scalar trainer and the
+  * distributed reference twin by BpeTrainerSpec.
   *
   * Reference tie: the reference consumes a pretrained tokenizer
   * implicitly through its embedding model (SURVEY §0); training one is
@@ -59,18 +50,11 @@ import org.apache.spark.sql.functions._
   */
 object BpeTrainer {
 
-  /** One merge sweep: collapse every leftmost-greedy (x, y) adjacency
-    * in a symbol array — `aggregate` fold appending to an array acc,
-    * replacing its last element when (last == x && e == y). `get`
-    * (null out-of-bounds, never an error) keeps the empty-acc first
-    * step in the append branch.
-    */
-  def mergeOnce(s: Column, x: String, y: String): Column =
-    aggregate(s, array().cast("array<string>"),
-      (acc, e) =>
-        when(e === lit(y) && get(acc, size(acc) - 1) === lit(x),
-          concat(slice(acc, lit(1), size(acc) - 1), array(lit(x + y))))
-          .otherwise(concat(acc, array(e))))
+  /** One learned merge: (rank, lhs, rhs, pair_freq). */
+  private[graft] type Merge = (Long, String, String, Long)
+
+  /** The most distinct (s, freq) vocab rows training collects. */
+  private[graft] val VocabBound = 1 << 18
 
   /** The weighted pre-token vocabulary of a single-space corpus:
     * (s = per-char symbol array with the GPT-2 Ġ prefix on non-initial
@@ -82,11 +66,6 @@ object BpeTrainer {
         .otherwise(lit("Ġ")), col("w")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(split(col("word"), "").as("s"), col("freq"))
-      // the vocab is Heaps-law smaller than the corpus it came from;
-      // the training rounds re-scan it 2×R times, so pack it into few
-      // partitions instead of inheriting the corpus's shuffle width
-      // (at a real 50k-merge training, size this by vocab bytes)
-      .coalesce(4)
 
   /** The base-alphabet size of a weighted vocab: distinct single-char
     * symbols across every word (one bounded distinct aggregate — the
@@ -98,7 +77,8 @@ object BpeTrainer {
       .agg(count_distinct(col("c")).as("n")).head().getLong(0)
 
   /** Train up to `rounds` merges over a weighted vocab; returns
-    * (rank, lhs, rhs, pair_freq) ordered by rank. Stops early when:
+    * (rank, lhs, rhs, pair_freq) in rank order, as a LocalRelation.
+    * Stops early when:
     *  - no adjacent pair remains;
     *  - the best pair's corpus frequency falls below `minPairFreq`
     *    (the min_frequency stop of production BPE trainers — also the
@@ -115,97 +95,103 @@ object BpeTrainer {
     *    as base alphabet + merges learned, each merge minting one new
     *    token — the standard convention, which both engines can count
     *    without materializing the symbol set per round.
+    * Throws IllegalArgumentException when the vocab holds more than
+    * [[VocabBound]] rows.
     */
-  /** Raw freq-weighted adjacent-pair rows of a (s, freq) frame —
-    * (x, y, cnt) UNAGGREGATED, so per-round deltas can union into one
-    * single-partition aggregation instead of paying their own shuffle.
-    */
-  private def rawPairRows(v: DataFrame): DataFrame =
-    v.where(size(col("s")) >= 2)
-      .select(col("freq").as("cnt"), explode(expr(
-        "transform(sequence(0, size(s) - 2), i -> struct(s[i] AS x, s[i + 1] AS y))"))
-        .as("p"))
-      .select(col("p.x").as("x"), col("p.y").as("y"), col("cnt"))
-
-  /** Freq-weighted adjacent-pair counts of a (s, freq) frame —
-    * (x, y, cnt). The full aggregate runs ONCE at training start; each
-    * round feeds it only the ± rows of words the merge changed.
-    */
-  private def pairCounts(v: DataFrame): DataFrame =
-    rawPairRows(v).groupBy(col("x"), col("y")).agg(sum(col("cnt")).as("cnt"))
-
   def train(vocab0: DataFrame, rounds: Int, minPairFreq: Long = 1L,
       targetVocab: Int = Int.MaxValue): DataFrame = {
     val spark = vocab0.sparkSession
     import spark.implicits._
-    var vocab = vocab0.localCheckpoint()
+    fit(vocab0, rounds, minPairFreq, targetVocab)._2
+      .toDF("rank", "lhs", "rhs", "pair_freq")
+  }
+
+  /** [[train]] with the base-alphabet size ([[alphabetSize]]) of the
+    * same collected vocab: (alphabet, merges in rank order), from one
+    * vocab pass.
+    */
+  private[graft] def fit(vocab: DataFrame, rounds: Int, minPairFreq: Long = 1L,
+      targetVocab: Int = Int.MaxValue): (Long, Seq[Merge]) = {
+    val rows = Iterate.collectBounded(
+        vocab.select(col("s"), col("freq").cast("long")), VocabBound)(
+      s"BpeTrainer: the weighted vocab holds more than $VocabBound words — " +
+        "training keeps the vocab on the driver and is bounded by that size")
+    val words = rows.map(r => Option(r.getSeq[String](0)).fold(Array.empty[String])(_.toArray))
+    val freqs = rows.map(_.getLong(1))
+    // count_distinct skips null symbols
+    val alphabet = words.iterator.flatten.filter(_ != null).toSet.size.toLong
     val maxMerges =
       if (targetVocab == Int.MaxValue) rounds.toLong
-      else math.min(rounds.toLong,
-        math.max(targetVocab.toLong - alphabetSize(vocab), 0L))
-    // INCREMENTAL pair counts, driver-held: the (x, y) -> cnt table is
-    // bounded by the ALGORITHM, not the corpus — at any round every
-    // symbol is one of (base alphabet + merges learned so far), so
-    // distinct pairs number at most (|alphabet| + r)^2 and empirically
-    // a small multiple of (|alphabet| + r); at round 0 the symbols are
-    // single characters, so the one-time full collect is at most
-    // |alphabet|^2 rows. This is the same in-memory formulation
-    // production BPE trainers (HuggingFace tokenizers, SentencePiece)
-    // use, with Spark doing the corpus-sized work: the initial count
-    // is one distributed aggregate, and each round collects only the
-    // ± delta of the words the merge CHANGED (exact recount restricted
-    // to changed rows, so the table equals a full recount by induction
-    // and the merge schedule is unchanged by construction).
-    val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-    pairCounts(vocab).collect().foreach(r =>
-      counts((r.getString(0), r.getString(1))) = r.getLong(2))
-    val merges = scala.collection.mutable.Buffer[(Long, String, String, Long)]()
-    var r = 1
-    var continue = true
-    while (r <= maxMerges && continue) {
-      // argmax by (cnt DESC, x ASC, y ASC) — a driver-local scan of the
-      // bounded table; the old per-round full explode + shuffle + sort
-      // over the vocab is gone entirely
+      else math.min(rounds.toLong, math.max(targetVocab.toLong - alphabet, 0L))
+    (alphabet, schedule(words, freqs, maxMerges, minPairFreq))
+  }
+
+  /** One merge sweep over a symbol array: left to right, append each
+    * symbol to an accumulator, or replace the accumulator's last element
+    * by x + y when (last == x && e == y). A null symbol never matches.
+    */
+  private[graft] def sweep(w: Array[String], x: String, y: String): Array[String] = {
+    val out = new mutable.ArrayBuffer[String](w.length)
+    for (e <- w)
+      if (e != null && e == y && out.nonEmpty && out.last != null && out.last == x)
+        out(out.length - 1) = x + y
+      else out += e
+    out.toArray
+  }
+
+  private def pairs(w: Array[String]): Iterator[(String, String)] =
+    w.iterator.zip(w.iterator.drop(1)).filter(p => p._1 != null && p._2 != null)
+
+  /** The merge loop over a collected vocab. `words` is rewritten in
+    * place as merges fuse symbols.
+    */
+  private def schedule(words: Array[Array[String]], freqs: Array[Long],
+      maxMerges: Long, minPairFreq: Long): Seq[Merge] = {
+    val counts = mutable.HashMap.empty[(String, String), Long]
+    val postings = mutable.HashMap.empty[(String, String), mutable.Set[Int]]
+    for (i <- words.indices; p <- pairs(words(i))) {
+      counts(p) = counts.getOrElse(p, 0L) + freqs(i)
+      postings.getOrElseUpdate(p, mutable.Set.empty) += i
+    }
+    val merges = Seq.newBuilder[Merge]
+    var r = 1L
+    var stop = false
+    while (r <= maxMerges && !stop) {
       val top = counts.iterator.reduceOption[((String, String), Long)] {
         case (a @ ((ax, ay), ac), b @ ((bx, by), bc)) =>
           if (bc > ac || (bc == ac && (bx < ax || (bx == ax && by < ay)))) b
           else a
       }
-      if (top.isEmpty || top.get._2 < minPairFreq) continue = false
+      if (top.isEmpty || top.get._2 < minPairFreq) stop = true
       else {
         val ((x, y), cnt) = top.get
-        merges += ((r.toLong, x, y, cnt))
-        // job 1: one fold pass over the vocab, keeping each CHANGED
-        // word's pre-merge symbols beside the merged ones (NULL for
-        // untouched words — most of the vocab most rounds) so the
-        // delta derives from the checkpoint instead of a second fold
-        val staged = vocab
-          .select(mergeOnce(col("s"), x, y).as("s"),
-            col("s").as("prev0"), col("freq"))
-          .select(col("s"),
-            when(size(col("s")) < size(col("prev0")), col("prev0")).as("prev"),
-            col("freq"))
-          .localCheckpoint()
-        // job 2: the bounded delta — old pairs of changed words minus,
-        // merged pairs plus, one single-partition aggregate over the
-        // just-checkpointed rows
-        val changed = staged.where(col("prev").isNotNull)
-        val delta = rawPairRows(
-            changed.select(col("prev").as("s"), (-col("freq")).as("freq")))
-          .unionByName(rawPairRows(changed.select(col("s"), col("freq"))))
-          .coalesce(1)
-          .groupBy(col("x"), col("y")).agg(sum(col("cnt")).as("cnt"))
-          .collect()
-        delta.foreach { d =>
-          val k = (d.getString(0), d.getString(1))
-          val next = counts.getOrElse(k, 0L) + d.getLong(2)
-          if (next > 0L) counts(k) = next else counts.remove(k)
+        merges += ((r, x, y, cnt))
+        val delta = mutable.HashMap.empty[(String, String), Long]
+        for (i <- postings.getOrElse((x, y), mutable.Set.empty[Int]).toArray) {
+          val prev = words(i)
+          val next = sweep(prev, x, y)
+          if (next.length < prev.length) {
+            for (p <- pairs(prev)) {
+              delta(p) = delta.getOrElse(p, 0L) - freqs(i)
+              postings.get(p).foreach { ws =>
+                ws -= i
+                if (ws.isEmpty) postings.remove(p)
+              }
+            }
+            for (p <- pairs(next)) {
+              delta(p) = delta.getOrElse(p, 0L) + freqs(i)
+              postings.getOrElseUpdate(p, mutable.Set.empty) += i
+            }
+            words(i) = next
+          }
         }
-        vocab = staged.select(col("s"), col("freq"))
+        for ((k, d) <- delta) {
+          val n = counts.getOrElse(k, 0L) + d
+          if (n > 0L) counts(k) = n else counts.remove(k)
+        }
         r += 1
       }
     }
-    merges.toSeq.toDF("rank", "lhs", "rhs", "pair_freq")
-      .orderBy(col("rank").asc)
+    merges.result()
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.collection.mutable
+
 /** Distributed connected components over an undirected edge list — the
   * missing step between near-dup PAIR detection (Dedup.*) and actual
   * deduplication: pairs form a graph, a dedup group is a connected
@@ -35,6 +37,11 @@ import org.apache.spark.sql.functions._
   * labels (short-circuits; no full count), and `maxRounds` is a safety
   * valve that THROWS rather than silently returning a partially-merged
   * labeling.
+  *
+  * A request-sized graph pays none of those rounds: [[assignAdaptive]]
+  * collects the induced edges once and runs union-find on the driver
+  * when they fit its bound, the bounded-local discipline of
+  * [[Iterate.collectWithin]].
   */
 object ConnectedComponents {
 
@@ -57,7 +64,64 @@ object ConnectedComponents {
     labels
   }
 
-  /** Adaptive resolution — the production default: a few rounds of
+  /** The most induced edges [[assignAdaptive]] resolves on the driver. */
+  private[graft] val LocalEdgeBound = 1 << 18
+
+  /** Adaptive resolution — the production default. Components are those
+    * of the subgraph INDUCED by `nodes`: an edge with an endpoint outside
+    * `nodes` is never followed, by either path below.
+    *
+    * Small graphs resolve on the driver: the induced edges are collected
+    * once through [[Iterate.collectWithin]] (at most [[LocalEdgeBound]]
+    * rows, read through `limit(bound + 1)`), union-find links each pair
+    * of roots to the smaller one, and the result is
+    * `nodes ⟕ broadcast(labels)` with `coalesce(root, id)` — one row per
+    * input node row, duplicates included, and no Spark job per round.
+    * Ids are integral.
+    *
+    * Past the bound the induced edges resolve distributed
+    * ([[assignAdaptiveDistributed]]), which reads them from the cache the
+    * bounded collect filled (the sf1 canon_ids build computed its
+    * 300k-edge relation twice without it).
+    */
+  def assignAdaptive(nodes: DataFrame, edges: DataFrame,
+                     quickRounds: Int = 6, maxRounds: Int = 60,
+                     checkpointDir: Option[String] = None): DataFrame = {
+    val ids = nodes.select(col("id"))
+    // cached so that a graph past the bound does not compute its edges
+    // twice: the distributed body reads the partitions the collect scanned
+    val induced = edges
+      .join(ids.select(col("id").as("id_a")), Seq("id_a"), "left_semi")
+      .join(ids.select(col("id").as("id_b")), Seq("id_b"), "left_semi")
+      .select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .persist()
+    try Iterate.collectWithin(induced, LocalEdgeBound) match {
+      case None => assignAdaptiveDistributed(nodes, induced, quickRounds, maxRounds, checkpointDir)
+      case Some(rows) =>
+        val parent = mutable.HashMap.empty[Long, Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent(r)
+          var c = x
+          while (c != r) { val next = parent(c); parent(c) = r; c = next }
+          r
+        }
+        for (e <- rows) {
+          val (ra, rb) = (find(e.getLong(0)), find(e.getLong(1)))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        val spark = nodes.sparkSession
+        import spark.implicits._
+        // roots are absent: coalesce(root, id) labels them, as it does
+        // every node no induced edge touches
+        val labels = parent.keys.toSeq.map(k => (k, find(k))).toDF("id", "root")
+        ids.join(broadcast(labels), Seq("id"), "left")
+          .select(col("id"),
+            coalesce(col("root"), col("id")).cast(ids.schema("id").dataType).as("cluster_id"))
+    } finally induced.unpersist()
+  }
+
+  /** The distributed body of [[assignAdaptive]]: a few rounds of
     * min-label propagation first (2 cheap jobs per round; near-dup
     * graphs are near-cliques and mostly converge in 2–5), escalating to
     * the alternating-star algorithm only when the graph is actually
@@ -70,9 +134,9 @@ object ConnectedComponents {
     * IS the original component minimum — composition preserves the
     * min-id contract.
     */
-  def assignAdaptive(nodes: DataFrame, edges: DataFrame,
-                     quickRounds: Int = 6, maxRounds: Int = 60,
-                     checkpointDir: Option[String] = None): DataFrame = {
+  private[graft] def assignAdaptiveDistributed(nodes: DataFrame, edges: DataFrame,
+      quickRounds: Int = 6, maxRounds: Int = 60,
+      checkpointDir: Option[String] = None): DataFrame = {
     val (labels, converged, _) = propagate(nodes, edges, quickRounds, checkpointDir)
     if (converged) labels
     else {

@@ -86,14 +86,22 @@ private[graft] object Iterate {
         "sets only"): _*), df.schema)
 
   /** The one bounded driver collect: `df`'s rows when there are at most
-    * `bound`, read through `limit(bound + 1)` so a violated bound brings
-    * bound + 1 rows to the driver, never the whole frame, before it
+    * `bound`, else None. It reads through `limit(bound + 1)`, so a
+    * violated bound brings bound + 1 rows to the driver, never the whole
+    * frame.
+    */
+  def collectWithin(df: DataFrame, bound: Long): Option[Array[Row]] = {
+    val rows = df.limit(math.min(bound + 1, Int.MaxValue.toLong).toInt).collect()
+    if (rows.length <= bound) Some(rows) else None
+  }
+
+  /** [[collectWithin]] for a path with no fallback: a violated bound
     * throws `overflow` as an IllegalArgumentException.
     */
   def collectBounded(df: DataFrame, bound: Long)(overflow: => String): Array[Row] = {
-    val rows = df.limit(math.min(bound + 1, Int.MaxValue.toLong).toInt).collect()
-    require(rows.length <= bound, overflow)
-    rows
+    val rows = collectWithin(df, bound)
+    require(rows.isDefined, overflow)
+    rows.get
   }
 
   def withRunScopedCheckpoints(baseDir: String)

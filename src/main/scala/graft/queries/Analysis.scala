@@ -536,10 +536,10 @@ object Analysis {
 
   /** BPE tokenizer training over the corpus: learn the top-8 merges
     * (rank, lhs, rhs, pair_freq) — [[graft.operators.BpeTrainer]], the
-    * weighted-vocab formulation (one corpus pass, then bounded rounds
-    * over the distinct-word table with one argmax row collected per
-    * round). Same word model as q_chunk_tokens_bpe's oracle: split on
-    * the single-space corpus, Ġ prefix on non-initial words.
+    * weighted-vocab formulation (one corpus pass into the distinct-word
+    * table, collected once and trained on the driver). Same word model
+    * as q_chunk_tokens_bpe's oracle: split on the single-space corpus,
+    * Ġ prefix on non-initial words.
     */
   def bpeTrain(s: SparkSession, d: String): DataFrame = {
     val spark = s
@@ -550,7 +550,8 @@ object Analysis {
 
   /** The full 8-round merge schedule (and the base alphabet size),
     * trained ONCE per documents snapshot and memoized driver-side under
-    * the parquet-footer content fingerprint — the persisted-artifact
+    * the parquet-footer content fingerprint, both from one collected
+    * vocab ([[graft.operators.BpeTrainer.fit]]) — the persisted-artifact
     * discipline every quantizer here follows. All four BPE queries are
     * views of this one training: the stopping rules only ever TRUNCATE
     * the schedule (earlier merges are unaffected by when training
@@ -565,14 +566,8 @@ object Analysis {
   private[graft] def cachedMergeSchedule(s: SparkSession, d: String)
       : (Long, Seq[(Long, String, String, Long)]) =
     mergeCache(d, Artifacts.snapshotKey(s, d, "documents")) {
-      val vocab = graft.operators.BpeTrainer.weightedVocab(
-        Tables.documents(s, d), col("text"))
-      val alphabet = graft.operators.BpeTrainer.alphabetSize(vocab)
-      val schedule = graft.operators.BpeTrainer.train(vocab, rounds = 8)
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .toSeq
-      (alphabet, schedule)
+      graft.operators.BpeTrainer.fit(graft.operators.BpeTrainer.weightedVocab(
+        Tables.documents(s, d), col("text")), rounds = 8)
     }
 
   /** BPE training to a TARGET VOCAB SIZE — how real tokenizer training

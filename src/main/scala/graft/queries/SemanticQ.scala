@@ -65,12 +65,14 @@ object SemanticQ {
       .select(col("vec_id"), KMeansOp.intVec(col("embedding")).as("v"))
 
   /** The vec_id=0 probe's raw embedding, collected — the one query every
-    * single-probe tier and recall monitor here serves.
+    * single-probe tier and recall monitor here serves. A plain collect is
+    * one job; a `head()` limit scan starts a second one whenever the
+    * first partition holds no vec_id=0 row.
     */
-  private def probe(s: SparkSession, d: String): Seq[Double] = {
+  private[graft] def probe(s: SparkSession, d: String): Seq[Double] = {
     import s.implicits._
     Tables.embeddings(s, d).where(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>")).as[Seq[Double]].head()
+      .select(col("embedding").cast("array<double>")).as[Seq[Double]].collect().head
   }
 
   /** The integer-exact top-k of (vec_id, v) rows by distance to `qv`,

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.BpeTrainer
+import graft.operators.{BpeTrainer, BpeTwins}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -43,13 +44,37 @@ class BpeTrainerSpec extends AnyFunSuite {
     out.result()
   }
 
+  /** The 300-merge fixture corpus: three documents over a seeded
+    * 180-word lexicon of letters a–l.
+    */
+  private lazy val fixtureTexts: IndexedSeq[String] = {
+    val rnd = new scala.util.Random(1234)
+    val letters = "abcdefghijkl"
+    val lexicon = (0 until 180).map { _ =>
+      val len = 3 + rnd.nextInt(8)
+      (0 until len).map(_ => letters(rnd.nextInt(letters.length))).mkString
+    }
+    // skewed pick (min of two uniforms) → Zipf-ish repetition, so pair
+    // counts separate and the argmax is exercised, not just ties
+    def word() = lexicon(
+      math.min(rnd.nextInt(lexicon.length), rnd.nextInt(lexicon.length)))
+    (0 until 3).map(_ => (0 until 400).map(_ => word()).mkString(" "))
+  }
+
+  private def fixtureDocs: DataFrame =
+    fixtureTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+
+  private def schedule(df: DataFrame): Seq[(Long, String, String, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+
   test("mergeOnce: leftmost-greedy, non-overlapping, boundary-safe") {
     val df = Seq(
       Seq("a", "a", "a"),          // odd run: merge (1,2) only
       Seq("a", "a", "a", "a"),     // even run: two merges
       Seq("b", "a", "c"),          // no adjacency
       Seq("xa", "a")               // last symbol ENDS with x but is not x
-    ).toDF("s").select(BpeTrainer.mergeOnce(col("s"), "a", "a").as("s"))
+    ).toDF("s").select(BpeTwins.mergeOnce(col("s"), "a", "a").as("s"))
     assert(df.collect().map(_.getSeq[String](0).toSeq).toSeq == Seq(
       Seq("aa", "a"), Seq("aa", "aa"), Seq("b", "a", "c"), Seq("xa", "a")))
   }
@@ -73,7 +98,7 @@ class BpeTrainerSpec extends AnyFunSuite {
         Vector.fill(rnd.nextInt(9))(alphabet(rnd.nextInt(alphabet.length)))
       }
       val got = words.toDF("s")
-        .select(BpeTrainer.mergeOnce(col("s"), x, y).as("s"))
+        .select(BpeTwins.mergeOnce(col("s"), x, y).as("s"))
         .collect().map(_.getSeq[String](0).toVector).toSeq
       assert(got == words.map(sweep(_, x, y)),
         s"divergence for pair ($x, $y)")
@@ -214,19 +239,8 @@ class BpeTrainerSpec extends AnyFunSuite {
     // ceiling), so realistic merge counts rest on this spec: a corpus
     // rich enough to sustain hundreds of merges, validated against the
     // same independent scalar trainer the 8-round oracles cross-check
-    val rnd = new scala.util.Random(1234)
-    val letters = "abcdefghijkl"
-    val lexicon = (0 until 180).map { _ =>
-      val len = 3 + rnd.nextInt(8)
-      (0 until len).map(_ => letters(rnd.nextInt(letters.length))).mkString
-    }
-    // skewed pick (min of two uniforms) → Zipf-ish repetition, so pair
-    // counts separate and the argmax is exercised, not just ties
-    def word() = lexicon(
-      math.min(rnd.nextInt(lexicon.length), rnd.nextInt(lexicon.length)))
-    val docTexts = (0 until 3).map(_ => (0 until 400).map(_ => word()).mkString(" "))
-    val docs = docTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "text")
+    val docTexts = fixtureTexts
+    val docs = fixtureDocs
     val vocab0 = docTexts.flatMap { t =>
         t.split(" ", -1).zipWithIndex
           .map { case (w, i) => if (i == 0) w else "Ġ" + w }
@@ -259,5 +273,46 @@ class BpeTrainerSpec extends AnyFunSuite {
     val floorQ = queries.Analysis.queries("q_bpe_train_floor")(spark, d)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     assert(floorQ == full.takeWhile(_._4 >= 2000L))
+  }
+
+  test("the driver-local sweep equals mergeOnce on random words holding " +
+    "\"\" and null symbols (x + y == x when y is \"\")") {
+    val rnd = new scala.util.Random(97)
+    val alphabet = Vector("a", "b", "ab", "", null)
+    val pairs = Vector(("a", "b"), ("a", ""), ("", ""), ("", "a"), ("ab", ""), ("a", "a"))
+    for ((x, y) <- pairs) {
+      val words = (0 until 60).map { _ =>
+        Vector.fill(rnd.nextInt(9))(alphabet(rnd.nextInt(alphabet.length)))
+      }
+      val want = words.toDF("s").select(BpeTwins.mergeOnce(col("s"), x, y).as("s"))
+        .collect().map(_.getSeq[String](0).toVector).toSeq
+      assert(words.map(w => BpeTrainer.sweep(w.toArray, x, y).toVector) == want,
+        s"divergence for pair ($x, $y)")
+    }
+    assert(BpeTrainer.sweep(Array("a", "", ""), "a", "").toSeq == Seq("a"),
+      "the fold compares against the accumulator's last element")
+  }
+
+  test("the driver-local trainer equals the distributed twin on the " +
+    "300-merge fixture") {
+    val vocab = BpeTrainer.weightedVocab(fixtureDocs, col("text"))
+    val got = schedule(BpeTrainer.train(vocab, rounds = 300))
+    assert(got.length == 300)
+    assert(got == schedule(BpeTwins.train(vocab, rounds = 300)))
+  }
+
+  test("the driver-local trainer equals the distributed twin under " +
+    "minPairFreq and targetVocab") {
+    val vocab = BpeTrainer.weightedVocab(fixtureDocs, col("text"))
+    val full = schedule(BpeTrainer.train(vocab, rounds = 30))
+    val alphabet = BpeTrainer.alphabetSize(vocab).toInt
+    val floor = full(11)._4 + 1
+    for ((minPairFreq, targetVocab) <- Seq((floor, Int.MaxValue),
+        (1L, alphabet + 7), (floor, alphabet + 20), (1L, alphabet))) {
+      val got = schedule(BpeTrainer.train(vocab, 30, minPairFreq, targetVocab))
+      assert(got.length < full.length && got == full.take(got.length))
+      assert(got == schedule(BpeTwins.train(vocab, 30, minPairFreq, targetVocab)),
+        s"minPairFreq $minPairFreq, targetVocab $targetVocab")
+    }
   }
 }

@@ -43,10 +43,11 @@ class CheckpointHygieneSpec extends AnyFunSuite {
         org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
   }
 
-  test("a violated bound brings at most bound + 1 rows to the driver: " +
-    "boundedLocal, PageRank.runBoundedLocal and the bounded MMR greedy " +
-    "collect through one limit of bound + 1") {
-    import spark.implicits._
+  /** The most rows each of the `n` driver collects `body` ran before
+    * its bound check threw could return, from the collected plan
+    * (-1: unbounded).
+    */
+  private def rowBounds(n: Int)(body: => Any): Seq[Long] = {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.execution.QueryExecution
     val collected = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
@@ -55,36 +56,43 @@ class CheckpointHygieneSpec extends AnyFunSuite {
         if (f == "collect") collected.add(qe.optimizedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    /** The most rows each of the `n` driver collects `body` ran before
-      * its bound check threw could return, from the collected plan
-      * (-1: unbounded).
-      */
-    def rowBounds(n: Int)(body: => Any): Seq[Long] = {
-      collected.clear()
+    spark.listenerManager.register(listener)
+    try {
       intercept[IllegalArgumentException](body)
       // listener events are delivered asynchronously
       val deadline = System.nanoTime() + 10000000000L
       while (collected.size < n && System.nanoTime() < deadline) Thread.sleep(50)
       Thread.sleep(200)
       collected.toArray(Array.empty[LogicalPlan]).toSeq.map(_.maxRows.getOrElse(-1L))
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val rows = spark.range(0, 1000, 1, 8).toDF("x")
-      assert(rowBounds(1)(operators.Iterate.boundedLocal(rows, maxRows = 5)) ==
-        Seq(6L))
-      // vertices past the node bound, then edges past its square
-      val edges = spark.range(0, 50).select(($"id" % 2).as("src"),
-        (($"id" + 1) % 2).as("dst"), lit(1L).as("w"))
-      assert(rowBounds(1)(operators.PageRank.runBoundedLocal(
-        rows.select($"x".as("node")), edges, 1, maxNodes = 3)) == Seq(4L))
-      assert(rowBounds(2)(operators.PageRank.runBoundedLocal(
-        spark.range(0, 2).toDF("node"), edges, 1, maxNodes = 2)) == Seq(2L, 5L))
-      val cand = rows.select(lit(0L).as("qid"), $"x".as("id"),
-        ($"x" / 1000.0).as("rel"))
-      val sims = Seq((0L, 0L, 1L, 0.5)).toDF("qid", "ia", "ib", "sim")
-      assert(rowBounds(1)(operators.Rerank.mmrSelectBatch(cand, sims, 2, 0.5,
-        boundedDeltas = Some(10))) == Seq(11L))
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a violated bound brings at most bound + 1 rows to the driver: " +
+    "boundedLocal, PageRank.runBoundedLocal and the bounded MMR greedy " +
+    "collect through one limit of bound + 1") {
+    import spark.implicits._
+    val rows = spark.range(0, 1000, 1, 8).toDF("x")
+    assert(rowBounds(1)(operators.Iterate.boundedLocal(rows, maxRows = 5)) ==
+      Seq(6L))
+    // vertices past the node bound, then edges past its square
+    val edges = spark.range(0, 50).select(($"id" % 2).as("src"),
+      (($"id" + 1) % 2).as("dst"), lit(1L).as("w"))
+    assert(rowBounds(1)(operators.PageRank.runBoundedLocal(
+      rows.select($"x".as("node")), edges, 1, maxNodes = 3)) == Seq(4L))
+    assert(rowBounds(2)(operators.PageRank.runBoundedLocal(
+      spark.range(0, 2).toDF("node"), edges, 1, maxNodes = 2)) == Seq(2L, 5L))
+    val cand = rows.select(lit(0L).as("qid"), $"x".as("id"),
+      ($"x" / 1000.0).as("rel"))
+    val sims = Seq((0L, 0L, 1L, 0.5)).toDF("qid", "ia", "ib", "sim")
+    assert(rowBounds(1)(operators.Rerank.mmrSelectBatch(cand, sims, 2, 0.5,
+      boundedDeltas = Some(10))) == Seq(11L))
+  }
+
+  test("BpeTrainer.train throws on a vocab past its bound after reading at " +
+    "most bound + 1 rows") {
+    val bound = operators.BpeTrainer.VocabBound
+    val vocab = spark.range(0, bound + 10L, 1, 4)
+      .select(array(col("id").cast("string")).as("s"), lit(1L).as("freq"))
+    assert(rowBounds(1)(operators.BpeTrainer.train(vocab, rounds = 1)) == Seq(bound + 1L))
   }
 }

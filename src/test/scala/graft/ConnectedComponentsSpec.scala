@@ -103,14 +103,14 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   test("adaptive resolver: shallow graphs converge in the quick phase, deep ones escalate") {
     // near-clique (diameter 2): quick propagation suffices
-    val clique = ConnectedComponents.assignAdaptive(
+    val clique = ConnectedComponents.assignAdaptiveDistributed(
       nodes(1L, 2L, 3L, 4L), edges((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(clique == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
     // 40-node chain: deeper than quickRounds — must escalate to the
     // star path and still fully converge
     val chain = (1L until 40L).map(i => (i, i + 1))
-    val got = ConnectedComponents.assignAdaptive(
+    val got = ConnectedComponents.assignAdaptiveDistributed(
       nodes(1L to 40L: _*), edges(chain: _*), quickRounds = 3)
       .collect().map(_.getLong(1)).toSet
     assert(got == Set(1L))
@@ -125,6 +125,28 @@ class ConnectedComponentsSpec extends AnyFunSuite {
         .filter { case (a, b) => a != b }
       val expect = run(nodes(ids: _*), edges(es: _*))
       assert(runStar(nodes(ids: _*), edges(es: _*)) == expect)
+    }
+  }
+
+  test("adaptive resolver's driver-local path equals min-label propagation " +
+    "on random graphs with outside endpoints, duplicate node rows, " +
+    "self-loops and isolated nodes") {
+    val rnd = new scala.util.Random(2026)
+    (1 to 6).foreach { _ =>
+      val n = 20 + rnd.nextInt(20)
+      // ids absent from the node set are endpoints outside it; n + 10 is
+      // a node no edge touches
+      val ids = (1L to n.toLong).filter(_ => rnd.nextInt(5) != 0) :+ (n + 10L)
+      val nodeRows = ids ++ ids.filter(_ => rnd.nextInt(6) == 0)
+      val es = Seq.fill(n / 2)((1L + rnd.nextInt(n + 5), 1L + rnd.nextInt(n + 5))) :+
+        ((ids.head, ids.head))
+      def rows(df: DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      val want = rows(ConnectedComponents.assign(nodes(nodeRows: _*), edges(es: _*),
+        maxRounds = 60))
+      assert(want.length == nodeRows.length)
+      assert(rows(ConnectedComponents.assignAdaptive(nodes(nodeRows: _*),
+        edges(es: _*))) == want)
     }
   }
 }

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Building a single-probe recall monitor collects its probe once: the
   * served side and the exact side share the collected embedding. With
   * the memos warm, the only jobs a `q_recall_*` DataFrame build starts
-  * are its driver-side reads, counted here by a SparkListener.
+  * are its driver-side reads, counted here by a SparkListener. The probe
+  * collect itself is one job wherever the vec_id=0 row lies.
   */
 class RecallJobsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -47,5 +48,41 @@ class RecallJobsSpec extends AnyFunSuite {
       "q_recall_sq8_dim" -> 4,
       "q_recall_sq8_dim_part" -> 3,
     ), got.map { case (n, c) => s"""    "$n" -> $c,""" }.mkString("\n"))
+  }
+
+  test("the vec_id=0 probe collect is one job when the first partition " +
+    "holds no vec_id=0 row") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_probe").toString
+    val path = s"$dir/embeddings.parquet"
+    // one file per partition, largest first: vec_id 0 lands in the last
+    def rows(from: Long, to: Long) = spark.range(from, to, 1, 1)
+      .select(col("id").as("vec_id"),
+        array(col("id").cast("float"), lit(0.5f)).as("embedding"))
+    rows(1, 400).write.parquet(path)
+    rows(400, 500).write.mode("append").parquet(path)
+    rows(0, 1).write.mode("append").parquet(path)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Any): Int = {
+      ListenerBusDrain.drain(spark.sparkContext)
+      val before = jobs.get()
+      body
+      ListenerBusDrain.drain(spark.sparkContext)
+      jobs.get() - before
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // reading the table infers its schema from the footers, a job of its own
+      val read = jobsOf(Tables.embeddings(spark, dir))
+      var probe: Seq[Double] = Nil
+      assert(jobsOf { probe = queries.SemanticQ.probe(spark, dir) } == read + 1)
+      assert(probe == Seq(0.0, 0.5))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 }

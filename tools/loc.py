@@ -31,7 +31,10 @@ Prints, one `name: value` per line:
   - tail_decisions: `headTailAvMeta` uses in src/main code outside its
     definition;
   - full_rereads: `withFullBytes(` call sites in src/main code (its
-    definition excluded).
+    definition excluded);
+  - collect_bounded_sites: `Iterate.collectBounded(` and
+    `Iterate.collectWithin(` call sites in src/main code, i.e. the
+    bounded driver collects outside `Iterate` itself.
 """
 import os
 import re
@@ -147,6 +150,8 @@ def main():
     counts["media_annotations"] = uses("withImageMeta", True)
     counts["tail_decisions"] = uses("headTailAvMeta", False)
     counts["full_rereads"] = uses("withFullBytes", True)
+    counts["collect_bounded_sites"] = occurs(
+        r"\bIterate\.collect(Bounded|Within)\(", main_files)
     for k, v in counts.items():
         print(f"{k}: {v}")
 
