@@ -32,8 +32,8 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
 
   /** Median of reps — the ONE spelling every probe main shares
-    * (ScaleProbe, ScaleProbe100, MediaProbe, LshDriftProbe; review
-    * r20: four drifting copies collapsed to this).
+    * (ScaleProbe, ScaleProbe100, MediaProbe; review r20: four drifting
+    * copies collapsed to this).
     */
   private[graft] def medianOf(xs: Seq[Double]): Double = {
     val s = xs.sorted; val n = s.length

@@ -80,27 +80,28 @@ object Encoding {
 
   /** Fit `kind` on the (vec_id, embedding) `corpus` against the frozen
     * `coarse` centroids: m subspace codebooks of k entries (`iters`
-    * integer Lloyd rounds) for the PQ family, the scale(s) for SQ8.
+    * integer Lloyd rounds) for the PQ family, the scale(s) for SQ8. A
+    * PQ-family fit collects its integer training set once
+    * ([[KMeansOp.points]]: the vectors, or their coarse residuals for
+    * residual PQ) and slices (OPQ: permutes, then slices) on the driver.
     */
   def train(kind: Kind, corpus: DataFrame, coarse: Seq[(Long, Seq[Long])],
       k: Int, iters: Int, m: Int, subDim: Int): Quantizers = {
     lazy val vecs = corpus.select(col("vec_id"),
       KMeansOp.intVec(col("embedding")).as("v"))
-    // m integer-Lloyd fits over already-scaled (vec_id, v) subvectors
-    def fit(rows: DataFrame, sub: Int => Column) = (0 until m).map(i =>
-      KMeansOp.lloydCentroidsLocalInt(
-        rows.select(col("vec_id"), sub(i).as("v")), k, iters))
+    def fit(pts: KMeansOp.Points) =
+      ProductQuantizer.fitSubspaces(pts, m, subDim, k, iters)
     kind match {
       case Pq => Quantizers(coarse, ProductQuantizer.train(
         corpus, "vec_id", col("embedding"), m, subDim, k, iters), subDim)
-      case ResidualPq => Quantizers(coarse,
-        fit(ProductQuantizer.residuals(vecs, coarse),
-          i => slice(col("r"), i * subDim + 1, subDim)), subDim, ResidualPq)
+      case ResidualPq => Quantizers(coarse, fit(KMeansOp.points(
+        ProductQuantizer.residuals(vecs, coarse).select(col("vec_id"), col("r").as("v")))),
+        subDim, ResidualPq)
       case Opq =>
         val p = ProductQuantizer.opqAllocation(vecs, m).flatten
+        val pa = p.toArray
         Quantizers(coarse.map { case (cid, c) => (cid, p.map(c(_))) },
-          fit(vecs, i => permute(col("v"), p.slice(i * subDim, (i + 1) * subDim))),
-          subDim, Opq(p))
+          fit(KMeansOp.points(vecs).map(v => pa.map(i => v(i)))), subDim, Opq(p))
       case Sq8 => Quantizers(coarse, Nil, subDim, Sq8(
         corpus.agg(ProductQuantizer.amaxExpr(col("embedding"))).head().getDouble(0)))
       case Sq8Dim =>

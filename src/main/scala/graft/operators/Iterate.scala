@@ -76,8 +76,8 @@ private[graft] object Iterate {
     * when the frame is dropped. The `maxRows` require is the loudness
     * contract: this is ONLY for sets whose size the ALGORITHM bounds
     * (k·|queries| rows), and a violated bound must fail, not silently
-    * pull data to the driver (the same discipline as
-    * KMeansOp.lloydCentroidsLocal / VectorOps.queryVector).
+    * pull data to the driver (the same discipline as every k-means
+    * fit's one training collect, KMeansOp.points).
     */
   def boundedLocal(df: DataFrame, maxRows: Int): DataFrame =
     df.sparkSession.createDataFrame(java.util.Arrays.asList(

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Lloyd k-means over an embedding column in scaled-integer arithmetic —
   * the clustering primitive a SemDeDup-style semantic-dedup pipeline runs
@@ -27,16 +28,25 @@ import org.apache.spark.sql.functions._
   *     cross-engine;
   *   - assignment ties break on the lower centroid id.
   *
-  * Scale shape (100 TB): centroids are k·d integers — broadcast to every
-  * task (the assign step is a broadcast nested-loop over a BOUNDED k,
-  * i.e. a map-side argmin, no shuffle of the corpus). The update step is
-  * one partial-aggregated shuffle of at most k·d cells (posexplode →
-  * groupBy (cid, pos) rides map-side combine, so the shuffle carries
-  * k·d·partitions rows, independent of corpus size). Iterations multiply
-  * cost linearly; k grows ∝ √N for IVF training and the broadcast stays
-  * tiny.
+  * Overflow follows Spark's ANSI mode, read from `SQLConf` when a fit or
+  * a driver-side distance runs (as [[intDist]]'s expression reads it when
+  * built): with ANSI on, a Long overflow in a distance or a per-(cluster,
+  * dim) sum throws ArithmeticException; with ANSI off it wraps.
+  *
+  * Scale shape: training is FAISS's (Johnson, Douze & Jégou,
+  * "Billion-scale similarity search with GPUs"): one bounded collect of
+  * the training set, then every Lloyd round in memory on the driver. The
+  * collect holds at most 2^18 vectors (128 MiB of BIGINTs at 64 dims)
+  * and throws past that bound; a larger corpus trains on a bounded
+  * sample (the sampled √N quantizer, SemanticQ.sampledCentroids). The
+  * corpus-sized step stays distributed: [[assign]]/[[assignCells]]
+  * broadcast the k·d centroid integers to every task (a map-side argmin
+  * over a BOUNDED k, no shuffle of the corpus).
   */
 object KMeansOp {
+
+  /** The most vectors one fit collects: 2^18, ≤ 128 MiB at 64 dims. */
+  private val MaxTrainRows = 1 << 18
 
   /** floor(x·10^6) per element, BIGINT — the shared integer scale. */
   def intVec(emb: Column): Column =
@@ -86,83 +96,78 @@ object KMeansOp {
       .agg(min(col("cand")).as("m"))
       .select(col("vec_id"), col("m.cid").as("cid"), col("m.dist").as("dist"))
 
-  /** Recompute centroids from an assignment: per (cluster, dim) exact
-    * integer mean, floor-divided through an exact double (see contract).
-    * Emits (cid, c); clusters that lost every member simply disappear.
+  /** A training set on the driver: vec_ids ascending, each with its
+    * integer vector as a primitive row of one shared length.
     */
-  def update(assigned: DataFrame): DataFrame =
-    assigned.select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("cid"), col("pos"))
-      .agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
-      .withColumn("cv", floor(col("sx").cast("double") / col("n")).cast("long"))
-      .groupBy(col("cid"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("cv")))).as("arr"))
-      .select(col("cid"), transform(col("arr"), s => s.getField("cv")).as("c"))
+  private[graft] final case class Points(ids: Array[Long], rows: Array[Array[Long]]) {
+    def size: Int = ids.length
 
-  /** Full Lloyd loop: seed centroids = the vectors with the k LOWEST ids
-    * (identical to the id<k convention of AnnSearch.ivfAssign when ids are
-    * dense from 0, but well-defined for any id space), run `iters`
-    * assign→update rounds, return the FINAL assignment
-    * (vec_id, cluster, dist_scaled).
-    *
-    * Centroids are materialized to the DRIVER between rounds (k·d BIGINTs
-    * — bounded by the algorithm, not the data; the same pattern as
-    * VectorOps.queryVector and MLlib's own KMeans). This is the scale
-    * decision, not a convenience: lazy chaining would nest every previous
-    * round inside the final plan, re-scanning the corpus
-    * (iters+1)·(iters+2)/2 times in one job; collected centroids truncate
-    * the lineage so each round is exactly ONE corpus pass, and the next
-    * assign broadcasts a LocalRelation. Values are unchanged (the integer
-    * contract makes the roundtrip exact).
-    */
-  def lloyd(emb: DataFrame, idCol: String, embCol: Column,
-      k: Int, iters: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val vecs = emb.select(col(idCol).as("vec_id"), intVec(embCol).as("v"))
-    val cents = lloydCentroidsLocal(emb, idCol, embCol, k, iters)
-    assignCells(vecs, cents.toDF("cid", "c"))
-      .select(col("vec_id"), col("cid").as("cluster"),
-        col("dist").as("dist_scaled"))
+    /** The same points with every row mapped (a subspace slice, a
+      * permutation). */
+    def map(f: Array[Long] => Array[Long]): Points = Points(ids, rows.map(f))
   }
 
-  /** The trained centroids themselves, as driver-local values — the
-    * coarse quantizer an IVF index keeps after training. k·d BIGINTs,
-    * bounded by the algorithm; exactly the per-round materialization
-    * `lloyd` performs anyway, surfaced so search-time code can pick probe
-    * cells without another corpus pass.
+  /** The one read of a fit's training set: the (vec_id, v BIGINT array)
+    * rows of `vecs` through one bounded collect. Past 2^18 rows it
+    * throws; a null vec_id, vector or element, or a vector whose length
+    * differs from the lowest id's, throws IllegalArgumentException
+    * naming the vec_id.
+    */
+  private[graft] def points(vecs: DataFrame): Points = {
+    val rows = Iterate.collectBounded(
+      vecs.select(col("vec_id").cast("long"), col("v")), MaxTrainRows)(
+      s"k-means trains on the driver over at most $MaxTrainRows vectors; " +
+        "fit a larger corpus on a bounded sample, as the sampled √N " +
+        "quantizer (SemanticQ.sampledCentroids) does")
+    val pts = rows.map { r =>
+      require(!r.isNullAt(0), "k-means input has a null vec_id")
+      val id = r.getLong(0)
+      require(!r.isNullAt(1), s"k-means input vec_id=$id has a null vector")
+      id -> r.getSeq[java.lang.Long](1).iterator.map { x =>
+        require(x != null, s"k-means input vec_id=$id has a null element")
+        x.longValue
+      }.toArray
+    }.sortBy(_._1)
+    pts.foreach { case (id, v) =>
+      require(v.length == pts(0)._2.length, s"k-means input vec_id=$id has " +
+        s"${v.length} dims, vec_id=${pts(0)._1} has ${pts(0)._2.length}")
+    }
+    Points(pts.map(_._1), pts.map(_._2))
+  }
+
+  /** The trained centroids, as driver-local values — the coarse
+    * quantizer an IVF index keeps after training: [[points]] over the
+    * scaled embeddings, then [[lloydCentroidsInMemory]].
     */
   def lloydCentroidsLocal(emb: DataFrame, idCol: String, embCol: Column,
       k: Int, iters: Int): Seq[(Long, Seq[Long])] =
-    lloydCentroidsLocalInt(
-      emb.select(col(idCol).as("vec_id"), intVec(embCol).as("v")), k, iters)
+    lloydCentroidsInMemory(
+      points(emb.select(col(idCol).as("vec_id"), intVec(embCol).as("v"))), k, iters)
 
-  /** [[lloydCentroidsLocal]] over ALREADY-SCALED integer vectors
-    * (vec_id, v BIGINT array) — the entry point for quantizing derived
-    * integer spaces (e.g. IVFADC residuals), where re-applying the
-    * float→int scale would be wrong.
+  /** Integer squared L2 between two driver-local vectors of one length,
+    * under Spark's ANSI mode at the call: a Long overflow throws
+    * ArithmeticException with ANSI on and wraps with it off.
     */
-  def lloydCentroidsLocalInt(vecs: DataFrame,
-      k: Int, iters: Int): Seq[(Long, Seq[Long])] = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    var cents = vecs.orderBy(col("vec_id")).limit(k)
-      .select(col("vec_id").as("cid"), col("v").as("c"))
-      .as[(Long, Seq[Long])].collect().toSeq
-    require(cents.size == k,
-      s"k-means needs k=$k seed vectors but the input has only ${cents.size}")
-    for (_ <- 1 to iters)
-      cents = update(assign(vecs, cents.toDF("cid", "c")))
-        .select(col("cid"), col("c"))
-        .as[(Long, Seq[Long])].collect().toSeq
-    cents
+  def intDistLocal(a: Array[Long], b: Array[Long]): Long =
+    intDistLocal(a, b, SQLConf.get.ansiEnabled)
+
+  /** [[intDistLocal]] with the ANSI mode read once by the caller. */
+  private def intDistLocal(a: Array[Long], b: Array[Long], exact: Boolean): Long = {
+    require(a.length == b.length,
+      s"integer distance over vectors of ${a.length} and ${b.length} dims")
+    var s = 0L; var i = 0
+    while (i < a.length) {
+      if (exact) {
+        val d = Math.subtractExact(a(i), b(i))
+        s = Math.addExact(s, Math.multiplyExact(d, d))
+      } else {
+        val d = a(i) - b(i)
+        s += d * d
+      }
+      i += 1
+    }
+    s
   }
-
-  /** Integer squared L2 between two driver-local vectors (probe-cell
-    * selection against the bounded centroid set).
-    */
-  def intDistLocal(a: Seq[Long], b: Seq[Long]): Long =
-    a.iterator.zip(b.iterator).map { case (x, y) => (x - y) * (x - y) }.sum
 
   /** The `n` nearest coarse cells to a driver-local query vector —
     * THE probe-cell selection convention, in one place: order by
@@ -171,61 +176,52 @@ object KMeansOp {
     * chains encode). Bounded: |cents| entries, driver-side.
     */
   def nearestCells(cents: Seq[(Long, Seq[Long])], query: Seq[Long],
-      n: Int): Seq[Long] =
-    cents.map { case (cid, c) => (cid, intDistLocal(c, query)) }
+      n: Int): Seq[Long] = {
+    val q = query.toArray
+    cents.map { case (cid, c) => (cid, intDistLocal(c.toArray, q)) }
       .sortBy { case (cid, d) => (d, cid) }
       .take(n).map(_._1)
+  }
 
-  /** [[lloydCentroidsLocalInt]] computed entirely IN MEMORY over an
-    * already-collected point set — bit-identical semantics (seed = the
-    * k lowest ids, assignment min by (dist, cid), update = floor of
-    * the exact-double per-dim mean, empty clusters disappear), so the
-    * DuckDB oracle chains replay it unchanged.
-    *
-    * This is how production IVF builds actually train (FAISS runs
-    * k-means on a bounded in-memory sample on one node, then assigns
-    * the corpus): when the training set is algorithm-bounded — e.g.
-    * the 16·⌈√N⌉ hash-ranked sample of the √N quantizer, 16·√N·d·8 B ≈
-    * 3.7 MB at the 100× probe and ~260 MB at N = 10^9 — a distributed
-    * Lloyd round pays S·k row materialization + a shuffle per round
-    * for work a single JVM does in milliseconds. The corpus-sized
-    * stages (the sample ranking and the final full assignment) stay
-    * distributed.
+  /** The one integer Lloyd loop, over a collected training set: seeds
+    * are the k lowest ids; each round assigns every point to its
+    * nearest centroid (ties to the lower cid) and replaces each
+    * centroid by the floor of the exact-double per-dim mean of its
+    * members; clusters that lose every member disappear. The DuckDB
+    * oracle chains (SemanticQ.lloydSql*) replay it unchanged. Returns
+    * (cid, centroid) ascending by cid.
     */
-  def lloydCentroidsInMemory(pts: Seq[(Long, Seq[Long])], k: Int,
+  private[graft] def lloydCentroidsInMemory(pts: Points, k: Int,
       iters: Int): Seq[(Long, Seq[Long])] = {
-    val sorted = pts.sortBy(_._1).map { case (id, v) => (id, v.toArray) }
-    require(sorted.size >= k,
-      s"k-means needs k=$k seed vectors but the input has only ${sorted.size}")
-    def dist(a: Array[Long], b: Array[Long]): Long = {
-      var s = 0L; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    var cents: Seq[(Long, Array[Long])] =
-      sorted.take(k).map { case (id, v) => (id, v.clone()) }
+    require(pts.size >= k,
+      s"k-means needs k=$k seed vectors but the input has only ${pts.size}")
+    val exact = SQLConf.get.ansiEnabled
+    var cids = pts.ids.take(k)
+    var cents = pts.rows.take(k)
     for (_ <- 1 to iters) {
-      val assigned = sorted.map { case (_, v) =>
-        var bestCid = 0L; var bestDist = Long.MaxValue
-        cents.foreach { case (cid, c) =>
-          val dd = dist(v, c)
-          if (dd < bestDist || (dd == bestDist && cid < bestCid)) {
-            bestDist = dd; bestCid = cid
+      val sums = cents.map(c => new Array[Long](c.length))
+      val counts = new Array[Int](cents.length)
+      pts.rows.foreach { v =>
+        // cents ascend by cid, so a strict < keeps the lower cid on ties
+        var best = -1; var bestDist = 0L; var j = 0
+        while (j < cents.length) {
+          val d = intDistLocal(v, cents(j), exact)
+          if (best < 0 || d < bestDist) { best = j; bestDist = d }
+          j += 1
+        }
+        if (best >= 0) {
+          counts(best) += 1
+          val s = sums(best); var i = 0
+          while (i < s.length) {
+            s(i) = if (exact) Math.addExact(s(i), v(i)) else s(i) + v(i)
+            i += 1
           }
         }
-        (bestCid, v)
       }
-      cents = assigned.groupBy(_._1).toSeq.map { case (cid, members) =>
-        val dim = members.head._2.length
-        cid -> Array.tabulate(dim) { j =>
-          var s = 0L
-          members.foreach(m => s += m._2(j))
-          // exact LONG sum through one exact double division, floored —
-          // identical to update()'s floor(double(Σ) / n)
-          math.floor(s.toDouble / members.length).toLong
-        }
-      }.sortBy(_._1)
+      val kept = cents.indices.filter(counts(_) > 0)
+      cids = kept.map(cids).toArray
+      cents = kept.map(j => sums(j).map(s => math.floor(s.toDouble / counts(j)).toLong)).toArray
     }
-    cents.map { case (cid, c) => (cid, c.toSeq) }
+    cids.toSeq.zip(cents.map(_.toSeq))
   }
 }

@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
   * Everything runs in the scaled-integer domain of [[KMeansOp]] (floor
   * ×10^6 BIGINTs), so codebooks, codes, and ADC distances are exact and
   * cross-engine reproducible:
-  *   - training: per subspace, the 2-round integer Lloyd of
-  *     `KMeansOp.lloydCentroidsLocal` on the SLICED float arrays
-  *     (slice-then-floor ≡ floor-then-slice, elementwise);
+  *   - training: one bounded collect of the scaled vectors
+  *     (`KMeansOp.points`), then per subspace the 2-round integer Lloyd
+  *     of `KMeansOp.lloydCentroidsInMemory` on driver-side slices
+  *     (floor-then-slice ≡ slice-then-floor, elementwise);
   *   - encode: nearest sub-centroid per subspace, ties to the lower
   *     centroid id — ONE projection over the corpus (the candidate set is
   *     a k-element literal array; `array_min` over (dist, cid) structs is
@@ -36,17 +37,24 @@ import org.apache.spark.sql.functions._
   */
 object ProductQuantizer {
 
-  /** Per-subspace codebooks: `m` independent integer-Lloyd fits over the
-    * sliced embedding column. Returns one (cid, centroid) list per
-    * subspace; cids are the seed vec_ids (the k lowest), exactly the
+  /** Per-subspace codebooks: the scaled embeddings collected once,
+    * then `m` independent integer-Lloyd fits over their subspace slices
+    * ([[fitSubspaces]]). Returns one (cid, centroid) list per subspace;
+    * cids are the seed vec_ids (the k lowest), exactly the
     * [[KMeansOp.lloydCentroidsLocal]] convention. Driver-held and
     * bounded: m·k·subDim BIGINTs.
     */
   def train(emb: DataFrame, idCol: String, embCol: Column,
       m: Int, subDim: Int, k: Int, iters: Int): Seq[Seq[(Long, Seq[Long])]] =
-    (0 until m).map(s => KMeansOp.lloydCentroidsLocal(
-      emb.select(col(idCol), slice(embCol, s * subDim + 1, subDim).as("e")),
-      idCol, col("e"), k, iters))
+    fitSubspaces(KMeansOp.points(emb.select(col(idCol).as("vec_id"),
+      KMeansOp.intVec(embCol).as("v"))), m, subDim, k, iters)
+
+  /** `m` integer-Lloyd fits over collected points, subspace s being
+    * dims [s·subDim, (s+1)·subDim) of each row. */
+  private[operators] def fitSubspaces(pts: KMeansOp.Points, m: Int, subDim: Int,
+      k: Int, iters: Int): Seq[Seq[(Long, Seq[Long])]] =
+    (0 until m).map(s => KMeansOp.lloydCentroidsInMemory(
+      pts.map(_.slice(s * subDim, (s + 1) * subDim)), k, iters))
 
   /** The SQ8 global-scale TRAINING aggregate — the corpus max
     * |coordinate| as an exact double, [[Encoding.train]]'s one spelling:
@@ -133,8 +141,8 @@ object ProductQuantizer {
   def adcTables(query: Seq[Long], books: Seq[Seq[(Long, Seq[Long])]],
       subDim: Int): Seq[Map[Long, Long]] =
     books.zipWithIndex.map { case (book, s) =>
-      val qSub = query.slice(s * subDim, (s + 1) * subDim)
-      book.map { case (cid, c) => cid -> KMeansOp.intDistLocal(c, qSub) }.toMap
+      val qSub = query.slice(s * subDim, (s + 1) * subDim).toArray
+      book.map { case (cid, c) => cid -> KMeansOp.intDistLocal(c.toArray, qSub) }.toMap
     }
 
   /** Asymmetric distance of a code row: the per-subspace LUT entries

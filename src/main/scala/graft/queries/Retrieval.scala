@@ -113,7 +113,7 @@ object Retrieval {
     // leaves the window already hash-partitioned AND sorted on h, exactly
     // the distribution/order the equi-join consumes — no aggregate
     // subtree, no broadcast of the rare-gram set, pg scanned twice not
-    // three times. Skew-safe per the r21 gram-skew probe (GramSkewProbe):
+    // three times. Skew-safe per the r21 gram-skew adjudication (BASELINE.md):
     // the hottest gram hash owns 4 occurrences at sf0.1 AND at 10× rows
     // (share 2e-6, max-task/mean-task 1.005), so the window's h partition
     // has no straggler key for AQE to miss.

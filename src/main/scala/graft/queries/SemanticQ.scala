@@ -366,17 +366,18 @@ object SemanticQ {
     * [[scaledCentroids]].
     */
   /** √N quantizer fit: k = ⌈√N⌉ over the dataset's embeddings, 2-round
-    * integer Lloyd. k is data-dependent, but it is a pure function of
-    * the snapshot (the COUNT), so the fit memoizes under the same
+    * integer Lloyd, N read off the one collected training set. k is
+    * data-dependent, but it is a pure function of the snapshot, so the
+    * fit memoizes under the same
     * content fingerprint as the fixed-k quantizer — q_semdedup_scaled
     * and q_corpus_build_v3 share one training per session, mirroring
     * the production persisted-artifact discipline.
     */
   private[graft] def scaledCentroids(s: SparkSession, d: String): Seq[(Long, Seq[Long])] =
     cachedCentroids(s, d, "sqrtN") {
-      val emb = Tables.embeddings(s, d)
-      val k = math.ceil(math.sqrt(emb.count().toDouble)).toInt
-      KMeansOp.lloydCentroidsLocal(emb, "vec_id", col("embedding"), k, Iters)
+      val pts = KMeansOp.points(intVecs(s, d))
+      KMeansOp.lloydCentroidsInMemory(pts,
+        math.ceil(math.sqrt(pts.size.toDouble)).toInt, Iters)
     }
 
   /** SAMPLE-trained √N quantizer — the production form of
@@ -398,27 +399,18 @@ object SemanticQ {
     * all pure functions of the snapshot, so the DuckDB oracle replays
     * the whole derivation (sampled chain + one full assign) exactly.
     */
-  private[graft] def sampledCentroids(s: SparkSession, d: String): Seq[(Long, Seq[Long])] = {
-    import s.implicits._
+  private[graft] def sampledCentroids(s: SparkSession, d: String): Seq[(Long, Seq[Long])] =
     cachedCentroids(s, d, "sqrtNSampled") {
       val n = Tables.embeddings(s, d).count()
       val k = math.ceil(math.sqrt(n.toDouble)).toInt
-      val sampleN = math.min(n, 16L * k).toInt
-      // rank + collect the bounded sample ONCE (16·√N·d·8 B — 3.7 MB at
-      // the 100× probe), then run the exact integer Lloyd in memory:
-      // FAISS's own shape — distributed Lloyd on a set this small pays
-      // S·k row materialization + a shuffle PER ROUND for work one JVM
-      // does in milliseconds. The corpus-sized stages (the hash
-      // ranking here, the final full assignment in the queries) stay
-      // distributed.
-      val sample = intVecs(s, d)
+      // the hash ranking stays distributed; the bounded sample
+      // (16·√N·d·8 B — 3.7 MB at the 100× probe) is the fit's one collect
+      val sample = KMeansOp.points(intVecs(s, d)
         .orderBy(((col("vec_id") * lit(2654435761L)) % lit(4294967296L)).asc,
           col("vec_id").asc)
-        .limit(sampleN)
-        .as[(Long, Seq[Long])].collect().toSeq
+        .limit(math.min(n, 16L * k).toInt))
       KMeansOp.lloydCentroidsInMemory(sample, k, Iters)
     }
-  }
 
   def semdedupScaledQ(s: SparkSession, d: String): DataFrame =
     semdedupWith(s, d, scaledCentroids(s, d))
@@ -661,7 +653,8 @@ object SemanticQ {
        |    FROM d$r$sfx) WHERE rn = 1)""".stripMargin
 
   /** Update CTE pair uR/cR from assignment aR (exact integer mean per
-    * (cluster, dim) through an exact double, as in KMeansOp.update).
+    * (cluster, dim) through an exact double, as in
+    * KMeansOp.lloydCentroidsInMemory).
     */
   private def updateSql(r: Int, sfx: String = ""): String =
     s"""u$r$sfx AS (SELECT a.cid, li.i AS pos,

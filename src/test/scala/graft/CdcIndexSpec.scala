@@ -518,7 +518,7 @@ class CdcIndexSpec extends AnyFunSuite {
     val expect = live
       .map { case (id, e) =>
         val cell = q.coarse.map { case (cid, c) =>
-          (cid, KMeansOp.intDistLocal(c, vecs(id).toSeq)) }
+          (cid, KMeansOp.intDistLocal(c.toArray, vecs(id))) }
           .minBy { case (cid, dd) => (dd, cid) }._1
         (id, cell, cdist(code(e), qCode))
       }
@@ -672,7 +672,7 @@ class CdcIndexSpec extends AnyFunSuite {
     val expect = live
       .map { case (id, e) =>
         val cell = q.coarse.map { case (cid, c) =>
-          (cid, KMeansOp.intDistLocal(c, vecs(id).toSeq)) }
+          (cid, KMeansOp.intDistLocal(c.toArray, vecs(id))) }
           .minBy { case (cid, dd) => (dd, cid) }._1
         (id, cell, adist(dimDequant(e), qv))
       }

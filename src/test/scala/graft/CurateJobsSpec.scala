@@ -1,8 +1,6 @@
 package graft
 
 import graft.operators.{BpeTrainer, ConnectedComponents}
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,21 +12,7 @@ class CurateJobsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** The jobs `body` starts. */
-  private def jobs(body: => Any): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      ListenerBusDrain.drain(spark.sparkContext)
-      val before = n.get()
-      body
-      ListenerBusDrain.drain(spark.sparkContext)
-      n.get() - before
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  import TestSpark.jobs
 
   test("BpeTrainer.train over a corpus vocab starts at most 2 jobs") {
     val docs = Seq((0L, "low low lower newest"), (1L, "low lowest wider newer"),

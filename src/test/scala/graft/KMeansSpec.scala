@@ -1,7 +1,8 @@
 package graft
 
 import graft.functions.VectorOps
-import graft.operators.KMeansOp
+import graft.operators.{KMeansOp, KMeansTwins}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +11,15 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class KMeansSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** The trained centroids, then each vector's (vec_id, cid, dist). */
+  private def fitAndAssign(emb: DataFrame, k: Int, iters: Int): DataFrame = {
+    import spark.implicits._
+    val cents = KMeansOp.lloydCentroidsLocal(emb, "vec_id", col("embedding"), k, iters)
+    KMeansOp.assignCells(
+      emb.select(col("vec_id"), KMeansOp.intVec(col("embedding")).as("v")),
+      cents.toDF("cid", "c"))
+  }
 
   /** Two obvious 2-D blobs, k=2 seeded on ids 0/1 (both inside blob A):
     * one update round must pull centroid 1 to the far blob.
@@ -29,8 +39,7 @@ class KMeansSpec extends AnyFunSuite {
       (2L, Seq(1.0f, 1.0f)),
       (3L, Seq(0.9f, 1.0f)),
     ).toDF("vec_id", "embedding")
-    val out = KMeansOp.lloyd(emb, "vec_id", col("embedding"), k = 2, iters = 1)
-      .orderBy("vec_id").collect()
+    val out = fitAndAssign(emb, k = 2, iters = 1).orderBy("vec_id").collect()
     assert(out.map(r => r.getLong(0) -> r.getLong(1)).toSeq ==
       Seq(0L -> 0L, 1L -> 0L, 2L -> 1L, 3L -> 1L))
     // v0 sits exactly on centroid 0
@@ -44,8 +53,7 @@ class KMeansSpec extends AnyFunSuite {
     // every distance ties at 0 -> (dist, cid) argmin picks cid 0; centroid 1
     // loses all members in the update and must vanish, not crash or emit
     val emb = (0L to 5L).map(i => (i, Seq(0.25f, -0.5f))).toDF("vec_id", "embedding")
-    val out = KMeansOp.lloyd(emb, "vec_id", col("embedding"), k = 2, iters = 1)
-      .collect()
+    val out = fitAndAssign(emb, k = 2, iters = 1).collect()
     assert(out.length == 6)
     assert(out.forall(r => r.getLong(1) == 0L && r.getLong(2) == 0L))
   }
@@ -242,19 +250,112 @@ class KMeansSpec extends AnyFunSuite {
       "the capped prune dropped a vector the uncapped prune kept")
   }
 
-  test("lloydCentroidsInMemory equals the distributed lloydCentroidsLocalInt " +
-    "on the same point set (seed, ties, floor-mean, empty-cluster drop)") {
+  /** The in-memory fit and the distributed twin on one integer point
+    * set, each ascending by cid, or Left with what it threw. */
+  private def fitVsTwin(pts: Seq[(Long, Seq[Long])], k: Int, iters: Int)
+      : (Either[Throwable, Seq[(Long, Seq[Long])]], Either[Throwable, Seq[(Long, Seq[Long])]]) = {
     import spark.implicits._
-    val vecs = Tables.embeddings(spark, TestSpark.sf0001)
-      .select(col("vec_id"), graft.operators.KMeansOp.intVec(col("embedding")).as("v"))
-    val pts = vecs.as[(Long, Seq[Long])].collect().toSeq
+    val vecs = pts.toDF("vec_id", "v")
+    (scala.util.Try(KMeansOp.lloydCentroidsInMemory(KMeansOp.points(vecs), k, iters)).toEither,
+      scala.util.Try(KMeansTwins.lloydCentroidsLocalInt(vecs, k, iters).sortBy(_._1)).toEither)
+  }
+
+  test("the in-memory fit equals the KMeansTwins loop at sf0.001") {
+    import spark.implicits._
+    val pts = Tables.embeddings(spark, TestSpark.sf0001)
+      .select(col("vec_id"), KMeansOp.intVec(col("embedding")).as("v"))
+      .as[(Long, Seq[Long])].collect().toSeq
     for (k <- Seq(3, 8, 23)) {
-      val dist = graft.operators.KMeansOp.lloydCentroidsLocalInt(vecs, k, 2)
-        .sortBy(_._1)
-      val mem = graft.operators.KMeansOp.lloydCentroidsInMemory(pts, k, 2)
-        .sortBy(_._1)
-      assert(mem == dist, s"in-memory Lloyd diverged at k=$k")
+      val (fit, twin) = fitVsTwin(pts, k, 2)
+      assert(fit.isRight && fit == twin, s"in-memory Lloyd diverged at k=$k")
     }
+  }
+
+  test("the fit equals the KMeansTwins loop on seeded random point sets") {
+    // few distinct coordinates, so distance ties and duplicate points
+    // are common; k up to N, so clusters empty out and disappear
+    for (seed <- 1 to 10) {
+      val rnd = new scala.util.Random(seed)
+      val n = 4 + rnd.nextInt(24)
+      val dim = 1 + rnd.nextInt(4)
+      val ids = rnd.shuffle((0L until 3L * n).toVector).take(n)
+      val pts = ids.map(id => id -> Seq.fill(dim)(rnd.nextInt(5) * 1000L - 2000L))
+      val k = 1 + rnd.nextInt(n)
+      val iters = 1 + rnd.nextInt(3)
+      val (fit, twin) = fitVsTwin(pts, k, iters)
+      assert(fit.isRight && fit == twin, s"seed $seed (n=$n, k=$k, iters=$iters)")
+    }
+  }
+
+  test("fit vs KMeansTwins edges: ties, duplicates, empty clusters, k = N, k > N") {
+    // a tie: v2 is 5 from both seeds and joins the lower cid 0,
+    // so c0 = floor((0 + 5) / 2) = 2
+    val tie = Seq(0L -> Seq(0L), 1L -> Seq(10L), 2L -> Seq(5L))
+    assert(fitVsTwin(tie, 2, 1) == (Right(Seq(0L -> Seq(2L), 1L -> Seq(10L))),
+      Right(Seq(0L -> Seq(2L), 1L -> Seq(10L)))))
+    // duplicate seeds: every point ties between cids 3 and 5, so cid 5
+    // empties out and disappears
+    val dup = Seq(3L -> Seq(7L, 7L), 5L -> Seq(7L, 7L), 9L -> Seq(8L, 6L), 11L -> Seq(7L, 9L))
+    val (dupFit, dupTwin) = fitVsTwin(dup, 2, 2)
+    assert(dupFit == Right(Seq(3L -> Seq(7L, 7L))) && dupFit == dupTwin)
+    // k = N: every point is its own seed, and the duplicate seed's
+    // cluster empties out
+    val (allFit, allTwin) = fitVsTwin(dup, 4, 3)
+    assert(allFit.isRight && allFit == allTwin &&
+      allFit.toOption.get.map(_._1) == Seq(3L, 9L, 11L))
+    // k > N: both throw the same require message
+    val (overFit, overTwin) = fitVsTwin(dup, 5, 1)
+    val msgs = Seq(overFit, overTwin).map(_.left.toOption.collect {
+      case e: IllegalArgumentException => e.getMessage })
+    assert(msgs.forall(_.exists(_.contains(
+      "k-means needs k=5 seed vectors but the input has only 4"))), msgs.toString)
+  }
+
+  test("Long overflow: under ANSI the fit, nearestCells and the twin throw; " +
+    "without ANSI the fit wraps exactly as the twin") {
+    import spark.implicits._
+    // 1e4 scales to 10^10, whose square overflows a Long; 3100's square
+    // (9.61e18) wraps negative, so without ANSI it joins cluster 0
+    val emb = Seq(0L -> Seq(0.0f, 0.0f), 1L -> Seq(1.0e4f, 0.0f),
+      2L -> Seq(0.5f, 0.5f), 3L -> Seq(0.25f, 1.0f), 4L -> Seq(3100.0f, 0.0f))
+      .toDF("vec_id", "embedding")
+    val vecs = emb.select(col("vec_id"), KMeansOp.intVec(col("embedding")).as("v"))
+    val cents = Seq(0L -> Seq(0L, 0L), 1L -> Seq(10000000000L, 0L))
+    def arithmetic(r: scala.util.Try[Any]): Boolean =
+      r.failed.toOption.exists(t => Iterator.iterate(t)(_.getCause)
+        .takeWhile(_ != null).exists(_.isInstanceOf[ArithmeticException]))
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      spark.conf.set("spark.sql.ansi.enabled", "true")
+      val on = Seq(
+        "fit" -> scala.util.Try(KMeansOp.lloydCentroidsLocal(emb, "vec_id", col("embedding"), 2, 2)),
+        "nearestCells" -> scala.util.Try(KMeansOp.nearestCells(cents, Seq(0L, 0L), 1)),
+        "twin" -> scala.util.Try(KMeansTwins.lloydCentroidsLocalInt(vecs, 2, 2)))
+      on.foreach { case (what, r) => assert(arithmetic(r), s"$what under ANSI: $r") }
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      val fit = KMeansOp.lloydCentroidsLocal(emb, "vec_id", col("embedding"), 2, 2)
+      assert(fit == KMeansTwins.lloydCentroidsLocalInt(vecs, 2, 2).sortBy(_._1))
+      assert(KMeansOp.intDistLocal(Array(0L, 0L), Array(10000000000L, 0L)) ==
+        10000000000L * 10000000000L)
+      assert(KMeansOp.nearestCells(cents, Seq(0L, 0L), 2) == Seq(0L, 1L))
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
+  test("the training collect names the vec_id of a null or ragged vector, " +
+    "and throws past its bound") {
+    import spark.implicits._
+    def thrown(vecs: DataFrame): String =
+      intercept[IllegalArgumentException](KMeansOp.points(vecs)).getMessage
+    val ragged = Seq(0L -> Seq(1L, 2L), 4L -> Seq(1L)).toDF("vec_id", "v")
+    assert(thrown(ragged).contains("vec_id=4 has 1 dims"))
+    val nullElem = Seq[(Long, Seq[java.lang.Long])](0L -> Seq(1L, 2L),
+      7L -> Seq(1L, null)).toDF("vec_id", "v")
+    assert(thrown(nullElem).contains("vec_id=7 has a null element"))
+    val nullVec = Seq[(Long, Seq[Long])](0L -> Seq(1L), 8L -> null).toDF("vec_id", "v")
+    assert(thrown(nullVec).contains("vec_id=8 has a null vector"))
+    val tooMany = spark.range(0, (1L << 18) + 1, 1, 2)
+      .select(col("id").as("vec_id"), array(col("id")).as("v"))
+    assert(thrown(tooMany).contains("SemanticQ.sampledCentroids"))
   }
 
   test("q_semdedup at sf0.001: drop decisions match brute force within clusters") {

@@ -504,7 +504,7 @@ class PqSpec extends AnyFunSuite {
     val qv = vecs.where(col("vec_id") === 0L).select(col("v"))
       .collect().head.getSeq[Long](0)
     val probeCells = cents
-      .map { case (cid, c) => (cid, KMeansOp.intDistLocal(c, qv)) }
+      .map { case (cid, c) => (cid, KMeansOp.intDistLocal(c.toArray, qv.toArray)) }
       .sortBy { case (cid, dd) => (dd, cid) }.take(2).map(_._1)
     val luts = ProductQuantizer.adcTables(qv, books, 16)
     val scan = spark.read.parquet(path)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run. */
@@ -18,4 +20,20 @@ object TestSpark {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** The Spark jobs `body` starts, counted by a listener. */
+  def jobs(body: => Any): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ListenerBusDrain.drain(spark.sparkContext)
+      val before = n.get()
+      body
+      ListenerBusDrain.drain(spark.sparkContext)
+      n.get() - before
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -34,7 +34,9 @@ Prints, one `name: value` per line:
     definition excluded);
   - collect_bounded_sites: `Iterate.collectBounded(` and
     `Iterate.collectWithin(` call sites in src/main code, i.e. the
-    bounded driver collects outside `Iterate` itself.
+    bounded driver collects outside `Iterate` itself;
+  - lloyd_loops: `to iters` round loops in src/main code, i.e. the
+    spellings of the Lloyd k-means loop.
 """
 import os
 import re
@@ -152,6 +154,7 @@ def main():
     counts["full_rereads"] = uses("withFullBytes", True)
     counts["collect_bounded_sites"] = occurs(
         r"\bIterate\.collect(Bounded|Within)\(", main_files)
+    counts["lloyd_loops"] = occurs(r"\bto\s+iters\b", main_files)
     for k, v in counts.items():
         print(f"{k}: {v}")
 
