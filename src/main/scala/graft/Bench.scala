@@ -127,8 +127,8 @@ object Bench {
     }
     val (_, warmErrors) = timeSteps(warmSteps(spark, Seq("sf" -> sfDir), Tables.names))
     // Shared fact derivations (the canon dedup-assignment table, the
-    // token/shingle signature tables, the trade-edge fact, the two
-    // quantizer fits) are session-cached, so the per-query times below
+    // token/shingle signature tables, the trade-edge fact, the quantizer
+    // fits, the persisted indexes) are session-cached, so the per-query times below
     // measure MARGINAL cost after they materialize — the production
     // shape, but one a cache-semantics change could hide behind. Build
     // each one explicitly here and stamp its wall time into the
@@ -142,6 +142,7 @@ object Bench {
       "quantizer_fixed_k" -> (() => { queries.SemanticQ.trainedCentroids(spark, sfDir); () }),
       "quantizer_sqrt_n" -> (() => { queries.SemanticQ.scaledCentroids(spark, sfDir); () }),
       "quantizer_sqrt_n_sampled" -> (() => { queries.SemanticQ.sampledCentroids(spark, sfDir); () }),
+      "pq_codebooks" -> (() => { queries.SemanticQ.quantizers(spark, sfDir, Encoding.Pq); () }),
       "res_codebooks" -> (() => { queries.SemanticQ.quantizers(spark, sfDir, Encoding.ResidualPq); () }),
       "opq_books" -> (() => { queries.SemanticQ.quantizers(spark, sfDir, Encoding.Opq); () }),
       "bpe_merges" -> (() => { queries.Analysis.cachedMergeSchedule(spark, sfDir); () }),
@@ -154,9 +155,11 @@ object Bench {
       "ivfpqres_part_index" -> (() => { queries.SemanticQ.indexPath(spark, sfDir, Encoding.ResidualPq); () }),
       "ivfsq8_index" -> (() => { queries.SemanticQ.indexPath(spark, sfDir, Encoding.Sq8); () }),
       "sq8dim_index" -> (() => { queries.SemanticQ.indexPath(spark, sfDir, Encoding.Sq8Dim); () }),
+      "ivfopq_part_index" -> (() => { queries.SemanticQ.indexPath(spark, sfDir, Encoding.Opq); () }),
       "cdc_lifecycle" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, sfDir, Encoding.Pq); () }),
       "cdc_lifecycle_sq8" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, sfDir, Encoding.Sq8); () }),
       "cdc_lifecycle_sq8dim" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, sfDir, Encoding.Sq8Dim); () }),
+      "cdc_lifecycle_opq" -> (() => { queries.SemanticQ.cdcLifecycleDir(spark, sfDir, Encoding.Opq); () }),
     )
     val (derivSecs, derivErrors) = timeSteps(derivationBuilds)
     // Best-of-N timing (round 5's single-shot numbers were unusable: a

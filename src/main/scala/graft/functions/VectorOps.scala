@@ -56,12 +56,16 @@ object VectorOps {
   def score(dist: Column): Column = lit(10.0) / (lit(1.0) + dist)
 
   /** Fetch one embedding as a driver-side Seq[Double] to broadcast as a
-    * literal (SURVEY.md C4: compute once on driver, embed in the plan).
-    * One tiny lookup per query build — pushed down to a `vec_id = id` scan.
+    * literal (SURVEY.md C4: compute once on driver, embed in the plan) —
+    * the one probe-vector lookup every single-probe query builds on.
+    * Pushed down to a `vec_id = id` scan and read by a plain collect,
+    * which is one job; a `head()` limit scan starts a second one
+    * whenever the first partition holds no matching row. Float → double
+    * widening is exact.
     */
   def queryVector(spark: SparkSession, sfDir: String, id: Long = 0L): Seq[Double] = {
-    val row = graft.Tables.embeddings(spark, sfDir)
-      .where(col("vec_id") === id).select(col("embedding")).head()
-    row.getSeq[Float](0).map(_.toDouble).toSeq
+    import spark.implicits._
+    graft.Tables.embeddings(spark, sfDir).where(col("vec_id") === id)
+      .select(col("embedding").cast("array<double>")).as[Seq[Double]].collect().head
   }
 }

@@ -34,35 +34,17 @@ import scala.collection.mutable
   *    real cluster; the default is executor-local.
   *
   * Convergence is detected with a `limit(1)` existence probe on changed
-  * labels (short-circuits; no full count), and `maxRounds` is a safety
-  * valve that THROWS rather than silently returning a partially-merged
-  * labeling.
+  * labels (short-circuits; no full count); past `maxRounds` the
+  * alternating-star escalation takes over, and it THROWS at its own
+  * bound rather than silently returning a partially-merged labeling.
   *
   * A request-sized graph pays none of those rounds: [[assignAdaptive]]
   * collects the induced edges once and runs union-find on the driver
   * when they fit its bound, the bounded-local discipline of
-  * [[Iterate.collectWithin]].
+  * [[Iterate.collectWithin]]. Plain min-label propagation to a fixpoint
+  * is the reference twin in the test tree.
   */
 object ConnectedComponents {
-
-  /** Assign every node its component's minimum id.
-    *
-    * @param nodes single-column relation of node ids (name `id`); nodes
-    *              absent from `edges` come out as their own singleton
-    *              component
-    * @param edges two-column relation (`id_a`, `id_b`) of undirected
-    *              edges; ids must be non-null
-    * @return (`id`, `cluster_id`) with one row per input node
-    */
-  def assign(nodes: DataFrame, edges: DataFrame, maxRounds: Int = 25,
-             checkpointDir: Option[String] = None): DataFrame = {
-    val (labels, converged, _) = propagate(nodes, edges, maxRounds, checkpointDir)
-    if (!converged) throw new IllegalStateException(
-      s"connected components did not converge in $maxRounds rounds — " +
-        "graph diameter exceeds the bound; raise maxRounds or use " +
-        "assignAlternatingStar (O(log n) rounds on deep graphs)")
-    labels
-  }
 
   /** The most induced edges [[assignAdaptive]] resolves on the driver. */
   private[graft] val LocalEdgeBound = 1 << 18

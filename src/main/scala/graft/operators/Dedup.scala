@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.VectorOps
 import graft.operators.TextAnalysis._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline, each designed for
@@ -17,7 +18,9 @@ import org.apache.spark.sql.functions._
   *  - SimHash: one 60-bit fingerprint per doc (TextAnalysis.simhash), near
   *    dups = small hamming distance;
   *  - embedding cosine: near-dup pairs above a cosine threshold within
-  *    blocks (the MLlib LSH path for unblocked scale lives in AnnSearch).
+  *    blocks (the MLlib LSH path for unblocked scale lives in AnnSearch);
+  *  - SemDeDup: the cosine pair stage within k-means cells (or capped
+  *    runs of them), dropping the higher id of each near-dup pair.
   *
   * All hashes derive from md5, so every operator here is reproducible in
   * the DuckDB oracle bit-for-bit. Item sets (unigram tokens, n-gram
@@ -377,23 +380,83 @@ object Dedup {
       "jaccard", threshold)
   }
 
-  /** Embedding near-dup pairs: cosine >= threshold within blocks.
-    * L2 norms are computed once per vector before the join (O(n·d)), so
-    * the per-pair work is a single dot product (O(pairs·d)) — at scale
-    * the norm column ships with the shuffle instead of being recomputed
-    * per candidate pair.
+  /** Embedding near-dup pairs: cosine >= threshold within blocks, over
+    * [[normedPairs]] (norms once per vector, one dot product per pair).
     */
   def cosinePairs(df: DataFrame, idCol: String, embCol: String,
-                  blockCol: String, threshold: Double): DataFrame = {
-    val v = df.select(col(blockCol).as("block"), col(idCol).as("id"),
-        col(embCol).as("v"))
-      .withColumn("nrm", VectorOps.l2Norm(col("v")))
-    val a = v.select(col("block"), col("id").as("id_a"), col("v").as("v_a"), col("nrm").as("nrm_a"))
-    val b = v.select(col("block"), col("id").as("id_b"), col("v").as("v_b"), col("nrm").as("nrm_b"))
-    scorePairs(
-      a.join(b, Seq("block")).where(col("id_a") < col("id_b")),
-      when(col("nrm_a") * col("nrm_b") === 0.0, 0.0)
-        .otherwise(VectorOps.dot(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b"))),
+                  blockCol: String, threshold: Double): DataFrame =
+    scorePairs(normedPairs(df, idCol, embCol, Seq(blockCol)), normedCosine,
       "cos", threshold)
+
+  /** The candidate pairs of [[cosinePairs]] and [[semDedup]]: rows of
+    * `df` that agree on every `keyCols` column (one equi-join on them),
+    * with `id_a < id_b` and each side's vector (`v_a`, `v_b`) and L2 norm
+    * (`nrm_a`, `nrm_b`). The norms are computed once per vector before
+    * the join (O(n·d)), so the per-pair work is a single dot product
+    * (O(pairs·d)) — at scale the norm column ships with the shuffle
+    * instead of being recomputed per candidate pair.
+    */
+  private def normedPairs(df: DataFrame, idCol: String, embCol: String,
+                          keyCols: Seq[String]): DataFrame = {
+    val key = keyCols.map(col)
+    val v = df.select(key ++ Seq(col(idCol).as("id"), col(embCol).as("v")): _*)
+      .withColumn("nrm", VectorOps.l2Norm(col("v")))
+    def side(t: String) = v.select(key ++ Seq(col("id").as(s"id_$t"),
+      col("v").as(s"v_$t"), col("nrm").as(s"nrm_$t")): _*)
+    side("a").join(side("b"), keyCols).where(col("id_a") < col("id_b"))
+  }
+
+  /** The cosine of a [[normedPairs]] row: 0 when either norm is 0, the
+    * value of `VectorOps.cosine` otherwise. */
+  private val normedCosine: Column =
+    when(col("nrm_a") * col("nrm_b") === 0.0, 0.0)
+      .otherwise(VectorOps.dot(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b")))
+
+  /** SemDeDup (Abbas et al. 2023), the one spelling: assign the
+    * `(vec_id, v)` scaled-integer `vecs` to their nearest of `cents`
+    * (one map-side broadcast argmin), optionally chunk each cell into
+    * runs of at most `cap` members by (distance-to-centroid, vec_id)
+    * rank, attach the `(vec_id, embedding)` `payload`, and drop every
+    * vector with cosine ≥ 0.4 to a lower vec_id in its bucket — the
+    * [[normedPairs]] equi-join on the bucket key, so the pairwise work
+    * is Σ|bucket|², never N² (≤ N·cap under a cap). Returns the dropped
+    * `vec_id`s.
+    *
+    * `pin` materializes the assigned + payload relation once
+    * ([[Iterate.cap]]) for both pair sides. The corpus builds pin: their
+    * duplicate argmin subtrees compete with the rest of the pipeline
+    * for the same cores, and the cap measured faster there (r21;
+    * capping only the narrow assignment measured worse — the unsized
+    * ExistingRDD demotes the payload re-attach from a broadcast to a
+    * sort-merge join). The standalone q_semdedup* queries stay lazy:
+    * there the duplicate subtrees run as independent parallel stages on
+    * idle cores, and a cap serializes an extra job ahead of them
+    * (1.6–3.7× slower, r21).
+    */
+  def semDedup(vecs: DataFrame, payload: DataFrame, cents: Seq[(Long, Seq[Long])],
+               cap: Option[Int], pin: Boolean): DataFrame = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val asg = KMeansOp.assignCells(vecs, cents.toDF("cid", "c"))
+      .select(col("vec_id"), col("cid").as("cluster"), col("dist"))
+    val (buckets, key) = cap match {
+      case None => (asg.drop("dist"), Seq("cluster"))
+      case Some(c) =>
+        val rank = Window.partitionBy(col("cluster"))
+          .orderBy(col("dist").asc, col("vec_id").asc)
+        (asg.withColumn("rn", row_number().over(rank))
+          .selectExpr("vec_id", "cluster", s"CAST((rn - 1) div $c AS BIGINT) AS sb"),
+          Seq("cluster", "sb"))
+    }
+    val ve = buckets.join(payload.select(col("vec_id"), col("embedding")), Seq("vec_id"))
+    // the drops need no score, so the threshold filters inside the join
+    // and no pair-keyed aggregate runs: cosinePairs' scorePairs barrier
+    // (one more shuffle of every candidate pair) measured 1.28x slower
+    // on q_semdedup_scaled at sf0.1
+    normedPairs(if (pin) Iterate.cap(Iterate.envDir)(ve) else ve,
+        "vec_id", "embedding", key)
+      .where(normedCosine >= 0.4)
+      .select(col("id_b").as("vec_id"))
+      .distinct()
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The ANN encoding core. A trained [[Quantizers]] (frozen coarse
@@ -78,6 +79,38 @@ object Encoding {
       (0 until m).map(i => StructField(s"code_$i", LongType)) :+
       StructField("cell", LongType))
 
+  /** OPQ's dimension permutation — the pre-rotation step of Optimized
+    * Product Quantization (Ge et al., CVPR 2013): PQ's distortion drops
+    * when per-subspace variance is balanced, so OPQ applies an
+    * orthogonal transform before the subspace split. Here the transform
+    * is restricted to the PERMUTATION subgroup of the rotation family
+    * (the paper's parametric "eigenvalue allocation", with the identity
+    * eigenbasis) so both engines replay it EXACTLY: over the collected
+    * scaled-integer training set, rank dimensions by the exact-BIGINT
+    * first-absolute-moment energy Σ_rows |v_d| (ties to the lower
+    * dimension index — overflow-safe to ~10^12 rows at the ×10^6
+    * scale), deal them round-robin across `m` subspaces so no subspace
+    * gets every high-energy dimension, and concatenate each subspace's
+    * dims in rank order. Under ANSI the abs and the sum throw on Long
+    * overflow, as Spark's `sum(abs(x))` does; without it both wrap.
+    */
+  private[graft] def opqPermutation(pts: KMeansOp.Points, m: Int): Seq[Int] = {
+    val exact = SQLConf.get.ansiEnabled
+    val energy = new Array[Long](if (pts.size == 0) 0 else pts.rows(0).length)
+    pts.rows.foreach { v =>
+      var i = 0
+      while (i < energy.length) {
+        energy(i) =
+          if (exact) Math.addExact(energy(i), Math.absExact(v(i)))
+          else energy(i) + math.abs(v(i))
+        i += 1
+      }
+    }
+    val ranked = energy.indices.sortBy(i => (-energy(i), i))
+    (0 until m).flatMap(sub =>
+      ranked.zipWithIndex.collect { case (pos, r) if r % m == sub => pos })
+  }
+
   /** Fit `kind` on the (vec_id, embedding) `corpus` against the frozen
     * `coarse` centroids: m subspace codebooks of k entries (`iters`
     * integer Lloyd rounds) for the PQ family, the scale(s) for SQ8. A
@@ -98,10 +131,11 @@ object Encoding {
         ProductQuantizer.residuals(vecs, coarse).select(col("vec_id"), col("r").as("v")))),
         subDim, ResidualPq)
       case Opq =>
-        val p = ProductQuantizer.opqAllocation(vecs, m).flatten
+        val pts = KMeansOp.points(vecs)
+        val p = opqPermutation(pts, m)
         val pa = p.toArray
         Quantizers(coarse.map { case (cid, c) => (cid, p.map(c(_))) },
-          fit(KMeansOp.points(vecs).map(v => pa.map(i => v(i)))), subDim, Opq(p))
+          fit(pts.map(v => pa.map(i => v(i)))), subDim, Opq(p))
       case Sq8 => Quantizers(coarse, Nil, subDim, Sq8(
         corpus.agg(ProductQuantizer.amaxExpr(col("embedding"))).head().getDouble(0)))
       case Sq8Dim =>

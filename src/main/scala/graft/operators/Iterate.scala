@@ -2,9 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 
-/** Lineage cap for iterative dataflows (connected components, PageRank,
-  * MMR): every round must materialize its relation, or Catalyst
-  * re-optimizes and re-executes a plan tree that nests once per round.
+/** Lineage cap for iterative dataflows (the distributed connected
+  * components rounds) and for a relation several plan branches consume
+  * (SemDeDup's pinned assignment in the corpus builds): every round must
+  * materialize its relation, or Catalyst re-optimizes and re-executes a
+  * plan tree that nests once per round.
   *
   * Two strategies, chosen by the caller per run:
   *   - `checkpointDir = None` (default): `localCheckpoint()` — blocks
@@ -20,10 +22,10 @@ import org.apache.spark.sql.{DataFrame, Row}
 private[graft] object Iterate {
 
   /** Reliable-checkpoint directory from the environment: set
-    * `SPARK_GRAFT_CKPT_DIR` and every iterative declared query
-    * (q_dup_clusters, q_corpus_build, q_pagerank) switches from
-    * `localCheckpoint` to reliable `checkpoint` — the production path is
-    * one env var, no code change.
+    * `SPARK_GRAFT_CKPT_DIR` and every checkpointed declared query
+    * (q_dup_clusters, q_dup_clusters_lsh and the q_corpus_build*
+    * compositions) switches from `localCheckpoint` to reliable
+    * `checkpoint` — the production path is one env var, no code change.
     *
     * Cleanup contract: reliable checkpoints write one file set per round
     * per operator and Spark does NOT delete them at job end
@@ -54,20 +56,6 @@ private[graft] object Iterate {
     }
   }
 
-  /** The ENFORCED form of the cleanup contract above: run an iterative
-    * computation with reliable checkpoints scoped to a fresh per-run
-    * subdirectory of `baseDir`, then delete that subdirectory once the
-    * result no longer depends on it. `body` receives `Some(runDir)` to
-    * pass as its `checkpointDir`; after it returns, the result is
-    * EAGERLY detached from the scratch files (`localCheckpoint()` — the
-    * fixpoint output, e.g. per-vertex labels, is the small end of the
-    * computation) before the directory is removed, so no later action
-    * can dangle on deleted checkpoint data. A failed run also removes
-    * its subdirectory — scratch space never outlives the run either
-    * way. For a fixpoint too large to pin executor-local, write it to a
-    * durable sink inside `body` and return the re-read frame; the
-    * detach is then a no-op read plan with no checkpoint lineage.
-    */
   /** Algorithm-bounded candidate sets (a top-k, a probe set) consumed by
     * several plan branches: materialize ONCE to the driver as a
     * LocalRelation instead of `localCheckpoint`. Same single-computation
@@ -104,6 +92,20 @@ private[graft] object Iterate {
     rows.get
   }
 
+  /** The ENFORCED form of the cleanup contract above: run an iterative
+    * computation with reliable checkpoints scoped to a fresh per-run
+    * subdirectory of `baseDir`, then delete that subdirectory once the
+    * result no longer depends on it. `body` receives `Some(runDir)` to
+    * pass as its `checkpointDir`; after it returns, the result is
+    * EAGERLY detached from the scratch files (`localCheckpoint()` — the
+    * fixpoint output, e.g. per-vertex labels, is the small end of the
+    * computation) before the directory is removed, so no later action
+    * can dangle on deleted checkpoint data. A failed run also removes
+    * its subdirectory — scratch space never outlives the run either
+    * way. For a fixpoint too large to pin executor-local, write it to a
+    * durable sink inside `body` and return the re-read frame; the
+    * detach is then a no-op read plan with no checkpoint lineage.
+    */
   def withRunScopedCheckpoints(baseDir: String)
       (body: Option[String] => DataFrame): DataFrame = {
     val runDir = s"$baseDir/run-${java.util.UUID.randomUUID()}"

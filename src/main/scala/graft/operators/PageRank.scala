@@ -11,15 +11,12 @@ import org.apache.spark.sql.functions._
   * leaks (both deterministic, both standard for rank-as-integer
   * formulations).
   *
-  * Distributed shape per iteration (the classic Pregel dataflow, as two
-  * key-shuffled aggregates — no driver-side per-vertex work):
-  *   contributions: ranks ⋈ edges on src (shuffle on src),
-  *     c = (r·w) div out_w(src);
-  *   inflow: groupBy dst, SUM(c) (map-side combined);
-  *   update: vertex spine LEFT JOIN inflow, r' = teleport + (85·inflow) div 100.
-  * Each round is materialized via Iterate.cap, capping the lineage at
-  * O(1) instead of O(iterations) — pass `checkpointDir` for reliable
-  * checkpoint storage on a real cluster (default executor-local).
+  * Per iteration: c = (r·w) div out_w(src) along every edge, inflow =
+  * Σ c per dst, r' = teleport + (85·inflow) div 100 over the vertex
+  * spine. The graphs served here are schema-bounded, so the recurrence
+  * runs on the driver ([[runBoundedLocal]]); the distributed Pregel
+  * dataflow (two key-shuffled aggregates per round) is its reference
+  * twin in the test tree.
   *
   * Overflow bound: r ≤ scale and intermediate r·w must stay under 2^63,
   * so require scale · max_edge_weight < 9.2e18 (at the default 10^12
@@ -27,52 +24,28 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  /** `vertices`: one `node` column (the complete vertex set — vertices
-    * with no in-edges keep teleport-only rank). `edges`: (src, dst, w
-    * BIGINT) — multi-edges should be pre-aggregated. Returns (node,
-    * rank_scaled) where rank_scaled ≈ rank · scale, damping 0.85.
-    */
-  def run(vertices: DataFrame, edges: DataFrame, iterations: Int,
-      scale: Long = 1000000000000L,
-      checkpointDir: Option[String] = None): DataFrame = {
-    require(iterations >= 0, "iterations must be >= 0")
-    val ck = Iterate.cap(checkpointDir) _
-    val n = vertices.count()
-    require(n > 0, "empty vertex set")
-    val base = scale / n              // floor, positive operands
-    val teleport = 15L * base / 100L  // (0.15 · base) floored
-    val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val ew = ck(edges.join(outw, Seq("src")))
-    var ranks = vertices.select(col("node"), lit(base).as("r"))
-    for (_ <- 1 to iterations) {
-      val inflow = ranks.join(ew, col("node") === col("src"))
-        .selectExpr("dst", "(r * w) div ow AS c")
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-        .withColumnRenamed("dst", "node")
-      ranks = ck(vertices.select(col("node"))
-        .join(inflow, Seq("node"), "left")
-        .selectExpr("node", s"$teleport + (85 * coalesce(s, 0)) div 100 AS r"))
-    }
-    ranks.select(col("node"), col("r").as("rank_scaled"))
-  }
-
-  /** Driver-local twin of [[run]] for ALGORITHM-BOUNDED graphs (r21):
-    * the same integer recurrence, iterated over the collected edge
-    * list — bit-identical output by construction (every operation is
-    * the same positive-operand BIGINT floor arithmetic, and the only
-    * aggregation is a Long sum, order-independent; like the dataflow,
-    * it throws on overflow under ANSI and wraps without it — PageRankSpec
-    * pins equality against [[run]] on randomized graphs and on an
-    * overflowing weight under both settings).
+  /** PageRank of a bounded graph on the driver. `vertices`: one `node`
+    * column (the complete vertex set, distinct — vertices with no
+    * in-edges keep teleport-only rank). `edges`: (src, dst, w BIGINT),
+    * multi-edges pre-aggregated; an edge whose src is outside the
+    * vertex set contributes nothing. Returns (node, rank_scaled) where
+    * rank_scaled ≈ rank · scale, damping 0.85.
     *
-    * Why it exists: each distributed round is 2 joins + 1 aggregate +
-    * a lineage-cap materialization job — pure fixed overhead when the
+    * One bounded collect of each relation, then the integer recurrence
+    * over the collected edge list — bit-identical to the distributed
+    * dataflow twin (every operation is the same positive-operand BIGINT
+    * floor arithmetic, and the only aggregation is a Long sum,
+    * order-independent); like Spark's BIGINT arithmetic it throws on
+    * overflow under ANSI and wraps without it. PageRankSpec pins both.
+    *
+    * Why on the driver: each distributed round is 2 joins + 1 aggregate
+    * + a lineage-cap materialization job — pure fixed overhead when the
     * vertex set is bounded by the SCHEMA rather than the corpus (the
     * 25-nation trade graph keeps 25 nodes at 100 TB; the data-scale
     * work is the edge DERIVATION, which happens before this is
     * called). Guarded by `maxNodes` with the [[Iterate.boundedLocal]]
     * loudness contract: a violated bound must fail, never silently
-    * collect a large graph — deep/unbounded graphs stay on [[run]].
+    * collect a large graph.
     */
   def runBoundedLocal(vertices: DataFrame, edges: DataFrame,
       iterations: Int, maxNodes: Int,
@@ -83,9 +56,9 @@ object PageRank {
         "bound — this path is for schema-bounded graphs only")
     require(vRows.nonEmpty, "empty vertex set")
     val vs = vRows.map(_.get(0))
-    // ranks are keyed by node here, while [[run]] joins the edges once
-    // per vertex ROW: a duplicated node would count its outflow twice
-    // there and once here
+    // ranks are keyed by node here, while the dataflow joins the edges
+    // once per vertex ROW: a duplicated node would count its outflow
+    // twice there and once here
     require(vs.distinct.length == vs.length,
       "runBoundedLocal: duplicate node ids in the vertex set")
     val es = Iterate.collectBounded(edges.select(col("src"), col("dst"), col("w")),

@@ -63,31 +63,6 @@ object ProductQuantizer {
   def amaxExpr(emb: Column): Column =
     max(array_max(transform(emb, e => abs(e.cast("double")))))
 
-  /** OPQ dimension ALLOCATION — the pre-rotation step of Optimized
-    * Product Quantization (Ge et al., CVPR 2013): PQ's distortion
-    * drops when per-subspace variance is balanced, so OPQ applies an
-    * orthogonal transform before the subspace split. Here the
-    * transform is restricted to the PERMUTATION subgroup of the
-    * rotation family (the paper's parametric "eigenvalue allocation",
-    * with the identity eigenbasis) so both engines replay it EXACTLY:
-    * over scaled-integer `(vec_id, v)` rows, rank dimensions by the
-    * exact-BIGINT first-absolute-moment energy Σ_rows |v_d| (ties to
-    * the lower dimension index — overflow-safe to ~10^12 rows at the
-    * ×10^6 scale), then deal them round-robin across `m` subspaces,
-    * so no subspace gets every high-energy dimension. One bounded
-    * corpus aggregate (d rows). Returns each subspace's 0-based dims in
-    * rank order. The one spelling for the batch tiers' allocation and
-    * a rebuilt CDC generation's refit, which must reproduce it exactly.
-    */
-  private[graft] def opqAllocation(vecs: DataFrame, m: Int): Seq[Seq[Int]] = {
-    val ranked = vecs.select(posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("pos")).agg(sum(abs(col("x"))).as("e"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-      .sortBy { case (pos, e) => (-e, pos) }.map(_._1)
-    (0 until m).map(sub =>
-      ranked.zipWithIndex.collect { case (pos, r) if r % m == sub => pos })
-  }
-
   /** Nearest-codebook-entry argmin against a DRIVER-LOCAL codebook: min
     * over the k-element literal candidate array of (dist, cid) structs —
     * struct ordering compares dist first, then cid, so ties break to the

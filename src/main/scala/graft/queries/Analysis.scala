@@ -259,7 +259,7 @@ object Analysis {
       .select(col("ia"), col("ib"),
         round(VectorOps.cosine(col("ea"), col("eb")), 4).as("sim"))
     graft.operators.Rerank.mmrSelect(cand.select(col("id"), col("rel")),
-        sims, k = 5, lambda = 0.5, boundedDeltas = Some(400))
+        sims, k = 5, lambda = 0.5)
       .select(col("pick"), col("id").as("vec_id"), col("rel"), col("mmr"))
       .orderBy(col("pick").asc)
   }
@@ -268,9 +268,9 @@ object Analysis {
     * diversified in the SAME k greedy rounds. Candidates are each qid's
     * cosine top-20 from one corpus scan (broadcast probe set + per-qid
     * window); pairwise sims are computed within each qid's candidate set;
-    * `Rerank.mmrSelectBatch` then advances every qid one pick per round
-    * via a per-qid window argmax. Round count is k regardless of how many
-    * queries are in flight — the property the single-probe form lacks.
+    * `Rerank.mmrSelectBatch` then runs every qid's k greedy rounds on
+    * the driver over one bounded collect, so the Spark work does not
+    * grow with how many queries are in flight.
     */
   def mmrBatch(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -298,7 +298,7 @@ object Analysis {
         round(VectorOps.cosine(col("ea"), col("eb")), 4).as("sim"))
     graft.operators.Rerank.mmrSelectBatch(
         cand.select(col("qid"), col("id"), col("rel")), sims, k = 5,
-        lambda = 0.5, boundedDeltas = Some(800))
+        lambda = 0.5)
       .select(col("qid"), col("pick"), col("id").as("vec_id"), col("rel"),
         col("mmr"))
       .orderBy(col("qid").asc, col("pick").asc)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Artifacts, Tables}
-import graft.operators.{ConnectedComponents, Dedup, TextAnalysis => TA}
+import graft.operators.{ConnectedComponents, Dedup, Iterate, KMeansOp, TextAnalysis => TA}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,7 +30,7 @@ object Clustering {
     // O(N) star edges instead of O(N²) pairs — the sf1-probe fix
     val pairs = Dedup.componentEdgesBySet(Analysis.tokenSets(s, d), 0.9)
     ConnectedComponents.assignAdaptive(docs.select(col("doc_id").as("id")), pairs,
-        checkpointDir = graft.operators.Iterate.envDir)
+        checkpointDir = Iterate.envDir)
       .select(col("id").as("doc_id"), col("cluster_id"))
       .orderBy(col("doc_id").asc)
   }
@@ -54,20 +54,18 @@ object Clustering {
   def dupClustersLsh(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     ConnectedComponents.assignAdaptive(docs.select(col("doc_id").as("id")),
-        lshEdges(s, d), checkpointDir = graft.operators.Iterate.envDir)
+        lshEdges(Analysis.shingleSets(s, d)), checkpointDir = Iterate.envDir)
       .select(col("id").as("doc_id"), col("cluster_id"))
       .orderBy(col("doc_id").asc)
   }
 
-  /** The bucket-union star-edge relation [[dupClustersLsh]] resolves:
+  /** The bucket-union star-edge relation [[dupClustersLsh]] and
+    * [[corpusBuildLsh]] resolve over the `(id, hsorted)` shingle `sets`:
     * per band bucket, every member points at the bucket's min-id anchor
-    * — O(N·bands) edges total. Exposed package-private so probe tooling
-    * can time the edge build and the component resolution separately
-    * (the r19→r20 drift adjudication needs the stage split).
+    * — O(N·bands) edges total.
     */
-  private[graft] def lshEdges(s: SparkSession, d: String): DataFrame = {
-    val banded = Dedup.bandTable(Analysis.shingleSets(s, d),
-      bands = 4, rowsPerBand = 3)
+  private def lshEdges(sets: DataFrame): DataFrame = {
+    val banded = Dedup.bandTable(sets, bands = 4, rowsPerBand = 3)
     val anchors = banded.groupBy(col("bkey")).agg(min(col("id")).as("anchor"))
     banded.join(anchors, Seq("bkey"))
       .where(col("id") =!= col("anchor"))
@@ -213,10 +211,13 @@ object Clustering {
   }
 
   // ---- shared corpus-build stages ------------------------------------
-  // The four corpus pipelines (exact CC, +SemDeDup fixed-k, +SemDeDup
-  // √N, LSH-resolved) are compositions of the SAME stages; factoring
-  // them keeps the pipelines provably consistent with the standalone
-  // oracled operators they compose.
+  // The five corpus pipelines (exact CC; + SemDeDup at fixed k, at √N,
+  // and capped; LSH-resolved) are compositions of the SAME stages:
+  // exactKeptIds, componentCanon over the edges of q_dup_clusters
+  // (componentEdgesBySet) or q_dup_clusters_lsh (lshEdges),
+  // Dedup.semDedup (the operator of q_semdedup*), and gateChunkSplit.
+  // Factoring them keeps the pipelines provably consistent with the
+  // standalone oracled queries they compose.
 
   /** Exact-dedup survivors: min doc_id per content hash. */
   private def exactKeptIds(docs: DataFrame): DataFrame =
@@ -232,13 +233,19 @@ object Clustering {
   private def nearDupCanon(s: SparkSession, d: String, kept1Ids: DataFrame): DataFrame = {
     val sets = Analysis.tokenSets(s, d)
       .join(kept1Ids.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-    val pairs = Dedup.componentEdgesBySet(sets, 0.9) // set-contracted, same components
+    // set-contracted, same components
+    componentCanon(kept1Ids, Dedup.componentEdgesBySet(sets, 0.9))
+  }
+
+  /** Canonical representatives of the near-dup components `edges` form
+    * over the `kept1Ids` survivors: each component's minimum doc_id.
+    */
+  private def componentCanon(kept1Ids: DataFrame, edges: DataFrame): DataFrame =
     ConnectedComponents
-      .assignAdaptive(kept1Ids.select(col("doc_id").as("id")), pairs,
-        checkpointDir = graft.operators.Iterate.envDir)
+      .assignAdaptive(kept1Ids.select(col("doc_id").as("id")), edges,
+        checkpointDir = Iterate.envDir)
       .where(col("id") === col("cluster_id"))
       .select(col("id").as("doc_id"))
-  }
 
   /** Canonical near-dup representatives of the exact-dedup survivors —
     * the shared fact derivation of corpus_build/v2/v3 — cached once per
@@ -259,37 +266,19 @@ object Clustering {
       nearDupCanon(s, d, exactKeptIds(Tables.documents(s, d)))
     }
 
-  /** SemDeDup drop set over `canon` under quantizer `cents`: assign
-    * survivors (doc_id ≡ vec_id in this corpus; one map-side broadcast
-    * argmin), then within-cluster cosine ≥ 0.4 against a lower id —
-    * the Σ|cluster|² equi-join of q_semdedup, never N².
+  /** The canon survivors [[Dedup.semDedup]] keeps under quantizer
+    * `cents` and population `cap` (doc_id ≡ vec_id in this corpus),
+    * with the assigned + payload relation pinned — see the operator's
+    * note on why the compositions pin and the standalone queries do not.
     */
-  private def semDropIds(s: SparkSession, d: String, canon: DataFrame,
-      cents: Seq[(Long, Seq[Long])]): DataFrame = {
-    import s.implicits._
+  private def semKept(s: SparkSession, d: String,
+      cents: Seq[(Long, Seq[Long])], cap: Option[Int]): DataFrame = {
+    val canon = canonIds(s, d)
     val vecs = Tables.embeddings(s, d)
-      .select(col("vec_id"), graft.operators.KMeansOp.intVec(col("embedding")).as("v"))
+      .select(col("vec_id"), KMeansOp.intVec(col("embedding")).as("v"))
       .join(canon.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-    // materialize the assigned+payload relation ONCE: both pair sides
-    // consume it, and without the cap the whole argmin subtree (corpus
-    // scan → semi-join → k-way distance argmin → payload re-attach) is
-    // planned and EXECUTED once per side (r21 shared-subtree cap;
-    // capping only the narrow assignment measured WORSE — the unsized
-    // ExistingRDD demotes the re-attach joins from broadcast to SMJ)
-    val ve = graft.operators.Iterate.cap(graft.operators.Iterate.envDir)(
-      graft.operators.KMeansOp.assignCells(vecs, cents.toDF("cid", "c"))
-        .select(col("vec_id"), col("cid").as("cluster"))
-        .join(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-          Seq("vec_id")))
-    val a = ve.select(col("cluster"), col("vec_id").as("id_a"),
-      col("embedding").as("ea"))
-    val b = ve.select(col("cluster"), col("vec_id").as("id_b"),
-      col("embedding").as("eb"))
-    a.join(b, Seq("cluster"))
-      .where(col("id_a") < col("id_b"))
-      .where(graft.functions.VectorOps.cosine(col("ea"), col("eb")) >= 0.4)
-      .select(col("id_b").as("doc_id"))
-      .distinct()
+    canon.join(Dedup.semDedup(vecs, Tables.embeddings(s, d), cents, cap, pin = true)
+        .select(col("vec_id").as("doc_id")), Seq("doc_id"), "left_anti")
   }
 
   /** Shared pipeline tail: language + quality gate → context-window
@@ -338,14 +327,9 @@ object Clustering {
     * the fixed k=8 keeps the (N/k)² within-cluster term, so the
     * pipeline a 100 TB deployment runs is [[corpusBuildV3]].
     */
-  def corpusBuildV2(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val canon = canonIds(s, d)
-    val kept3 = canon.join(
-      semDropIds(s, d, canon, SemanticQ.trainedCentroids(s, d)),
-      Seq("doc_id"), "left_anti")
-    gateChunkSplit(docs, kept3)
-  }
+  def corpusBuildV2(s: SparkSession, d: String): DataFrame =
+    gateChunkSplit(Tables.documents(s, d),
+      semKept(s, d, SemanticQ.trainedCentroids(s, d), cap = None))
 
   /** The PRODUCTION corpus build — v2 with the SemDeDup quantizer at
     * k = ⌈√N⌉ (2-round integer Lloyd, as q_semdedup_scaled): cluster
@@ -361,56 +345,13 @@ object Clustering {
     * multiplicative hash, both replayed by the oracle
     * (SemanticQ.lloydSqlSampled), so the composition stays exact.
     */
-  def corpusBuildV3(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val canon = canonIds(s, d)
-    val kept3 = canon.join(
-      semDropIds(s, d, canon, SemanticQ.sampledCentroids(s, d)),
-      Seq("doc_id"), "left_anti")
-    gateChunkSplit(docs, kept3)
-  }
-
-  /** [[semDropIds]] with the r18 POPULATION CAP
-    * ([[SemanticQ.semdedupCappedQ]]'s prune): canon survivors rank by
-    * (distance-to-centroid, vec_id) within their cell and chunk into
-    * runs of at most SemanticQ.SemCap members before the pairwise
-    * stage — Σ|bucket|² ≤ N·cap, linear in N, with the fixed-k
-    * quantizer keeping the assignment linear too.
-    */
-  private def semDropIdsCapped(s: SparkSession, d: String, canon: DataFrame,
-      cents: Seq[(Long, Seq[Long])]): DataFrame = {
-    import s.implicits._
-    val vecs = Tables.embeddings(s, d)
-      .select(col("vec_id"), graft.operators.KMeansOp.intVec(col("embedding")).as("v"))
-      .join(canon.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-    val asg = graft.operators.KMeansOp.assignCells(vecs, cents.toDF("cid", "c"))
-      .select(col("vec_id"), col("cid").as("cluster"), col("dist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster"))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-    val sub = asg
-      .withColumn("rn", row_number().over(w))
-      .selectExpr("vec_id", "cluster",
-        s"CAST((rn - 1) div ${SemanticQ.SemCap} AS BIGINT) AS sb")
-    // rank-chunked assignment + payload, materialized once for both
-    // pair sides (r21 shared-subtree cap — see semDropIds)
-    val ve = graft.operators.Iterate.cap(graft.operators.Iterate.envDir)(
-      sub.join(
-        Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        Seq("vec_id")))
-    val a = ve.select(col("cluster"), col("sb"), col("vec_id").as("id_a"),
-      col("embedding").as("ea"))
-    val b = ve.select(col("cluster"), col("sb"), col("vec_id").as("id_b"),
-      col("embedding").as("eb"))
-    a.join(b, Seq("cluster", "sb"))
-      .where(col("id_a") < col("id_b"))
-      .where(graft.functions.VectorOps.cosine(col("ea"), col("eb")) >= 0.4)
-      .select(col("id_b").as("doc_id"))
-      .distinct()
-  }
+  def corpusBuildV3(s: SparkSession, d: String): DataFrame =
+    gateChunkSplit(Tables.documents(s, d),
+      semKept(s, d, SemanticQ.sampledCentroids(s, d), cap = None))
 
   /** The LINEAR SEMANTIC corpus build — v2 with the SemDeDup stage's
-    * populations CAPPED ([[semDropIdsCapped]]): where v3 holds
+    * populations CAPPED (q_semdedup_capped's rank chunking into runs
+    * of at most SemanticQ.SemCap): where v3 holds
     * populations ~√N (leaving the N·√N assignment term — measured
     * 53–63× at 100× rows), the cap bounds every bucket at a CONSTANT,
     * so assignment (fixed k=8), rank window, and pairwise prune are
@@ -422,14 +363,9 @@ object Clustering {
     * tracks executor count, never corpus size; the cap carries the
     * population bound.
     */
-  def corpusBuildCapped(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val canon = canonIds(s, d)
-    val kept3 = canon.join(
-      semDropIdsCapped(s, d, canon, SemanticQ.trainedCentroids(s, d)),
-      Seq("doc_id"), "left_anti")
-    gateChunkSplit(docs, kept3)
-  }
+  def corpusBuildCapped(s: SparkSession, d: String): DataFrame =
+    gateChunkSplit(Tables.documents(s, d),
+      semKept(s, d, SemanticQ.trainedCentroids(s, d), cap = Some(SemanticQ.SemCap)))
 
   /** The fully LINEAR corpus build — near-dup resolution by LSH
     * bucket-union components (q_dup_clusters_lsh's stage) instead of
@@ -448,18 +384,7 @@ object Clustering {
     val kept1Ids = exactKeptIds(docs)
     val sets = Analysis.shingleSets(s, d)
       .join(kept1Ids.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-    val banded = Dedup.bandTable(sets, bands = 4, rowsPerBand = 3)
-    val anchors = banded.groupBy(col("bkey")).agg(min(col("id")).as("anchor"))
-    val edges = banded.join(anchors, Seq("bkey"))
-      .where(col("id") =!= col("anchor"))
-      .select(col("anchor").as("id_a"), col("id").as("id_b"))
-      .distinct()
-    val canon = ConnectedComponents
-      .assignAdaptive(kept1Ids.select(col("doc_id").as("id")), edges,
-        checkpointDir = graft.operators.Iterate.envDir)
-      .where(col("id") === col("cluster_id"))
-      .select(col("id").as("doc_id"))
-    gateChunkSplit(docs, canon)
+    gateChunkSplit(docs, componentCanon(kept1Ids, lshEdges(sets)))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -508,13 +433,9 @@ object Clustering {
        |  SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.id),
        |canon AS (SELECT id AS doc_id FROM reach GROUP BY id HAVING id = MIN(label))""".stripMargin
 
-  /** semDropIds + kept3 in SQL, parameterized on the Lloyd CTE chain
-    * (fixed-k lloydSql for v2, sample-trained √N lloydSqlSampled for
-    * v3).
-    */
-  /** [[semDropIdsCapped]] + kept3 in SQL: the Lloyd chain's a3 carries
-    * dist, so the rank window and the ≤SemCap chunking replay exactly;
-    * ranks run over the canon SUBSET on both sides.
+  /** [[semKept]] under the SemCap cap, in SQL: the Lloyd chain's a3
+    * carries dist, so the rank window and the ≤SemCap chunking replay
+    * exactly; ranks run over the canon SUBSET on both sides.
     */
   private def semStageCappedSql(lloyd: String): String =
     s"""$lloyd,
@@ -534,6 +455,10 @@ object Clustering {
        |kept3 AS (SELECT doc_id FROM canon
        |  WHERE doc_id NOT IN (SELECT vec_id FROM semdrops))""".stripMargin
 
+  /** [[semKept]] uncapped, in SQL, parameterized on the Lloyd CTE
+    * chain (fixed-k lloydSql for v2, sample-trained √N lloydSqlSampled
+    * for v3).
+    */
   private def semStageSql(lloyd: String): String =
     s"""$lloyd,
        |sv AS (SELECT a3.vec_id, a3.cid AS cluster, e.embedding

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Artifacts, Tables}
 import graft.functions.VectorOps
-import graft.operators.{Encoding, KMeansOp, Quantizers}
+import graft.operators.{Dedup, Encoding, KMeansOp, Quantizers}
 import graft.streaming.IndexStream
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -64,17 +64,6 @@ object SemanticQ {
     Tables.embeddings(s, d)
       .select(col("vec_id"), KMeansOp.intVec(col("embedding")).as("v"))
 
-  /** The vec_id=0 probe's raw embedding, collected — the one query every
-    * single-probe tier and recall monitor here serves. A plain collect is
-    * one job; a `head()` limit scan starts a second one whenever the
-    * first partition holds no vec_id=0 row.
-    */
-  private[graft] def probe(s: SparkSession, d: String): Seq[Double] = {
-    import s.implicits._
-    Tables.embeddings(s, d).where(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>")).as[Seq[Double]].collect().head
-  }
-
   /** The integer-exact top-k of (vec_id, v) rows by distance to `qv`,
     * ties to the lower vec_id (TakeOrderedAndProject): the exact side of
     * every single-probe recall monitor. Output (vec_id, dist_scaled).
@@ -103,7 +92,7 @@ object SemanticQ {
     */
   private def recall(s: SparkSession, d: String, approx: Seq[Double] => DataFrame,
       k: Int = 10, live: Boolean = false): DataFrame = {
-    val p = probe(s, d)
+    val p = VectorOps.queryVector(s, d)
     val vecs = intVecs(s, d)
     recallPpm(exactTopK(if (live) vecs.where(cdcLive(col("vec_id"))) else vecs,
       Encoding.scaled(p), k), approx(p), Seq("vec_id"), k)
@@ -132,37 +121,22 @@ object SemanticQ {
     * cluster populations (and thus per-cluster cost) constant, and a
     * skewed cluster rides AQE skew-join splitting like any other hot key.
     */
-  def semdedupQ(s: SparkSession, d: String): DataFrame = {
+  def semdedupQ(s: SparkSession, d: String): DataFrame =
+    semdedup(s, d, trainedCentroids(s, d), cap = None)
+
+  /** The q_semdedup* output over quantizer `cents`: every vector with
+    * its cluster and whether [[Dedup.semDedup]] (lazy — see its note on
+    * pinning) kept it.
+    */
+  private def semdedup(s: SparkSession, d: String,
+      cents: Seq[(Long, Seq[Long])], cap: Option[Int]): DataFrame = {
     import s.implicits._
-    // ve has THREE consumers (both pair sides + the kept projection),
-    // but materializing it (r21 experiment, both the narrow-assignment
-    // and payload-attached variants) measured 1.6-3.7x SLOWER here:
-    // the standalone query's duplicate subtrees run as INDEPENDENT
-    // parallel stages that overlap on idle cores, while a lineage cap
-    // serializes an extra materialization job ahead of them. The
-    // corpus-build compositions (Clustering.semDropIds*), whose copies
-    // compete with the rest of the pipeline for the same cores, keep
-    // the cap — it measured faster there.
-    val asg = KMeansOp.assignCells(intVecs(s, d),
-        trainedCentroids(s, d).toDF("cid", "c"))
+    val vecs = intVecs(s, d)
+    KMeansOp.assignCells(vecs, cents.toDF("cid", "c"))
       .select(col("vec_id"), col("cid").as("cluster"))
-    val ve = asg.join(
-      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-      Seq("vec_id"))
-    val a = ve.select(col("cluster"), col("vec_id").as("id_a"),
-      col("embedding").as("ea"))
-    val b = ve.select(col("cluster"), col("vec_id").as("id_b"),
-      col("embedding").as("eb"))
-    val drops = a.join(b, Seq("cluster"))
-      .where(col("id_a") < col("id_b"))
-      .where(VectorOps.cosine(col("ea"), col("eb")) >= 0.4)
-      .select(col("id_b").as("vec_id"))
-      .distinct()
-    ve.select(col("vec_id"), col("cluster"))
-      .join(drops.withColumn("dropped", lit(true)), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cluster"),
-        coalesce(col("dropped"), lit(false)) === false)
-      .toDF("vec_id", "cluster", "kept")
+      .join(Dedup.semDedup(vecs, Tables.embeddings(s, d), cents, cap, pin = false)
+        .withColumn("dropped", lit(true)), Seq("vec_id"), "left")
+      .select(col("vec_id"), col("cluster"), col("dropped").isNull.as("kept"))
       .orderBy(col("vec_id").asc)
   }
 
@@ -258,7 +232,7 @@ object SemanticQ {
     * terminal ROUND, so the oracle replays it bit-for-bit.
     */
   def shortlistAnnQ(s: SparkSession, d: String): DataFrame =
-    ann(s, d, Pq, InFlight, probe(s, d), k = 5)
+    ann(s, d, Pq, InFlight, VectorOps.queryVector(s, d), k = 5)
       .select(
         concat(lit("vec_"), lpad(col("vec_id").cast("string"), 6, "0"))
           .as("file_name"),
@@ -354,17 +328,6 @@ object SemanticQ {
         .write.mode("overwrite").partitionBy("cell").parquet(dir)
     }
 
-  /** SemDeDup with the PRODUCTION quantizer size — k = ceil(√N) — the
-    * fix the sf1 scale probe prescribed for the fixed-k family: cluster
-    * populations stay ~√N as the corpus grows, so the within-cluster
-    * pairwise term is Σ|cluster|² ≈ N·√N·(dup-density), not (N/k)².
-    * Both engines derive k from the SAME count, so the oracle is exact
-    * (DuckDB computes the seed LIMIT from a scalar subquery); the
-    * k=8 q_semdedup stays as the pinned small-k contract. Training
-    * (2-round integer Lloyd at the derived k) memoizes under the
-    * dataset content fingerprint like every quantizer here — see
-    * [[scaledCentroids]].
-    */
   /** √N quantizer fit: k = ⌈√N⌉ over the dataset's embeddings, 2-round
     * integer Lloyd, N read off the one collected training set. k is
     * data-dependent, but it is a pure function of the snapshot, so the
@@ -412,8 +375,19 @@ object SemanticQ {
       KMeansOp.lloydCentroidsInMemory(sample, k, Iters)
     }
 
+  /** SemDeDup with the PRODUCTION quantizer size — k = ceil(√N) — the
+    * fix the sf1 scale probe prescribed for the fixed-k family: cluster
+    * populations stay ~√N as the corpus grows, so the within-cluster
+    * pairwise term is Σ|cluster|² ≈ N·√N·(dup-density), not (N/k)².
+    * Both engines derive k from the SAME count, so the oracle is exact
+    * (DuckDB computes the seed LIMIT from a scalar subquery); the
+    * k=8 q_semdedup stays as the pinned small-k contract. Training
+    * (2-round integer Lloyd at the derived k) memoizes under the
+    * dataset content fingerprint like every quantizer here — see
+    * [[scaledCentroids]].
+    */
   def semdedupScaledQ(s: SparkSession, d: String): DataFrame =
-    semdedupWith(s, d, scaledCentroids(s, d))
+    semdedup(s, d, scaledCentroids(s, d), cap = None)
 
   /** SemDeDup over the SAMPLE-trained √N quantizer
     * ([[sampledCentroids]]) — identical dedup semantics to
@@ -423,35 +397,7 @@ object SemanticQ {
     * shape; only the training derivation changed.
     */
   def semdedupSampledQ(s: SparkSession, d: String): DataFrame =
-    semdedupWith(s, d, sampledCentroids(s, d))
-
-  private def semdedupWith(s: SparkSession, d: String,
-      cents: Seq[(Long, Seq[Long])]): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    // ve has three consumers but stays LAZY — see semdedupQ's note:
-    // the r21 materialization experiment measured 3.7x slower here
-    // (parallel duplicate stages beat a serialized cap job at this
-    // query's size; the corpus-build compositions keep the cap)
-    val asg = KMeansOp.assignCells(intVecs(s, d), cents.toDF("cid", "c"))
-      .select(col("vec_id"), col("cid").as("cluster"))
-    val ve = asg.join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-    val a = ve.select(col("cluster"), col("vec_id").as("id_a"),
-      col("embedding").as("ea"))
-    val b = ve.select(col("cluster"), col("vec_id").as("id_b"),
-      col("embedding").as("eb"))
-    val drops = a.join(b, Seq("cluster"))
-      .where(col("id_a") < col("id_b"))
-      .where(VectorOps.cosine(col("ea"), col("eb")) >= 0.4)
-      .select(col("id_b").as("vec_id"))
-      .distinct()
-    ve.select(col("vec_id"), col("cluster"))
-      .join(drops.withColumn("dropped", lit(true)), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cluster"),
-        coalesce(col("dropped"), lit(false)) === false)
-      .toDF("vec_id", "cluster", "kept")
-      .orderBy(col("vec_id").asc)
-  }
+    semdedup(s, d, sampledCentroids(s, d), cap = None)
 
   /** Per-bucket population cap for [[semdedupCappedQ]]: small enough to
     * split every cell several ways at the sf0.001 contract scale
@@ -491,38 +437,8 @@ object SemanticQ {
     * bucket; the DuckDB oracle replays the Lloyd chain, the rank
     * window, and the prune bit-for-bit.
     */
-  def semdedupCappedQ(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    val asg = KMeansOp.assignCells(intVecs(s, d),
-        trainedCentroids(s, d).toDF("cid", "c"))
-      .select(col("vec_id"), col("cid").as("cluster"), col("dist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster"))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-    val sub = asg
-      .withColumn("rn", row_number().over(w))
-      .selectExpr("vec_id", "cluster",
-        s"CAST((rn - 1) div $SemCap AS BIGINT) AS sb")
-    // ve stays LAZY despite three consumers — see semdedupQ's note on
-    // the r21 materialization experiment (2x slower here)
-    val ve = sub.join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-    val a = ve.select(col("cluster"), col("sb"), col("vec_id").as("id_a"),
-      col("embedding").as("ea"))
-    val b = ve.select(col("cluster"), col("sb"), col("vec_id").as("id_b"),
-      col("embedding").as("eb"))
-    val drops = a.join(b, Seq("cluster", "sb"))
-      .where(col("id_a") < col("id_b"))
-      .where(VectorOps.cosine(col("ea"), col("eb")) >= 0.4)
-      .select(col("id_b").as("vec_id"))
-      .distinct()
-    ve.select(col("vec_id"), col("cluster"))
-      .join(drops.withColumn("dropped", lit(true)), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cluster"),
-        coalesce(col("dropped"), lit(false)) === false)
-      .toDF("vec_id", "cluster", "kept")
-      .orderBy(col("vec_id").asc)
-  }
+  def semdedupCappedQ(s: SparkSession, d: String): DataFrame =
+    semdedup(s, d, trainedCentroids(s, d), cap = Some(SemCap))
 
   // ---- CDC-index lifecycle + recall monitor -------------------------
 
@@ -577,7 +493,7 @@ object SemanticQ {
     }
 
   private def annOf(k: Kind, at: Layout): (SparkSession, String) => DataFrame =
-    (s, d) => ann(s, d, k, at, probe(s, d))
+    (s, d) => ann(s, d, k, at, VectorOps.queryVector(s, d))
 
   private def recallOf(k: Kind, at: Layout): (SparkSession, String) => DataFrame =
     (s, d) => recall(s, d, ann(s, d, k, at, _), live = at == Maintained)
@@ -588,7 +504,7 @@ object SemanticQ {
     "q_semdedup_scaled" -> semdedupScaledQ,
     "q_semdedup_sampled" -> semdedupSampledQ,
     "q_semdedup_capped" -> semdedupCappedQ,
-    "q_ann_ivf_trained" -> ((s, d) => annIvfTrained(s, d, probe(s, d))),
+    "q_ann_ivf_trained" -> ((s, d) => annIvfTrained(s, d, VectorOps.queryVector(s, d))),
     "q_recall_ivf" -> ((s, d) => recall(s, d, annIvfTrained(s, d, _))),
     "q_pq_codes" -> pqCodesQ,
     "q_ann_pq" -> annOf(Pq, Flat),
@@ -599,7 +515,7 @@ object SemanticQ {
     "q_ann_ivfpq" -> annOf(Pq, InFlight),
     "q_ann_ivfpq_part" -> annOf(Pq, Persisted),
     "q_ann_ivfpq_res_part" -> annOf(ResidualPq, Persisted),
-    "q_ann_ivfpq_rerank" -> ((s, d) => annIvfPqRerank(s, d, probe(s, d))),
+    "q_ann_ivfpq_rerank" -> ((s, d) => annIvfPqRerank(s, d, VectorOps.queryVector(s, d))),
     "q_ann_ivfpq_rerank_batch" -> annIvfPqRerankBatchQ,
     "q_recall_ivfpq_rerank" -> ((s, d) => recall(s, d, annIvfPqRerank(s, d, _), k = 3)),
     "q_sq8_topk" -> annOf(Sq8, Flat),

@@ -81,11 +81,12 @@ class CheckpointHygieneSpec extends AnyFunSuite {
       rows.select($"x".as("node")), edges, 1, maxNodes = 3)) == Seq(4L))
     assert(rowBounds(2)(operators.PageRank.runBoundedLocal(
       spark.range(0, 2).toDF("node"), edges, 1, maxNodes = 2)) == Seq(2L, 5L))
-    val cand = rows.select(lit(0L).as("qid"), $"x".as("id"),
-      ($"x" / 1000.0).as("rel"))
+    val bound = operators.Rerank.RowBound
+    val cand = spark.range(0, bound + 10L, 1, 4).select(lit(0L).as("qid"),
+      $"id", ($"id" / 1000.0).as("rel"))
     val sims = Seq((0L, 0L, 1L, 0.5)).toDF("qid", "ia", "ib", "sim")
-    assert(rowBounds(1)(operators.Rerank.mmrSelectBatch(cand, sims, 2, 0.5,
-      boundedDeltas = Some(10))) == Seq(11L))
+    assert(rowBounds(1)(operators.Rerank.mmrSelectBatch(cand, sims, 2, 0.5)) ==
+      Seq(bound + 1L))
   }
 
   test("BpeTrainer.train throws on a vocab past its bound after reading at " +

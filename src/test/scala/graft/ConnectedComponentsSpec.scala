@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.ConnectedComponents
+import graft.operators.{ConnectedComponents, IterativeTwins}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +12,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   private def edges(es: (Long, Long)*): DataFrame = es.toDF("id_a", "id_b")
 
   private def run(n: DataFrame, e: DataFrame): Map[Long, Long] =
-    ConnectedComponents.assign(n, e).collect()
+    IterativeTwins.components(n, e).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("chain collapses to its minimum id (diameter > 1 propagation)") {
@@ -65,7 +65,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   test("maxRounds guard throws instead of returning a partial merge") {
     val chain = (1L until 12L).map(i => (i, i + 1))
     intercept[IllegalStateException] {
-      ConnectedComponents.assign(nodes(1L to 12L: _*), edges(chain: _*), maxRounds = 2)
+      IterativeTwins.components(nodes(1L to 12L: _*), edges(chain: _*), maxRounds = 2)
     }
   }
 
@@ -79,7 +79,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val got = runStar(nodes(1L to n.toLong: _*), edges(chain: _*))
     assert(got.values.toSet == Set(1L))
     intercept[IllegalStateException] {
-      ConnectedComponents.assign(nodes(1L to n.toLong: _*), edges(chain: _*), maxRounds = 25)
+      IterativeTwins.components(nodes(1L to n.toLong: _*), edges(chain: _*), maxRounds = 25)
     }
   }
 
@@ -142,7 +142,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
         ((ids.head, ids.head))
       def rows(df: DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      val want = rows(ConnectedComponents.assign(nodes(nodeRows: _*), edges(es: _*),
+      val want = rows(IterativeTwins.components(nodes(nodeRows: _*), edges(es: _*),
         maxRounds = 60))
       assert(want.length == nodeRows.length)
       assert(rows(ConnectedComponents.assignAdaptive(nodes(nodeRows: _*),

@@ -1,10 +1,11 @@
 package graft
 
-import graft.operators.{ConnectedComponents, PageRank, Rerank}
+import graft.operators.{ConnectedComponents, IterativeTwins}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The reliable-checkpoint switch on the iterative operators: with
-  * `checkpointDir` set, every round goes through `df.checkpoint()`
+/** The reliable-checkpoint switch on the distributed round loops
+  * (alternating-star components and the IterativeTwins references):
+  * with `checkpointDir` set, every round goes through `df.checkpoint()`
   * against that directory (the path that survives executor loss on a
   * real cluster) and the results are identical to the default
   * executor-local path.
@@ -27,10 +28,10 @@ class IterateSpec extends AnyFunSuite {
     val nodes = (1L to 12L).toDF("id")
     val es = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 6L), (9L, 10L))
       .toDF("id_a", "id_b")
-    val expect = ConnectedComponents.assign(nodes, es).collect()
+    val expect = IterativeTwins.components(nodes, es).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dir = tmpDir("cc")
-    val gotProp = ConnectedComponents.assign(nodes, es, checkpointDir = Some(dir))
+    val gotProp = IterativeTwins.components(nodes, es, checkpointDir = Some(dir))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val gotStar = ConnectedComponents
       .assignAlternatingStar(nodes, es, checkpointDir = Some(dir))
@@ -44,10 +45,10 @@ class IterateSpec extends AnyFunSuite {
     val v = (1L to 5L).toDF("node")
     val e = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 1L, 1L), (4L, 3L, 5L))
       .toDF("src", "dst", "w")
-    val expect = PageRank.run(v, e, iterations = 8).collect()
+    val expect = IterativeTwins.pageRank(v, e, iterations = 8).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dir = tmpDir("pr")
-    val got = PageRank.run(v, e, iterations = 8, checkpointDir = Some(dir))
+    val got = IterativeTwins.pageRank(v, e, iterations = 8, checkpointDir = Some(dir))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expect)
     assert(checkpointFilesUnder(dir) > 0)
@@ -57,11 +58,11 @@ class IterateSpec extends AnyFunSuite {
     val v = (1L to 5L).toDF("node")
     val e = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 1L, 1L), (4L, 3L, 5L))
       .toDF("src", "dst", "w")
-    val expect = PageRank.run(v, e, iterations = 8).collect()
+    val expect = IterativeTwins.pageRank(v, e, iterations = 8).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val base = tmpDir("scoped")
     val result = graft.operators.Iterate.withRunScopedCheckpoints(base) { ck =>
-      PageRank.run(v, e, iterations = 8, checkpointDir = ck)
+      IterativeTwins.pageRank(v, e, iterations = 8, checkpointDir = ck)
     }
     // the per-run subdirectory (and with it every checkpoint file) is
     // deleted before the frame is handed back...
@@ -77,7 +78,7 @@ class IterateSpec extends AnyFunSuite {
     val base = tmpDir("scoped_fail")
     assertThrows[IllegalArgumentException] {
       graft.operators.Iterate.withRunScopedCheckpoints(base) { ck =>
-        PageRank.run(spark.emptyDataFrame.selectExpr("1L as node").where("false"),
+        IterativeTwins.pageRank(spark.emptyDataFrame.selectExpr("1L as node").where("false"),
           Seq((1L, 2L, 1L)).toDF("src", "dst", "w"), iterations = 8,
           checkpointDir = ck) // empty vertex set -> require() fails
       }
@@ -95,7 +96,7 @@ class IterateSpec extends AnyFunSuite {
     val sims = (half ++ half.map { case (a, b, s) => (b, a, s) })
       .map { case (a, b, s) => (0L, a, b, s) }.toDF("qid", "ia", "ib", "sim")
     def picks(ckDir: Option[String]) =
-      Rerank.mmrSelectBatch(cand, sims, k = 3, lambda = 0.5, checkpointDir = ckDir)
+      IterativeTwins.mmrSelectBatch(cand, sims, k = 3, lambda = 0.5, checkpointDir = ckDir)
         .orderBy("pick").collect().map(r => (r.getLong(1), r.getLong(2))).toList
     val dir = tmpDir("mmr")
     assert(picks(Some(dir)) == picks(None))

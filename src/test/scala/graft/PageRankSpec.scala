@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.PageRank
+import graft.operators.{IterativeTwins, PageRank}
 import org.scalatest.funsuite.AnyFunSuite
 
 class PageRankSpec extends AnyFunSuite {
@@ -26,7 +26,7 @@ class PageRankSpec extends AnyFunSuite {
   }
 
   private def run(iters: Int, scale: Long): Map[String, Long] =
-    PageRank.run(verts.toDF("node"), edges.toDF("src", "dst", "w"), iters, scale)
+    IterativeTwins.pageRank(verts.toDF("node"), edges.toDF("src", "dst", "w"), iters, scale)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   test("matches the scalar integer recurrence exactly (weights, floor divs)") {
@@ -66,7 +66,7 @@ class PageRankSpec extends AnyFunSuite {
           1L + rnd.nextInt(9))
       }.groupBy(e => (e._1, e._2))
         .map { case ((s, d), g) => (s, d, g.map(_._3).sum) }.toSeq
-      val distributed = PageRank.run(
+      val distributed = IterativeTwins.pageRank(
           vs.toDF("node"), es.toDF("src", "dst", "w"), 4)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val local = PageRank.runBoundedLocal(
@@ -83,8 +83,9 @@ class PageRankSpec extends AnyFunSuite {
 
   test("runBoundedLocal requires distinct node ids: a duplicated vertex " +
     "row throws instead of diverging from run") {
-    // run joins the edges once per vertex ROW, so a duplicated node
-    // would push its outflow twice there; the local twin keys by node
+    // the dataflow twin joins the edges once per vertex ROW, so a
+    // duplicated node would push its outflow twice there; the local
+    // form keys by node
     intercept[IllegalArgumentException] {
       PageRank.runBoundedLocal((verts :+ "a").toDF("node"),
         edges.toDF("src", "dst", "w"), 2, maxNodes = 8)
@@ -104,7 +105,7 @@ class PageRankSpec extends AnyFunSuite {
     def ranks(local: Boolean): Map[String, Long] = {
       val (v, e) = (vs.toDF("node"), es.toDF("src", "dst", "w"))
       (if (local) PageRank.runBoundedLocal(v, e, 1, maxNodes = 2)
-        else PageRank.run(v, e, 1))
+        else IterativeTwins.pageRank(v, e, 1))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
     def arithmetic(t: Throwable): Boolean =

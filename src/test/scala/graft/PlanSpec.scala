@@ -350,6 +350,42 @@ class PlanSpec extends AnyFunSuite {
       "pairwise cosine stage must equi-join on the cluster key")
   }
 
+  /** The SemDeDup pair stage's bucket-key equi-join in `plan`: one join
+    * whose keys are exactly `key` on both sides. */
+  private def bucketJoin(plan: String, key: Seq[String]): Boolean = {
+    val keys = key.map(k => s"$k#\\d+L?").mkString(", ")
+    s"Left keys \\[${key.size}\\]: \\[$keys\\]\\s+Right keys \\[${key.size}\\]: \\[$keys\\]"
+      .r.findFirstIn(plan).isDefined
+  }
+
+  /** The ExistingRDDs `plan` scans, by RDD id. */
+  private def existingRdds(plan: String): Set[String] =
+    "(?s)Scan ExistingRDD.*?Arguments: [^\\n]*?(\\w+RDD\\[\\d+\\])".r
+      .findAllMatchIn(plan).map(_.group(1)).toSet
+
+  test("semdedup_capped: the pairwise stage is one equi-join on (cluster, sb), " +
+    "not all-pairs") {
+    val plan = formatted(graft.queries.SemanticQ.queries("q_semdedup_capped")(spark, TestSpark.sf0001))
+    assert(!plan.contains("CartesianProduct"),
+      "within-bucket pairs must come from an equi-join on the bucket key")
+    assert(bucketJoin(plan, Seq("cluster", "sb")),
+      s"the candidate join must key on (cluster, sb):\n$plan")
+  }
+
+  test("corpus build v3 / capped: one shared SemDeDup materialization, prune " +
+    "joins on the bucket key, no cartesian") {
+    for ((name, key) <- Seq("q_corpus_build_v3" -> Seq("cluster"),
+        "q_corpus_build_capped" -> Seq("cluster", "sb"))) {
+      val plan = formatted(graft.queries.Clustering.queries(name)(spark, TestSpark.sf0001))
+      assert(existingRdds(plan).size == 1,
+        s"$name: both pair sides must read the one pinned relation:\n$plan")
+      assert(!plan.contains("BroadcastNestedLoopJoin"),
+        s"$name: the bounded-k argmin must not be re-planned per pair side")
+      assert(!plan.contains("CartesianProduct"), s"$name: no unbroadcast cartesian anywhere")
+      assert(bucketJoin(plan, key), s"$name: the prune must equi-join on $key:\n$plan")
+    }
+  }
+
   test("per-group top-k family compiles to WindowGroupLimit (map-side rank limit)") {
     // rank-then-filter per group must stay the partial WindowGroupLimit
     // shape — each map task keeps at most k rows per group BEFORE the

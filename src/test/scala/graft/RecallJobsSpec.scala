@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * served side and the exact side share the collected embedding. With
   * the memos warm, the only jobs a `q_recall_*` DataFrame build starts
   * are its driver-side reads, counted here by a SparkListener. The probe
-  * collect itself is one job wherever the vec_id=0 row lies.
+  * lookup (VectorOps.queryVector) is one job wherever its row lies.
   */
 class RecallJobsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -77,9 +77,16 @@ class RecallJobsSpec extends AnyFunSuite {
     try {
       // reading the table infers its schema from the footers, a job of its own
       val read = jobsOf(Tables.embeddings(spark, dir))
+      assert(Tables.embeddings(spark, dir).rdd.getNumPartitions > 1)
       var probe: Seq[Double] = Nil
-      assert(jobsOf { probe = queries.SemanticQ.probe(spark, dir) } == read + 1)
+      assert(jobsOf { probe = functions.VectorOps.queryVector(spark, dir) } == read + 1)
       assert(probe == Seq(0.0, 0.5))
+      // every lookup is one job, wherever its row lies
+      for (id <- Seq(1L, 450L, 499L)) {
+        assert(jobsOf { probe = functions.VectorOps.queryVector(spark, dir, id) } == read + 1,
+          s"vec_id=$id")
+        assert(probe == Seq(id.toDouble, 0.5))
+      }
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))

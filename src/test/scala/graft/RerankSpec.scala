@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.Rerank
+import graft.operators.{IterativeTwins, Rerank}
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 class RerankSpec extends AnyFunSuite {
@@ -82,16 +83,15 @@ class RerankSpec extends AnyFunSuite {
       val bs = simsB.toDF("qid", "ia", "ib", "sim")
       val k = 1 + rnd.nextInt(5)
       val distributed = collectAll(
-        Rerank.mmrSelectBatch(bc, bs, k, lambda = 0.7))
-      val local = collectAll(
-        Rerank.mmrSelectBatch(bc, bs, k, lambda = 0.7,
-          boundedDeltas = Some(10000)))
+        IterativeTwins.mmrSelectBatch(bc, bs, k, lambda = 0.7))
+      val local = collectAll(Rerank.mmrSelectBatch(bc, bs, k, lambda = 0.7))
       assert(local == distributed, s"diverged at trial=$trial k=$k")
     }
-    // loudness contract: a relation past the declared bound must throw
+    // loudness contract: a relation past the driver-local bound throws
+    val past = spark.range(0, Rerank.RowBound + 1L, 1, 2)
+      .select(col("id"), lit(0.5).as("rel"))
     intercept[IllegalArgumentException] {
-      Rerank.mmrSelect(cand, sims, k = 2, lambda = 0.5,
-        boundedDeltas = Some(3))
+      Rerank.mmrSelect(past, sims, k = 2, lambda = 0.5)
     }
   }
 
@@ -108,15 +108,14 @@ class RerankSpec extends AnyFunSuite {
 
   test("boundedDeltas driver-local greedy requires distinct (qid, id) " +
     "candidates: a duplicated candidate row throws") {
-    // the distributed loop keeps both rows of a duplicated candidate,
-    // the local twin would fold them through its per-qid map
+    // the distributed twin keeps both rows of a duplicated candidate,
+    // the driver-local greedy would fold them through its per-qid map
     val dup = Seq((0L, 1L, 0.9), (0L, 2L, 0.8), (0L, 1L, 0.9))
       .toDF("qid", "id", "rel")
     val bsims = Seq((0L, 1L, 2L, 0.2), (0L, 2L, 1L, 0.2))
       .toDF("qid", "ia", "ib", "sim")
     intercept[IllegalArgumentException] {
-      Rerank.mmrSelectBatch(dup, bsims, k = 2, lambda = 0.5,
-        boundedDeltas = Some(100))
+      Rerank.mmrSelectBatch(dup, bsims, k = 2, lambda = 0.5)
     }
   }
 }

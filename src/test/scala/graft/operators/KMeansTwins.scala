@@ -46,6 +46,25 @@ object KMeansTwins {
     cents
   }
 
+  /** OPQ's dimension allocation as a Spark aggregate, the reference for
+    * [[Encoding.train]]'s driver-side ranking: over scaled-integer
+    * `(vec_id, v)` rows, rank dimensions by the
+    * exact-BIGINT first-absolute-moment energy Σ_rows |v_d| (ties to
+    * the lower dimension index — overflow-safe to ~10^12 rows at the
+    * ×10^6 scale), then deal them round-robin across `m` subspaces,
+    * so no subspace gets every high-energy dimension. One corpus
+    * aggregate (d rows). Returns each subspace's 0-based dims in rank
+    * order.
+    */
+  def opqAllocation(vecs: DataFrame, m: Int): Seq[Seq[Int]] = {
+    val ranked = vecs.select(posexplode(col("v")).as(Seq("pos", "x")))
+      .groupBy(col("pos")).agg(sum(abs(col("x"))).as("e"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+      .sortBy { case (pos, e) => (-e, pos) }.map(_._1)
+    (0 until m).map(sub =>
+      ranked.zipWithIndex.collect { case (pos, r) if r % m == sub => pos })
+  }
+
   /** The PQ-family codebooks of [[Encoding.train]], fitted by the
     * distributed loop over Spark-side subvectors: plain PQ slices the
     * scaled vectors, residual PQ their coarse residuals, OPQ the
@@ -62,7 +81,7 @@ object KMeansTwins {
       case Encoding.ResidualPq =>
         (fit(ProductQuantizer.residuals(vecs, coarse), sliced("r")), None)
       case Encoding.Opq =>
-        val p = ProductQuantizer.opqAllocation(vecs, m).flatten
+        val p = opqAllocation(vecs, m).flatten
         (fit(vecs, i => Encoding.permute(col("v"), p.slice(i * subDim, (i + 1) * subDim))),
           Some(p))
       case other => throw new IllegalArgumentException(s"no codebooks for $other")

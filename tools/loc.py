@@ -36,7 +36,10 @@ Prints, one `name: value` per line:
     `Iterate.collectWithin(` call sites in src/main code, i.e. the
     bounded driver collects outside `Iterate` itself;
   - lloyd_loops: `to iters` round loops in src/main code, i.e. the
-    spellings of the Lloyd k-means loop.
+    spellings of the Lloyd k-means loop;
+  - semdedup_stages: the spellings of the SemDeDup pair stage in src/main
+    code, i.e. hand-spelled `cosine(...) >= <threshold>` prune predicates
+    plus definitions of the `semDedup` operator.
 """
 import os
 import re
@@ -155,6 +158,8 @@ def main():
     counts["collect_bounded_sites"] = occurs(
         r"\bIterate\.collect(Bounded|Within)\(", main_files)
     counts["lloyd_loops"] = occurs(r"\bto\s+iters\b", main_files)
+    counts["semdedup_stages"] = occurs(
+        r"\bcosine\(.*\)\s*>=|\bdef\s+semDedup\b", main_files)
     for k, v in counts.items():
         print(f"{k}: {v}")
 
