@@ -224,24 +224,20 @@ final case class Quantizers(coarse: Seq[(Long, Seq[Long])],
     * (vec_id, [[distName]]).
     */
   def serve(layout: DataFrame, probe: Seq[Double], nProbe: Int, k: Int): DataFrame = {
-    val v = Encoding.scaled(probe)
-    val w = encoding match { case Opq(p) => p.map(v(_)); case _ => v }
-    val cells = KMeansOp.nearestCells(coarse, w, nProbe)
+    val (cells, t) = localProbe(probe, nProbe)
     val dist = encoding match {
-      case Sq8(amax) => codeDist(i => lit(ProductQuantizer.sq8CodeLocal(probe(i), amax)))
-      case Sq8Dim(_, _) => codeDist(i => lit(v(i)))
+      case Sq8(_) | Sq8Dim(_, _) => codeDist(i => lit(t(i)))
       case ResidualPq =>
         // the query residual differs per probed cell: one LUT set per
         // cell, chosen per row by a chained `when` on its cell
-        val lut = cells.map(c => c -> ProductQuantizer.adcTables(
-          v.zip(coarse.toMap.apply(c)).map { case (x, cc) => x - cc }, books, subDim)).toMap
+        val lut = residualLuts(t, cells, _ - _)
         books.indices.map { i =>
           def at(c: Long) = element_at(typedLit(lut(c)(i)), col(s"code_$i"))
           cells.tail.foldLeft(when(col("cell") === cells.head, at(cells.head))) {
             (acc, c) => acc.when(col("cell") === c, at(c))
           }
         }.reduce(_ + _)
-      case _ => ProductQuantizer.adcDist(ProductQuantizer.adcTables(w, books, subDim))
+      case _ => ProductQuantizer.adcDist(ProductQuantizer.adcTables(t.toSeq, books, subDim))
     }
     layout.where(col("cell").isin(cells: _*))
       .select(col("vec_id"), dist.as(distName))
@@ -320,6 +316,105 @@ final case class Quantizers(coarse: Seq[(Long, Seq[Long])],
         pq.adcRankBatch(cand.join(broadcast(probeCells), Seq("cell")),
           pq.lutRows(pinned.df, books, subDim), Seq("qid"), m, k)
     }
+  }
+
+  // ---- The serves' arithmetic on the driver -------------------------
+  //
+  // A caller that holds code rows on the driver (the CDC index's live
+  // generation, graft.streaming.IndexStream) scores them with the
+  // serves' own steps: the probe cells of KMeansOp.nearestCells, the
+  // LUTs of ProductQuantizer.adcTables and the SQ8 code distances, each
+  // under the ANSI mode of the call — Math.*Exact exactly where Spark's
+  // `+`, `-`, `*` and `sum` throw.
+
+  /** One probe of the single serve, on the driver: its nProbe cells
+    * and the query terms its rows' codes are compared against — the
+    * scaled vector (OPQ: permuted), or global SQ8's query codes.
+    */
+  private[graft] def localProbe(probe: Seq[Double], nProbe: Int): (Seq[Long], Array[Long]) = {
+    val v = Encoding.scaled(probe)
+    val w = encoding match { case Opq(p) => p.map(v(_)); case _ => v }
+    val cells = KMeansOp.nearestCells(coarse, w, nProbe)
+    val terms = encoding match {
+      case Sq8(amax) => (0 until m).map(i => ProductQuantizer.sq8CodeLocal(probe(i), amax))
+      case _ => w
+    }
+    (cells, terms.toArray)
+  }
+
+  /** The batch serve's per-probe inputs as columns of a probe frame
+    * ([[probes]]): qid, the vector its cells are picked by (`v`) and
+    * the query terms (`t`) — global SQ8's query codes, else `v`.
+    */
+  private[graft] def probeTerms(probes: DataFrame): DataFrame = encoding match {
+    case Sq8(amax) => probes.select(col("qid"), probeVec.as("v"), transform(col("embedding"),
+      e => ProductQuantizer.sq8Code(e, lit(amax))).as("t"))
+    case Opq(p) => probes.select(col("qid"), permute(col("v"), p).as("v"),
+      permute(col("v"), p).as("t"))
+    case _ => probes.select(col("qid"), col("v"), col("v").as("t"))
+  }
+
+  /** The serves' distance of a row in each probed cell for query terms
+    * `t`: a function of the m codes at `codes(off)` …, computed as the
+    * single serve (`batch` false) or the batch serve computes it — they
+    * differ in residual PQ's query residual, a driver subtraction in
+    * the one and an ANSI-checked `zip_with` in the other. A code with no
+    * LUT entry, where the Spark serves read NULL, throws
+    * NoSuchElementException.
+    */
+  private[graft] def localDist(t: Array[Long], cells: Seq[Long],
+      batch: Boolean): Map[Long, (Array[Long], Int) => Long] = {
+    val exact = SQLConf.get.ansiEnabled
+    def add(a: Long, b: Long) = if (exact) Math.addExact(a, b) else a + b
+    def sub(a: Long, b: Long) = if (exact) Math.subtractExact(a, b) else a - b
+    def adc(luts: Seq[Map[Long, Long]]): (Array[Long], Int) => Long = {
+      val keys = luts.map(_.keys.toArray.sorted).toArray
+      val vals = luts.zip(keys).map { case (l, ks) => ks.map(l) }.toArray
+      (codes, off) => {
+        var s = 0L; var i = 0
+        while (i < keys.length) {
+          val j = java.util.Arrays.binarySearch(keys(i), codes(off + i))
+          if (j < 0) throw new NoSuchElementException(s"code ${codes(off + i)} has no LUT entry")
+          s = if (i == 0) vals(i)(j) else add(s, vals(i)(j))
+          i += 1
+        }
+        s
+      }
+    }
+    def sq(decode: (Int, Long) => Long): (Array[Long], Int) => Long = (codes, off) => {
+      var s = 0L; var i = 0
+      while (i < m) {
+        val d = sub(decode(i, codes(off + i)), t(i))
+        val dd = if (exact) Math.multiplyExact(d, d) else d * d
+        s = if (i == 0) dd else add(s, dd)
+        i += 1
+      }
+      s
+    }
+    encoding match {
+      case Sq8(_) =>
+        val f = sq((_, c) => c)
+        cells.map(_ -> f).toMap
+      case Sq8Dim(vmn, vmx) =>
+        val (mn, mx) = (vmn.toArray, vmx.toArray)
+        val f = sq((i, c) => ProductQuantizer.sq8DimDecodeLocal(c, mn(i), mx(i)))
+        cells.map(_ -> f).toMap
+      case ResidualPq =>
+        residualLuts(t, cells, if (batch) sub else _ - _).map { case (c, l) => c -> adc(l) }
+      case _ =>
+        val f = adc(ProductQuantizer.adcTables(t.toSeq, books, subDim))
+        cells.map(_ -> f).toMap
+    }
+  }
+
+  /** Residual PQ's LUTs for query terms `t`, one set per probed cell:
+    * the tables of the query residual `sub(t(i), centroid(i))`.
+    */
+  private def residualLuts(t: Array[Long], cells: Seq[Long],
+      sub: (Long, Long) => Long): Map[Long, Seq[Map[Long, Long]]] = {
+    val cents = coarse.toMap
+    cells.map(c => c -> ProductQuantizer.adcTables(
+      t.toSeq.zip(cents(c)).map { case (x, cc) => sub(x, cc) }, books, subDim)).toMap
   }
 
   /** Squared L2 of the m SQ8 code COLUMNS against query terms `q(i)`:

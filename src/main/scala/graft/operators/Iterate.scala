@@ -1,6 +1,14 @@
 package graft.operators
 
+import org.apache.spark.FutureAction
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LocalLimit
+import org.apache.spark.sql.execution.SQLExecution
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** Lineage cap for iterative dataflows (the distributed connected
   * components rounds) and for a relation several plan branches consume
@@ -73,14 +81,60 @@ private[graft] object Iterate {
         "exceed the declared bound — this path is for algorithm-bounded " +
         "sets only"): _*), df.schema)
 
-  /** The one bounded driver collect: `df`'s rows when there are at most
-    * `bound`, else None. It reads through `limit(bound + 1)`, so a
-    * violated bound brings bound + 1 rows to the driver, never the whole
-    * frame.
+  /** The one bounded driver collect: `df`'s rows, in partition order,
+    * when there are at most `bound`, else None. It reads through
+    * [[collectUpTo]], so a violated bound brings bound + 1 rows to the
+    * driver, never the whole frame.
     */
   def collectWithin(df: DataFrame, bound: Long): Option[Array[Row]] = {
-    val rows = df.limit(math.min(bound + 1, Int.MaxValue.toLong).toInt).collect()
+    val rows = collectUpTo(df, math.min(bound + 1, Int.MaxValue.toLong).toInt)
     if (rows.length <= bound) Some(rows) else None
+  }
+
+  /** `df`'s rows in partition order when it holds at most `n`, else n
+    * of them, through ONE job over every partition (a `limit(n)` scan
+    * runs a job per round of its incremental partition scan). Each task
+    * ships at most n rows; as results arrive the driver keeps the first
+    * n in partition order of those it holds, and once it holds n it
+    * cancels the rest of the job, so a frame past the bound is never
+    * shipped whole.
+    */
+  private[graft] def collectUpTo(df: DataFrame, n: Int): Array[Row] = {
+    // a per-partition limit: narrow, so the plan stays one stage
+    val qe = df.sparkSession.sessionState.executePlan(
+      LocalLimit(Literal(n), df.queryExecution.logical))
+    val parts = SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      val rdd = qe.toRdd
+      val parts = new Array[Array[InternalRow]](rdd.getNumPartitions)
+      var held = 0L
+      val enough = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val job = new java.util.concurrent.atomic.AtomicReference[FutureAction[Unit]]()
+      // results arrive one at a time on the scheduler's event thread
+      def take(i: Int, part: Array[InternalRow]): Unit = {
+        parts(i) = part
+        held += part.length
+        var j = parts.length - 1
+        while (held > n) {
+          if (parts(j) != null) {
+            val cut = math.min(parts(j).length.toLong, held - n).toInt
+            parts(j) = parts(j).dropRight(cut)
+            held -= cut
+          }
+          j -= 1
+        }
+        if (held == n && parts.contains(null) && !enough.getAndSet(true))
+          Option(job.get).foreach(_.cancel())
+      }
+      job.set(rdd.sparkContext.submitJob(rdd,
+        (it: Iterator[InternalRow]) => it.map(_.copy()).toArray,
+        rdd.partitions.indices, take, ()))
+      if (enough.get) job.get.cancel()
+      Await.ready(job.get, Duration.Inf)
+      job.get.value.get.failed.foreach(e => if (!enough.get) throw e)
+      parts
+    }
+    val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+    parts.iterator.flatMap(p => Option(p).iterator.flatten).map(toRow).toArray
   }
 
   /** [[collectWithin]] for a path with no fallback: a violated bound

@@ -173,6 +173,10 @@ object ProductQuantizer {
     floor((mn + c.cast("double") * ((mx - mn) / lit(255.0)))
       * lit(1000000.0)).cast("long")
 
+  /** Driver-side mirror of [[sq8DimDecode]] — identical IEEE ops. */
+  private[graft] def sq8DimDecodeLocal(c: Long, mn: Double, mx: Double): Long =
+    math.floor((mn + c.toDouble * ((mx - mn) / 255.0)) * 1000000.0).toLong
+
   // ---- Batch serving ------------------------------------------------
 
   /** The sorted (dist, cid) coarse-argmin array for a probe's vector

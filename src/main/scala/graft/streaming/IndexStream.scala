@@ -1,10 +1,11 @@
 package graft.streaming
 
-import graft.operators.{Encoding, KMeansOp}
+import graft.operators.{Encoding, Iterate, KMeansOp}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Continuous vector-index maintenance — the streaming story for the
   * similarity-search family (DedupStream covers near-dup text,
@@ -27,9 +28,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *     coarse cell and codes against the frozen quantizers
   *     ([[Quantizers.project]], the layout every tier shares);
   *  2. an insert whose vec_id is LIVE before this batch (and not
-  *     deleted by it) is dropped by one anti-join against the live code
-  *     table (new↔existing only; the index is never re-scanned
-  *     pairwise) — first write wins;
+  *     deleted by it) is dropped — first write wins — by a lookup in the
+  *     driver-held live rows, or past [[LiveBound]] by one anti-join
+  *     against the live code table (new↔existing only; the index is
+  *     never re-scanned pairwise);
   *  3. survivors land at `codes/batch_id=N` carrying `src_batch = N`,
   *     deletes land as tombstones at `tombs/batch_id=N`, and a row is
   *     live iff no strictly later tombstone names it ([[liveCodes]]).
@@ -41,19 +43,26 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * quantizers is deterministic, and the liveness check reads only
   * strictly-earlier state).
   *
-  * Scale shape: per-batch cost tracks the batch — the projection is
-  * map-side, the liveness check is one equi-join probing committed
-  * state, and state is (vec_id, cell, m codes, src_batch) BIGINTs per
+  * Scale shape: state is (vec_id, cell, m codes, src_batch) BIGINTs per
   * vector regardless of dimension: the 64-float embedding never enters
-  * the state. Every code write — per-batch, rebuild generation,
-  * compacted base — lays the rows out `partitionBy(cell)`, so the
-  * MAINTAINED index IS the pruned serving artifact (the same layout the
-  * batch tier persists, SemanticQ.indexPath): search over the live
-  * index ([[searchCommittedCdc]], [[searchCommittedBatchCdc]]) answers
-  * its probed-cell predicate by DIRECTORY pruning at the listing, never
-  * by scanning non-probed cells' files, and
-  * compaction's tombstone GC preserves the partitioning (CdcIndexSpec
-  * pins the pruned plan).
+  * the state. Under [[LiveBound]] live rows, the live generation is
+  * also held on the driver, grouped by cell, as a cache of the
+  * committed state (the way the reference keeps its flat FAISS index in
+  * process memory, vectorDB.py:12,38): a commit collects the batch's
+  * projection once, resolves the liveness check against the held rows
+  * and folds its delta in, and a search scores the held rows with the
+  * serves' own integer arithmetic and returns a LocalRelation — no
+  * Spark job while the committed markers are unchanged. Past the bound,
+  * per-batch cost tracks the batch — the projection is map-side, the
+  * liveness check is one equi-join probing committed state — and every
+  * code write (per-batch, rebuild generation, compacted base) lays the
+  * rows out `partitionBy(cell)`, so the MAINTAINED index IS the pruned
+  * serving artifact (the same layout the batch tier persists,
+  * SemanticQ.indexPath): [[Quantizers.serve]] over [[liveLayout]]
+  * answers its probed-cell predicate by DIRECTORY pruning at the
+  * listing, never by scanning non-probed cells' files, and compaction's
+  * tombstone GC preserves the partitioning (CdcIndexSpec pins the
+  * pruned plan).
   */
 object IndexStream {
 
@@ -203,28 +212,56 @@ object IndexStream {
     val ops =
       if (batch.columns.contains(OpColumn)) batch
       else batch.withColumn(OpColumn, lit("insert"))
-    val dels = ops.where(col(OpColumn) === "delete")
-      .select(col("vec_id")).distinct()
-    val ins = ops.where(coalesce(col(OpColumn), lit("insert")) =!= "delete")
-      .select(col("vec_id"), col("embedding"))
-    val indexed0 = q.project(ins)
-    val codeCols = indexed0.columns.filter(_ != "vec_id").toSeq
-    val indexed = indexed0.groupBy(col("vec_id"))
-      .agg(min(struct(codeCols.map(col): _*)).as("k"))
-      .select(col("vec_id") +: codeCols.map(c => col("k." + c)): _*)
-    // an insert is blocked by an id that is live BEFORE this batch and
-    // NOT deleted by it — so re-insert-after-delete lands, and
-    // delete+insert replaces
-    val blocked = liveCodes(s, stateDir, q.m, upTo = batchId)
-      .select(col("vec_id"))
-      .join(dels, Seq("vec_id"), "left_anti")
-    // the auto valve RESOLVES: continuous maintenance should never let
-    // state size track the delete history instead of the live set
-    StreamState.commit(s, stateDir, batchId, autoCompactEvery)(
-      codesTable(s, stateDir, q.m) ->
-        indexed.join(blocked, Seq("vec_id"), "left_anti")
-          .withColumn("src_batch", lit(batchId)),
-      Tombs -> dels.withColumn("del_batch", lit(batchId)))
+    val delIds = ops.where(col(OpColumn) === "delete").select(col("vec_id"))
+    val projected = q.project(ops.where(coalesce(col(OpColumn), lit("insert")) =!= "delete")
+      .select(col("vec_id"), col("embedding")))
+    val before = StreamState.stamp(s, stateDir)
+    // the liveness check reads strictly-earlier state: a fresh batch
+    // sees every committed row, a replay reloads at its own horizon
+    val replay = before.committed.lastOption.exists(_._1 >= batchId)
+    val base =
+      if (replay) load(s, stateDir, q.m, before, upTo = batchId)
+      else current(s, stateDir, q.m, before)
+    val delta = base.flatMap(b => localDelta(delIds, projected, LiveBound - b.size))
+    val (next, folded) = (base, delta) match {
+      case (Some(b), Some((ins, dels))) =>
+        // an insert is blocked by an id that is live BEFORE this batch
+        // and NOT deleted by it — so re-insert-after-delete lands, and
+        // delete+insert replaces
+        val kept = ins.filterNot(r => b.holds(r(0)) &&
+            java.util.Arrays.binarySearch(dels, r(0)) < 0)
+          .map(_ :+ batchId)
+        val folded = StreamState.commit(s, stateDir, batchId, autoCompactEvery)(
+          codesTable(s, stateDir, q.m) -> local(s, codesSchema(q.m), kept),
+          Tombs -> local(s, tombSchema, dels.toSeq.map(id => Array(id, batchId))))
+        (Some(Some(b.fold(dels, kept))), folded)
+      case _ =>
+        val dels = delIds.distinct()
+        val codeCols = projected.columns.filter(_ != "vec_id").toSeq
+        // duplicate insert ids collapse to the min (cell, codes) row
+        val indexed = projected.groupBy(col("vec_id"))
+          .agg(min(struct(codeCols.map(col): _*)).as("k"))
+          .select(col("vec_id") +: codeCols.map(c => col("k." + c)): _*)
+        val blocked = liveCodes(s, stateDir, q.m, upTo = batchId)
+          .select(col("vec_id"))
+          .join(dels, Seq("vec_id"), "left_anti")
+        // the auto valve RESOLVES: continuous maintenance should never
+        // let state size track the delete history instead of the live set
+        val folded = StreamState.commit(s, stateDir, batchId, autoCompactEvery)(
+          codesTable(s, stateDir, q.m) ->
+            indexed.join(blocked, Seq("vec_id"), "left_anti")
+              .withColumn("src_batch", lit(batchId)),
+          Tombs -> dels.withColumn("del_batch", lit(batchId)))
+        // a generation past the bound stays past it; one whose batch
+        // alone did not fit is reloaded by its next reader
+        (if (base.isEmpty) Some(None) else None, folded)
+    }
+    // a replay of an older batch leaves later batches to fold: reload
+    val newest = !replay || before.committed.last._1 == batchId
+    next.filter(_ => newest) match {
+      case Some(live) => rekey(s, stateDir, q.m, before, Set(batchId), folded.toSet, live)
+      case None => forget(stateDir)
+    }
   }
 
   /** Continuous CDC maintenance over a streaming (vec_id, embedding,
@@ -256,38 +293,272 @@ object IndexStream {
     * corruption.
     */
   def compactStateCdcResolve(s: SparkSession, stateDir: String,
-      m: Int): Option[Long] =
-    StreamState.compact(s, stateDir, Seq(codesTable(s, stateDir, m), Tombs))
+      m: Int): Option[Long] = {
+    val before = StreamState.stamp(s, stateDir)
+    val folded = StreamState.compact(s, stateDir, Seq(codesTable(s, stateDir, m), Tombs))
+    // the resolve leaves the live set as it was: a held copy stays valid
+    cached(stateDir, before, m).foreach(rekey(s, stateDir, m, before, Set.empty, folded.toSet, _))
+    folded
+  }
+
+  // ---- The live generation on the driver ----------------------------
+  //
+  // Under [[LiveBound]] live rows, a state dir's live code rows are held
+  // on the driver: a commit resolves "blocked" against them and folds
+  // its delta in, and a search scores them in place. The copy is a
+  // CACHE of the committed parquet state, which stays the only truth
+  // (the StreamState crash contract is unchanged). It is keyed by the
+  // dir's marker [[StreamState.Stamp]], so an outside commit,
+  // compaction or replay, or a dir deleted and rebuilt at the same path,
+  // is a new key, and the next reader reloads once through a bounded
+  // collect of [[liveCodes]]. A generation past the bound, or holding a
+  // NULL this module never writes, is recorded as such and keeps the
+  // Spark bodies.
+
+  /** The most live rows held on the driver, across every state dir —
+    * the bound of KMeansOp.points, BpeTrainer.VocabBound and
+    * Rerank.RowBound.
+    */
+  private val LiveBound = 1 << 18
+
+  /** A generation's live rows grouped by cell: row r is
+    * `data(r·width …)` in the code-table column order (vec_id, cell,
+    * code_0 … code_{m−1}, src_batch), rows sorted by (cell, vec_id);
+    * the rows of `cells(j)` are [from(j), from(j + 1)).
+    */
+  private final class Live(val m: Int, val data: Array[Long],
+      cells: Array[Long], from: Array[Int]) {
+    def width: Int = m + 3
+    def size: Int = data.length / width
+    private lazy val ids = {
+      val a = Array.tabulate(size)(r => data(r * width))
+      java.util.Arrays.sort(a)
+      a
+    }
+    def holds(id: Long): Boolean = java.util.Arrays.binarySearch(ids, id) >= 0
+
+    /** The rows of cell `c`, as a [from, until) row range. */
+    def span(c: Long): (Int, Int) = {
+      val j = java.util.Arrays.binarySearch(cells, c)
+      if (j < 0) (0, 0) else (from(j), from(j + 1))
+    }
+
+    /** This generation after a batch that deleted `dels` (sorted) and
+      * inserted `ins`: every earlier row of a deleted id is killed by
+      * its strictly later tombstone; the inserts carry the batch's id.
+      */
+    def fold(dels: Array[Long], ins: Seq[Array[Long]]): Live =
+      Live(m, (0 until size).iterator.map(r => data.slice(r * width, (r + 1) * width))
+        .filter(r => java.util.Arrays.binarySearch(dels, r(0)) < 0) ++ ins)
+  }
+
+  /** Lexicographic order of BIGINT rows over the columns `cols`. */
+  private def lexOrder(cols: Seq[Int]): Ordering[Array[Long]] = (a, b) => {
+    var c = 0
+    val it = cols.iterator
+    while (c == 0 && it.hasNext) { val i = it.next(); c = java.lang.Long.compare(a(i), b(i)) }
+    c
+  }
+
+  private object Live {
+    def apply(m: Int, rows: Iterator[Array[Long]]): Live = {
+      val sorted = rows.toArray.sorted(lexOrder(1 +: 0 +: (2 until m + 3)))
+      val starts = sorted.indices.filter(r => r == 0 || sorted(r)(1) != sorted(r - 1)(1))
+      new Live(m, sorted.flatten, starts.map(sorted(_)(1)).toArray,
+        (starts :+ sorted.length).toArray)
+    }
+  }
+
+  /** A state dir's held generation, at the stamp it was read at: None
+    * when that generation is served by the Spark bodies.
+    */
+  private final case class Held(stamp: StreamState.Stamp, m: Int, live: Option[Live]) {
+    def rows: Int = live.fold(1)(l => math.max(l.size, 1))
+  }
+
+  /** Held generations by state dir, least recently used first. */
+  private val held = new java.util.LinkedHashMap[String, Held](16, 0.75f, true)
+
+  /** Bounded collects of live state so far (a test hook). */
+  private[graft] val reloads = new java.util.concurrent.atomic.AtomicLong()
+
+  private def cached(stateDir: String, stamp: StreamState.Stamp, m: Int): Option[Option[Live]] =
+    held.synchronized(Option(held.get(stateDir)))
+      .filter(h => h.stamp == stamp && h.m == m).map(_.live)
+
+  /** Hold `live` as `stateDir`'s generation at `stamp`. Dirs gone from
+    * disk (a published build's staging name) are dropped, then the
+    * least recently used until the held rows fit [[LiveBound]].
+    */
+  private def hold(s: SparkSession, stateDir: String, h: Held): Unit = held.synchronized {
+    held.put(stateDir, h)
+    val conf = s.sparkContext.hadoopConfiguration
+    held.keySet.removeIf { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      !p.getFileSystem(conf).exists(p)
+    }
+    var rows = held.values.iterator.asScala.map(_.rows.toLong).sum
+    val lru = held.entrySet.iterator
+    while (rows > LiveBound && lru.hasNext) {
+      val e = lru.next()
+      if (e.getKey != stateDir) { rows -= e.getValue.rows; lru.remove() }
+    }
+  }
+
+  private def forget(stateDir: String): Unit = held.synchronized(held.remove(stateDir))
+
+  /** After this process's own commit or compaction: the generation that
+    * `live` describes is held at the dir's new stamp when that stamp
+    * differs from `before` only by the markers written here.
+    */
+  private def rekey(s: SparkSession, stateDir: String, m: Int, before: StreamState.Stamp,
+      own: Set[Long], ownBase: Set[Long], live: Option[Live]): Unit = {
+    val after = StreamState.stamp(s, stateDir)
+    if (before.leadsTo(after, own, ownBase)) hold(s, stateDir, Held(after, m, live))
+    else forget(stateDir)
+  }
+
+  /** The live generation of `stateDir` at `stamp`: held, or reloaded
+    * once and held.
+    */
+  private def current(s: SparkSession, stateDir: String, m: Int,
+      stamp: StreamState.Stamp): Option[Live] =
+    cached(stateDir, stamp, m).getOrElse {
+      val live = load(s, stateDir, m, stamp, Long.MaxValue)
+      hold(s, stateDir, Held(stamp, m, live))
+      live
+    }
+
+  /** The live rows strictly below `upTo` through one bounded collect of
+    * [[liveCodes]] (none when no marker lies below it); None past
+    * [[LiveBound]] rows or when a row holds a NULL.
+    */
+  private def load(s: SparkSession, stateDir: String, m: Int,
+      stamp: StreamState.Stamp, upTo: Long): Option[Live] =
+    if (!(stamp.committed ++ stamp.compacted).exists(_._1 < upTo)) Some(Live(m, Iterator.empty))
+    else {
+      reloads.incrementAndGet()
+      Iterate.collectWithin(liveCodes(s, stateDir, m, upTo), LiveBound)
+        .filterNot(_.exists(r => (0 until r.length).exists(r.isNullAt)))
+        .map(rows => Live(m, rows.iterator.map(r => Array.tabulate(r.length)(r.getLong))))
+    }
+
+  /** A batch's delta through one bounded collect of its projected
+    * inserts and deleted ids: the inserts as (vec_id, cell, code_0 …)
+    * rows, duplicate ids collapsed to the min (cell, codes) row as the
+    * Spark body's min-struct does, and the distinct deleted ids, sorted.
+    * None past `bound` rows, or on a non-BIGINT vec_id or a NULL id or
+    * code, which the Spark body writes as they are.
+    */
+  private def localDelta(delIds: DataFrame, projected: DataFrame,
+      bound: Long): Option[(Seq[Array[Long]], Array[Long])] = {
+    if (projected.schema("vec_id").dataType != LongType) return None
+    val codeCols = projected.columns.toSeq
+    val both = projected.withColumn("__del", lit(false)).union(delIds.select(
+      col("vec_id") +: codeCols.tail.map(c => lit(null).cast(LongType).as(c)) :+
+        lit(true).as("__del"): _*))
+    Iterate.collectWithin(both, bound).flatMap { rows =>
+      val (dels, ins) = rows.partition(_.getBoolean(codeCols.length))
+      if (dels.exists(_.isNullAt(0)) ||
+          ins.exists(r => codeCols.indices.exists(r.isNullAt))) None
+      else {
+        val collapsed = ins.map(r => Array.tabulate(codeCols.length)(r.getLong))
+          .groupBy(_(0)).values.map(_.min(lexOrder(1 until codeCols.length)))
+          .toSeq.sorted(lexOrder(Seq(1, 0)))
+        Some((collapsed, dels.map(_.getLong(0)).distinct.sorted))
+      }
+    }
+  }
 
   // ---- Serving ------------------------------------------------------
 
   /** The live code rows as a serving layout (the batch bookkeeping
-    * column dropped). A row's liveness is decided per row against the
-    * (unpruned) tombstone relation, never by rows in other cells, so
-    * the serve's probed-cell filter pushes to the codes scan and its
-    * file listing stops at the probed `cell=` directories.
+    * column dropped): the Spark serve's input past [[LiveBound]]. A
+    * row's liveness is decided per row against the (unpruned) tombstone
+    * relation, never by rows in other cells, so the serve's probed-cell
+    * filter pushes to the codes scan and its file listing stops at the
+    * probed `cell=` directories.
     */
-  private def liveLayout(s: SparkSession, stateDir: String, q: Quantizers): DataFrame =
+  private[graft] def liveLayout(s: SparkSession, stateDir: String, q: Quantizers): DataFrame =
     liveCodes(s, stateDir, q.m).drop("src_batch")
 
   /** Single-probe search over the LIVE rows of the maintained index,
     * `probe` being the query's raw embedding: deleted ids never surface,
     * re-inserted ids serve their newest codes. Returns
-    * (vec_id, adc_scaled) — (vec_id, qdist) for SQ8 state.
+    * (vec_id, adc_scaled) — (vec_id, qdist) for SQ8 state. Under
+    * [[LiveBound]] live rows it scores the driver-held generation and
+    * returns a LocalRelation; past it, [[Quantizers.serve]] over
+    * [[liveLayout]].
     */
   def searchCommittedCdc(s: SparkSession, stateDir: String, q: Quantizers,
       probe: Seq[Double], nProbe: Int, k: Int): DataFrame =
-    q.serve(liveLayout(s, stateDir, q), probe, nProbe, k)
+    current(s, stateDir, q.m, StreamState.stamp(s, stateDir)).flatMap { live =>
+      if (k < 1 || nProbe < 1) None
+      else {
+        val (cells, t) = q.localProbe(probe, nProbe)
+        topK(live, cells, q.localDist(t, cells, batch = false), k)
+          .map(hits => local(s, servedSchema(q), hits.map { case (d, id) => Array(id, d) }))
+      }
+    }.getOrElse(q.serve(liveLayout(s, stateDir, q), probe, nProbe, k))
 
   /** Batch search over the LIVE rows of the maintained index: `probes`
-    * is any (qid, v) frame — (qid, embedding) for SQ8 state — served by
-    * executors, the only driver work the ≤ Q·nProbe collected distinct
-    * probed cells. Returns (qid, rnk, vec_id, adc_scaled | qdist), top-k
-    * per qid.
+    * is any (qid, v) frame — (qid, embedding) for SQ8 state. Returns
+    * (qid, rnk, vec_id, adc_scaled | qdist), top-k per qid. Under
+    * [[LiveBound]] live rows the probe frame is collected (no job when
+    * it is a LocalRelation) and every probe is scored against the
+    * driver-held generation, the result a LocalRelation; past it, the
+    * batch [[Quantizers.serve]] over [[liveLayout]] runs on executors.
     */
   def searchCommittedBatchCdc(s: SparkSession, stateDir: String,
       q: Quantizers, probes: DataFrame, nProbe: Int, k: Int): DataFrame =
-    q.serve(liveLayout(s, stateDir, q), probes, nProbe, k)
+    current(s, stateDir, q.m, StreamState.stamp(s, stateDir)).flatMap(serveBatch(s, _, q, probes, nProbe, k))
+      .getOrElse(q.serve(liveLayout(s, stateDir, q), probes, nProbe, k))
+
+  /** The batch serve on the driver, or None where its inputs leave the
+    * common case (a non-BIGINT or NULL qid, a NULL or wrong-length
+    * vector, a code with no LUT entry) and the Spark serve decides.
+    */
+  private def serveBatch(s: SparkSession, live: Live, q: Quantizers,
+      probes: DataFrame, nProbe: Int, k: Int): Option[DataFrame] = {
+    if (k < 1 || nProbe < 1 ||
+        !probes.schema.exists(f => f.name == "qid" && f.dataType == LongType)) return None
+    def longs(r: Row, i: Int): Option[Array[Long]] =
+      Option(r.getSeq[java.lang.Long](i)).filter(x => x.length == q.dim && !x.contains(null))
+        .map(_.map(_.longValue).toArray)
+    val parsed = q.probeTerms(probes).collect().map(r =>
+      for (v <- longs(r, 1); t <- longs(r, 2) if !r.isNullAt(0)) yield (r.getLong(0), v, t))
+    if (parsed.contains(None)) return None
+    // qid-deduplicated, first row kept, as the Spark serve's dropDuplicates
+    val served = parsed.flatten.distinctBy(_._1).sortBy(_._1).map { case (qid, v, t) =>
+      val cells = KMeansOp.nearestCells(q.coarse, v.toSeq, nProbe)
+      topK(live, cells, q.localDist(t, cells, batch = true), k).map(hits =>
+        hits.zipWithIndex.map { case ((d, id), r) => Array(qid, r + 1L, id, d) })
+    }
+    Option.when(served.forall(_.isDefined))(local(s, StructType(Seq(probes.schema("qid"),
+      StructField("rnk", LongType, nullable = false)) ++ servedSchema(q).fields),
+      served.toSeq.flatMap(_.get)))
+  }
+
+  /** The k lowest (distance, vec_id) pairs of the rows in `cells`, ties
+    * to the lower vec_id, or None when a row's code has no LUT entry.
+    */
+  private def topK(live: Live, cells: Seq[Long],
+      dist: Map[Long, (Array[Long], Int) => Long], k: Int): Option[Seq[(Long, Long)]] =
+    try Some(cells.distinct.flatMap { c =>
+      val f = dist(c)
+      val (lo, hi) = live.span(c)
+      (lo until hi).map(r => (f(live.data, r * live.width + 2), live.data(r * live.width)))
+    }.sorted.take(k))
+    catch { case _: NoSuchElementException => None }
+
+  /** (vec_id, [[Quantizers.distName]]) as the Spark serves type it. */
+  private def servedSchema(q: Quantizers): StructType = StructType(Seq(
+    StructField("vec_id", LongType), StructField(q.distName, LongType)))
+
+  /** BIGINT rows as a LocalRelation of `schema`, in the given order. */
+  private def local(s: SparkSession, schema: StructType, rows: Seq[Array[Long]]): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(
+      rows.map(r => Row.fromSeq(r.toSeq)): _*), schema)
 
   /** Quantizer-staleness monitor: live cell occupancy. A healthy index
     * keeps cells balanced near the training distribution; a drifting

@@ -57,13 +57,43 @@ private[graft] object StreamState {
     * reader behind `_committed`, `_compacted` and IndexStream's
     * `_current` generation markers.
     */
-  private[graft] def markerIds(s: SparkSession, dir: String): Seq[Long] = {
+  private[graft] def markerIds(s: SparkSession, dir: String): Seq[Long] =
+    markerStamps(s, dir).map(_._1)
+
+  /** (id, modification time) of each marker under a marker directory,
+    * ascending by id — the one listing behind [[markerIds]] and
+    * [[stamp]].
+    */
+  private def markerStamps(s: SparkSession, dir: String): Seq[(Long, Long)] = {
     val (fs, path) = hadoopFs(s, dir)
     if (!fs.exists(path)) Seq.empty
     else fs.listStatus(path).toSeq
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
+      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption
+        .map(_ -> st.getModificationTime))
       .sorted
   }
+
+  /** A state dir's committed and compacted markers, each with its
+    * modification time: what a reader's view of the committed state
+    * rests on. Every commit, replay, compaction, or dir deleted and
+    * rebuilt at the same path with the same batch ids (its markers are
+    * new files) changes it.
+    */
+  private[graft] final case class Stamp(committed: Seq[(Long, Long)],
+      compacted: Seq[(Long, Long)]) {
+
+    /** Whether `next` differs from this stamp only by the markers `own`
+      * (committed ids) and `ownBase` (compacted ids) that the caller
+      * wrote itself, and by markers a compaction removed.
+      */
+    def leadsTo(next: Stamp, own: Set[Long], ownBase: Set[Long]): Boolean =
+      next.committed.forall(m => own(m._1) || committed.contains(m)) &&
+        next.compacted.forall(m => ownBase(m._1) || compacted.contains(m))
+  }
+
+  private[graft] def stamp(s: SparkSession, stateDir: String): Stamp =
+    Stamp(markerStamps(s, s"$stateDir/_committed"),
+      markerStamps(s, s"$stateDir/_compacted"))
 
   /** Write marker `id` under a marker directory — the one marker writer. */
   private[graft] def writeMarker(s: SparkSession, dir: String, id: Long): Unit = {

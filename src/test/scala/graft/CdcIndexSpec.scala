@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** CDC maintenance of the vector index: deletes tombstone, re-inserts
   * resurrect with their new codes, delete+insert replaces in one batch,
@@ -69,9 +70,38 @@ class CdcIndexSpec extends AnyFunSuite {
     * not a semantic.
     */
   private def compactStateCdc(stateDir: String, m: Int): Option[Long] =
-    StreamState.compact(spark, stateDir, Seq(
-      StreamState.Table("codes", IndexStream.codesSchema(m), partitionBy = Seq("cell")),
-      StreamState.Table("tombs", IndexStream.tombSchema)))
+    StreamState.compact(spark, stateDir, Seq(codesOf(m), TombsTable))
+
+  /** The CDC tables as a writer outside IndexStream declares them. */
+  private def codesOf(m: Int) =
+    StreamState.Table("codes", IndexStream.codesSchema(m), partitionBy = Seq("cell"))
+  private val TombsTable = StreamState.Table("tombs", IndexStream.tombSchema)
+
+  /** Batch `b` of m = 4 state committed OUTSIDE IndexStream (so outside
+    * its driver-held generation): `ins` projected through `q`, `dels`
+    * tombstoned.
+    */
+  private def commitOutside(q: IndexStream.Quantizers, dir: String, b: Long,
+      ins: Seq[(Long, Seq[Float])], dels: Seq[Long] = Nil): Unit =
+    StreamState.commit(spark, dir, b, 0)(
+      codesOf(4) -> q.project(ins.toDF("vec_id", "embedding")).withColumn("src_batch", lit(b)),
+      TombsTable -> dels.map((_, b)).toDF("vec_id", "del_batch"))
+
+  /** (vec_id, distance) rows of a single-probe serve. */
+  private def pairsOf(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  /** The driver-held serve and the Spark serve over the live layout. */
+  private def heldAndSpark(q: IndexStream.Quantizers, dir: String,
+      probe: Seq[Double]): (Seq[(Long, Long)], Seq[(Long, Long)]) =
+    (pairsOf(IndexStream.searchCommittedCdc(spark, dir, q, probe, 2, 10)),
+      pairsOf(q.serve(IndexStream.liveLayout(spark, dir, q), probe, 2, 10)))
+
+  private def reloadsOf(body: => Any): Long = {
+    val r0 = IndexStream.reloads.get
+    body
+    IndexStream.reloads.get - r0
+  }
 
   /** The active generation of an index root and its persisted
     * quantizers — what a restarted server loads before it searches.
@@ -376,7 +406,7 @@ class CdcIndexSpec extends AnyFunSuite {
       "lifecycle live set diverged from the delete/resurrect spec")
   }
 
-  test("cell-partitioned maintained state: searchCommittedCdc answers " +
+  test("cell-partitioned maintained state: the past-bound serve answers " +
     "the probe by DIRECTORY pruning over the cell= layout") {
     val q = quantizers
     val dir = queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Pq)
@@ -386,8 +416,8 @@ class CdcIndexSpec extends AnyFunSuite {
       "committed codes batches must be partitionBy(cell) directories")
     val qv = intVecOf(fullRows.head._2)
     val probed = KMeansOp.nearestCells(q.coarse, qv, 2).toSet
-    val df = IndexStream.searchCommittedCdc(spark, dir, q,
-      embOf(fullRows.head._2), 2, 10)
+    // the serve a generation past the driver's row bound runs
+    val df = q.serve(IndexStream.liveLayout(spark, dir, q), embOf(fullRows.head._2), 2, 10)
     val plan = df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.executedPlan
@@ -409,9 +439,9 @@ class CdcIndexSpec extends AnyFunSuite {
     assert(served.forall(liveId))
   }
 
-  test("cell-partitioned maintained state: searchCommittedBatchCdc prunes " +
-    "every codes-batch LISTING to (a subset of) the fleet's probed-cell " +
-    "union, and serves live rows only") {
+  test("cell-partitioned maintained state: the past-bound batch serve " +
+    "prunes every codes-batch LISTING to (a subset of) the fleet's " +
+    "probed-cell union, and serves live rows only") {
     val q = quantizers
     val dir = queries.SemanticQ.cdcLifecycleDir(spark, d, Encoding.Pq)
     val vecs = fullRows.map { case (id, e) => id -> intVecOf(e) }.toMap
@@ -419,7 +449,7 @@ class CdcIndexSpec extends AnyFunSuite {
     val expected = qids
       .flatMap(id => KMeansOp.nearestCells(q.coarse, vecs(id), 2)).toSet
     val probesDf = qids.map(id => (id, vecs(id))).toDF("qid", "v")
-    val df = IndexStream.searchCommittedBatchCdc(spark, dir, q, probesDf, 2, 3)
+    val df = q.serve(IndexStream.liveLayout(spark, dir, q), probesDf, 2, 3)
     val plan = df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.executedPlan
@@ -442,6 +472,123 @@ class CdcIndexSpec extends AnyFunSuite {
     val served = df.collect().map(_.getLong(2)).toSeq
     assert(served.nonEmpty && served.forall(liveId),
       "batch CDC serving surfaced a deleted (non-resurrected) id")
+  }
+
+  // ---- The driver-held live generation: a cache of committed state --
+
+  test("driver-held generation: a commit made outside it is served after " +
+    "exactly one reload") {
+    val q = quantizers
+    val rows = fullRows
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_outside").toString
+    IndexStream.processBatchCdc(
+      cdcDf(rows.filter(_._1 < 300L).map(r => (r._1, r._2, "insert"))), 0L, q, dir)
+    val probe = embOf(rows.head._2)
+    val (before, _) = heldAndSpark(q, dir, probe)
+    assert(before.map(_._1).contains(0L))
+    commitOutside(q, dir, 1L, rows.filter(_._1 >= 300L), dels = Seq(0L))
+    var first, second = Seq.empty[(Long, Long)]
+    assert(reloadsOf {
+      first = heldAndSpark(q, dir, probe)._1
+      second = heldAndSpark(q, dir, probe)._1
+    } == 1)
+    assert(first == second && first == heldAndSpark(q, dir, probe)._2)
+    assert(!first.map(_._1).contains(0L), "the outside tombstone was not served")
+    assert(first.exists(_._1 >= 300L), "the outside inserts were not served")
+  }
+
+  test("driver-held generation: a dir deleted and rebuilt at the same path " +
+    "with the same batch ids serves its new rows") {
+    val q = quantizers
+    val rows = fullRows
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_rebuilt").toString
+    IndexStream.processBatchCdc(
+      cdcDf(rows.filter(_._1 < 200L).map(r => (r._1, r._2, "insert"))), 0L, q, dir)
+    IndexStream.processBatchCdc(
+      cdcDf(rows.filter(r => r._1 >= 200L && r._1 < 300L).map(r => (r._1, r._2, "insert"))),
+      1L, q, dir)
+    val probe = embOf(rows.head._2)
+    val (before, _) = heldAndSpark(q, dir, probe)
+    assert(before.map(_._1).contains(0L))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    commitOutside(q, dir, 0L, rows.filter(r => r._1 >= 200L && r._1 < 350L))
+    commitOutside(q, dir, 1L, rows.filter(_._1 >= 350L))
+    val (after, spark_) = heldAndSpark(q, dir, probe)
+    assert(after == spark_)
+    assert(after.nonEmpty && after.forall(_._1 >= 200L), s"stale rows served: $after")
+  }
+
+  test("driver-held generation: a replayed newest batch rewrites " +
+    "byte-identical parquet") {
+    val q = quantizers
+    val rows = fullRows
+    val byId = rows.toMap
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_replay").toString
+    IndexStream.processBatchCdc(
+      cdcDf(rows.filter(_._1 < 300L).map(r => (r._1, r._2, "insert"))), 0L, q, dir)
+    // inserts, deletes, a blocked re-ship, a delete+insert replace and
+    // an id shipped twice
+    val batch1 = cdcDf(rows.filter(_._1 >= 300L).map(r => (r._1, r._2, "insert")) ++
+      Seq((0L, Seq.empty[Float], "delete"), (1L, Seq.empty[Float], "delete"),
+        (1L, byId(451L), "insert"), (2L, byId(2L), "insert"),
+        (460L, byId(461L), "insert")))
+    IndexStream.processBatchCdc(batch1, 1L, q, dir)
+    /** (dir relative to the state dir, md5 of the bytes) of every file
+      * batch 1 wrote; file names carry a per-write id, so they are left
+      * out. */
+    def written: Seq[(String, String)] = Seq("codes", "tombs").flatMap { t =>
+      val root = java.nio.file.Paths.get(dir)
+      val st = java.nio.file.Files.walk(root.resolve(s"$t/batch_id=1"))
+      try st.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map { f =>
+        root.relativize(f.getParent).toString ->
+          org.apache.commons.codec.digest.DigestUtils.md5Hex(java.nio.file.Files.readAllBytes(f))
+      }.toList finally st.close()
+    }.sorted
+    val first = written
+    val (served, _) = heldAndSpark(q, dir, embOf(byId(1L)))
+    assert(first.exists(_._1.contains("cell=")))
+    // the replay reloads the generation strictly before its own batch
+    assert(reloadsOf(IndexStream.processBatchCdc(batch1, 1L, q, dir)) == 1)
+    assert(written == first, "the replay rewrote different parquet")
+    val (again, spark_) = heldAndSpark(q, dir, embOf(byId(1L)))
+    assert(again == served && again == spark_)
+  }
+
+  test("driver-held generation: commit+compact+search cycles with no " +
+    "outside writer start no search job and no reload") {
+    val q = quantizers
+    val rows = fullRows
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_cycles").toString
+    IndexStream.processBatchCdc(
+      cdcDf(rows.filter(_._1 < 300L).map(r => (r._1, r._2, "insert"))), 0L, q, dir)
+    // a LocalRelation probe frame: collecting it starts no job
+    val probes = rows.take(4).map { case (id, e) => (id, intVecOf(e)) }.toDF("qid", "v")
+    val probe = embOf(rows(5)._2)
+    var searchJobs = 0
+    val reloaded = reloadsOf {
+      for (b <- 1L to 4L) {
+        val ins = rows.filter(r => r._1 >= 300L + 40L * (b - 1) && r._1 < 300L + 40L * b)
+        // odd batches compact through the commit's own valve, even ones
+        // through the explicit resolve
+        IndexStream.processBatchCdc(cdcDf(ins.map(r => (r._1, r._2, "insert")) :+
+            ((b, Seq.empty[Float], "delete"))), b, q, dir,
+          autoCompactEvery = if (b % 2 == 1) 1 else 0)
+        if (b % 2 == 0) assert(IndexStream.compactStateCdcResolve(spark, dir, q.m).nonEmpty)
+        var batch = Array.empty[org.apache.spark.sql.Row]
+        var single = Seq.empty[(Long, Long)]
+        searchJobs += TestSpark.jobs {
+          batch = IndexStream.searchCommittedBatchCdc(spark, dir, q, probes, 2, 10).collect()
+          single = pairsOf(IndexStream.searchCommittedCdc(spark, dir, q, probe, 2, 10))
+        }
+        assert(batch.toSeq ==
+          q.serve(IndexStream.liveLayout(spark, dir, q), probes, 2, 10).collect().toSeq)
+        assert(single == pairsOf(q.serve(IndexStream.liveLayout(spark, dir, q), probe, 2, 10)))
+        assert(!batch.map(_.getLong(2)).contains(b), s"deleted id $b served")
+      }
+    }
+    assert(StreamState.compactedIds(spark, dir).nonEmpty)
+    assert(searchJobs == 0, s"$searchJobs search jobs")
+    assert(reloaded == 0, s"$reloaded reloads")
   }
 
   test("maintainCdc: the streaming wrapper drives the same per-batch " +

@@ -43,9 +43,10 @@ class CheckpointHygieneSpec extends AnyFunSuite {
         org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
   }
 
-  /** The most rows each of the `n` driver collects `body` ran before
-    * its bound check threw could return, from the collected plan
-    * (-1: unbounded).
+  /** The most rows one task of each of the `n` driver collects `body`
+    * ran before its bound check threw could ship, from the collected
+    * plan (-1: unbounded); the driver keeps at most bound + 1 of them
+    * (IterateSpec).
     */
   private def rowBounds(n: Int)(body: => Any): Seq[Long] = {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -63,7 +64,8 @@ class CheckpointHygieneSpec extends AnyFunSuite {
       val deadline = System.nanoTime() + 10000000000L
       while (collected.size < n && System.nanoTime() < deadline) Thread.sleep(50)
       Thread.sleep(200)
-      collected.toArray(Array.empty[LogicalPlan]).toSeq.map(_.maxRows.getOrElse(-1L))
+      collected.toArray(Array.empty[LogicalPlan]).toSeq
+        .map(p => p.maxRowsPerPartition.orElse(p.maxRows).getOrElse(-1L))
     } finally spark.listenerManager.unregister(listener)
   }
 
@@ -79,8 +81,9 @@ class CheckpointHygieneSpec extends AnyFunSuite {
       (($"id" + 1) % 2).as("dst"), lit(1L).as("w"))
     assert(rowBounds(1)(operators.PageRank.runBoundedLocal(
       rows.select($"x".as("node")), edges, 1, maxNodes = 3)) == Seq(4L))
+    // two vertices fit their bound, spread one per task
     assert(rowBounds(2)(operators.PageRank.runBoundedLocal(
-      spark.range(0, 2).toDF("node"), edges, 1, maxNodes = 2)) == Seq(2L, 5L))
+      spark.range(0, 2).toDF("node"), edges, 1, maxNodes = 2)) == Seq(1L, 5L))
     val bound = operators.Rerank.RowBound
     val cand = spark.range(0, bound + 10L, 1, 4).select(lit(0L).as("qid"),
       $"id", ($"id" / 1000.0).as("rel"))

@@ -165,7 +165,8 @@ class IndexStreamSpec extends AnyFunSuite {
       (20000L + i,
         base.map(x => math.floor(x.toDouble * 1e6).toLong + ((i % 13) - 6)))
     }.toDF("qid", "v")
-    val df = IndexStream.searchCommittedBatchCdc(spark, stateDir, q, probes,
+    // the serve a generation past the driver's row bound runs
+    val df = q.serve(IndexStream.liveLayout(spark, stateDir, q), probes,
       nProbe = 2, k = 3)
     val plan = df.queryExecution.executedPlan.toString
     assert("BroadcastHashJoin".r.findAllIn(plan).size >= 2,

@@ -88,6 +88,24 @@ class IterateSpec extends AnyFunSuite {
     finally s.close()
   }
 
+  test("the bounded collect scans a 4-partition frame in one job, and an " +
+    "overflow brings back exactly bound + 1 rows") {
+    import graft.operators.Iterate
+    val df = spark.sparkContext.parallelize(0L until 40L, 4).toDF("id")
+    def ids(rows: Array[org.apache.spark.sql.Row]) = rows.map(_.getLong(0)).toSeq
+    var within: Option[Array[org.apache.spark.sql.Row]] = None
+    assert(TestSpark.jobs { within = Iterate.collectWithin(df, 40) } == 1)
+    assert(within.map(ids).contains(0L until 40L))
+    var head = Array.empty[org.apache.spark.sql.Row]
+    assert(TestSpark.jobs { head = Iterate.collectUpTo(df, 26) } == 1)
+    assert(head.length == 26 && ids(head).distinct.length == 26 &&
+      ids(head).forall(id => id >= 0L && id < 40L))
+    assert(TestSpark.jobs { within = Iterate.collectWithin(df, 25) } == 1)
+    assert(within.isEmpty)
+    // the limit scan it replaces starts a job per round of partitions
+    assert(TestSpark.jobs(df.limit(41).collect()) > 1)
+  }
+
   test("batch MMR on the reliable path picks the same sequence") {
     val cand = Seq((0L, 1L, 0.9), (0L, 2L, 0.85), (0L, 3L, 0.8), (0L, 4L, 0.5))
       .toDF("qid", "id", "rel")
