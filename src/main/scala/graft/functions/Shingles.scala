@@ -34,7 +34,9 @@ case class Shingles(child: Expression, n: Int)
     extends UnaryExpression with CodegenFallback {
   require(n >= 1, "shingle width must be >= 1")
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  // the HOF form's type (transform over concat_ws), so a union with it,
+  // a cached plan and a parquet round-trip all see one type
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def prettyName: String = "shingles"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

@@ -18,14 +18,18 @@ import org.apache.spark.sql.types._
   * (dedup/KNN joins) rather than once per row.
   *
   * Semantics (kept bit-identical to the HOF forms and the DuckDB oracle,
-  * SURVEY.md §2.4 rule 3): elements are widened to double before
-  * arithmetic; accumulation is a strict left-to-right fold starting at 0.0.
-  * Both inputs must be arrays of float or double; the left array's length
-  * drives the loop (callers guarantee equal dims — embedding columns are
-  * fixed-width).
+  * SURVEY.md §2.4 rule 3, VectorOpsSpec pins them): elements are widened
+  * to double before arithmetic; accumulation is a strict left-to-right
+  * fold of one `term` per index starting at 0.0. Both inputs must be
+  * arrays of float or double. A NULL array, arrays of unequal length
+  * (zip_with null-pads the shorter) and a NULL element (the fold sticks
+  * at NULL) all give NULL. The per-element null check is generated only
+  * for an input whose type admits NULL elements, so fixed-width embedding
+  * columns pay one length compare per row.
   */
 abstract class VectorFoldExpression extends BinaryExpression {
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType): Boolean = dt match {
@@ -38,20 +42,68 @@ abstract class VectorFoldExpression extends BinaryExpression {
         s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
   }
 
-  @transient protected lazy val leftElem: DataType =
-    left.dataType.asInstanceOf[ArrayType].elementType
-  @transient protected lazy val rightElem: DataType =
-    right.dataType.asInstanceOf[ArrayType].elementType
+  @transient private lazy val leftType = left.dataType.asInstanceOf[ArrayType]
+  @transient private lazy val rightType = right.dataType.asInstanceOf[ArrayType]
 
-  protected def get(a: ArrayData, i: Int, t: DataType): Double = t match {
+  /** The fold's summand at one index, over the widened elements. */
+  protected def term(x: Double, y: Double): Double
+
+  /** [[term]] as a Java expression over two double locals. */
+  protected def genTerm(x: String, y: String): String
+
+  private def get(a: ArrayData, i: Int, t: DataType): Double = t match {
     case DoubleType => a.getDouble(i)
     case _ => a.getFloat(i).toDouble
   }
 
-  protected def genGet(v: String, i: String, t: DataType): String = t match {
+  private def genGet(v: String, i: String, t: DataType): String = t match {
     case DoubleType => s"$v.getDouble($i)"
     case _ => s"((double) $v.getFloat($i))"
   }
+
+  override def nullSafeEval(l: Any, r: Any): Any = {
+    val a = l.asInstanceOf[ArrayData]
+    val b = r.asInstanceOf[ArrayData]
+    val n = a.numElements()
+    if (b.numElements() != n) return null
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      acc += term(get(a, i, leftType.elementType), get(b, i, rightType.elementType))
+      i += 1
+    }
+    acc
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val i = ctx.freshName("i")
+      val n = ctx.freshName("n")
+      val acc = ctx.freshName("acc")
+      val x = ctx.freshName("x")
+      val y = ctx.freshName("y")
+      val nulls = Seq(a -> leftType, b -> rightType)
+        .collect { case (v, t) if t.containsNull => s"$v.isNullAt($i)" }
+      val nullCheck =
+        if (nulls.isEmpty) ""
+        else s"if (${nulls.mkString(" || ")}) { ${ev.isNull} = true; break; }"
+      s"""
+         |int $n = $a.numElements();
+         |if ($b.numElements() != $n) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  double $acc = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    $nullCheck
+         |    double $x = ${genGet(a, i, leftType.elementType)};
+         |    double $y = ${genGet(b, i, rightType.elementType)};
+         |    $acc += ${genTerm(x, y)};
+         |  }
+         |  ${ev.value} = $acc;
+         |}
+       """.stripMargin
+    })
 }
 
 /** Squared L2 distance — the reference's FAISS IndexFlatL2 metric
@@ -61,34 +113,10 @@ case class SquaredL2Distance(left: Expression, right: Expression)
     extends VectorFoldExpression {
   override def prettyName: String = "squared_l2"
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    var acc = 0.0
-    var i = 0
-    val n = a.numElements()
-    while (i < n) {
-      val d = get(a, i, leftElem) - get(b, i, rightElem)
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
+  override protected def term(x: Double, y: Double): Double = (x - y) * (x - y)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  double $d = ${genGet(a, i, leftElem)} - ${genGet(b, i, rightElem)};
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  override protected def genTerm(x: String, y: String): String =
+    s"($x - $y) * ($x - $y)"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -100,31 +128,9 @@ case class DotProduct(left: Expression, right: Expression)
     extends VectorFoldExpression {
   override def prettyName: String = "dot_product"
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    var acc = 0.0
-    var i = 0
-    val n = a.numElements()
-    while (i < n) {
-      acc += get(a, i, leftElem) * get(b, i, rightElem)
-      i += 1
-    }
-    acc
-  }
+  override protected def term(x: Double, y: Double): Double = x * y
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  $acc += ${genGet(a, i, leftElem)} * ${genGet(b, i, rightElem)};
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  override protected def genTerm(x: String, y: String): String = s"$x * $y"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -50,9 +50,12 @@ import scala.jdk.CollectionConverters._
   * committed state (the way the reference keeps its flat FAISS index in
   * process memory, vectorDB.py:12,38): a commit collects the batch's
   * projection once, resolves the liveness check against the held rows
-  * and folds its delta in, and a search scores the held rows with the
-  * serves' own integer arithmetic and returns a LocalRelation — no
-  * Spark job while the committed markers are unchanged. Past the bound,
+  * and folds its delta in, a compaction right after it writes the held
+  * rows below the newest batch as the resolved base (no state re-read,
+  * no anti-join: its only jobs are the two base writes), and a search
+  * scores the held rows with the serves' own integer arithmetic and
+  * returns a LocalRelation — no Spark job while the committed markers
+  * are unchanged. Past the bound,
   * per-batch cost tracks the batch — the projection is map-side, the
   * liveness check is one equi-join probing committed state — and every
   * code write (per-batch, rebuild generation, compacted base) lays the
@@ -86,18 +89,25 @@ object IndexStream {
   private[graft] val tombSchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("del_batch", LongType)))
 
-  /** The tombstone table. Its merge drops every folded tombstone: each
-    * is SPENT once the fold resolves the codes ([[compactStateCdcResolve]]).
+  /** The tombstone table. Its merge drops every folded tombstone
+    * without reading one: each is SPENT once the fold resolves the codes
+    * ([[compactStateCdcResolve]]).
     */
-  private val Tombs = StreamState.Table("tombs", tombSchema, (t, _) => t.limit(0))
+  private val Tombs = StreamState.Table("tombs", tombSchema,
+    (_, _) => local(SparkSession.active, tombSchema, Nil))
 
   /** The `cell`-partitioned code table of an m-code state. Its merge
     * RESOLVES: the folded codes keep only the rows no tombstone committed
-    * at or below the fold id kills.
+    * at or below the fold id kills — the generation `held` returns for
+    * the fold id when the driver holds it ([[heldBase]]), otherwise the
+    * anti-join over the committed tables.
     */
-  private def codesTable(s: SparkSession, stateDir: String, m: Int) =
+  private def codesTable(s: SparkSession, stateDir: String, m: Int,
+      held: Long => Option[Live] = _ => None) =
     StreamState.Table("codes", codesSchema(m), (codes, fold) =>
-      live(codes, StreamState.read(s, stateDir, Tombs, upTo = fold + 1)), Seq("cell"))
+      held(fold).map(l => local(s, codesSchema(m), l.rows.toSeq))
+        .getOrElse(live(codes, StreamState.read(s, stateDir, Tombs, upTo = fold + 1))),
+      Seq("cell"))
 
   /** The liveness anti-join: a code row is dead iff a STRICTLY LATER
     * tombstone names it — a same-batch tombstone does not kill the same
@@ -231,10 +241,13 @@ object IndexStream {
         val kept = ins.filterNot(r => b.holds(r(0)) &&
             java.util.Arrays.binarySearch(dels, r(0)) < 0)
           .map(_ :+ batchId)
+        // the valve folds everything below this batch: exactly `b`
+        val codes = codesTable(s, stateDir, q.m,
+          heldBase(s, stateDir, before, Set(batchId), batchId, b))
         val folded = StreamState.commit(s, stateDir, batchId, autoCompactEvery)(
-          codesTable(s, stateDir, q.m) -> local(s, codesSchema(q.m), kept),
+          codes -> local(s, codesSchema(q.m), kept),
           Tombs -> local(s, tombSchema, dels.toSeq.map(id => Array(id, batchId))))
-        (Some(Some(b.fold(dels, kept))), folded)
+        (Some(Some(b.fold(batchId, dels, kept))), folded)
       case _ =>
         val dels = delIds.distinct()
         val codeCols = projected.columns.filter(_ != "vec_id").toSeq
@@ -287,7 +300,13 @@ object IndexStream {
     * .compact]] (base written first, marker last, torn fold invisible).
     * The tombstone horizon is the FOLD ID the compaction itself hands
     * to the codes merge — codes and tombs can never resolve against
-    * different horizons, even if another batch commits mid-compaction. `m` must match the persisted quantizer's
+    * different horizons, even if another batch commits mid-compaction.
+    * Right after this process's own commit under [[LiveBound]], the base
+    * is the held generation below the newest batch, written without
+    * reading state ([[heldBase]], the same fold source as the commit's
+    * valve); past the bound, after an outside writer moved the stamp,
+    * or on the replay of an older batch, the anti-join resolves it
+    * through Spark. `m` must match the persisted quantizer's
     * code-column count (`Quantizers.m`): a smaller m would silently
     * drop code columns from the base, which is permanent index
     * corruption.
@@ -295,11 +314,31 @@ object IndexStream {
   def compactStateCdcResolve(s: SparkSession, stateDir: String,
       m: Int): Option[Long] = {
     val before = StreamState.stamp(s, stateDir)
-    val folded = StreamState.compact(s, stateDir, Seq(codesTable(s, stateDir, m), Tombs))
+    val gen = cached(stateDir, before, m)
+    // right after this process's own commit, the held generation below
+    // its newest batch is the base
+    val codes = codesTable(s, stateDir, m, fold => gen.flatten.flatMap(g =>
+      g.newest.flatMap(heldBase(s, stateDir, before, Set.empty, _, g.below)(fold))))
+    val folded = StreamState.compact(s, stateDir, Seq(codes, Tombs))
     // the resolve leaves the live set as it was: a held copy stays valid
-    cached(stateDir, before, m).foreach(rekey(s, stateDir, m, before, Set.empty, folded.toSet, _))
+    gen.foreach(rekey(s, stateDir, m, before, Set.empty, folded.toSet, _))
     folded
   }
+
+  /** A compaction's resolved code base from the driver: `below`, the
+    * live rows strictly below batch `newest` as of `stamp`. It is the
+    * base at fold id `fold` when `fold` is the newest id below `newest`
+    * in `stamp` (so every committed batch below `newest` folds, and no
+    * other) and the dir's stamp still leads from `stamp` by this
+    * process's own markers `own`; otherwise None, and the merge resolves
+    * through Spark (past the bound, after an outside writer moved the
+    * stamp, on the replay of an older batch).
+    */
+  private def heldBase(s: SparkSession, stateDir: String, stamp: StreamState.Stamp,
+      own: Set[Long], newest: Long, below: => Live)(fold: Long): Option[Live] =
+    Option.when((stamp.committed ++ stamp.compacted).map(_._1).filter(_ < newest)
+        .maxOption.contains(fold) &&
+      stamp.leadsTo(StreamState.stamp(s, stateDir), own, Set.empty))(below)
 
   // ---- The live generation on the driver ----------------------------
   //
@@ -324,12 +363,17 @@ object IndexStream {
   /** A generation's live rows grouped by cell: row r is
     * `data(r·width …)` in the code-table column order (vec_id, cell,
     * code_0 … code_{m−1}, src_batch), rows sorted by (cell, vec_id);
-    * the rows of `cells(j)` are [from(j), from(j + 1)).
+    * the rows of `cells(j)` are [from(j), from(j + 1)). A generation
+    * this process folded remembers its newest batch and the earlier rows
+    * that batch killed, `killed`.
     */
   private final class Live(val m: Int, val data: Array[Long],
-      cells: Array[Long], from: Array[Int]) {
+      cells: Array[Long], from: Array[Int],
+      killed: Option[(Long, Seq[Array[Long]])] = None) {
     def width: Int = m + 3
     def size: Int = data.length / width
+    def rows: Iterator[Array[Long]] =
+      (0 until size).iterator.map(r => data.slice(r * width, (r + 1) * width))
     private lazy val ids = {
       val a = Array.tabulate(size)(r => data(r * width))
       java.util.Arrays.sort(a)
@@ -343,13 +387,25 @@ object IndexStream {
       if (j < 0) (0, 0) else (from(j), from(j + 1))
     }
 
-    /** This generation after a batch that deleted `dels` (sorted) and
-      * inserted `ins`: every earlier row of a deleted id is killed by
-      * its strictly later tombstone; the inserts carry the batch's id.
+    /** This generation after batch `id` deleted `dels` (sorted) and
+      * inserted `ins`, which carry `id`: every earlier row of a deleted id
+      * is killed by its strictly later tombstone.
       */
-    def fold(dels: Array[Long], ins: Seq[Array[Long]]): Live =
-      Live(m, (0 until size).iterator.map(r => data.slice(r * width, (r + 1) * width))
-        .filter(r => java.util.Arrays.binarySearch(dels, r(0)) < 0) ++ ins)
+    def fold(id: Long, dels: Array[Long], ins: Seq[Array[Long]]): Live = {
+      val (dead, kept) = rows.toSeq.partition(r => java.util.Arrays.binarySearch(dels, r(0)) >= 0)
+      Live(m, kept.iterator ++ ins, Some(id -> dead))
+    }
+
+    /** The newest batch of a generation this process folded. */
+    def newest: Option[Long] = killed.map(_._1)
+
+    /** The generation strictly below [[newest]]: the rows that batch did
+      * not insert, plus the rows it killed.
+      */
+    def below: Live = {
+      val (id, dead) = killed.get
+      Live(m, rows.filter(_(width - 1) != id) ++ dead)
+    }
   }
 
   /** Lexicographic order of BIGINT rows over the columns `cols`. */
@@ -361,11 +417,12 @@ object IndexStream {
   }
 
   private object Live {
-    def apply(m: Int, rows: Iterator[Array[Long]]): Live = {
+    def apply(m: Int, rows: Iterator[Array[Long]],
+        killed: Option[(Long, Seq[Array[Long]])] = None): Live = {
       val sorted = rows.toArray.sorted(lexOrder(1 +: 0 +: (2 until m + 3)))
       val starts = sorted.indices.filter(r => r == 0 || sorted(r)(1) != sorted(r - 1)(1))
       new Live(m, sorted.flatten, starts.map(sorted(_)(1)).toArray,
-        (starts :+ sorted.length).toArray)
+        (starts :+ sorted.length).toArray, killed)
     }
   }
 

@@ -37,15 +37,17 @@ private[graft] object StreamState {
 
   /** A state table, declared once by its consumer: `name` is its
     * directory under the state dir and `schema` its read schema.
-    * `merge` folds the table at compaction and receives the FOLD ID
-    * (the largest folded batch id), so a cross-table merge reads its
-    * sibling at exactly the fold horizon (identity for append-only key
-    * tables). `partitionBy` lays each batch and base directory out by
-    * partition columns (the CDC index's `cell=` dirs), so compaction
+    * `merge` folds the table at compaction: it receives the committed
+    * rows up to the fold (read only when the merge uses them, so a
+    * merge that already holds its folded rows starts no scan) and the
+    * FOLD ID (the largest folded batch id), so a cross-table merge reads
+    * its sibling at exactly the fold horizon (identity for append-only
+    * key tables). `partitionBy` lays each batch and base directory out
+    * by partition columns (the CDC index's `cell=` dirs), so compaction
     * never costs a reader its pruning.
     */
   final case class Table(name: String, schema: StructType,
-      merge: (DataFrame, Long) => DataFrame = (df, _) => df,
+      merge: (=> DataFrame, Long) => DataFrame = (df, _) => df,
       partitionBy: Seq[String] = Nil)
 
   private def hadoopFs(s: SparkSession, dir: String) = {

@@ -103,6 +103,51 @@ class CdcIndexSpec extends AnyFunSuite {
     IndexStream.reloads.get - r0
   }
 
+  /** The jobs `body` starts (a SparkListener) and the physical plans of
+    * the queries and writes it runs (a QueryExecutionListener).
+    */
+  private def jobsAndPlans(body: => Any): (Int, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val n = TestSpark.jobs(body)
+      (n, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The file scans in `plans` that read the codes or tombstone state
+    * of `dir` (adaptive plans included).
+    */
+  private def stateScans(plans: Seq[org.apache.spark.sql.execution.SparkPlan],
+      dir: String): Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    plans.flatMap(p => Plans.collect(p) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+        if f.relation.location.rootPaths.exists(r =>
+          Seq("codes", "tombs").exists(t => r.toString.contains(s"$dir/$t/"))) => f
+    })
+  }
+
+  /** (dir relative to the state dir, md5 of the bytes) of every file
+    * batch `b` wrote; file names carry a per-write id, so they are left
+    * out.
+    */
+  private def batchFiles(dir: String, b: Long): Seq[(String, String)] =
+    Seq("codes", "tombs").flatMap { t =>
+      val root = java.nio.file.Paths.get(dir)
+      val st = java.nio.file.Files.walk(root.resolve(s"$t/batch_id=$b"))
+      try st.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map { f =>
+        root.relativize(f.getParent).toString ->
+          org.apache.commons.codec.digest.DigestUtils.md5Hex(java.nio.file.Files.readAllBytes(f))
+      }.toList finally st.close()
+    }.sorted
+
   /** The active generation of an index root and its persisted
     * quantizers — what a restarted server loads before it searches.
     */
@@ -533,17 +578,7 @@ class CdcIndexSpec extends AnyFunSuite {
         (1L, byId(451L), "insert"), (2L, byId(2L), "insert"),
         (460L, byId(461L), "insert")))
     IndexStream.processBatchCdc(batch1, 1L, q, dir)
-    /** (dir relative to the state dir, md5 of the bytes) of every file
-      * batch 1 wrote; file names carry a per-write id, so they are left
-      * out. */
-    def written: Seq[(String, String)] = Seq("codes", "tombs").flatMap { t =>
-      val root = java.nio.file.Paths.get(dir)
-      val st = java.nio.file.Files.walk(root.resolve(s"$t/batch_id=1"))
-      try st.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map { f =>
-        root.relativize(f.getParent).toString ->
-          org.apache.commons.codec.digest.DigestUtils.md5Hex(java.nio.file.Files.readAllBytes(f))
-      }.toList finally st.close()
-    }.sorted
+    def written = batchFiles(dir, 1L)
     val first = written
     val (served, _) = heldAndSpark(q, dir, embOf(byId(1L)))
     assert(first.exists(_._1.contains("cell=")))
@@ -554,6 +589,8 @@ class CdcIndexSpec extends AnyFunSuite {
     assert(again == served && again == spark_)
   }
 
+  // each compaction here also runs from the driver: its base writes are
+  // its only jobs, and it scans no state
   test("driver-held generation: commit+compact+search cycles with no " +
     "outside writer start no search job and no reload") {
     val q = quantizers
@@ -570,10 +607,21 @@ class CdcIndexSpec extends AnyFunSuite {
         val ins = rows.filter(r => r._1 >= 300L + 40L * (b - 1) && r._1 < 300L + 40L * b)
         // odd batches compact through the commit's own valve, even ones
         // through the explicit resolve
-        IndexStream.processBatchCdc(cdcDf(ins.map(r => (r._1, r._2, "insert")) :+
-            ((b, Seq.empty[Float], "delete"))), b, q, dir,
-          autoCompactEvery = if (b % 2 == 1) 1 else 0)
-        if (b % 2 == 0) assert(IndexStream.compactStateCdcResolve(spark, dir, q.m).nonEmpty)
+        val (commitJobs, commitPlans) = jobsAndPlans(
+          IndexStream.processBatchCdc(cdcDf(ins.map(r => (r._1, r._2, "insert")) :+
+              ((b, Seq.empty[Float], "delete"))), b, q, dir,
+            autoCompactEvery = if (b % 2 == 1) 1 else 0))
+        // the commit: one bounded collect of the delta and its two batch
+        // writes; the valve adds the codes and tombstone base writes
+        assert(commitJobs == (if (b % 2 == 1) 5 else 3), s"batch $b: $commitJobs jobs")
+        assert(stateScans(commitPlans, dir).isEmpty, s"batch $b scanned state")
+        if (b % 2 == 0) {
+          val (compactJobs, compactPlans) = jobsAndPlans(
+            assert(IndexStream.compactStateCdcResolve(spark, dir, q.m).nonEmpty))
+          assert(compactJobs == 2, s"batch $b: $compactJobs compaction jobs")
+          assert(stateScans(compactPlans, dir).isEmpty, s"batch $b's compaction scanned state")
+        }
+        assert(StreamState.compactedIds(spark, dir) == Seq(b - 1))
         var batch = Array.empty[org.apache.spark.sql.Row]
         var single = Seq.empty[(Long, Long)]
         searchJobs += TestSpark.jobs {
@@ -589,6 +637,100 @@ class CdcIndexSpec extends AnyFunSuite {
     assert(StreamState.compactedIds(spark, dir).nonEmpty)
     assert(searchJobs == 0, s"$searchJobs search jobs")
     assert(reloaded == 0, s"$reloaded reloads")
+  }
+
+  /** A seeded CDC sequence over `rows`' embeddings: batch 0 inserts
+    * 200 ids, and each later batch inserts fresh ids (one of them
+    * shipped twice), deletes live ids, re-inserts deleted ones, replaces
+    * a live id by a delete+insert pair and re-ships a live id, which the
+    * liveness check blocks.
+    */
+  private def cdcSequence(rows: Seq[(Long, Seq[Float])], seed: Long,
+      batches: Int): Seq[Seq[(Long, Seq[Float], String)]] = {
+    val rnd = new scala.util.Random(seed)
+    val embs = rows.map(_._2).toIndexedSeq
+    def ins(id: Long) = (id, embs(rnd.nextInt(embs.size)), "insert")
+    def del(id: Long) = (id, Seq.empty[Float], "delete")
+    def pick(ids: Set[Long], n: Int) = rnd.shuffle(ids.toSeq.sorted).take(n)
+    var live, dead = Set.empty[Long]
+    var next = 0L
+    def fresh(n: Int) = { val ids = next until next + n; next += n; ids }
+    (0 until batches).map { b =>
+      if (b == 0) { val ids = fresh(200); live = ids.toSet; ids.map(ins) }
+      else {
+        val added = fresh(20)
+        val dels = pick(live, 6)
+        val back = pick(dead, 3)
+        val replaced = pick(live -- dels, 1)
+        val blocked = pick(live -- dels -- replaced, 1)
+        live = live -- dels ++ added ++ back
+        dead = dead -- back ++ dels
+        added.map(ins) ++ Seq(ins(added.head)) ++ dels.map(del) ++ back.map(ins) ++
+          replaced.flatMap(id => Seq(del(id), ins(id))) ++ blocked.map(ins)
+      }
+    }
+  }
+
+  test("driver-held generation: compacting from the driver writes the base " +
+    "the Spark resolve writes, at cadences 1 and 3, through the valve and " +
+    "the explicit resolve") {
+    val q = quantizers
+    val rows = fullRows
+    val seq = cdcSequence(rows, seed = 71L, batches = 8)
+    val probes = rows.take(4).map { case (id, e) => (id, intVecOf(e)) }.toDF("qid", "v")
+    val probe = embOf(rows(7)._2)
+    /** The committed rows of a table, sorted. */
+    def state(dir: String, t: StreamState.Table): Seq[Seq[Long]] =
+      StreamState.read(spark, dir, t).collect().map(_.toSeq.map(_.asInstanceOf[Long])).toSeq
+        .sortBy(_.mkString(","))
+    def sameState(held: String, forced: String, at: String): Unit = {
+      assert(StreamState.compactedIds(spark, held) == StreamState.compactedIds(spark, forced), at)
+      assert(state(held, codesOf(4)) == state(forced, codesOf(4)), s"$at: codes")
+      assert(state(held, TombsTable) == state(forced, TombsTable), s"$at: tombs")
+      assert(liveRows(held) == liveRows(forced), s"$at: liveCodes")
+      assert(pairsOf(IndexStream.searchCommittedCdc(spark, held, q, probe, 2, 10)) ==
+        pairsOf(IndexStream.searchCommittedCdc(spark, forced, q, probe, 2, 10)), s"$at: serve")
+      assert(IndexStream.searchCommittedBatchCdc(spark, held, q, probes, 2, 10).collect().toSeq ==
+        IndexStream.searchCommittedBatchCdc(spark, forced, q, probes, 2, 10).collect().toSeq,
+        s"$at: batch serve")
+    }
+    for (every <- Seq(1, 3); valve <- Seq(true, false)) {
+      val run = s"cadence $every, ${if (valve) "valve" else "explicit resolve"}"
+      val held = java.nio.file.Files.createTempDirectory("graft_cdc_held").toString
+      val forced = java.nio.file.Files.createTempDirectory("graft_cdc_forced").toString
+      def due(dir: String) = StreamState.committedIds(spark, dir).size > every
+      var compactions = 0
+      seq.zipWithIndex.foreach { case (ops, i) =>
+        val b = i.toLong
+        val (_, heldPlans) = jobsAndPlans {
+          IndexStream.processBatchCdc(cdcDf(ops), b, q, held, if (valve) every else 0)
+          if (!valve && due(held)) IndexStream.compactStateCdcResolve(spark, held, q.m)
+        }
+        IndexStream.processBatchCdc(cdcDf(ops), b, q, forced)
+        if (due(forced)) {
+          // an outside commit of batch b's marker: the stamp moves, the
+          // rows stay, and the held generation no longer applies
+          val before = StreamState.stamp(spark, forced)
+          while (StreamState.stamp(spark, forced) == before) {
+            Thread.sleep(2)
+            StreamState.writeMarker(spark, s"$forced/_committed", b)
+          }
+          val (_, forcedPlans) = jobsAndPlans(IndexStream.compactStateCdcResolve(spark, forced, q.m))
+          assert(stateScans(forcedPlans, forced).nonEmpty, s"$run, batch $b: no Spark resolve")
+          assert(stateScans(heldPlans, held).isEmpty, s"$run, batch $b: scanned state")
+          compactions += 1
+          sameState(held, forced, s"$run, batch $b")
+        }
+      }
+      assert(compactions == (if (every == 1) 7 else 2), s"$run: $compactions compactions")
+      // a replay of the newest batch over a driver-written base rewrites
+      // the same batch parquet and changes no state
+      val last = seq.size - 1L
+      val first = batchFiles(held, last)
+      IndexStream.processBatchCdc(cdcDf(seq.last), last, q, held, if (valve) every else 0)
+      assert(batchFiles(held, last) == first, s"$run: the replay rewrote different parquet")
+      sameState(held, forced, s"$run, replay")
+    }
   }
 
   test("maintainCdc: the streaming wrapper drives the same per-batch " +

@@ -45,4 +45,19 @@ class ShinglesSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("compiled shingles has the HOF form's type: a union with it, a " +
+    "cached plan and a parquet round-trip all see one type") {
+    val df = Seq("the cat sat", null, "").toDF("text")
+    val compiled = df.select(graft.functions.Shingles(col("text"), 2).as("s"))
+    val hof = df.select(hofShingles(col("text"), 2).as("s"))
+    val t = hof.schema("s").dataType
+    assert(compiled.schema("s").dataType == t)
+    assert(compiled.union(hof).schema("s").dataType == t)
+    assert(compiled.cache().schema("s").dataType == t)
+    compiled.unpersist()
+    val path = java.nio.file.Files.createTempDirectory("graft_shingles").toString + "/s"
+    compiled.write.parquet(path)
+    assert(spark.read.parquet(path).schema("s").dataType == t)
+  }
 }

@@ -4,6 +4,7 @@ import graft.functions.VectorOps
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Distance/score semantics on the FIXTURES.md §2 tiny-vector fixture,
   * plus native-expression vs HOF cross-checks (they must be bit-identical).
@@ -52,6 +53,76 @@ class VectorOpsSpec extends AnyFunSuite {
       .where($"nat_l2" =!= $"hof_l2" || $"nat_dot" =!= $"hof_dot")
       .count()
     assert(mismatches == 0)
+  }
+
+  test("native folds equal the HOF forms on float and double elements, " +
+    "NaN/±∞, NULL elements and unequal lengths, with ANSI on and off") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    type Vec = Seq[java.lang.Double]
+    val rnd = new scala.util.Random(67)
+    val specials = Seq(Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, -0.0, 3.0e38, Double.MinPositiveValue)
+    def vec(n: Int, nulls: Boolean): Vec = Seq.fill(n)(rnd.nextInt(12) match {
+      case 0 if nulls => null
+      case 1 => java.lang.Double.valueOf(specials(rnd.nextInt(specials.size)))
+      case _ => java.lang.Double.valueOf((rnd.nextDouble() - 0.5) * 20)
+    })
+    def pairs(nulls: Boolean): Seq[(Vec, Vec)] = {
+      val edges: Seq[(Vec, Vec)] = Seq(
+        (null, Seq[java.lang.Double](1.0)),
+        (Nil, Nil),
+        (Seq[java.lang.Double](1.0, 2.0, 3.0), Seq[java.lang.Double](0.0, 2.0)),
+        (Seq[java.lang.Double](1.0, 2.0), Seq[java.lang.Double](0.0, 2.0, 1.0)),
+        (Seq[java.lang.Double](Double.PositiveInfinity), Seq[java.lang.Double](Double.PositiveInfinity)))
+      val nullEdges: Seq[(Vec, Vec)] =
+        if (!nulls) Nil
+        else Seq((Seq[java.lang.Double](1.0, null, 3.0), Seq[java.lang.Double](0.0, 2.0, 1.0)),
+          (Seq[java.lang.Double](1.0, 2.0), Seq[java.lang.Double](null, 2.0)))
+      edges ++ nullEdges ++ (1 to 150).map { _ =>
+        val n = rnd.nextInt(7)
+        (vec(n, nulls), vec(if (rnd.nextInt(4) == 0) rnd.nextInt(7) else n, nulls))
+      }
+    }
+    def frame(nulls: Boolean): org.apache.spark.sql.DataFrame = {
+      val t = ArrayType(DoubleType, containsNull = nulls)
+      spark.createDataFrame(
+        pairs(nulls).map { case (a, b) => Row(a, b) }.asJava,
+        StructType(Seq(StructField("a", t), StructField("b", t))))
+    }
+    def same(r: Row, i: Int): Boolean =
+      if (r.isNullAt(i) || r.isNullAt(i + 1)) r.isNullAt(i) && r.isNullAt(i + 1)
+      else java.lang.Double.doubleToLongBits(r.getDouble(i)) ==
+        java.lang.Double.doubleToLongBits(r.getDouble(i + 1))
+    val dir = java.nio.file.Files.createTempDirectory("graft_vector_folds").toString
+    for (ansi <- Seq(true, false); nulls <- Seq(true, false)) {
+      val prev = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      try {
+        val local = frame(nulls)
+        assert(local.schema("a").dataType == ArrayType(DoubleType, nulls))
+        val path = s"$dir/ansi=$ansi/nulls=$nulls"
+        local.write.parquet(path)
+        // a LocalRelation is folded by the interpreted eval; the cached
+        // and parquet plans run the generated loop
+        val sources = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+          "local" -> (() => local), "parquet" -> (() => spark.read.parquet(path)),
+          "cached" -> (() => local.cache()))
+        for ((name, source) <- sources; df = source();
+             f <- Seq("a", "float(a)"); g <- Seq("b", "float(b)")) {
+          def arr(c: String) =
+            if (c.startsWith("float")) col(c.drop(6).dropRight(1)).cast("array<float>") else col(c)
+          val rows = df.select(
+            VectorOps.squaredL2(arr(f), arr(g)), squaredL2Hof(arr(f), arr(g)),
+            VectorOps.dot(arr(f), arr(g)), dotHof(arr(f), arr(g))).collect()
+          rows.zipWithIndex.foreach { case (r, i) =>
+            assert(same(r, 0) && same(r, 2),
+              s"ansi=$ansi nulls=$nulls $name $f,$g row $i: $r")
+          }
+        }
+        local.unpersist()
+      } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+    }
   }
 
   test("cosine: parallel=1, orthogonal=0, zero-norm=0") {
